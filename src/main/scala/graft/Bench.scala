@@ -176,8 +176,10 @@ object Bench {
   /** Render (full file artifact JSON, stdout line). The file keeps the
     * complete historical format (queries + load maps, times rounded to
     * 1 ms); the stdout line is the file line when it fits [[MaxStdoutLine]]
-    * and otherwise the summary form with the `artifact` pointer. Pure so
-    * BenchHealSpec can prove the length contract offline. */
+    * and otherwise the summary form with the `artifact` pointer, its error
+    * messages trimmed and then dropped (`n_errors` stays) if they alone
+    * overflow. Pure so BenchHealSpec can prove the length contract
+    * offline. */
   def renderBench(
       results: scala.collection.Map[String, Double],
       errors: scala.collection.Map[String, String],
@@ -188,24 +190,29 @@ object Bench {
       cores: Int, cpusEnv: String, jvmProcs: Int,
       profileUsed: Boolean, sf: String, artifact: String): (String, String) = {
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val errJson = jmap(errors.map { case (k, v) => k -> ("\"" + escapeJson(v) + "\"") })
-    val common =
-      s""""errors":$errJson,"reran":${jarr(reran)},"heal_floor":${jarr(healFloor)},""" +
+    def errJson(cap: Int) =
+      jmap(errors.map { case (k, v) => k -> ("\"" + escapeJson(v.take(cap)) + "\"") })
+    val rest =
+      s""""reran":${jarr(reran)},"heal_floor":${jarr(healFloor)},""" +
       s""""cores":$cores,"cpus_env":"${escapeJson(cpusEnv)}","jvm_procs":$jvmProcs,""" +
       s""""profile_used":$profileUsed,"artifact":"${escapeJson(artifact)}","sf":"${escapeJson(sf)}""""
+    val common = s""""errors":${errJson(Int.MaxValue)},$rest"""
+    val head = s"""{"metric":"total","value":${r3(total)},"unit":"sec""""
     val qs = jmap(results.map { case (k, v) => k -> r3(v) })
     val loadJson = jmap(loadAt.map { case (k, v) => k -> r2(v) })
     val loadRerunJson = jmap(loadRerun.map { case (k, v) => k -> r2(v) })
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,""" +
-      common +
+    val full = s"""$head,"queries":$qs,$common""" +
       s""","load":$loadJson,"load_rerun":$loadRerunJson,"load_before":$loadBefore,"load_after":$loadAfter}"""
-    val stdout =
-      if (full.length <= MaxStdoutLine) full
-      else {
-        val inline = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,$common,"n_queries":${results.size}}"""
-        if (inline.length <= MaxStdoutLine) inline
-        else s"""{"metric":"total","value":${r3(total)},"unit":"sec",$common,"n_queries":${results.size}}"""
-      }
+    val tail = s""","n_queries":${results.size}}"""
+    // many failures can outgrow the line on their own (108 x 200-char
+    // messages is ~25 KB): then carry the count and trimmed messages, and
+    // past that the count alone; the artifact file keeps every message
+    val bounded = s""","n_errors":${errors.size}$tail"""
+    val stdout = Iterator(full,
+      s"""$head,"queries":$qs,$common$tail""",
+      s"""$head,$common$tail""",
+      s"""$head,"errors":${errJson(40)},$rest$bounded""")
+      .find(_.length <= MaxStdoutLine).getOrElse(s"""$head,$rest$bounded""")
     (full, stdout)
   }
 

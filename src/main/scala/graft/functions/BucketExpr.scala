@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   *
   * This replaces the per-row Scala UDFs that tagged rows with their
   * quantile bucket in the two-phase rankers ([[graft.operators.Ordered]]
-  * `prCurveScalable` / `everyKthScalable`): a ScalaUDF breaks whole-stage
+  * `prCurveScalable` / `everyKthPacked`): a ScalaUDF breaks whole-stage
   * codegen and pays serialization per row, while this expression is a
   * static call inside the generated loop (SURVEY §2.11 — same case as
   * `graft_hash32`/`graft_adc`). The bounds array is a few-KB quantile grid

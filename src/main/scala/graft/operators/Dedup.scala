@@ -28,7 +28,7 @@ object Dedup {
     * floor only ever protected a mis-measured regime. This is a
     * compile-time constant, not a runtime knob: restoring the threshold
     * means editing this value (the count branch below it is then live
-    * again); CcProbe carries its own loop replica for runtime A/Bs. */
+    * again). */
   val JumpMinNodes: Long = 0L
 
   /** Lineage-truncating checkpoint per round: RELIABLE (checkpoint-dir
@@ -228,71 +228,11 @@ object Dedup {
     * the old graph's diameter. Self-rows (id == comp) ride along as
     * self-loops; singleton labelings survive into the output unchanged.
     * DedupSpec pins equality to the from-scratch CC on merge / new-node /
-    * untouched-cluster cases plus a randomized fuzz.
-    *
-    * Round 18 note: the cluster-contraction form
-    * ([[incrementalComponentsContracted]]) was built and measured against
-    * this (IncProbe, checksum-asserted): at the 100x replica it won only
-    * 5-9% inside the probe's noise band, and at bench scale (sf0.1) it
-    * REGRESSED x18/x23 by ~0.9 s each — the extra endpoint/relabel joins
-    * cost more than the batch-proportional CC saves on a box where a
-    * V-sized round is already sub-second. Kept as the documented
-    * alternative for genuinely corpus >> batch deployments; this union
-    * form stays the registered operator on measurement. */
+    * untouched-cluster cases plus a randomized fuzz. */
   def incrementalComponents(labels: DataFrame, newEdges: DataFrame): DataFrame =
     connectedComponents(
       labels.select(col("id").as("doc_a"), col("comp").as("doc_b"))
         .unionByName(newEdges.select("doc_a", "doc_b")))
-
-  /** CLUSTER-CONTRACTION alternative to [[incrementalComponents]] (round
-    * 18, VERDICT r17 #3) — measured and NOT registered; see the note
-    * there. Instead of a second full CC over the V-sized union it:
-    *
-    *   1. maps each new edge's endpoints through the old labeling
-    *      (left join ×2; an endpoint absent from `labels` is its own rep);
-    *   2. drops contracted self-loops (within-cluster batch pairs cannot
-    *      change the partition);
-    *   3. runs CC over the contracted (repA, repB) edges — nodes are
-    *      touched cluster reps and new doc ids, so the iterative rounds
-    *      scale with the BATCH, never the corpus;
-    *   4. relabels: base = old rows ∪ new-endpoint singletons; one join of
-    *      base.comp against the merged labeling, coalesce keeps untouched
-    *      clusters verbatim.
-    *
-    * Exactness (the union proof, quotiented): quotient CC(stars ∪ new) by
-    * the old clusters — two nodes share a component iff their reps are
-    * connected in the contracted graph (within-cluster hops are free under
-    * contraction; new edges map to rep edges). Each rep IS its cluster's
-    * min id and each new node is its own rep, so min-reachable over the
-    * contracted component equals the union component's min id; reps in no
-    * surviving contracted edge keep their old comp via the left-join
-    * coalesce. Self-rows and batch self-pairs survive as base singletons.
-    * DedupSpec pins partition equality to from-scratch CC (rep chains,
-    * self-pairs, new-only batches, randomized fuzz); IncProbe asserts
-    * checksum identity to the union form and carries the A/B numbers. */
-  def incrementalComponentsContracted(labels: DataFrame, newEdges: DataFrame): DataFrame = {
-    val l = labels.select(col("id"), col("comp"))
-    val contracted = newEdges.select("doc_a", "doc_b")
-      .join(l.select(col("id").as("doc_a"), col("comp").as("_ca")), Seq("doc_a"), "left")
-      .join(l.select(col("id").as("doc_b"), col("comp").as("_cb")), Seq("doc_b"), "left")
-      .select(coalesce(col("_ca"), col("doc_a")).as("doc_a"),
-        coalesce(col("_cb"), col("doc_b")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-    // deliberately NOT .distinct()'d: contraction does collapse many batch
-    // pairs onto one rep edge, but CC's edge persist repartitions the rows
-    // anyway, and the measured distinct arm (IncProbe, /tmp/sf100) paid its
-    // extra blocking shuffle without beating the plain form
-    val merged = connectedComponents(contracted)
-      .select(col("id").as("_rid"), col("comp").as("_rcomp"))
-    val newNodes = newEdges.select(col("doc_a").as("id"))
-      .unionByName(newEdges.select(col("doc_b").as("id")))
-      .distinct()
-      .join(l, Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("comp"))
-    val base = l.unionByName(newNodes)
-    base.join(merged, base("comp") === col("_rid"), "left")
-      .select(base("id"), coalesce(col("_rcomp"), base("comp")).as("comp"))
-  }
 
   /** Every document mapped to its canonical id: cluster minimum for members
     * of a duplicate cluster, itself otherwise. `docs` needs a `doc_id`. */

@@ -222,66 +222,11 @@ object Ordered {
       .drop("_rn")
   }
 
-  /** W7 at scale — exact global per-group rank WITHOUT the per-group
-    * single reducer. `everyKth`'s window partitioned by a low-cardinality
-    * group key (3 returnflags) caps parallelism at the group count — the
-    * worst scale ratio in the 100x probe. Classic two-phase ranking:
-    * bucket rows by DETERMINISTIC range boundaries on the primary sort key
-    * (approxQuantile — deterministic for given data, so the count pass and
-    * the rank pass agree without materializing anything; repartitionByRange
-    * is unusable here, its sampled boundaries change per action), count
-    * rows per (group, bucket), prefix-sum those tiny counts on the driver,
-    * and add each bucket's offset to its local window ranks. Every stage
-    * is parallel over all buckets, never over the group cardinality.
-    *
-    * Exactness requires: `orderCols.head` numeric (the bucketing key) and
-    * the full `orderCols` unique per group (as W7's are). Rows that tie on
-    * the bucketing key always land in the same bucket, so ranks never
-    * split a tie across buckets. */
-  def everyKthScalable(df: DataFrame, partCol: String, orderCols: Seq[String],
-                       k: Int): DataFrame = {
-    val spark = df.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val rangeCol = orderCols.head
-    val probs = (1 until n).map(_.toDouble / n).toArray
-    val bounds = df.stat.approxQuantile(rangeCol, probs, 0.001)
-      .map(math.floor(_)).distinct.sorted
-    everyKthWithBounds(df, partCol, orderCols, k, bounds)
-  }
-
-  /** [[everyKthScalable]] with UNIFORM-width buckets from one min/max agg
-    * instead of the approxQuantile sketch — bucket boundaries only steer
-    * load BALANCE (ranks come from exact per-bucket counts, and ties on
-    * the bucketing key land in one bucket under any deterministic
-    * boundary set), so exactness is identical; 4x the partition count in
-    * buckets absorbs moderate key skew. Wins when the bucketing key is
-    * near-uniform (TPC-H orderkeys): the min/max scan is a plain codegen
-    * aggregate where the quantile sketch pays per-row QuantileSummaries
-    * updates. Heavily skewed keys should keep the quantile form. */
-  def everyKthScalableUniform(df: DataFrame, partCol: String,
-                              orderCols: Seq[String], k: Int): DataFrame = {
-    val spark = df.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val rangeCol = orderCols.head
-    val r = df.agg(min(col(rangeCol)).cast("double"),
-      max(col(rangeCol)).cast("double")).head()
-    // min == null covers BOTH empty input and an all-NULL bucketing key;
-    // empty bounds sends every row through the single-bucket path (null
-    // keys ride bucket -1), matching everyKth instead of dropping rows
-    val bounds =
-      if (r.isNullAt(0)) Array.empty[Double]
-      else {
-        val (lo, hi) = (r.getDouble(0), r.getDouble(1))
-        val buckets = 4 * n
-        val width = math.max(1.0, math.ceil((hi - lo + 1) / buckets))
-        (1 until buckets).map(i => math.floor(lo + i * width))
-          .filter(_ <= hi).distinct.sorted.toArray
-      }
-    everyKthWithBounds(df, partCol, orderCols, k, bounds)
-  }
-
-  /** W7 at scale, PACKED-KEY form — the measured replacement for the rank
-    * pass that dominated `everyKthScalableUniform` (VERDICT r13 #3): when
+  /** W7 at scale, PACKED-KEY form — exact global per-group rank WITHOUT
+    * `everyKth`'s per-group single reducer (a window partitioned by a
+    * low-cardinality group key caps parallelism at the group count), and
+    * the measured replacement for the two-phase window rank pass of
+    * [[everyKthWithBounds]] (VERDICT r13 #3; numbers in CHANGES.md): when
     * the full per-group order key packs losslessly into ONE long (w7's
     * `l_orderkey*8 + l_linenumber`, the o5 packing — both < 2^53 so the
     * double-space bucket compare stays exact), the generic
@@ -441,6 +386,13 @@ object Ordered {
         col("p"))
   }
 
+  /** Two-phase ranking over deterministic bucket `bounds` on the primary
+    * sort key: count rows per (group, bucket), prefix-sum those tiny counts
+    * on the driver, and add each bucket's offset to its local window ranks.
+    * Every stage is parallel over all buckets, never over the group
+    * cardinality. Exactness requires `orderCols.head` numeric and the full
+    * `orderCols` unique per group; rows that tie on the bucketing key always
+    * land in one bucket, so ranks never split a tie across buckets. */
   private def everyKthWithBounds(df: DataFrame, partCol: String,
       orderCols: Seq[String], k: Int, bounds: Array[Double],
       maxCells: Int = 1 << 18): DataFrame = {

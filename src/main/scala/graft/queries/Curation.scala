@@ -223,40 +223,11 @@ object Curation {
     * plan references the Bloom broadcast, so this method cannot destroy
     * it — the broadcast lives until the frame object becomes unreachable
     * and the ContextCleaner reclaims it (standard Spark UDF-closure
-    * lifetime; one ~`9.6 * nPool / 8e9` GB blob per call). A caller
-    * looping over many large pools should use
-    * [[decontaminateBloomBounded]], which materializes the (tiny) result
-    * and destroys the broadcast deterministically before returning. */
+    * lifetime; one ~`9.6 * nPool / 8e9` GB blob per call). */
   def decontaminateBloomFrom(sh: DataFrame, evalMod: Int = EVAL_MOD,
                              minShared: Int = MIN_SHARED,
                              fpp: Double = 0.01): DataFrame =
-    bloomDecontamPlan(sh, evalMod, minShared, fpp)._1
-
-  /** [[decontaminateBloomFrom]] with a DETERMINISTIC broadcast bound: the
-    * result (a few rows per contaminated doc) is materialized via an eager
-    * `localCheckpoint` — which truncates lineage, so no later recompute can
-    * reference the Bloom — and the broadcast is destroyed before returning.
-    * Repeated large-pool invocations then hold at most ONE sketch's memory
-    * at a time instead of accumulating blobs until the ContextCleaner
-    * happens to GC the frames. */
-  def decontaminateBloomBounded(sh: DataFrame, evalMod: Int = EVAL_MOD,
-                                minShared: Int = MIN_SHARED,
-                                fpp: Double = 0.01): DataFrame = {
-    val (df, bloomB) = bloomDecontamPlan(sh, evalMod, minShared, fpp)
-    bloomB match {
-      case None => df // empty-pool exact path: no broadcast to bound
-      case Some(b) =>
-        val out = df.localCheckpoint(true)
-        b.destroy()
-        out
-    }
-  }
-
-  private def bloomDecontamPlan(
-      sh: DataFrame, evalMod: Int, minShared: Int, fpp: Double)
-      : (DataFrame, Option[org.apache.spark.broadcast.Broadcast[
-          org.apache.spark.util.sketch.BloomFilter]]) =
-    bloomAgainstPoolPlan(sh.filter(col("doc_id") % evalMod =!= 0),
+    bloomAgainstPool(sh.filter(col("doc_id") % evalMod =!= 0),
       evalPoolFrom(sh, evalMod), minShared, fpp)
 
   /** [[decontaminateAgainstPool]] with the Bloom prefilter — the external-
@@ -278,7 +249,7 @@ object Curation {
   def decontaminateBloomAgainstPool(corpusSh: DataFrame, pool: DataFrame,
                                     minShared: Int = MIN_SHARED,
                                     fpp: Double = 0.01): DataFrame =
-    bloomAgainstPoolPlan(corpusSh, pool, minShared, fpp)._1
+    bloomAgainstPool(corpusSh, pool, minShared, fpp)
 
   /** Decision boundary for [[decontaminateAutoAgainstPool]]: the largest
     * pool (distinct shingle hashes) the EXACT broadcast arm may take.
@@ -402,15 +373,12 @@ object Curation {
     if (nPool <= exactCap)
       (decontaminateAgainstPool(corpusSh, pool, minShared), "exact")
     else
-      (bloomAgainstPoolPlan(corpusSh, pool, minShared, fpp, Some(nPool))._1,
-        "bloom")
+      (bloomAgainstPool(corpusSh, pool, minShared, fpp, Some(nPool)), "bloom")
   }
 
-  private def bloomAgainstPoolPlan(
+  private def bloomAgainstPool(
       corpusSh: DataFrame, pool0: DataFrame, minShared: Int, fpp: Double,
-      knownPoolCount: Option[Long] = None)
-      : (DataFrame, Option[org.apache.spark.broadcast.Broadcast[
-          org.apache.spark.util.sketch.BloomFilter]]) = {
+      knownPoolCount: Option[Long] = None): DataFrame = {
     val pool = pool0.select("h")
     val s = pool.sparkSession
     // the auto dispatcher already counted the pool to pick this arm —
@@ -421,7 +389,7 @@ object Curation {
     // buffer into BloomFilter.readFrom); the exact path returns the same
     // empty result totally (TextEdgeSpec's adversarial corpus hits this)
     if (nPool == 0)
-      return (decontaminateAgainstPool(corpusSh, pool, minShared), None)
+      return decontaminateAgainstPool(corpusSh, pool, minShared)
     // r17: built by hand, NOT stat.bloomFilter — Spark 4's DataFrame API
     // routes through bloom_filter_agg, which silently clamps the sketch
     // to the runtime-join-filter config caps (4M items / 2^26 bits), so a
@@ -443,12 +411,11 @@ object Curation {
     // join inputs are small: the corpus side is the bloom-surviving
     // remainder (~matches + fpp of the rest), the pool side a plain
     // column shuffle.
-    val out = explodeShingles(corpusSh)
+    explodeShingles(corpusSh)
       .filter(mightContain(col("h")))
       .join(pool, Seq("h"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    (out, Some(bloomB))
   }
 
   /** X16 — duplicate-SPAN detection: the exact-substring-dedup signal of

@@ -59,34 +59,6 @@ class DedupSpec extends SparkSpec {
     assert(idem == m(labels))
   }
 
-  test("incrementalComponentsContracted: rep chains, self-pairs, new-only batches (r18)") {
-    // three old clusters chained together by new edges that touch only
-    // NON-min members — the contracted rep graph must carry the chain
-    // {1,2},{10,11},{20,21} + batch (2,11),(11,21) -> all comp 1
-    val old = Seq((1L, 2L), (10L, 11L), (20L, 21L)).toDF("doc_a", "doc_b")
-    val labels = Dedup.connectedComponents(old)
-    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val chain = Seq((2L, 11L), (11L, 21L)).toDF("doc_a", "doc_b")
-    val got = m(Dedup.incrementalComponentsContracted(labels, chain))
-    assert(got == m(Dedup.connectedComponents(old.unionByName(chain))))
-    assert(Seq(1L, 2L, 10L, 11L, 20L, 21L).forall(got(_) == 1L))
-
-    // a batch self-pair (a,a) on an unseen id contributes the node as a
-    // singleton (the old symmetrized-explode behavior); within-cluster
-    // batch edges are contracted self-loops and change nothing
-    val weird = Seq((42L, 42L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val got2 = m(Dedup.incrementalComponentsContracted(labels, weird))
-    assert(got2(42L) == 42L)
-    assert(got2 - 42L == m(labels))
-
-    // new-only batch: no endpoint exists in labels — pure new clusters
-    val fresh = Seq((50L, 51L), (51L, 52L)).toDF("doc_a", "doc_b")
-    val got3 = m(Dedup.incrementalComponentsContracted(labels, fresh))
-    assert(Seq(50L, 51L, 52L).forall(got3(_) == 50L))
-    assert((got3 -- Seq(50L, 51L, 52L)) == m(labels))
-  }
-
   test("incrementalComponents fuzz: random old graph + random batch == from-scratch CC") {
     val rnd = new scala.util.Random(0x1c2)
     for (round <- 1 to 4) {

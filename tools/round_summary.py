@@ -1,18 +1,23 @@
 #!/usr/bin/env python3
 """Summarize the committed bench artifacts for the round's NOTES bullet:
 baseline ratio on the shared query set, skew/uniform ratio, worst ratios,
-and per-query deltas vs the previous round's committed artifacts."""
+and per-query deltas vs the previous round's committed artifacts.
+
+Usage: tools/round_summary.py <bench artifact, e.g. BENCH_LOCAL_sf0.1_c32.json>
+"""
 import json
+import sys
 
 
 def load(p):
     return json.load(open(p))
 
 
-try:  # r18: the bench stamps sf + cores into the artifact name
-    loc = load("BENCH_LOCAL_sf0.1_c32.json")
-except FileNotFoundError:
-    loc = load("BENCH_LOCAL.json")
+if len(sys.argv) != 2:
+    sys.exit(__doc__.strip().splitlines()[-1])
+loc_path = sys.argv[1]
+loc = load(loc_path)
+print(f"bench artifact: {loc_path}")
 uni = load("BENCH_UNIFORM100.json")
 skw = load("BENCH_SKEW100.json")
 # BENCH_r01.json stores the driver's truncated tail; recover the queries
@@ -24,7 +29,7 @@ _i = _t.index('"queries":{') + len('"queries":')
 _bq, _ = json.JSONDecoder().raw_decode(_t, _i)
 base = {"queries": _bq}
 
-print(f"BENCH_LOCAL  total {loc['value']:.1f} n {len(loc['queries'])} "
+print(f"LOCAL        total {loc['value']:.1f} n {len(loc['queries'])} "
       f"errors {loc.get('errors')} load_before {loc.get('load_before')}")
 print(f"UNIFORM100   total {uni['value']:.1f} n {len(uni['queries'])} "
       f"errors {uni.get('errors')} heal {uni.get('heal_floor')}")
