@@ -525,6 +525,25 @@ object Similarity {
       },
     unpersist = _.unpersist(false))
 
+  /** Freshness token of `<d>/embeddings.parquet`: (mtime, length) of
+    * every file under it, stat'ed through the Hadoop FileSystem as
+    * [[graft.Tables.load]] reads it, so any sf-dir URI (`file:`,
+    * `hdfs://`, `s3a://`) is seen. A directory table folds in its child
+    * files: rewriting a part file in place leaves the directory's own
+    * status unchanged. Empty when the table cannot be listed. */
+  private[queries] def embeddingsToken(s: SparkSession, d: String): String =
+    try {
+      val p = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
+      val it = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
+      val stats = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        stats += ((f.getPath.toString, f.getModificationTime, f.getLen))
+      }
+      val all = stats.result().sorted
+      s"${all.length}:${all.map(_._3).sum}:${all.hashCode}"
+    } catch { case _: Exception => "" }
+
   private[queries] def annIndex(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Long) =
     annIndexMemo.getOrBuild((System.identityHashCode(s), d)) {
@@ -592,13 +611,10 @@ object Similarity {
       // subtree scans. Plan: 2× [Scan+UDF assignment] → 1× + two
       // InMemoryTableScans.
       // freshness token in the memo key (ADVICE r17): an in-session rewrite
-      // of the embeddings table changes (mtime, len) and misses the memo,
-      // restoring the pre-r17 recompute-per-invocation behavior for stale
-      // state instead of serving old cell assignments
-      val embStat = try {
-        val f = new java.io.File(s"$d/embeddings.parquet")
-        s"${f.lastModified}:${f.length}"
-      } catch { case _: Exception => "" }
+      // of the embeddings table misses the memo, restoring the pre-r17
+      // recompute-per-invocation behavior for stale state instead of
+      // serving old cell assignments
+      val embStat = embeddingsToken(s, d)
       val assigned = d6AssignMemo.getOrBuild((System.identityHashCode(s), s"$d|$embStat")) {
         val nCells = cellCountForDedup(Tables.embeddings(s, d).count())
         val all = vecs(s, d).join(

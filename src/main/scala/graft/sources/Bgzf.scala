@@ -54,44 +54,94 @@ object Bgzf {
     -1
   }
 
+  /** Does a valid member header at `off` of `buf` (file offset `at`)
+    * chain — its BSIZE landing exactly on EOF or on another valid
+    * header? The next header is read from `in` only when it lies past
+    * `buf`. */
+  private def chains(in: FSDataInputStream, buf: Array[Byte], off: Int, at: Long,
+                     fileLen: Long): Boolean = {
+    val sz = memberSize(buf, off)
+    if (sz <= 0) return false
+    val next = at + sz
+    if (next == fileLen) true
+    else if (next > fileLen || fileLen - next < 18) false
+    else if (off + sz + 18 <= buf.length)
+      memberSize(java.util.Arrays.copyOfRange(buf, off + sz, off + sz + 18), 0) > 0
+    else {
+      val hdr = new Array[Byte](18)
+      in.seek(next)
+      in.readFully(hdr)
+      memberSize(hdr, 0) > 0
+    }
+  }
+
   /** Compressed offset of the first BGZF block starting at or after `from`
     * (`fileLen` when none): scan a bounded window for the gzip magic and
-    * validate a candidate by chaining — its BSIZE must land exactly on EOF
-    * or on another valid header. A block must start within MaxBlock bytes
-    * of any in-file offset, so the window never exceeds two blocks. */
+    * validate a candidate by chaining. A block must start within MaxBlock
+    * bytes of any in-file offset, so the window never exceeds two blocks.
+    * Leaves `in` at an unspecified position. */
   private[sources] def findBlockStart(in: FSDataInputStream, from: Long,
                                       fileLen: Long): Long = {
     if (from >= fileLen) return fileLen
     val winLen = math.min(2L * MaxBlock, fileLen - from).toInt
     val win = new Array[Byte](winLen)
-    in.readFully(from, win, 0, winLen)
+    in.seek(from)
+    in.readFully(win, 0, winLen)
     var o = 0
     while (o < winLen) {
-      val sz = memberSize(win, o)
-      if (sz > 0) {
-        val next = from + o + sz
-        if (next == fileLen) return from + o
-        if (next < fileLen && fileLen - next >= 18) {
-          // chain check: the next member header must parse too
-          val hdr = new Array[Byte](18)
-          in.readFully(next, hdr, 0, 18)
-          if (memberSize(hdr, 0) > 0) return from + o
-        }
-      }
+      if (chains(in, win, o, from + o, fileLen)) return from + o
       o += 1
     }
     fileLen
   }
 
   /** True when the file begins with a valid chained BGZF member (cheap
-    * sniff for dispatching between this reader and the plain-text path). */
+    * sniff for dispatching between this reader and the plain-text path):
+    * one 18-byte header, plus the next one when the first member does
+    * not end the file. */
   def isBgzf(conf: Configuration, path: String): Boolean = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val len = fs.getFileStatus(p).getLen
     if (len < 28) return false
     val in = fs.open(p)
-    try findBlockStart(in, 0L, len) == 0L finally in.close()
+    try {
+      val hdr = new Array[Byte](18)
+      in.readFully(hdr)
+      chains(in, hdr, 0, 0L, len)
+    } finally in.close()
+  }
+
+  /** The raw bytes of the member at `at` (where `in` is positioned),
+    * leaving `in` at the next member. Sequential reads
+    * only: a positional read on a checksummed FS opens a fresh checker
+    * (the data file and its .crc) per call. */
+  private def readMember(in: FSDataInputStream, at: Long, fileLen: Long,
+                         path: String): Array[Byte] = {
+    val hdr = new Array[Byte](18)
+    in.readFully(hdr, 0, math.min(18L, fileLen - at).toInt)
+    val sz = memberSize(hdr, 0)
+    require(sz >= 26, s"not a BGZF block at offset $at of $path")
+    val raw = java.util.Arrays.copyOf(hdr, sz)
+    in.readFully(raw, 18, sz - 18)
+    raw
+  }
+
+  /** Inflated payload of one raw member (empty for the EOF marker). */
+  private def inflate(raw: Array[Byte], at: Long, path: String): Array[Byte] = {
+    val sz = raw.length
+    val xlen = (raw(10) & 0xff) | ((raw(11) & 0xff) << 8)
+    val isize = (raw(sz - 4) & 0xff) | ((raw(sz - 3) & 0xff) << 8) |
+      ((raw(sz - 2) & 0xff) << 16) | ((raw(sz - 1) & 0xff) << 24)
+    if (isize == 0) return Array.emptyByteArray
+    val out = new Array[Byte](isize)
+    val inf = new Inflater(true) // raw deflate: no member header/trailer
+    inf.setInput(raw, 12 + xlen, sz - 12 - xlen - 8)
+    var n = 0
+    while (n < isize && !inf.finished()) n += inf.inflate(out, n, isize - n)
+    inf.end()
+    require(n == isize, s"short inflate at offset $at of $path")
+    out
   }
 
   /** One split's lines under the single-owner rule above. Exposed for
@@ -105,6 +155,8 @@ object Bgzf {
 
     new Iterator[String] with AutoCloseable {
       private var nextBlockStart = if (start == 0L) 0L else findBlockStart(in, start, fileLen)
+      // one seek, then members are read sequentially from this stream
+      if (nextBlockStart > 0L && nextBlockStart < fileLen) in.seek(nextBlockStart)
       private var curBlockStart = -1L
       private var buf: Array[Byte] = Array.emptyByteArray
       private var bufPos = 0
@@ -117,25 +169,11 @@ object Bgzf {
       /** Inflate the next non-empty block into `buf`; false at EOF. */
       private def pullBlock(): Boolean = {
         while (nextBlockStart < fileLen) {
-          val hdr = new Array[Byte](18)
-          in.readFully(nextBlockStart, hdr, 0, math.min(18L, fileLen - nextBlockStart).toInt)
-          val sz = memberSize(hdr, 0)
-          require(sz > 0, s"not a BGZF block at offset $nextBlockStart of $path")
-          val raw = new Array[Byte](sz)
-          in.readFully(nextBlockStart, raw, 0, sz)
-          val xlen = (raw(10) & 0xff) | ((raw(11) & 0xff) << 8)
-          val isize = (raw(sz - 4) & 0xff) | ((raw(sz - 3) & 0xff) << 8) |
-            ((raw(sz - 2) & 0xff) << 16) | ((raw(sz - 1) & 0xff) << 24)
           val blockStart = nextBlockStart
-          nextBlockStart += sz
-          if (isize > 0) {
-            val out = new Array[Byte](isize)
-            val inf = new Inflater(true) // raw deflate: no member header/trailer
-            inf.setInput(raw, 12 + xlen, sz - 12 - xlen - 8)
-            var n = 0
-            while (n < isize && !inf.finished()) n += inf.inflate(out, n, isize - n)
-            inf.end()
-            require(n == isize, s"short inflate at offset $blockStart of $path")
+          val raw = readMember(in, blockStart, fileLen, path)
+          nextBlockStart += raw.length
+          val out = inflate(raw, blockStart, path)
+          if (out.nonEmpty) {
             curBlockStart = blockStart
             buf = out
             bufPos = 0
@@ -228,27 +266,11 @@ object Bgzf {
 
       private def pull(): Unit = {
         while (pending == null && nextBlockStart < fileLen) {
-          val hdr = new Array[Byte](18)
-          in.readFully(nextBlockStart, hdr, 0, math.min(18L, fileLen - nextBlockStart).toInt)
-          val sz = memberSize(hdr, 0)
-          require(sz > 0, s"not a BGZF block at offset $nextBlockStart of $path")
-          val raw = new Array[Byte](sz)
-          in.readFully(nextBlockStart, raw, 0, sz)
-          val xlen = (raw(10) & 0xff) | ((raw(11) & 0xff) << 8)
-          val isize = (raw(sz - 4) & 0xff) | ((raw(sz - 3) & 0xff) << 8) |
-            ((raw(sz - 2) & 0xff) << 16) | ((raw(sz - 1) & 0xff) << 24)
           val blockStart = nextBlockStart
-          nextBlockStart += sz
-          if (isize > 0) {
-            val out = new Array[Byte](isize)
-            val inf = new Inflater(true)
-            inf.setInput(raw, 12 + xlen, sz - 12 - xlen - 8)
-            var n = 0
-            while (n < isize && !inf.finished()) n += inf.inflate(out, n, isize - n)
-            inf.end()
-            require(n == isize, s"short inflate at offset $blockStart of $path")
-            pending = (blockStart, out)
-          }
+          val raw = readMember(in, blockStart, fileLen, path)
+          nextBlockStart += raw.length
+          val out = inflate(raw, blockStart, path)
+          if (out.nonEmpty) pending = (blockStart, out)
         }
         if (pending == null) close()
       }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.sources._
 
 /** Tabix (.tbi) index consumption and production for the VCF source.
@@ -279,6 +279,38 @@ object Tabix {
     (chroms, lo, hi)
   }
 
+  // Every region lookup plans against the same sidecars: keep parsed
+  // indexes by (sidecar path, length, mtime), so an overwritten sidecar
+  // is a new key. LRU, bounded by the summed sidecar bytes (the parsed
+  // form is a small multiple of the compressed file), evicting the
+  // coldest entries one at a time; the newest entry always stays.
+  private val IndexCacheMaxBytes = 32L << 20
+  private val indexCache =
+    new java.util.LinkedHashMap[(String, Long, Long), Index](64, 0.75f, true)
+  private var indexCacheBytes = 0L
+
+  /** The parsed index behind `sidecar`, from the cache or through
+    * `parse` (a failed parse is not cached). The parse runs outside the
+    * lock; a racing duplicate parse is benign. */
+  private def cached(conf: Configuration, sidecar: FileStatus,
+                     parse: (Configuration, String) => Option[Index]): Option[Index] = {
+    val key = (sidecar.getPath.toString, sidecar.getLen, sidecar.getModificationTime)
+    val hit = indexCache.synchronized(indexCache.get(key))
+    if (hit != null) return Some(hit)
+    val parsed = parse(conf, key._1)
+    parsed.foreach { idx =>
+      indexCache.synchronized {
+        if (indexCache.put(key, idx) == null) indexCacheBytes += key._2
+        val it = indexCache.keySet().iterator()
+        while (indexCacheBytes > IndexCacheMaxBytes && indexCache.size() > 1) {
+          indexCacheBytes -= it.next()._2
+          it.remove()
+        }
+      }
+    }
+    parsed
+  }
+
   /** Prune `splits` (compressed byte ranges of a bgzf VCF) using the
     * `.tbi` beside `path`, honoring the pushed (chrom,pos) conjunction.
     * None = no usable index or no usable constraint (caller keeps all
@@ -291,20 +323,19 @@ object Tabix {
     * split per chunk, never dropping an owner.
     *
     * Staleness: a `.tbi` older than the data file is ignored (the tabix
-    * CLI's own "index is older than file" condition). */
+    * CLI's own "index is older than file" condition). A fresh sidecar is
+    * parsed once per (path, length, mtime) and then served from memory. */
   def pruneSplits(conf: Configuration, path: String, dataMtime: Long,
                   pushed: Array[Filter],
                   splits: Seq[VcfPartition]): Option[Seq[VcfPartition]] = {
     val fs = new Path(path).getFileSystem(conf)
     // .tbi first (what tabix/pysam write), then .csi (bcftools' default);
     // either must be at least as new as the data file
-    def fresh(sidecar: String): Boolean =
-      try {
-        val sp = new Path(sidecar)
-        fs.exists(sp) && fs.getFileStatus(sp).getModificationTime >= dataMtime
-      } catch { case _: Throwable => false }
-    val idx = (if (fresh(path + Suffix)) read(conf, path + Suffix) else None)
-      .orElse(if (fresh(path + CsiSuffix)) readCsi(conf, path + CsiSuffix) else None) match {
+    def fresh(sidecar: String): Option[FileStatus] =
+      try Some(fs.getFileStatus(new Path(sidecar))).filter(_.getModificationTime >= dataMtime)
+      catch { case _: Throwable => None } // absent or unreadable: no pruning
+    val idx = fresh(path + Suffix).flatMap(cached(conf, _, read))
+      .orElse(fresh(path + CsiSuffix).flatMap(cached(conf, _, readCsi))) match {
       case Some(i) => i
       case None => return None
     }
@@ -393,6 +424,17 @@ object Tabix {
         w += 1
       }
     }
+
+    /** A data line whose POS does not parse: indexed as a one-base
+      * feature at its ref's last start (0 for a new ref). No pos predicate
+      * can match such a line, but a chrom-only region must still reach
+      * it, and an unindexed line would be pruned away. (htslib refuses to
+      * index such a line at all, so foreign indexes never need this.) */
+    def addUnplaced(ref: String, vBeg: Long, vEnd: Long): Unit =
+      if (ref.nonEmpty) { // an empty name cannot round-trip the name block
+        val beg = if (refNames.lastOption.contains(ref)) math.max(0L, lastBeg) else 0L
+        add(Feature(ref, beg, beg + 1, vBeg, vEnd))
+      }
 
     // backfill empty linear windows with the previous value so a query
     // landing in a feature gap still gets a sound (lower) min offset
@@ -544,11 +586,11 @@ object Tabix {
         val f = VcfLineParser.headFields(line, 9)
         val chrom = if (f.length > 0) f(0) else null
         val pos = VcfLineParser.toLongOrNull(if (f.length > 1) f(1) else null)
-        if (chrom != null && pos != null) {
+        if (pos != null) {
           val infoEnd = infoEndOf(if (f.length > 7) f(7) else null)
           val (b, e) = vcfExtent(pos, if (f.length > 3) f(3) else null, infoEnd)
           builder.add(Feature(chrom, b, e, vBeg, vEnd))
-        }
+        } else builder.addUnplaced(chrom, vBeg, vEnd)
       }
     } finally lines match { case c: AutoCloseable => c.close(); case _ => () }
     if (kind == "csi") writeCsi(conf, path, builder) else write(conf, path, builder)

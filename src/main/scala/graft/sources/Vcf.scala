@@ -130,6 +130,11 @@ object Vcf {
     }
   }
 
+  /** The cached fingerprint of `s` when this (path, len, mtime) has been
+    * read before; None means [[headerMetaCached]] would read the header. */
+  def headerMetaIfCached(s: org.apache.hadoop.fs.FileStatus): Option[HeaderMeta] =
+    Option(headerMetaCache.get((s.getPath.toString, s.getLen, s.getModificationTime)))
+
   /** Sample names from the #CHROM header line (columns 10+). */
   def sampleNames(spark: SparkSession, path: String): Seq[String] = {
     val header = headerLines(spark, path).find(_.startsWith("#CHROM"))

@@ -41,10 +41,23 @@ import scala.jdk.CollectionConverters._
   * inclusive of the end boundary). Both are embarrassingly parallel —
   * no driver-side line handling.
   *
-  * Pushed filters are ALSO returned as post-scan filters (Spark
-  * re-applies them), so the source only ever prunes, never decides —
-  * results are row-identical to `Vcf.read(...).filter(...)` (spec-gated
-  * in VcfBedSpec).
+  * Which pushed filters the scan decides and which it only prunes: a
+  * region predicate — `EqualTo`/`In`/`IsNotNull` on `chrom`, and
+  * `EqualTo`/`In`/`IsNotNull`/range comparisons on `pos` with `Long`
+  * comparands, or `And`/`Or` trees of only those — is evaluated exactly
+  * on the very (chrom, pos) values the scan emits, under SQL's
+  * three-valued logic (a null value or comparand never keeps a line), so
+  * it is NOT returned as a post-scan filter. A region lookup therefore
+  * plans as a bare vcf `BatchScan` whose generated code carries no
+  * literals and hits Spark's codegen cache instead of compiling per
+  * lookup. Every other pushed predicate (`qual`, `filter`, `info_*`,
+  * `gq`/`dp`, and `Or` trees mixing them in) only prunes: the scan drops
+  * lines that cannot match and Spark re-applies the predicate. Doubles
+  * stay re-applied: Spark SQL orders them with NaN = NaN, NaN above every
+  * other value and -0.0 = 0.0, unlike Java's `==` and `<`; the scan
+  * prunes under that ordering but leaves the decision to Spark. Either
+  * way results are row-identical to `Vcf.read(...).filter(...)`
+  * (spec-gated in VcfBedSpec, VcfPushdownSpec and VcfRegionParitySpec).
   *
   * Options: `sample_index` (default 0), `split_bytes` (default 16 MiB).
   */
@@ -197,12 +210,14 @@ class VcfScanBuilder(path: String, sampleIndex: Int, splitBytes: Long,
   private var required: StructType = full
   private val infoCols = infoFields.map(_._1).toSet
 
-  /** Accept (chrom, pos) predicates the partial parse can evaluate; every
-    * filter is ALSO kept post-scan (returned unchanged), so pushdown can
-    * only skip lines the engine would drop anyway. */
+  /** Accept every predicate the partial parse can evaluate; return as
+    * post-scan filters only those the scan does not decide exactly (see
+    * [[VcfFilterEval.exact]]): region predicates on (chrom, pos) are
+    * decided here, the rest (and anything unsupported) Spark re-applies,
+    * so for them pushdown only skips lines the engine would drop anyway. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushed = filters.filter(VcfFilterEval.supported(_, infoCols))
-    filters
+    filters.filterNot(VcfFilterEval.exact)
   }
   override def pushedFilters(): Array[Filter] = pushed
 
@@ -256,48 +271,58 @@ class VcfScan(path: String, sampleIndex: Int, splitBytes: Long,
     // "off")` opts out for known-homogeneous huge directories.
     if (headerCheck && files.length > 1) {
       val ref = Vcf.headerMetaCached(conf, files.head)
-      // each check is one bounded header read (O(header), not O(file)),
-      // but a 100k-part foreign directory would serialize 100k FS opens
-      // inside planning — fan the reads over a bounded pool and surface
-      // the FIRST mismatch in file order (deterministic messages).
-      // Measured under the ObjStoreProbe latency shim (25 ms/open, 2000
-      // files): sequential walk 51.8 s, this pool 3.6 s (OBJSTORE.json) —
-      // the object-store pricing is no longer an argument. The
-      // worker only builds the message; require stays on the driver
-      // thread so the error type/text matches the sequential walk.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, Runtime.getRuntime.availableProcessors()))
-      try {
-        val checks = files.tail.map { s =>
-          pool.submit(new java.util.concurrent.Callable[Option[String]] {
-            override def call(): Option[String] = {
-              val m = Vcf.headerMetaCached(conf, s)
-              if (m.samples != ref.samples)
-                Some(s"vcf scan: sample columns of ${s.getPath} (${m.samples.mkString(",")}) " +
-                  s"differ from ${files.head.getPath} (${ref.samples.mkString(",")}); " +
-                  "a directory scan needs one header — split the load or reorder " +
-                  "columns upstream (header_check=off overrides)")
-              else infoFields.collectFirst {
-                case (_, key, _) if m.infoTypes.get(key) != ref.infoTypes.get(key) =>
-                  s"vcf scan: INFO $key declared as " +
-                    s"${m.infoTypes.getOrElse(key, "<absent>")} in ${s.getPath} but " +
-                    s"${ref.infoTypes.getOrElse(key, "<absent>")} in ${files.head.getPath}; " +
-                    "typed info_fields need one declaration (header_check=off overrides)"
+      def mismatch(s: org.apache.hadoop.fs.FileStatus, m: Vcf.HeaderMeta): Option[String] =
+        if (m.samples != ref.samples)
+          Some(s"vcf scan: sample columns of ${s.getPath} (${m.samples.mkString(",")}) " +
+            s"differ from ${files.head.getPath} (${ref.samples.mkString(",")}); " +
+            "a directory scan needs one header — split the load or reorder " +
+            "columns upstream (header_check=off overrides)")
+        else infoFields.collectFirst {
+          case (_, key, _) if m.infoTypes.get(key) != ref.infoTypes.get(key) =>
+            s"vcf scan: INFO $key declared as " +
+              s"${m.infoTypes.getOrElse(key, "<absent>")} in ${s.getPath} but " +
+              s"${ref.infoTypes.getOrElse(key, "<absent>")} in ${files.head.getPath}; " +
+              "typed info_fields need one declaration (header_check=off overrides)"
+        }
+      val cached = files.tail.map(Vcf.headerMetaIfCached)
+      if (cached.forall(_.isDefined))
+        // warm planning (every header already fingerprinted): the checks
+        // are in-memory comparisons, run inline in file order
+        files.tail.zip(cached).foreach { case (s, m) =>
+          val mm = mismatch(s, m.get)
+          require(mm.isEmpty, mm.get)
+        }
+      else {
+        // each cold check is one bounded header read (O(header), not
+        // O(file)), but a 100k-part foreign directory would serialize
+        // 100k FS opens inside planning — fan the reads over a bounded
+        // pool and surface the FIRST mismatch in file order (deterministic
+        // messages). Measured under the ObjStoreProbe latency shim (25
+        // ms/open, 2000 files): sequential walk 51.8 s, this pool 3.6 s
+        // (OBJSTORE.json). The worker only builds the message; require
+        // stays on the driver thread so the error type/text matches the
+        // inline walk.
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(16, Runtime.getRuntime.availableProcessors()))
+        try {
+          val checks = files.tail.map { s =>
+            pool.submit(new java.util.concurrent.Callable[Option[String]] {
+              override def call(): Option[String] =
+                mismatch(s, Vcf.headerMetaCached(conf, s))
+            })
+          }
+          checks.foreach { f =>
+            val mm =
+              try f.get()
+              catch { // keep a failed header read's own exception type
+                case e: java.util.concurrent.ExecutionException => throw e.getCause
               }
-            }
-          })
-        }
-        checks.foreach { f =>
-          val mismatch =
-            try f.get()
-            catch { // keep a failed header read's own exception type
-              case e: java.util.concurrent.ExecutionException => throw e.getCause
-            }
-          require(mismatch.isEmpty, mismatch.get)
-        }
-        // cancels the queued remainder when a mismatch threw mid-walk; a
-        // completed walk has nothing left to cancel
-      } finally pool.shutdownNow()
+            require(mm.isEmpty, mm.get)
+          }
+          // cancels the queued remainder when a mismatch threw mid-walk; a
+          // completed walk has nothing left to cancel
+        } finally pool.shutdownNow()
+      }
     }
     // region-index split pruning: with (chrom,pos) predicates pushed and a
     // fresh sidecar present, drop splits whose stats cannot match — the
@@ -472,6 +497,31 @@ object VcfFilterEval {
     }
   }
 
+  /** Does the scan decide `f` exactly, so Spark need not re-apply it?
+    * True for region predicates only: chrom equality/inclusion/non-null
+    * and pos equality/inclusion/range/non-null with `Long` comparands
+    * (`In` lists may hold nulls, which never match — SQL's `x IN (a,
+    * null)` is null, not true, unless x = a), and `And`/`Or` trees of
+    * those. [[eval]] compares them on the same `chrom` string and
+    * `pos` long the row carries, so "kept by the scan" and "true in
+    * SQL" coincide. Not exact: `qual` (double ordering, see [[dblCmp]]),
+    * `filter`, typed INFO and FORMAT fields, which the scan only uses to
+    * prune. */
+  def exact(f: Filter): Boolean = f match {
+    case EqualTo("chrom", _: String) => true
+    case In("chrom", vs) => vs.forall(v => v == null || v.isInstanceOf[String])
+    case IsNotNull("chrom") | IsNotNull("pos") => true
+    case EqualTo("pos", _: java.lang.Long) => true
+    case In("pos", vs) => vs.forall(v => v == null || v.isInstanceOf[java.lang.Long])
+    case GreaterThan("pos", _: java.lang.Long) => true
+    case GreaterThanOrEqual("pos", _: java.lang.Long) => true
+    case LessThan("pos", _: java.lang.Long) => true
+    case LessThanOrEqual("pos", _: java.lang.Long) => true
+    case And(l, r) => exact(l) && exact(r)
+    case Or(l, r) => exact(l) && exact(r)
+    case _ => false
+  }
+
   /** Does this filter reference any FORMAT-derived column? Such filters
     * are staged after the FORMAT split (they may also reference prefix
     * columns — the full split covers those too). */
@@ -596,6 +646,22 @@ object VcfFilterEval {
     case _ => null
   }
 
+  /** Spark SQL's double ordering (`SQLOrderingUtil.compareDoubles`):
+    * NaN equals NaN and sorts above every other value, -0.0 equals 0.0.
+    * Java's `==`/`<` disagree on NaN, so a pruning predicate written with
+    * them would drop lines Spark keeps (`qual = NaN`, `qual > 5` on a NaN
+    * qual). */
+  private def dblCmp(a: Double, b: Double): Int =
+    if (a == b) 0 else java.lang.Double.compare(a, b)
+
+  /** `qual` against a comparand; null = no decision (null value or
+    * comparand — a non-match). */
+  private def qualCmp(head: Array[String], v: Any): java.lang.Integer = {
+    val q = qualOf(head); val d = dbl(v)
+    if (q == null || d == null) null
+    else java.lang.Integer.valueOf(dblCmp(q.doubleValue(), d.doubleValue()))
+  }
+
   private def qualOf(head: Array[String]): java.lang.Double =
     if (head.length < 6 || head(5) == "." || head(5) == null) null
     else try java.lang.Double.valueOf(head(5).trim)
@@ -610,9 +676,15 @@ object VcfFilterEval {
   private def infoCmp(ictx: InfoCtx, c: String, v: Any): java.lang.Integer = {
     val g = ictx.value(c)
     (g, v) match {
+      // long against long stays integral: through doubles, values past
+      // 2^53 would tie and a strict comparison would drop a kept line
+      case (a: java.lang.Long, b: java.lang.Long) =>
+        java.lang.Integer.valueOf(java.lang.Long.compare(a.longValue(), b.longValue()))
       case (a: Number, b: Number) =>
-        java.lang.Integer.valueOf(java.lang.Double.compare(a.doubleValue(), b.doubleValue()))
-      case (a: String, b: String) => java.lang.Integer.valueOf(a.compareTo(b))
+        java.lang.Integer.valueOf(dblCmp(a.doubleValue(), b.doubleValue()))
+      // Spark compares strings as UTF-8 bytes, not UTF-16 units
+      case (a: String, b: String) => java.lang.Integer.valueOf(
+        UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))
       case _ => null
     }
   }
@@ -655,8 +727,7 @@ object VcfFilterEval {
       val n = num(v); pos != null && n != null && pos.longValue() == n.longValue()
     case EqualTo("filter", v) => filterOf(head) == v && v != null
     case EqualTo("qual", v) =>
-      val q = qualOf(head); val d = dbl(v)
-      q != null && d != null && q.doubleValue() == d.doubleValue()
+      val r = qualCmp(head, v); r != null && r.intValue() == 0
     case In("chrom", vs) => chrom != null && vs.contains(chrom)
     case In("pos", vs) =>
       pos != null && vs.exists { v =>
@@ -665,10 +736,7 @@ object VcfFilterEval {
     case In("filter", vs) =>
       val fl = filterOf(head); fl != null && vs.contains(fl)
     case In("qual", vs) =>
-      val q = qualOf(head)
-      q != null && vs.exists { v =>
-        val d = dbl(v); d != null && d.doubleValue() == q.doubleValue()
-      }
+      vs.exists { v => val r = qualCmp(head, v); r != null && r.intValue() == 0 }
     case IsNotNull("chrom") => chrom != null
     case IsNotNull("pos") => pos != null
     case IsNotNull("filter") => filterOf(head) != null
@@ -682,17 +750,13 @@ object VcfFilterEval {
     case LessThanOrEqual("pos", v) =>
       val n = num(v); pos != null && n != null && pos.longValue() <= n.longValue()
     case GreaterThan("qual", v) =>
-      val q = qualOf(head); val d = dbl(v)
-      q != null && d != null && q.doubleValue() > d.doubleValue()
+      val r = qualCmp(head, v); r != null && r.intValue() > 0
     case GreaterThanOrEqual("qual", v) =>
-      val q = qualOf(head); val d = dbl(v)
-      q != null && d != null && q.doubleValue() >= d.doubleValue()
+      val r = qualCmp(head, v); r != null && r.intValue() >= 0
     case LessThan("qual", v) =>
-      val q = qualOf(head); val d = dbl(v)
-      q != null && d != null && q.doubleValue() < d.doubleValue()
+      val r = qualCmp(head, v); r != null && r.intValue() < 0
     case LessThanOrEqual("qual", v) =>
-      val q = qualOf(head); val d = dbl(v)
-      q != null && d != null && q.doubleValue() <= d.doubleValue()
+      val r = qualCmp(head, v); r != null && r.intValue() <= 0
     case EqualTo(c, v) if sampleCols.contains(c) =>
       val g = if (ctx == null) null else ctx.int(c); val n = num(v)
       g != null && n != null && g.longValue() == n.longValue()

@@ -242,13 +242,16 @@ class VcfDataWriter(conf: Configuration, stagingDir: String, fileName: String,
           if (ext._2 == null) (lo, hi)
           else (math.min(lo, ext._2.longValue()), math.max(hi, ext._2.longValue()))
       }
-      if ((tbiBuilder != null || csiBuilder != null) && sink != null && ext._2 != null) {
+      if ((tbiBuilder != null || csiBuilder != null) && sink != null) {
         val vBeg = sink.virtualOffset
         emit(pad(line, n))
-        val f = Tabix.Feature(ext._1, ext._2.longValue() - 1, ext._3,
-          vBeg, sink.virtualOffset)
-        if (tbiBuilder != null) tbiBuilder.add(f)
-        if (csiBuilder != null) csiBuilder.add(f)
+        val vEnd = sink.virtualOffset
+        def index(b: Tabix.Builder): Unit = if (b != null) {
+          if (ext._2 == null) b.addUnplaced(ext._1, vBeg, vEnd)
+          else b.add(Tabix.Feature(ext._1, ext._2.longValue() - 1, ext._3, vBeg, vEnd))
+        }
+        index(tbiBuilder)
+        index(csiBuilder)
         return
       }
     }
