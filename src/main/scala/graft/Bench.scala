@@ -108,7 +108,7 @@ object Bench {
     * minimum. Returns the healed map, the list actually re-run, and the
     * `heal_floor` list: queries whose kept minimum is more than
     * `floorRatio` below the first run. With a genuinely COLD rerun
-    * (caller's `rerun` must clear caches/memos first — see `coldReset`)
+    * (caller's `rerun` must clear caches first — see `coldReset`)
     * a >10x drop is real contention healing and the min is correct, but
     * it is the same numeric signature as the round-12 warm-cache
     * pollution, so it is never published silently: the annotation makes
@@ -132,21 +132,16 @@ object Bench {
     (healed, toHeal.sorted, floored.result().sorted)
   }
 
-  /** Drop EVERY source of cross-run warmth before a heal rerun or a
-    * standalone cold probe: Spark's cache manager (operators like
-    * OverlapSuppress persist internally and never unpersist) AND the
-    * session memos (shingle/minhash/pair-scores/ANN/jcAgg), whose
-    * re-persist arm would otherwise resurrect the frame right through a
-    * clearCache(). Without BOTH, a rerun of w3/d3/rg3 measures cache
-    * projection, not the query — the BENCH_SKEW100 r12 defect.
+  /** Drop cached frames before a heal rerun or a standalone cold probe,
+    * so a rerun measures the query, not a cache projection (the
+    * BENCH_SKEW100 r12 defect). Registered queries keep no session state
+    * (CacheGuardSpec), so this only matters for frames a caller cached.
     * Deliberately NOT swept: the at-rest parquet store (AtRest) — that is
     * INPUT state, not warmth; its consumers' steady state is "tables
-    * exist" (main() pre-seeds them before any timing), and the build cost
-    * stays visible in every run via x19/x22's unconditional rebuilds. */
-  def coldReset(spark: org.apache.spark.sql.SparkSession): Unit = {
+    * exist", and the build cost stays visible in every run via x19/x22's
+    * unconditional rebuilds. */
+  def coldReset(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.catalog.clearCache()
-    graft.queries.FrameMemos.clearAll()
-  }
 
   /** Max stdout-line length. The driver keeps only a ~2,000-char tail of
     * stdout (an sbt "[success] ..." line eats ~80 of it); every BENCH_rNN
@@ -275,9 +270,8 @@ object Bench {
         case _ => Map.empty
       }
     val toHeal = suspicious(results, profile).filterNot(errors.contains)
-    // each heal rerun is COLD: clear the catalog cache AND evict the session
-    // memos first, so a query that persists internally (w3) or resolves via
-    // a memoized frame (d3/d4/rg3) cannot publish a warm-projection minimum.
+    // each heal rerun is COLD: clear the catalog cache first, so no cached
+    // frame can publish a warm-projection minimum.
     // A rerun that THROWS must not publish its elapsed-to-failure time as
     // the minimum (time() swallows the exception and returns the partial
     // elapsed): the first completed run's number stands, the failure is

@@ -29,8 +29,7 @@ object RunQuery {
       println(f"[runquery] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s  $n%d rows")
       // cross-query canonical-plan cache hits mask standalone cost (a
       // persisted frame from query A silently serves query B) — drop the
-      // catalog cache AND the session memos (whose re-persist arm would
-      // resurrect a cleared frame) so every number reflects the query alone
+      // catalog cache so every number reflects the query alone
       Bench.coldReset(spark)
     }
     spark.stop()

@@ -27,6 +27,11 @@ object Spark {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the by-design global windows (PlanSpec pins exactly which queries
+    // plan one) each log "No Partition Defined" on every run
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

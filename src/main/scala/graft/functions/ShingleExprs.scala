@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   * Set-identical to `array_sort(array_distinct(shingleHashes3(h)))` and
   * spec-pinned against it. Null array → null; <3 tokens → empty array
   * (zero shingles, matching the composed guard). Feeds d4's
-  * [[SortedIntersectCount]] merges and the d8/x6/x8 corpus shingle memo
+  * [[SortedIntersectCount]] merges and the at-rest corpus shingle table
   * (SURVEY §2.11's dedup block). */
 case class SortedShingleSet(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)

@@ -94,10 +94,11 @@ object OverlapSuppress {
     // build (0.94 vs 2.56 s at 25 ms/open, 64 files/32 cores), while in
     // the many-small-objects regime the materialize wins (11.5 vs 4.5 s
     // at 80 ms/open, 1024 files) — which is the 100 TB lake shape, so the
-    // persist stays. Spark's LRU evicts under pressure; MEMORY_AND_DISK
-    // spills rather than recomputes.
-    val cached = ds.persist()
-    cached.count()
+    // materialize stays. MEMORY_AND_DISK spills rather than recomputes. A
+    // local checkpoint, not a persist: it holds no CacheManager entry, and
+    // its blocks go once the frame does.
+    val cached = ds.localCheckpoint(
+      eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE per-chrom pass for the split candidates, the max extent (the
     // global D is the max of the per-chrom maxima) AND the per-chrom row
     // counts that gate which chroms get anchors at all
@@ -133,8 +134,7 @@ object OverlapSuppress {
         .groupBy(_.getString(0))
         .map { case (c, rows) => c -> rows.map(_.getLong(1)).distinct.sorted }
     // stats is fully consumed once the anchors are on the driver; release
-    // it now (mirrors the empty-input path) instead of leaving it for
-    // Bench.coldReset to sweep
+    // it now (mirrors the empty-input path)
     stats.unpersist()
     val bAnchors = ds.sparkSession.sparkContext.broadcast(anchors)
     val segOf = udf { (chrom: String, pos: Long) =>

@@ -50,89 +50,29 @@ object Curation {
       .withColumn("_th", Text.tokenHashesFromText(col("text")))
       .select(col("doc_id"), Text.sortedShingleSet(col("_th")).as("sh"))
 
-  /** Write the corpus shingle-set table ONCE — the at-rest form of the
-    * [[cachedShingleSets]] session memo (what the memo's scaladoc calls
-    * "a written-once shingle table at a real lake"). An ingest job pays
-    * the tokenize+hash pass a single time; d8/x6/x8-shaped consumers then
-    * run their `*From(...)` variants against [[shingleSetsFromParquet]]
-    * without rescanning document text. CurationSpec proves the round trip
-    * frame-identical to the direct build (sorted sets are deterministic,
-    * so equality is exact). */
+  /** Derivation-recipe tag of the shingle sets: whitespace tokenizer v1,
+    * md5-prefix token hashes, 3-gram combine, sorted distinct. The at-rest
+    * table name carries it (AtRest.Store.shingles). */
+  private[queries] val shingleRecipe = "ws1md5sh3"
+
+  /** Write the corpus shingle-set table ONCE — AtRest's shingle table is
+    * built through this. An ingest job pays the tokenize+hash pass a
+    * single time; d4/d8/x6/x8/x15/x16 then run against
+    * [[shingleSetsFromParquet]] without rescanning document text.
+    * CurationSpec proves the round trip frame-identical to the direct
+    * build (sorted sets are deterministic, so equality is exact). */
   def shingleSetsToParquet(docs: DataFrame, path: String): Unit =
     shingleSets(docs).write.mode("overwrite").parquet(path)
 
-  /** Read the artifact written by [[shingleSetsToParquet]]. */
+  /** Read the artifact written by [[shingleSetsToParquet]]. The schema is
+    * the writer's, declared so a scan skips footer inference (one Spark
+    * job per read). */
   def shingleSetsFromParquet(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    s.read.schema("doc_id BIGINT, sh ARRAY<BIGINT>").parquet(path)
 
-  /** Session-scoped memo of the corpus shingle-set frame — the same
-    * pattern (and the same production argument) as TextDedup.cachedMinhash
-    * and Similarity.annIndex: d8 (hotspots), x6 (decontamination) and x8
-    * (boiler fraction) all consume one tokenize+hash pass of the corpus;
-    * without an explicit memo each pays its own full pass standalone
-    * (~15 s at the 100× replica) while in a shared session the
-    * CacheManager sometimes — not deterministically — served one query's
-    * plan to another. At a real lake this frame is a written-once shingle
-    * table (cf. TextDedup.signaturesToParquet). */
-  // True LRU via the shared LruFrameMemo: past the bound evict ONE
-  // least-recently-used entry, not every other key (the clear-all thrash
-  // pattern, ADVICE r10); recency/evict/re-persist validated atomically
-  // against a racing eviction (ADVICE r11) — see LruFrameMemo's contract.
-  // The ~15 s corpus materialize runs under the CHM's per-KEY lock, never
-  // the global recency monitor. The re-persist arm covers an external
-  // spark.catalog.clearCache() (RunQuery, the bench's clear-cache mode)
-  // silently unpersisting the memoized frame — without it every consumer
-  // would recompute the full corpus pass.
-  private val shingleMemo = new LruFrameMemo[(Int, String), DataFrame](
-    max = 8,
-    ensurePersisted = df =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        df.persist(); df.count()
-      },
-    unpersist = _.unpersist(false))
-
-  /** Session memo of the ONE md5-per-token pass (doc_id, th) every derived
-    * corpus artifact starts from — the shingle-set memo's build derives
-    * `sortedShingleSet(th)` from it and x16's runs path derives the
-    * ORDERED shingles (position-preserving, which the sorted-distinct sh
-    * frame cannot reconstruct). Before this memo (VERDICT r12 #7), x16
-    * re-hashed the whole corpus even in a session whose shingle memo
-    * already held a frame derived from the identical pass. ~8 bytes x
-    * tokens/doc persisted (2x the sh frame's footprint at the 100x
-    * replica: ~240 MB for 500k docs — MEMORY_AND_DISK spills, never
-    * recomputes); at a real lake this is the written-once token-hash
-    * column of the shingle table, not executor cache. */
-  private val thMemo = new LruFrameMemo[(Int, String), DataFrame](
-    max = 8,
-    ensurePersisted = df =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-      },
-    unpersist = _.unpersist(false))
-
-  private[queries] def cachedTokenHashes(s: SparkSession, d: String): DataFrame =
-    thMemo.getOrBuild((System.identityHashCode(s), d)) {
-      val fresh = Tables.documents(s, d)
-        .select(col("doc_id"), Text.tokenHashesFromText(col("text")).as("th"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      fresh.count() // materialize eagerly: parallel consumers must not race
-      fresh
-    }
-
-  private[queries] def cachedShingleSets(s: SparkSession, d: String): DataFrame = {
-    // hoisted OUTSIDE getOrBuild: thMemo is a different CHM so nesting is
-    // legal, but keeping every build closure CHM-free is the convention
-    // that closed the r12 self-review reentrancy hole (cachedPairScores)
-    val th = cachedTokenHashes(s, d)
-    shingleMemo.getOrBuild((System.identityHashCode(s), d)) {
-      val fresh = th
-        .select(col("doc_id"), Text.sortedShingleSet(col("th")).as("sh"))
-        .persist()
-      fresh.count() // materialize eagerly: parallel consumers must not race
-      fresh
-    }
-  }
+  /** The at-rest shingle sets of `d`'s corpus (built on first use). */
+  private def atRestShingleSets(s: SparkSession, d: String): DataFrame =
+    shingleSetsFromParquet(s, AtRest.ensureShingleSets(s, d))
 
   /** Explode an EXPENSIVE computed array without the optimizer's inferred
     * pre-Generate filter: plain `explode` makes Catalyst add
@@ -152,8 +92,8 @@ object Curation {
   def hotspotNgrams(docs: DataFrame, hotDf: Int = HOT_DF): DataFrame =
     hotspotNgramsFrom(shingleSets(docs), hotDf)
 
-  /** [[hotspotNgrams]] over an existing shingle-set frame (the memo, or a
-    * written shingle table at a real lake). */
+  /** [[hotspotNgrams]] over an existing shingle-set frame (the at-rest
+    * shingle table). */
   def hotspotNgramsFrom(sh: DataFrame, hotDf: Int = HOT_DF): DataFrame =
     explodeShingles(sh)
       .groupBy("h").agg(count(lit(1)).as("df"))
@@ -444,16 +384,15 @@ object Curation {
     * absent from the output (d1's exact-dedup territory, as with
     * MinHash). */
   def dupSpanStats(docs: DataFrame, sh: DataFrame, minDf: Int = 2): DataFrame = {
-    // Standalone (no-memo) form: the md5-per-token pass runs ONCE (the
-    // runs path); the totals branch needs only the shingle COUNT, which is
+    // The md5-per-token pass runs ONCE (the runs path, which needs the
+    // ORDERED shingles the sorted-distinct `sh` table cannot reconstruct);
+    // the totals branch needs only the shingle COUNT, which is
     // size(tokens) - 2 — a pure split+size scan with no hashing at all.
     // (A shared-subtree form with one scan feeding both branches was tried
     // and defeated by the optimizer itself: column pruning strips the
     // window from the totals branch, the canonicalized exchanges diverge,
     // and ReuseExchange never fires — two md5 scans. Decoupling makes the
-    // second scan hash-free instead. The registered x16 goes further and
-    // resolves through [[dupSpanStatsFromTh]] over the memoized token-hash
-    // frame — zero md5 in either branch once the memo is warm.)
+    // second scan hash-free instead.)
     spanStats(
       docs.select(col("doc_id"),
         Text.tokenHashesFromText(col("text")).as("th")),
@@ -462,11 +401,10 @@ object Curation {
       sh, minDf)
   }
 
-  /** [[dupSpanStats]] over a prebuilt (doc_id, th) token-hash frame — the
-    * memoized path ([[cachedTokenHashes]]): both the ordered-shingle runs
-    * branch and the totals branch scan the persisted th frame, so the
-    * registered x16 re-hashes nothing. CurationSpec pins it
-    * frame-identical to the docs form. */
+  /** [[dupSpanStats]] over a prebuilt (doc_id, th) token-hash frame (a
+    * written token-hash column at a real lake): both the ordered-shingle
+    * runs branch and the totals branch scan it, so nothing is re-hashed.
+    * CurationSpec pins it frame-identical to the docs form. */
   def dupSpanStatsFromTh(th: DataFrame, sh: DataFrame, minDf: Int = 2): DataFrame =
     spanStats(th,
       th.select(col("doc_id"),
@@ -509,7 +447,7 @@ object Curation {
     boilerFractionFrom(shingleSets(docs).persist(), hotDf)
   }
 
-  /** [[boilerFraction]] over an existing (persisted/memoized) frame. */
+  /** [[boilerFraction]] over an existing (persisted or at-rest) frame. */
   def boilerFractionFrom(sh: DataFrame, hotDf: Int = HOT_DF): DataFrame = {
     val hot = explodeShingles(sh)
       .groupBy("h").agg(count(lit(1)).as("df"))
@@ -695,20 +633,20 @@ object Curation {
     // broadcast semi-join as before (PlanSpec still sees it) and the
     // oracle is unchanged; a production-sized pool flips it to x15's shape
     "x6_decontaminate" -> { (s, d) =>
-      decontaminateAutoFrom(cachedShingleSets(s, d)) },
+      decontaminateAutoFrom(atRestShingleSets(s, d)) },
     // ----- X15: the Bloom-prefiltered form — fixed-size sketch broadcast,
     // exact verify join over the candidate remainder; output == x6
     "x15_bloom_decontaminate" -> { (s, d) =>
-      decontaminateBloomFrom(cachedShingleSets(s, d)) },
+      decontaminateBloomFrom(atRestShingleSets(s, d)) },
     // ----- X16: duplicate-span detection (exact-substring-dedup signal):
     // longest run of consecutive >=minDf-df shingle positions per doc
     "x16_dup_spans" -> { (s, d) =>
-      dupSpanStatsFromTh(cachedTokenHashes(s, d), cachedShingleSets(s, d)) },
+      dupSpanStats(Tables.documents(s, d), atRestShingleSets(s, d)) },
     // ----- D8: boilerplate n-gram detection — document frequency of every
     // 3-gram shingle, hotspots only
-    "d8_ngram_hotspots" -> { (s, d) => hotspotNgramsFrom(cachedShingleSets(s, d)) },
+    "d8_ngram_hotspots" -> { (s, d) => hotspotNgramsFrom(atRestShingleSets(s, d)) },
     // ----- X8: per-doc boilerplate fraction (quality-filter input)
-    "x8_boiler_fraction" -> { (s, d) => boilerFractionFrom(cachedShingleSets(s, d)) },
+    "x8_boiler_fraction" -> { (s, d) => boilerFractionFrom(atRestShingleSets(s, d)) },
     // ----- X7: deterministic temperature mix-sampling per source domain
     "x7_mix_sample" -> { (s, d) => mixSampleSummary(Tables.documents(s, d)) },
     // ----- X9: context-window chunking (map-only shard prep)

@@ -86,38 +86,23 @@ object ReportGrid {
     when(col("l_returnflag") === "A", "all")
       .when(col("l_returnflag") === "N", "novel").otherwise("known")
 
-  /** ONE aggregate scan carrying all seven metrics, persisted (6 rows),
-    * then sliced into the three GATK-shaped input frames — three separate
-    * derivations would each rescan lineitem for the same group keys.
-    * Memoized per (session, dir) via the shared LruFrameMemo (ADVICE r11:
-    * the per-invocation persist accumulated one 6-row cached frame per
-    * rg3 run in a long-lived session, with nothing ever unpersisting
-    * them; the memo gives each the one-owner eviction lifecycle the
-    * other session memos already have). */
-  private val jcAggMemo = new graft.queries.LruFrameMemo[(Int, String), DataFrame](
-    max = 8,
-    ensurePersisted = df =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        df.persist(); df.count()
-      },
-    unpersist = _.unpersist(false))
-
+  /** ONE aggregate scan carrying all seven metrics, then sliced into the
+    * three GATK-shaped input frames — three separate derivations would
+    * each rescan lineitem for the same group keys. Checkpointed (6 rows):
+    * each slice prunes the aggregate to its own columns, so the three
+    * plans differ and Spark cannot share one exchange between them. */
   private def jcAgg(s: SparkSession, d: String): DataFrame =
-    jcAggMemo.getOrBuild((System.identityHashCode(s), d)) {
-      val agg = Tables.lineitem(s, d)
-        .groupBy(col("l_linestatus").as("JexlExpression"), jcNovelty.as("Novelty"))
-        .agg(count(lit(1)).as("nSNPs"),
-          sum(col("l_quantity").cast("long")).as("nIndels"),
-          avg("l_discount").as("TiTvRatio"),
-          avg("l_tax").as("insertion_to_deletion_ratio"),
-          min("l_partkey").as("n_singleton_SNPs"),
-          max("l_suppkey").as("n_singleton_indels"),
-          avg("l_discount").as("variantMultiSnpRatio"),
-          avg("l_tax").as("variantMultiIndelRatio"))
-        .persist()
-      agg.count()
-      agg
-    }
+    Tables.lineitem(s, d)
+      .groupBy(col("l_linestatus").as("JexlExpression"), jcNovelty.as("Novelty"))
+      .agg(count(lit(1)).as("nSNPs"),
+        sum(col("l_quantity").cast("long")).as("nIndels"),
+        avg("l_discount").as("TiTvRatio"),
+        avg("l_tax").as("insertion_to_deletion_ratio"),
+        min("l_partkey").as("n_singleton_SNPs"),
+        max("l_suppkey").as("n_singleton_indels"),
+        avg("l_discount").as("variantMultiSnpRatio"),
+        avg("l_tax").as("variantMultiIndelRatio"))
+      .localCheckpoint()
 
   private def jcVs(agg: DataFrame): DataFrame =
     agg.select("JexlExpression", "Novelty", "nSNPs", "nIndels", "TiTvRatio")

@@ -193,30 +193,67 @@ object Similarity {
   def writeAssignmentsByCell(assigned: DataFrame, path: String): Unit =
     assigned.write.mode("overwrite").partitionBy("cid").parquet(path)
 
-  /** Write the COMPLETE ANN ingest artifact set — the at-rest form of the
-    * [[annIndex]] session memo, making the "written-once index" story
-    * executable rather than argued: cell assignments (partitioned by cid
-    * for probe-side partition pruning), the PQ code table (same layout),
-    * and a one-row meta table carrying the cell count. A cluster ingest
-    * job calls this once; every later session serves e2/e3/e4-shaped
-    * queries from [[annIndexFromParquet]] without touching the raw
-    * embeddings. SimilaritySpec proves the round trip frame-identical to
-    * the memo. */
+  /** Derivation-recipe tag of the ANN index: sqrt(N) first-id centroids,
+    * PQ with [[PQ_M]] subspaces x [[PQ_K]] first-id codebook entries. The
+    * at-rest index name carries it (AtRest.Store.ann). */
+  private[queries] def annRecipe: String = s"ivfsqrt-pq${PQ_M}x$PQ_K"
+
+  /** Write the COMPLETE ANN ingest artifact set from the raw embeddings:
+    * cell assignments, the PQ code table, and a one-row meta table
+    * carrying the cell count. AtRest builds its ANN index with the same
+    * three writers, one committed table each (at the 100x replica the
+    * assignment alone was 25.5 s of e2's 32.4 s, and again in e4, when
+    * each query derived its own); e2/e3/e4 then serve from
+    * [[annIndexFromParquet]] without touching the raw embeddings.
+    *
+    * Flat tables, not [[writeAssignmentsByCell]]'s cid partitioning: with
+    * sqrt(N) cells every scan lists one directory per cell (past 32 that
+    * is a Spark listing job) over one tiny file each — measured at sf0.1
+    * (45 cells), e2/e3/e4 read from partitioned tables took 2.1-3.0 s of
+    * wall against 0.5-1.1 s from the session memo. */
   def writeAnnIndex(s: SparkSession, d: String, path: String): Unit = {
-    val (assigned, codes, nCells) = annIndex(s, d)
-    writeAssignmentsByCell(assigned, path + "/assignments")
-    codes.write.mode("overwrite").partitionBy("cid").parquet(path + "/codes")
-    s.range(1).select(lit(nCells).as("n_cells"))
-      .write.mode("overwrite").parquet(path + "/meta")
+    writeAnnAssignments(s, d, s"$path/assignments")
+    writeAnnCodes(s, s"$path/assignments", s"$path/codes")
+    writeAnnMeta(s, d, s"$path/meta")
   }
 
+  private def annCells(s: SparkSession, d: String): Long =
+    cellCountForAnn(Tables.embeddings(s, d).count())
+
+  private[queries] def writeAnnAssignments(s: SparkSession, d: String, path: String): Unit = {
+    val nCells = annCells(s, d)
+    val all = vecs(s, d)
+    val cents = all.filter(col("vec_id") < nCells)
+      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
+    assignToCellsAuto(all, cents, nCells).write.mode("overwrite").parquet(path)
+  }
+
+  /** Codes encoded from the WRITTEN assignments, so the O(C)-per-row
+    * assignment argmax runs once. */
+  private[queries] def writeAnnCodes(s: SparkSession, assignments: String, path: String): Unit = {
+    val assigned = s.read.schema(AssignmentsSchema).parquet(assignments)
+    val all = assigned.select("vec_id", "v")
+    assigned.select(col("vec_id"), col("cid"),
+        pqEncodeUdf(all, pqCodebook(all))(col("v")).as("codes"))
+      .write.mode("overwrite").parquet(path)
+  }
+
+  private[queries] def writeAnnMeta(s: SparkSession, d: String, path: String): Unit =
+    s.range(1).select(lit(annCells(s, d)).as("n_cells"))
+      .write.mode("overwrite").parquet(path)
+
+  // the writers' schemas, declared so a scan skips footer inference (one
+  // Spark job per read)
+  private val AssignmentsSchema = "vec_id BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE, cid BIGINT"
+  private val CodesSchema = "vec_id BIGINT, cid BIGINT, codes ARRAY<INT>"
+
   /** Read the artifact set written by [[writeAnnIndex]] — the
-    * (assignments, codes, nCells) triple in the memo's shape, scanning
-    * the written index instead of recomputing assignment/encode. */
+    * (assignments, codes, nCells) triple, scanning the written index
+    * instead of recomputing assignment/encode. */
   def annIndexFromParquet(s: SparkSession, path: String): (DataFrame, DataFrame, Long) = {
-    val nCells = s.read.parquet(path + "/meta").head.getLong(0)
-    (s.read.parquet(path + "/assignments"),
-      s.read.parquet(path + "/codes"), nCells)
+    val nCells = s.read.schema("n_cells BIGINT").parquet(s"$path/meta").head.getLong(0)
+    (s.read.schema(AssignmentsSchema).parquet(s"$path/assignments"),
+      s.read.schema(CodesSchema).parquet(s"$path/codes"), nCells)
   }
 
   /** Lloyd's k-means refinement of an IVF centroid set — distributed
@@ -442,7 +479,7 @@ object Similarity {
   }
 
   /** [[ivfPqSearch]] against a PRE-BUILT code table: `codes` is the
-    * (vec_id, cid, codes) frame ([[annIndex]] / a persisted ingest run).
+    * (vec_id, cid, codes) frame ([[annIndex]] / a written ingest run).
     * Only the tiny query batch is assigned here; the collection-sized
     * assignment and encode are the caller's materialized input. */
   def ivfPqSearchIndexed(all: DataFrame, codes: DataFrame, queries: DataFrame,
@@ -475,89 +512,18 @@ object Similarity {
       .select("qid", "rank", "vec_id", "sim")
   }
 
-  /** Session-scoped ANN index artifacts — the frames a real deployment
-    * materializes ONCE at ingest (the IVF cell assignment, the PQ code
-    * table) and serves every query from ([[writeAssignmentsByCell]] /
-    * [[pqEncode]] are the parquet forms). e2/e3/e4 resolve their shared
-    * prep through this memo, so assignment and encode run once per
-    * (session, dir) instead of once per query — at the 100x replica the
-    * recomputed assignment alone was 25.5 s of e2's 32.4 s and again in
-    * e4. Persisted MEMORY_AND_DISK and keyed by session identity, so a
-    * restarted session (or the clear-cache bench mode) re-derives cleanly;
-    * contents are deterministic, so sharing cannot change any result. */
-  // True LRU via the shared LruFrameMemo: past the cap, evict ONE eldest
-  // entry (the clear-all form unpersisted frames a concurrent query on
-  // another dir could be scanning — ADVICE r10); recency/evict/re-persist
-  // validated atomically against a racing eviction (ADVICE r11). The
-  // re-persist arm covers an external clearCache() dropping the memoized
-  // frames (otherwise every ANN query recomputes assignment/encode).
-  private val annIndexMemo =
-    new LruFrameMemo[(Int, String), (DataFrame, DataFrame, Long)](
-      max = 8,
-      ensurePersisted = e => Seq(e._1, e._2).foreach { df =>
-        if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-          df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      },
-      unpersist = e => { e._1.unpersist(false); e._2.unpersist(false) })
-
-  /** d6's (label, cid)-assigned frame, memoized with the one-owner
-    * eviction lifecycle every other session persist has (r17 review: the
-    * original in-query persist leaked one full-vector cached frame per
-    * d6 invocation — the exact accumulation class ReportGrid's jcAgg memo
-    * fixed). Contents deterministic per (session, dir).
-    *
-    * Storage level DISK_ONLY (r18, VERDICT r17 #4 — measured, not
-    * asserted): D6PersistProbe at the 100x replica, interleaved arms,
-    * 10.26M pairs checksum-identical: persist ~2.4-2.5 s vs recompute
-    * 4.3-5.2 s (the O(C)-per-row argmax re-ran on both join sides), and
-    * DISK_ONLY == MEMORY_AND_DISK on wall (2.5 vs 2.4 s — the columnar
-    * batches stream back from NVMe as fast as the pool serves them). The
-    * frame carries FULL VECTORS and is corpus-sized at the dedup sizing,
-    * so at 100 TB MEMORY_AND_DISK would compete with the join's execution
-    * memory exactly when it is needed most; DISK_ONLY keeps the measured
-    * 2x recompute win with zero unified-pool pressure. */
-  private val d6AssignMemo = new LruFrameMemo[(Int, String), DataFrame](
-    max = 4,
-    ensurePersisted = df =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        df.count(): Unit
-      },
-    unpersist = _.unpersist(false))
-
-  /** Freshness token of `<d>/embeddings.parquet`: (mtime, length) of
-    * every file under it, stat'ed through the Hadoop FileSystem as
-    * [[graft.Tables.load]] reads it, so any sf-dir URI (`file:`,
-    * `hdfs://`, `s3a://`) is seen. A directory table folds in its child
-    * files: rewriting a part file in place leaves the directory's own
-    * status unchanged. Empty when the table cannot be listed. */
-  private[queries] def embeddingsToken(s: SparkSession, d: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")
-      val it = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
-      val stats = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        stats += ((f.getPath.toString, f.getModificationTime, f.getLen))
-      }
-      val all = stats.result().sorted
-      s"${all.length}:${all.map(_._3).sum}:${all.hashCode}"
-    } catch { case _: Exception => "" }
-
+  /** The ANN index of `d`'s embeddings from the at-rest store — built by
+    * the first of e2/e3/e4 to run against these embedding bytes, scanned
+    * by the rest. */
   private[queries] def annIndex(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Long) =
-    annIndexMemo.getOrBuild((System.identityHashCode(s), d)) {
-      val nCells = cellCountForAnn(Tables.embeddings(s, d).count())
-      val all = vecs(s, d)
-      val cents = all.filter(col("vec_id") < nCells)
-        .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-      val assigned = assignToCellsAuto(all, cents, nCells)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val codes = assigned.select(col("vec_id"), col("cid"),
-        pqEncodeUdf(all, pqCodebook(all))(col("v")).as("codes"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (assigned, codes, nCells)
-    }
+    annIndexFromParquet(s, AtRest.ensureAnnIndex(s, d))
+
+  /** Only the assignments (e2 does not search the PQ codes, so it never
+    * pays their encode). */
+  private def annAssignments(s: SparkSession, d: String): DataFrame =
+    s.read.schema(AssignmentsSchema)
+      .parquet(s"${AtRest.ensureAnnIndex(s, d, codes = false)}/assignments")
 
   /** Top-k per query via the [[graft.functions.TopKBySim]] partial
     * aggregate — replaces the `row_number() OVER (PARTITION BY qid)`
@@ -598,37 +564,33 @@ object Similarity {
     // every vector to its nearest deterministic centroid first bounds each
     // block; the cell count is the knob that scales with data.
     "d6_cosine_dedup" -> { (s, d) =>
-      // persist + eager materialize via the session memo (r17): the pair
-      // join consumes `assigned` on BOTH sides, and the two subtrees are
-      // not canonically equal (different projections), so nothing is
-      // reused — each side re-ran the scan + norm + O(C)-per-row
-      // assignment argmax, the query's dominant stage (the same
-      // double-evaluation class as sharp edge #16; at the dedup sizing C
-      // grows with N, so the waste scales). The memo (not a bare
-      // per-invocation persist — r17 review) gives the frame the
-      // one-owner unpersist lifecycle; eager count inside ensurePersisted
-      // avoids the in-flight cache-population race between the join's two
-      // subtree scans. Plan: 2× [Scan+UDF assignment] → 1× + two
-      // InMemoryTableScans.
-      // freshness token in the memo key (ADVICE r17): an in-session rewrite
-      // of the embeddings table misses the memo, restoring the pre-r17
-      // recompute-per-invocation behavior for stale state instead of
-      // serving old cell assignments
-      val embStat = embeddingsToken(s, d)
-      val assigned = d6AssignMemo.getOrBuild((System.identityHashCode(s), s"$d|$embStat")) {
-        val nCells = cellCountForDedup(Tables.embeddings(s, d).count())
-        val all = vecs(s, d).join(
-          Tables.embeddings(s, d).select(col("vec_id"), col("label")), Seq("vec_id"))
-        val cents = all.filter(col("vec_id") < nCells)
-          .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
-        val fresh = assignToCellsAuto(all, cents, nCells)
-          .select("vec_id", "label", "v", "nrm", "cid")
-          // DISK_ONLY: same wall as MEMORY_AND_DISK, no unified-pool
-          // pressure from full-vector batches — see d6AssignMemo
-          .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        fresh.count()
-        fresh
-      }
+      // checkpointed + eagerly materialized: the pair join consumes
+      // `assigned` on BOTH sides, and the two subtrees are not canonically
+      // equal (different projections), so nothing is reused — each side
+      // re-ran the scan + norm + O(C)-per-row assignment argmax, the
+      // query's dominant stage (the same double-evaluation class as sharp
+      // edge #16; at the dedup sizing C grows with N, so the waste
+      // scales). Plan: 2x [Scan+UDF assignment] -> 1x + two checkpoint
+      // scans. A local checkpoint is per call, so an in-place rewrite of
+      // the embeddings can never serve stale assignments, and it holds no
+      // CacheManager entry: its blocks go once the frame is unreachable.
+      //
+      // Storage level DISK_ONLY (r18, measured): D6PersistProbe at the
+      // 100x replica, interleaved arms, 10.26M pairs checksum-identical:
+      // materialized ~2.4-2.5 s vs recompute 4.3-5.2 s, and DISK_ONLY ==
+      // MEMORY_AND_DISK on wall (2.5 vs 2.4 s — the columnar batches
+      // stream back from NVMe as fast as the pool serves them). The frame
+      // carries FULL VECTORS and is corpus-sized at the dedup sizing, so at
+      // 100 TB MEMORY_AND_DISK would compete with the join's execution
+      // memory exactly when it is needed most.
+      val nCells = cellCountForDedup(Tables.embeddings(s, d).count())
+      val all = vecs(s, d).join(
+        Tables.embeddings(s, d).select(col("vec_id"), col("label")), Seq("vec_id"))
+      val cents = all.filter(col("vec_id") < nCells)
+        .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
+      val assigned = assignToCellsAuto(all, cents, nCells)
+        .select("vec_id", "label", "v", "nrm", "cid")
+        .localCheckpoint(eager = true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val b = assigned.select(col("label"), col("cid"), col("vec_id").as("vec_b"),
         col("v").as("vb"), col("nrm").as("nrmb"))
       assigned.join(b, Seq("label", "cid"))
@@ -639,9 +601,9 @@ object Similarity {
     },
     // ----- E2: IVF-bucketed ANN (cluster-pruned search)
     "e2_ivf_ann" -> { (s, d) =>
-      // assignment resolved through the shared session index ([[annIndex]])
-      // — the ingest artifact e2/e3/e4 all search against
-      val assigned = annIndex(s, d)._1.select("vec_id", "v", "nrm", "cid")
+      // assignment read from the at-rest index ([[annIndex]]) — the
+      // ingest artifact e2/e3/e4 all search against
+      val assigned = annAssignments(s, d)
       // FIXED-size query batch (<=64, spread across the id space): like e1,
       // a %-of-N query set makes probe work grow with the collection
       val q = assigned.filter(col("vec_id") % 100 === 0 && col("vec_id") < 6400)
@@ -658,7 +620,7 @@ object Similarity {
     // ----- E3: PQ-compressed ANN (asymmetric-distance scan over codes).
     // The collection is touched exactly twice: once to ENCODE (map-only,
     // broadcast codebook — the step a real deployment runs at ingest and
-    // persists), once for the ADC scan, which reads only the M-int code
+    // writes), once for the ADC scan, which reads only the M-int code
     // column + the broadcast per-query LUTs. The scan's similarity is a
     // pure Catalyst fold (zip_with + element_at over the LUT) — no vector
     // arithmetic and no UDF on the N x Q hot path.

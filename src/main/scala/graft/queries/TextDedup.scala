@@ -49,68 +49,13 @@ object TextDedup {
   def signatureFrame(docs: DataFrame): DataFrame =
     withMinhash(docs).select("doc_id", (1 to K).map(i => s"mh$i"): _*)
 
-  /** [[signatureFrame]] over a prebuilt (doc_id, th) token-hash frame —
-    * the memoized path: [[cachedMinhash]] consumes the session token-hash
-    * memo (Curation.cachedTokenHashes), so a session building both the
-    * shingle-set and signature artifacts pays the md5-per-token corpus
-    * pass ONCE, not once per artifact (round-13: the d3 cold build's two
-    * biggest stages were two identical md5 scans). Bit-identical to
-    * [[signatureFrame]]: same _th values, same native MinHashSig. */
-  def signatureFrameFromTh(th: DataFrame): DataFrame = {
-    val base = th.withColumn("_sig", Text.minhashSig(col("th"), K))
-    (1 to K).foldLeft(base) { (df, i) =>
-      df.withColumn(s"mh$i", element_at(col("_sig"), i))
-    }.select("doc_id", (1 to K).map(i => s"mh$i"): _*)
-  }
-
-  /** Signature frame, persisted: it is tiny (doc_id + K longs) and
-    * every LSH consumer scans it from both sides of a self-join — caching
-    * turns 2-4 full shingle+md5 passes into one. (At 100 TB the same role
-    * is played by [[signaturesToParquet]].) Explicitly memoized per
-    * (session, dir) — same pattern as Similarity.annIndex — instead of
-    * re-persisting an equivalent plan per query and leaning on the
-    * CacheManager's canonical-plan dedupe. */
-  // True LRU via the shared LruFrameMemo (one eldest entry evicted past
-  // the cap, not a clear-all — ADVICE r10; recency/evict/re-persist
-  // validated atomically against a racing eviction — ADVICE r11). The
-  // re-persist arm covers an external clearCache() dropping the memoized
-  // frame (otherwise every LSH consumer recomputes the corpus hash pass).
-  private val dedupFrameMemo = new LruFrameMemo[(Int, String, String), DataFrame](
-    max = 8,
-    ensurePersisted = df =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        df.persist(); df.count()
-      },
-    unpersist = _.unpersist(false))
-
-  private def cachedMinhash(s: SparkSession, d: String): DataFrame = {
-    // resolve the token-hash memo BEFORE entering getOrBuild (the build
-    // closure stays CHM-free — the convention from cachedPairScores)
-    val th = Curation.cachedTokenHashes(s, d)
-    dedupFrameMemo.getOrBuild((System.identityHashCode(s), d, "mh")) {
-      val fresh = signatureFrameFromTh(th).persist()
-      // materialize NOW: LSH consumers scan this frame 3-5 times inside one
-      // job, and parallel stages of a single action each recompute the
-      // unmaterialized plan instead of sharing in-flight cache population.
-      // Paying the one corpus hash pass eagerly makes every subsequent scan
-      // (same query AND later queries) a cache read — measured 82 -> 52 s
-      // on d4 standalone at the 100x replica.
-      fresh.count()
-      fresh
-    }
-  }
-
   // NOTE (round 10, tried and NOT adopted): persisting the LSH candidate
-  // pairs per session (the annIndex pattern — d3 reports, d4 verifies,
-  // d7 resolves over one materialized frame) could not be shown faster at
-  // the 100x replica: standalone A/B runs of the d-family swung +-35%
-  // with the box's ambient drift in BOTH directions, and 22.5 M cached
-  // pair rows compete for the 8 GB driver JVM's unified pool exactly when
-  // d7's edge repartition + checkpoints need it. Kept the round-9 shape
-  // the committed bench artifacts measure; at a real cluster the sharing
-  // mechanism is the at-rest form ([[signaturesToParquet]] +
-  // [[lshPairsFromParquet]]), not executor cache. The signature memo
-  // below stays: it is small and strictly removes 2-4 corpus hash passes.
+  // pairs in executor cache for d7 to resolve over could not be shown
+  // faster at the 100x replica: standalone A/B runs of the d-family
+  // swung +-35% with the box's ambient drift in BOTH directions, and
+  // 22.5 M cached pair rows compete for the 8 GB JVM's unified
+  // pool exactly when d7's edge repartition + checkpoints need it. d7
+  // resolves from the at-rest signature table instead.
 
   /** Hot-band degeneracy ceiling: a band key shared by k documents yields
     * k²/2 candidate pairs; one pathological key (boilerplate, empty docs)
@@ -390,12 +335,9 @@ object TextDedup {
     * (cold all-pairs + hot-band stars, spec-pinned), same Jaccard
     * arithmetic as [[Text.jaccardSorted]].
     *
-    * `docsSh` is the (doc_id, sorted-distinct shingle set) frame — the
-    * declared query passes [[Curation.cachedShingleSets]], so d4 and
-    * d8/x6/x8 share ONE corpus tokenize+hash+shingle pass per session
-    * (the previous candidate-restricted private build had a different
-    * canonical plan the CacheManager could never share; the banded inner
-    * join below restricts to pair-capable docs anyway). */
+    * `docsSh` is the (doc_id, sorted-distinct shingle set) frame (the
+    * at-rest shingle table in the registered d4, shared with d8/x6/x8;
+    * the banded inner join below restricts to pair-capable docs). */
   private[queries] def jaccardPairsGrouped(s: SparkSession, docsSh: DataFrame,
       mh: DataFrame, cap: Int = HOT_BAND_CAP): DataFrame = {
     import s.implicits._
@@ -406,11 +348,7 @@ object TextDedup {
     val banded = bands.join(multi, Seq("bid", "k1", "k2"))
       .select(col("doc_id"), col("bid"), col("k1"), col("k2"))
     // the inner join restricts to banded docs — no separate candidate
-    // semi-join needed; passing the SHARED corpus shingle frame
-    // (Curation.cachedShingleSets) means d4/d8/x6/x8 pay the
-    // tokenize+hash+shingle pass once per session instead of d4 building
-    // its own candidate-restricted copy (whose different canonical plan
-    // the CacheManager could never share).
+    // semi-join needed.
     // flatMapSortedGroups, NOT repartition+mapPartitions — see the
     // BandPairIterator group-integrity contract.
     banded.join(docsSh.filter(col("sh").isNotNull), Seq("doc_id"))
@@ -428,7 +366,7 @@ object TextDedup {
 
   /** d3's candidate pairs + estimated similarity via the SAME band
     * automaton as [[jaccardPairsGrouped]] — band rows AND the signature
-    * vector come out of one scan of the (persisted) signature frame, so
+    * vector come out of one scan of the (at-rest) signature frame, so
     * the two 22.5 M-pair-row joins of the double-join form disappear
     * entirely: one band shuffle of ~BANDS×N tiny rows, pairs scored
     * in-group, dedup on the output rows. No multi-band prefilter: the
@@ -466,9 +404,9 @@ object TextDedup {
     * the d-family at the 100x replica) twice per session. Here each
     * banded row carries the signature vector AND the sorted shingle set,
     * the automaton emits (doc_a, doc_b, est_sim, jaccard) in one sweep,
-    * and [[cachedPairScores]] memoizes the tiny result frame (4 scalars
-    * per pair — no payload arrays) so whichever of d3/d4 runs second is a
-    * projection of a persisted frame. Keeps d4's >= 2-member band
+    * and AtRest publishes the tiny result (4 scalars per pair — no payload
+    * arrays) so whichever of d3/d4 runs second scans a written table.
+    * Keeps d4's >= 2-member band
     * prefilter (the shingle payload is heavy; singleton bands emit
     * nothing anyway). Pair set and per-pair arithmetic are pinned
     * pair-for-pair equal to both single-score forms by TextDedupSpec. */
@@ -495,8 +433,8 @@ object TextDedup {
     // (D3StoreProbe /tmp/sf100, 3 interleaved reps, slow window spin
     // ~2.0 s): store 27.35/20.74/21.54 s vs memo 21.54/20.03/19.74 s —
     // the broadcast pathology is gone; the residual ~5% is the parquet
-    // scan the memo arm skips because its signature build shares the
-    // token-hash memo the shingle side already paid for. Checksums
+    // scan the memo arm skipped because its signature build shared the
+    // token-hash pass the shingle side had already paid for. Checksums
     // identical every rep (22,574,543 pairs). PlanSpec positively pins
     // both SMJ join-backs so the hint cannot silently revert.
     val banded = bands.join(multi.hint("merge"), Seq("bid", "k1", "k2"))
@@ -519,52 +457,11 @@ object TextDedup {
       .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** Session memo of [[pairScoresGrouped]] over the shared corpus
-    * artifacts — d3 and d4 both resolve through this, so the band shuffle
-    * + automaton run once per (session, dir) and the second consumer
-    * projects a persisted (doc_a, doc_b, est_sim, jaccard) frame.
-    * Deterministic contents (both scores are pure functions of the two
-    * docs, identical across the bands a pair co-occurs in), so sharing
-    * cannot change any result. */
-  private def cachedPairScores(s: SparkSession, d: String): DataFrame = {
-    // resolve the input memo BEFORE entering getOrBuild: the build closure
-    // must stay CHM-free — a nested computeIfAbsent from inside a mapping
-    // function violates the CHM contract (recursive-update exception or a
-    // lost insert when two tuple keys collide on a bin — the ADVICE r11
-    // leak class).
-    val sh = Curation.cachedShingleSets(s, d)
-    // Signatures from the AT-REST table (r16, VERDICT r15 #5) — the same
-    // ensure d7/x17/x18 adopted in r14, closing the d-family's last
-    // memo-built signature input: d3/d4's cold path no longer re-derives
-    // the signature frame in-session (build priced once by x19, pre-seeded
-    // by Bench/RunQuery outside timing, ensure-built here when absent).
-    // The shingle payload still rides the band exchange — inherent to the
-    // d3+d4 shared pass, and the sharing stays measured-right: est-only
-    // pairs from the store are x21's shape, and a standalone jaccard pass
-    // would re-pay this exchange with the SAME heavy payload, so splitting
-    // would cost the family more than the sharing saves.
-    val mh = s.read.parquet(AtRest.ensureSignatures(s, d))
-    dedupFrameMemo.getOrBuild((System.identityHashCode(s), d, "ps")) {
-      val fresh = pairScoresGrouped(s, sh, mh).persist()
-      fresh.count()
-      fresh
-    }
-  }
-
-  /** d3-ONLY entry point (ADVICE r12): candidate pairs + est_sim WITHOUT
-    * the corpus shingle-set build. The registered d3 resolves through
-    * [[cachedPairScores]], which additionally builds and ships the shingle
-    * payload so a following d4 is a free projection — measured net win
-    * when both run (d3 2.14 -> 2.35 s, d4 2.3 -> 0.13 s at the 100x
-    * replica), but a session that only ever wants LSH candidates pays
-    * ~0.2 s/100x plus a full shingle memo slot for nothing. That caller
-    * uses this method; the registered query stays on the shared pass
-    * because making its plan depend on memo state would make d3's cost
-    * non-deterministic w.r.t. session history (and pessimize the common
-    * d3+d4 pipeline). */
-  def lshCandidatesEstSim(s: SparkSession, d: String): DataFrame =
-    estSimPairsGrouped(s, cachedMinhash(s, d))
-      .select(col("doc_a"), col("doc_b"), roundSim(col("est_sim")).as("est_sim"))
+  /** The at-rest [[pairScoresGrouped]] rows of `d`'s corpus, built by the
+    * first of d3/d4 to run (schema declared: no footer-inference job). */
+  private def atRestPairScores(s: SparkSession, d: String): DataFrame =
+    s.read.schema("doc_a BIGINT, doc_b BIGINT, est_sim DOUBLE, jaccard DOUBLE")
+      .parquet(AtRest.ensurePairScores(s, d))
 
   /** INCREMENTAL batch near-dup detection (x17) — the shape a continuous
     * ingestion pipeline runs per crawl batch: candidate pairs + estimated
@@ -668,11 +565,10 @@ object TextDedup {
     bandRows(mh).groupBy("bid", "k1", "k2").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") > cap)
 
-  /** 100 TB checkpoint path: the `persist()` in [[cachedMinhash]] holds
-    * signatures in executor memory for one job; at petabyte scale write
-    * them to parquet ONCE and let every LSH consumer (both sides of the
-    * band self-join, the Jaccard verifier, re-runs) scan the tiny
-    * signature table instead of re-hashing the corpus. */
+  /** 100 TB checkpoint path: write signatures to parquet ONCE and let
+    * every LSH consumer (both sides of the band self-join, the Jaccard
+    * verifier, re-runs) scan the tiny signature table instead of
+    * re-hashing the corpus (AtRest's signature table is this form). */
   def signaturesToParquet(docs: DataFrame, path: String): Unit =
     signatureFrame(docs).write.mode("overwrite").parquet(path)
 
@@ -682,14 +578,14 @@ object TextDedup {
 
   /** The (doc_id, term, tf) term-frequency frame — one explode + one
     * combiner-friendly groupBy over the raw corpus. The registered x12
-    * session-persists it; [[termFrequenciesToParquet]] is its at-rest
+    * checkpoints it locally; [[termFrequenciesToParquet]] is its at-rest
     * form. */
   private[queries] def termFrequencies(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
 
   /** TF-IDF top-5 terms per doc over a prebuilt tf frame — the downstream
-    * shared by the registered x12 (session-persisted tf) and
+    * shared by the registered x12 (locally checkpointed tf) and
     * [[tfidfTopKFromParquet]] (at-rest tf table). `nDocsFrame` is a
     * one-row (n_docs) frame, broadcast into the idf term. */
   private[queries] def tfidfTopKOverTf(tf: DataFrame,
@@ -724,7 +620,7 @@ object TextDedup {
       .select("doc_id", "term", "tf", "df", "tfidf")
 
   /** Write the term-frequency table ONCE — the at-rest form of x12's
-    * session-persisted tf frame (the "write-once term-frequency table"
+    * checkpointed tf frame (the "write-once term-frequency table"
     * every TF-IDF / keyword / vocabulary consumer scans at a real lake).
     * An ingest job pays the explode + groupBy a single time; consumers
     * then scan the compact columnar (doc_id, term, tf) table instead of
@@ -733,7 +629,7 @@ object TextDedup {
     termFrequencies(docs).write.mode("overwrite").parquet(path)
 
   /** x12 over the at-rest tf table. Two parquet scans (the df aggregate
-    * and the join probe) replace the session persist — at rest that is
+    * and the join probe) replace the in-query checkpoint — at rest that is
     * the right trade: no executor memory held across consumers, and the
     * scans prune to the three columns. `nDocs` is the CORPUS row count
     * recorded at ingest — it is NOT derivable from the table (docs with
@@ -815,10 +711,11 @@ object TextDedup {
     // automaton (one band shuffle, score in-group) instead of
     // lshPairs + two signature joins; spec-pinned equal to the join form.
     // d3 and d4 share ONE pass (pairScoresGrouped) that scores both
-    // est-sim and Jaccard — whichever runs second projects the memoized
-    // pair frame instead of re-running the band shuffle.
+    // est-sim and Jaccard, published at rest: whichever runs first builds
+    // the pair table (~2 s of d4's sf0.1 wall when shared), the other
+    // scans it.
     "d3_lsh_pairs" -> { (s, d) =>
-      cachedPairScores(s, d)
+      atRestPairScores(s, d)
         .select(col("doc_a"), col("doc_b"), roundSim(col("est_sim")).as("est_sim"))
     },
     // ----- D4: n-gram Jaccard over distinct shingle-hash sets, verified
@@ -828,7 +725,7 @@ object TextDedup {
     // pair set and arithmetic equal to the double-join form
     // (jaccardPairsJoined), which remains the reference implementation.
     "d4_jaccard_verify" -> { (s, d) =>
-      cachedPairScores(s, d)
+      atRestPairScores(s, d)
         .select(col("doc_a"), col("doc_b"), r6(col("jaccard")).as("jaccard"))
     },
     // ----- D7: duplicate-cluster resolution — connected components over
@@ -898,11 +795,11 @@ object TextDedup {
     // term string — deterministic in both engines.
     "x12_tfidf_topk" -> { (s, d) =>
       val docs = Tables.documents(s, d)
-      // persisted AND eagerly materialized: tf feeds BOTH the df aggregate
-      // and the join — unmaterialized, the two branches of one action race
-      // to populate the cache and each re-runs the explode + groupBy
-      // (sharp edge #16; same fix as cachedMinhash — measured 38 -> 25 s
-      // at the 100x replica). At a real lake this is the write-once
+      // checkpointed AND eagerly materialized: tf feeds BOTH the df
+      // aggregate and the join — unmaterialized, the two branches each
+      // re-run the explode + groupBy (sharp edge #16 — measured 38 -> 25 s
+      // at the 100x replica). A local checkpoint, not a persist: it holds
+      // no CacheManager entry, and its blocks go once the frame does. At a real lake this is the write-once
       // term-frequency table every TF-IDF consumer scans —
       // [[termFrequenciesToParquet]] + [[tfidfTopKFromParquet]] are that
       // form; this query stays self-contained on the raw table.
@@ -913,8 +810,8 @@ object TextDedup {
       // stays a library expression for network-shuffle clusters; the
       // no-persist recompute forms measured 25+ s. This shape stands on
       // evidence.
-      val tf = termFrequencies(docs).persist()
-      tf.count()
+      val tf = termFrequencies(docs).localCheckpoint(
+        eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       tfidfTopKOverTf(tf, docs.agg(count(lit(1)).as("n_docs")))
     },
     // ----- D9: SimHash near-dup pairs — the pairing half of the SimHash

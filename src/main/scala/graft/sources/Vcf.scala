@@ -298,7 +298,7 @@ object Vcf {
 
   private def coreCols(fld: Int => Column): Seq[Column] = Seq(
     fld(1).as("chrom"),
-    fld(2).cast("long").as("pos"),
+    fld(2).try_cast("long").as("pos"),
     fld(3).as("id"),
     fld(4).as("ref"),
     concat(array(fld(4)), split(fld(5), ",")).as("alleles"),

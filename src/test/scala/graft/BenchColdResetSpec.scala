@@ -1,69 +1,32 @@
 package graft
 
-/** Proves `Bench.coldReset` makes a heal rerun genuinely COLD — the round-12
-  * defect was `Bench.heal` re-running a flagged query in the same warm
-  * session and publishing `min(cold, warm)`:
-  *
-  *   1. operators that persist internally (w3's `OverlapSuppress
-  *      .suppressSegmented` persists its input and never unpersists) left
-  *      their frames cached, so the rerun scanned memory instead of
-  *      parquet (0.0067 s at the 100x replica for a 30 s query);
-  *   2. `spark.catalog.clearCache()` alone is NOT a fix for memo-backed
-  *      queries (d2/d3/d4/e1-e4/rg3): each LruFrameMemo keeps its entry and
-  *      its `ensurePersisted` validation arm re-persists the frame on the
-  *      next access — so only evicting the memos themselves (FrameMemos
-  *      .clearAll) severs the warm path.
-  *
-  * The assertions are structural (persisted-RDD population), not timing,
-  * so the spec is deterministic. Relative to a baseline snapshot because
-  * earlier suites in the shared session may hold their own memo frames.
+/** `Bench.coldReset` is one `spark.catalog.clearCache()`: that is enough to
+  * make a heal rerun COLD because no operator or registered query leaves a
+  * frame in Spark's CacheManager. The round-12 defect was `Bench.heal`
+  * re-running a flagged query in the same warm session and publishing
+  * `min(cold, warm)`: w3's `OverlapSuppress.suppressSegmented` persisted
+  * its input and never unpersisted it, so the rerun scanned memory instead
+  * of parquet (0.0067 s at the 100x replica for a 30 s query). It now
+  * materializes through a local checkpoint, which holds no CacheManager
+  * entry. CacheGuardSpec holds the registered queries to the same rule.
   */
 class BenchColdResetSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def persistedIds: Set[Int] =
-    spark.sparkContext.getPersistentRDDs.keySet.toSet
-
-  test("coldReset drops an internally-persisting operator's cache (w3 shape)") {
+  test("suppressSegmented leaves the CacheManager as it found it (w3 shape)") {
     import spark.implicits._
     Bench.coldReset(spark)
-    val baseline = persistedIds
-    // the segmented suppression operator persists its input and leaves it
-    // cached (the registered w3 reaches it through suppressAuto only when
-    // single chroms dominate, so drive the persisting path directly)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    // the registered w3 reaches the segmented path through suppressAuto only
+    // when single chroms dominate, so drive it directly
     val rs = (0 until 500).map(i => graft.operators.SuppressRecord(
       s"c${i % 2}", i.toLong * 7, if (i % 4 == 0) 20L else 0L,
       called = i % 5 == 0, uncalledGt = i % 3 == 0))
-    graft.operators.OverlapSuppress.suppressSegmented(rs.toDS())(spark)
-      .queryExecution.toRdd.count()
-    assert(persistedIds.diff(baseline).nonEmpty,
-      "precondition: suppressSegmented must leave frames persisted " +
-        "(else this spec tests nothing)")
-    Bench.coldReset(spark)
-    assert(persistedIds == baseline,
-      "after coldReset no frame from the first run may subsidize a rerun")
-  }
-
-  test("clearCache alone does NOT cold a memo-backed query; coldReset does") {
-    Bench.coldReset(spark)
-    val baseline = persistedIds
-    SparkEntry.queries("d3_lsh_pairs")(spark, sfDir).queryExecution.toRdd.count()
-    assert(persistedIds.diff(baseline).nonEmpty,
-      "precondition: d3 must populate the pair-scores memo")
-    // the r12 pollution mechanism: clearCache unpersists the frame but the
-    // memo entry survives, and the next access re-persists it — so a
-    // "cold" rerun after clearCache alone still resolves against the memo
-    spark.catalog.clearCache()
-    assert(graft.queries.FrameMemos.clearAll() > 0,
-      "memo entries must survive clearCache (the defect this spec pins); " +
-        "clearAll is the only thing that evicts them")
-    // full protocol: rebuild once more, then coldReset; both layers empty
-    SparkEntry.queries("d3_lsh_pairs")(spark, sfDir).queryExecution.toRdd.count()
-    Bench.coldReset(spark)
-    assert(persistedIds == baseline)
-    assert(graft.queries.FrameMemos.clearAll() == 0,
-      "coldReset already evicted every memo entry")
+    val out = graft.operators.OverlapSuppress.suppressSegmented(rs.toDS())(spark)
+    assert(out.queryExecution.toRdd.count() > 0)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "suppressSegmented left a frame in the CacheManager for the session's life")
   }
 
   test("memo-backed query returns identical results after coldReset") {
@@ -72,6 +35,6 @@ class BenchColdResetSpec extends SparkSpec {
     Bench.coldReset(spark)
     val run2 = SparkEntry.queries("d3_lsh_pairs")(spark, sfDir)
       .collect().map(_.toString).sorted
-    assert(run1.sameElements(run2), "cold rebuild must reproduce the memoized result")
+    assert(run1.sameElements(run2), "a cold rerun must reproduce the at-rest result")
   }
 }

@@ -112,10 +112,15 @@ class PlanSpec extends SparkSpec {
     // Join operator may be KEYED on the pair columns. Pair columns appear
     // legitimately in Project/HashAggregate/Exchange lines; a regression
     // would put them in a `...Join [doc_a#...` line.
+    // d3/d4 scan the at-rest pair-score table; their shared automaton runs
+    // in that table's build, gated here through AtRest.buildPlans.
     val pairJoin = "(?m)^.*Join.*doc_[ab]#".r
-    for (q <- Seq("d3_lsh_pairs", "d4_jaccard_verify",
-                  "x17_incremental_dedup", "x21_atrest_pairs")) {
-      val df = SparkEntry.queries(q)(spark, sfDir)
+    val pairBuild = "d3_build_pair_scores"
+    val plans = Seq(pairBuild ->
+        graft.queries.AtRest.buildPlans(spark, sfDir)(pairBuild)) ++
+      Seq("x17_incremental_dedup", "x21_atrest_pairs")
+        .map(q => q -> SparkEntry.queries(q)(spark, sfDir))
+    for ((q, df) <- plans) {
       // execute so AQE finalizes — join-type pins on an initial plan are
       // vacuous (memory 9g); the final plan is where a runtime broadcast
       // demotion/promotion would show
@@ -144,7 +149,7 @@ class PlanSpec extends SparkSpec {
       // on the band key, banded↔shingles on doc_id) must stay shuffle
       // merge joins whatever the signature input's stats source — if
       // either line disappears the hint silently reverted
-      if (q == "d3_lsh_pairs" || q == "d4_jaccard_verify") {
+      if (q == pairBuild) {
         assert("SortMergeJoin \\[bid#".r.findFirstIn(p).isDefined,
           s"$q lost the merge-hinted band-key join-back")
         assert("SortMergeJoin \\[doc_id#".r.findFirstIn(p).isDefined,
@@ -246,16 +251,42 @@ class PlanSpec extends SparkSpec {
       s"x14 must not fall back to interpreted HOF folds:\n${plan.take(800)}")
   }
 
-  test("e2/e4 read the shared ANN index (InMemoryTableScan), not a fresh assignment") {
-    // the session-scoped annIndex memo is what keeps assignment/encode
-    // from re-running per query — a silent regression back to per-query
-    // recompute would pass every oracle, so gate the plan shape instead
+  test("e2/e4 read the at-rest ANN index, not a fresh assignment") {
+    // the at-rest index is what keeps assignment/encode from re-running
+    // per query — a silent regression back to per-query recompute would
+    // pass every oracle, so gate the plan's inputs instead: the index
+    // tables are scanned, and the raw embeddings table is not
+    val ann = graft.queries.AtRest.resolve(spark, sfDir, "embeddings").ann
     for (q <- Seq("e2_ivf_ann", "e4_ivf_pq")) {
-      val plan = SparkEntry.queries(q)(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      assert(plan.contains("InMemoryTableScan"),
-        s"$q must scan the memoized index, not rebuild it:\n${plan.take(800)}")
+      val files = SparkEntry.queries(q)(spark, sfDir).inputFiles.toSeq
+      assert(files.exists(_.contains(s"$ann/")),
+        s"$q must scan the at-rest index, not rebuild it: $files")
+      assert(!files.exists(_.contains("embeddings.parquet")),
+        s"$q re-reads the raw embeddings: $files")
     }
+  }
+
+  test("the unpartitioned windows are exactly the pinned set") {
+    // a WindowExec with no PARTITION BY runs in ONE task over its whole
+    // input; the session mutes Spark's per-run warning about it, so this
+    // list is where a new one must be declared (and justified) instead.
+    // Each runs over a bounded input: a10's coverage histogram, the
+    // <= 1000-row bucket table (w1_pr_curve_bucketed), or the exact P/R
+    // arm prCurveAuto takes only below PR_EXACT_MAX rows (w1, m3).
+    val pinned = Set("a10_hist_percentiles", "m3_pr_noise_floor", "w1_pr_curve",
+      "w1_pr_curve_bucketed")
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    def windows(p: SparkPlan): Seq[WindowExec] = p.collectWithSubqueries {
+      case w: WindowExec => Seq(w)
+      case a: AdaptiveSparkPlanExec => windows(a.executedPlan)
+    }.flatten
+    val found = SparkEntry.queries.collect {
+      case (name, fn) if windows(fn(spark, sfDir).queryExecution.executedPlan)
+          .exists(_.partitionSpec.isEmpty) => name
+    }.toSet
+    assert(found == pinned,
+      s"new: ${(found -- pinned).toSeq.sorted}; gone: ${(pinned -- found).toSeq.sorted}")
   }
 
   test("fact-table scans prune columns (no full-width reads)") {

@@ -90,11 +90,12 @@ class AtRestSpec extends SparkSpec {
 
   test("an EXTERNALLY rewritten corpus never gets memo-stale signatures") {
     // the dangerous rewrite is one Spark doesn't see (no recacheByPath):
-    // a session whose token-hash memo is warm must still build the fresh
-    // store from the NEW bytes — which is why builds read raw files, not
-    // the session memos
+    // a session that already built and read d's store must still build
+    // the fresh store from the NEW bytes — which is why builds read raw
+    // files and the store is keyed by their fingerprint
     val d = writeFixture()
-    Curation.cachedTokenHashes(spark, d).count() // warm the memo for d
+    val oldShingles = AtRest.ensureShingleSets(spark, d) // warm d's store
+    assert(spark.read.parquet(oldShingles).count() == corpus.length)
     val alt = Files.createTempDirectory("graft_atrest_alt").toString
     (corpus ++ Seq((201L, "late doc one"), (202L, "late doc two")))
       .toDF("doc_id", "text")
@@ -116,6 +117,8 @@ class AtRestSpec extends SparkSpec {
     val sig = AtRest.ensureSignatures(spark, d)
     assert(spark.read.parquet(sig).count() == corpus.length + 2L,
       "signatures must reflect the externally rewritten corpus")
+    assert(spark.read.parquet(AtRest.ensureShingleSets(spark, d)).count() ==
+      corpus.length + 2L, "shingle sets must reflect the rewritten corpus")
   }
 
   test("resolve is read-only: a pure consumer call never sweeps") {

@@ -2,9 +2,9 @@ package graft.queries
 
 import graft.SparkSpec
 
-/** d6's session memo is keyed by a freshness token of the embeddings
-  * table; the token must see an in-place rewrite whatever the sf dir's
-  * URI scheme, or the memo serves cell assignments of the old vectors. */
+/** d6 checkpoints its cell assignments per call, so an in-place rewrite of
+  * the embeddings table — whatever the sf dir's URI scheme — can never
+  * serve assignments of the old vectors, and no frame outlives the call. */
 class D6FreshnessSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,17 +25,17 @@ class D6FreshnessSpec extends SparkSpec {
     writeEmbeddings(a, seed = 1)
     val uri = a.toUri.toString.stripSuffix("/")
     assert(uri.startsWith("file:"), uri)
+    val cachedBefore = spark.sharedState.cacheManager.isEmpty
     val before = d6(uri)
-    val token = Similarity.embeddingsToken(spark, uri)
-    assert(token.nonEmpty && !token.startsWith("0:"), token)
+    assert(!cachedBefore || spark.sharedState.cacheManager.isEmpty,
+      "d6 left its assignments in the CacheManager")
 
     writeEmbeddings(a, seed = 2)
-    assert(Similarity.embeddingsToken(spark, uri) != token)
-    // the same vectors under a directory the memo has never seen
+    // the same vectors under a directory no earlier call has read
     val b = java.nio.file.Files.createTempDirectory("graft_d6fresh")
     writeEmbeddings(b, seed = 2)
     val fresh = d6(b.toUri.toString.stripSuffix("/"))
     assert(fresh != before, "the two vector sets must give different pairs")
-    assert(d6(uri) == fresh, "d6 served the memo of the old embeddings")
+    assert(d6(uri) == fresh, "d6 served assignments of the old embeddings")
   }
 }

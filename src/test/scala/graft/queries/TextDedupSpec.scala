@@ -628,11 +628,18 @@ class TextDedupSpec extends SparkSpec {
     val d = "/root/testdata/sf0.001"
     val dir = Files.createTempDirectory("graft_annidx").toString
     Similarity.writeAnnIndex(spark, d, dir)
-    val (mAssigned, mCodes, mCells) = Similarity.annIndex(spark, d)
+    // reference: the index derived in memory from the raw embeddings
+    val raw = Similarity.vecs(spark, d)
+    val mCells = Similarity.cellCountForAnn(graft.Tables.embeddings(spark, d).count())
+    val mAssigned = Similarity.assignToCellsAuto(raw,
+      raw.filter(col("vec_id") < mCells)
+        .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm")),
+      mCells)
+    val mCodes = mAssigned.select(col("vec_id"), col("cid"),
+      Similarity.pqEncodeUdf(raw, Similarity.pqCodebook(raw))(col("v")).as("codes"))
     val (pAssigned, pCodes, pCells) = Similarity.annIndexFromParquet(spark, dir)
     assert(pCells == mCells)
-    // frame-identical both ways (partitioned write reorders columns —
-    // align by name before the except)
+    // frame-identical both ways (aligned by name before the except)
     def diff(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame,
              cols: Seq[String]) = {
       val (x, y) = (a.select(cols.map(col): _*), b.select(cols.map(col): _*))
@@ -641,7 +648,7 @@ class TextDedupSpec extends SparkSpec {
     assert(diff(mAssigned.drop("v", "cv", "cnrm", "nrm"),
       pAssigned.drop("v", "cv", "cnrm", "nrm"), Seq("vec_id", "cid")) == 0)
     assert(diff(mCodes, pCodes, Seq("vec_id", "cid", "codes")) == 0)
-    // an e4-shaped query served from the ARTIFACT equals the memo-served one
+    // an e4-shaped query served from the ARTIFACT equals the in-memory one
     val all = Similarity.vecs(spark, d)
     val queries = all.filter(col("vec_id") < 8)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))

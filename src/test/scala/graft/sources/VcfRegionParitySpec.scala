@@ -34,15 +34,14 @@ class VcfRegionParitySpec extends SparkSpec {
   }
 
   /** One more bgzf + tbi part in `out`, sorted, with every 7th line's POS
-    * unparseable ("x1", "", "1e3": null on both read paths; the write
-    * path itself can only emit "." for a null pos, which the expression
-    * path's cast reads as 0). Such lines are not indexed. */
+    * unparseable ("x1", "", "1e3", and "." — the write path's form for a
+    * null pos): null on both read paths. Such lines are not indexed. */
   private def malformedPart(out: String, seed: Int): Unit = {
     val rnd = new scala.util.Random(seed)
-    val bad = Seq("x1", "", "1e3")
+    val bad = Seq("x1", "", "1e3", ".")
     val lines = header ++ contigs.flatMap { c =>
       (1 to 200).map(_ => 1 + rnd.nextInt(contigLen.toInt)).sorted.zipWithIndex.map {
-        case (pos, i) => site(rnd, c, if (i % 7 == 3) bad(i % 3) else pos.toString, i)
+        case (pos, i) => site(rnd, c, if (i % 7 == 3) bad(i % 4) else pos.toString, i)
       }
     }
     val p = java.nio.file.Paths.get(out, "part-extra.vcf.gz")
@@ -67,19 +66,6 @@ class VcfRegionParitySpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
 
-  /** The expression path casts POS with `cast`, which throws on an
-    * unparseable value under ANSI; the vcf scan reads it as null, which
-    * is the non-ANSI cast's answer. */
-  private def withoutAnsi[T](body: => T): T = {
-    val key = "spark.sql.ansi.enabled"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try body finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def randomRegion(rnd: scala.util.Random): Column = {
     val c = contigs(rnd.nextInt(contigs.size))
     val lo = rnd.nextInt((contigLen + 2000).toInt).toLong // some past the contig end
@@ -103,21 +89,19 @@ class VcfRegionParitySpec extends SparkSpec {
     val names = new java.io.File(out).list().toSeq
     val parts = names.filter(_.endsWith(".vcf.gz"))
     assert(parts.size > 2 && parts.forall(p => names.contains(p + ".tbi")), names)
-    withoutAnsi {
-      val expr = Vcf.read(spark, out).cache()
-      try {
-        assert(expr.count() == 3600L && expr.filter(col("pos").isNull).count() == 3L * 29)
-        val rnd = new scala.util.Random(17)
-        var nonEmpty = 0
-        (1 to 200).foreach { i =>
-          val c = randomRegion(rnd)
-          val got = rows(v2(out).filter(c))
-          assert(got == rows(expr.filter(c)), s"region $i: $c")
-          if (got.nonEmpty) nonEmpty += 1
-        }
-        assert(nonEmpty > 50, s"only $nonEmpty of 200 regions matched rows")
-      } finally expr.unpersist()
-    }
+    val expr = Vcf.read(spark, out).cache()
+    try {
+      assert(expr.count() == 3600L && expr.filter(col("pos").isNull).count() == 3L * 29)
+      val rnd = new scala.util.Random(17)
+      var nonEmpty = 0
+      (1 to 200).foreach { i =>
+        val c = randomRegion(rnd)
+        val got = rows(v2(out).filter(c))
+        assert(got == rows(expr.filter(c)), s"region $i: $c")
+        if (got.nonEmpty) nonEmpty += 1
+      }
+      assert(nonEmpty > 50, s"only $nonEmpty of 200 regions matched rows")
+    } finally expr.unpersist()
   }
 
   test("a chrom-only region reaches lines whose POS does not parse (tbi build and write)") {
@@ -153,7 +137,7 @@ class VcfRegionParitySpec extends SparkSpec {
     writeIndexed(source(seed = 7, n = 2500), out)
     val second = rows(v2(out).filter(region))
     assert(first != second)
-    withoutAnsi(assert(second == rows(Vcf.read(spark, out).filter(region))))
+    assert(second == rows(Vcf.read(spark, out).filter(region)))
   }
 
   test("rewriting one bgzf file and its .tbi in place: the index cache follows the sidecar") {
