@@ -52,9 +52,11 @@ object Hash32Util {
 
 /** SparkSessionExtensions hook registering the engine's native expressions
   * (`graft_hash32`, `graft_dot`) so plans can call them via
-  * `call_function` / SQL. Wired in [[graft.Spark.session]]. */
+  * `call_function` / SQL, and the planner strategy of the
+  * `ConnectedComponents` plan node. Wired in [[graft.Spark.session]]. */
 object GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    e.injectPlannerStrategy(_ => graft.operators.ConnectedComponentsStrategy)
     // arity is validated here (a wrong-arg-count SQL call fails analysis
     // with the function name, not IndexOutOfBounds); argument TYPES are
     // validated by each expression's inputTypes contract

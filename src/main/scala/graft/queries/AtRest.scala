@@ -109,6 +109,15 @@ object AtRest {
     def ann: String = s"$dir/ann-${Similarity.annRecipe}"
   }
 
+  /** The writers' schemas, declared on every read of a store table: a
+    * parquet read without one runs a footer-inference Spark job. */
+  private val SigSchema =
+    ("doc_id BIGINT" +: (1 to TextDedup.K).map(i => s"mh$i BIGINT")).mkString(", ")
+  private val TfSchema = "doc_id BIGINT, term STRING, tf BIGINT"
+  private val DfSchema = "term STRING, df BIGINT"
+  private val MetaSchema = "n_docs BIGINT"
+  private val LabelsSchema = "id BIGINT, comp BIGINT"
+
   /** (input-path id, content fingerprint) of `d`'s `table`: the id keys
     * "same input path" (so stale fingerprints of the same table can be
     * swept), the fingerprint keys "same bytes" (name+len+mtime of every
@@ -364,7 +373,7 @@ object AtRest {
     * shared df definition, so the two tables can never disagree about
     * tokenization or the aggregate. */
   private def buildDf(s: SparkSession, st: Store, overwrite: Boolean): Unit =
-    publish(TextDedup.docFrequencies(s.read.parquet(st.tf)), st.df, overwrite)
+    publish(TextDedup.docFrequencies(s.read.schema(TfSchema).parquet(st.tf)), st.df, overwrite)
 
   /** n_docs recorded at ingest: the idf denominator counts EVERY corpus row
     * (null/too-short texts produce no tf rows but still count — the x12
@@ -375,13 +384,17 @@ object AtRest {
     publish(s.range(1).select(lit(n).as("n_docs")), st.meta, overwrite)
   }
 
+  /** The old batch's labels over signature frame `mh`: one lazy
+    * connected-components step over its star edges, so the CC runs inside
+    * the labels write job. */
+  private def labelsPlan(mh: DataFrame): DataFrame =
+    graft.operators.Dedup.connectedComponents(
+      TextDedup.bandStarEdges(mh.filter(pmod(col("doc_id"), lit(5)) =!= 0)))
+
   private def buildLabels(s: SparkSession, d: String, st: Store,
-                          overwrite: Boolean): Unit = {
-    val mh = s.read.parquet(ensureSignatures(s, d, st))
-    publish(graft.operators.Dedup.connectedComponents(
-      TextDedup.bandStarEdges(mh.filter(pmod(col("doc_id"), lit(5)) =!= 0))),
+                          overwrite: Boolean): Unit =
+    publish(labelsPlan(s.read.schema(SigSchema).parquet(ensureSignatures(s, d, st))),
       st.labels, overwrite)
-  }
 
   /** Build-if-absent. The stale-sibling sweep rides the BUILD branch only:
     * a session that found the table present is a pure reader and must not
@@ -411,11 +424,16 @@ object AtRest {
   private def pairScoresPlan(s: SparkSession, d: String, st: Store): DataFrame =
     TextDedup.pairScoresGrouped(s,
       Curation.shingleSetsFromParquet(s, ensureShingleSets(s, d, st)),
-      s.read.parquet(ensureSignatures(s, d, st)))
+      s.read.schema(SigSchema).parquet(ensureSignatures(s, d, st)))
 
   /** Public ensure used by d7 and the bench pre-seed. */
   def ensureSignatures(s: SparkSession, d: String): String =
     ensureSignatures(s, d, resolve(s, d))
+
+  /** The at-rest signature table of `d`'s corpus (ensured), read with its
+    * declared schema — the d7/x17/x18 input. */
+  def signatures(s: SparkSession, d: String): DataFrame =
+    s.read.schema(SigSchema).parquet(ensureSignatures(s, d))
 
   /** The corpus shingle sets, built by their first consumer. */
   def ensureShingleSets(s: SparkSession, d: String): String =
@@ -466,8 +484,8 @@ object AtRest {
     * cartesian/BNLJ/anti-pattern gates over the plans the build steps
     * actually execute (they run as side effects inside the query
     * closures, invisible to a gate that only sees the returned frame).
-    * CC is iterative (no single inspectable plan) — its per-round join
-    * shape is DedupSpec/PlanSpec-covered via d7 itself. */
+    * The labels build is one ConnectedComponents step over the star
+    * edges; the distributed rounds it may run are DedupSpec-covered. */
   def buildPlans(s: SparkSession, d: String): Map[String, DataFrame] = Map(
     "x19_build_signatures" -> TextDedup.signatureFrame(Tables.documents(s, d)),
     "x19_build_tf" -> TextDedup.termFrequencies(Tables.documents(s, d)),
@@ -476,9 +494,9 @@ object AtRest {
     // aggregate over the tf expression — identical shape above the scan
     "x19_build_df" -> TextDedup.docFrequencies(
       TextDedup.termFrequencies(Tables.documents(s, d))),
-    "x22_build_star_edges" -> TextDedup.bandStarEdges(
-      TextDedup.signatureFrame(Tables.documents(s, d))
-        .filter(pmod(col("doc_id"), lit(5)) =!= 0)),
+    // the star edges feed one ConnectedComponents step: this plan holds
+    // the whole labels build
+    "x22_build_labels" -> labelsPlan(TextDedup.signatureFrame(Tables.documents(s, d))),
     // ensures its two inputs: the merge hints it carries exist for their
     // parquet stats, so the gated plan must read the real tables
     "d3_build_pair_scores" -> pairScoresPlan(s, d, resolve(s, d))
@@ -489,16 +507,16 @@ object AtRest {
     * the frame that was handed to the writer. */
   private def storeSummary(s: SparkSession, st: Store): DataFrame = {
     val mhSum = (1 to TextDedup.K).map(i => col(s"mh$i")).reduce(_ + _)
-    val sig = s.read.parquet(st.sig)
+    val sig = s.read.schema(SigSchema).parquet(st.sig)
       .agg(count(lit(1)).as("n_rows"), sum(mhSum).as("checksum"))
       .select(lit("signatures").as("tbl"), col("n_rows"), col("checksum"))
-    val tf = s.read.parquet(st.tf)
+    val tf = s.read.schema(TfSchema).parquet(st.tf)
       .agg(count(lit(1)).as("n_rows"), sum(col("tf")).as("checksum"))
       .select(lit("tf").as("tbl"), col("n_rows"), col("checksum"))
-    val df = s.read.parquet(st.df)
+    val df = s.read.schema(DfSchema).parquet(st.df)
       .agg(count(lit(1)).as("n_rows"), sum(col("df")).as("checksum"))
       .select(lit("df").as("tbl"), col("n_rows"), col("checksum"))
-    val meta = s.read.parquet(st.meta)
+    val meta = s.read.schema(MetaSchema).parquet(st.meta)
       .select(lit("meta").as("tbl"), lit(1L).as("n_rows"),
         col("n_docs").as("checksum"))
     sig.unionByName(tf).unionByName(df).unionByName(meta)
@@ -576,9 +594,9 @@ object AtRest {
       val tfPath = ensure(s, st, st.tf)(buildTf(s, d, st, overwrite = false))
       val dfPath = ensure(s, st, st.df)(buildDf(s, st, overwrite = false))
       val metaPath = ensure(s, st, st.meta)(buildMeta(s, d, st, overwrite = false))
-      val nDocs = s.read.parquet(metaPath).head().getLong(0)
-      TextDedup.tfidfTopKOverTfDf(s.read.parquet(tfPath),
-        s.read.parquet(dfPath),
+      val nDocs = s.read.schema(MetaSchema).parquet(metaPath).head().getLong(0)
+      TextDedup.tfidfTopKOverTfDf(s.read.schema(TfSchema).parquet(tfPath),
+        s.read.schema(DfSchema).parquet(dfPath),
         s.range(1).select(lit(nDocs).as("n_docs")))
     },
     // ----- X21: LSH candidate pairs + est-sim from the at-rest signature
@@ -588,7 +606,7 @@ object AtRest {
     "x21_atrest_pairs" -> { (s, d) =>
       val st = resolve(s, d)
       TextDedup.estSimPairsGrouped(s,
-          s.read.parquet(ensureSignatures(s, d, st)))
+          s.read.schema(SigSchema).parquet(ensureSignatures(s, d, st)))
         .select(col("doc_a"), col("doc_b"), roundSim(col("est_sim")).as("est_sim"))
     },
     // ----- X22: the labels build step — "yesterday's" resolve (CC over
@@ -600,7 +618,7 @@ object AtRest {
       val st = resolve(s, d)
       sweepStale(s, st)
       buildLabels(s, d, st, overwrite = true)
-      s.read.parquet(st.labels)
+      s.read.schema(LabelsSchema).parquet(st.labels)
         .select(col("id").as("doc_id"), col("comp").as("canonical"))
     },
     // ----- X23: the incremental resolve the x18 scaffolding exists for
@@ -611,8 +629,8 @@ object AtRest {
     // verbatim. 13.9 s at 100x vs x18's 29.9 in the same window.
     "x23_atrest_resolve" -> { (s, d) =>
       val st = resolve(s, d)
-      val labels = s.read.parquet(ensureLabels(s, d, st))
-      val sig = s.read.parquet(ensureSignatures(s, d, st))
+      val labels = s.read.schema(LabelsSchema).parquet(ensureLabels(s, d, st))
+      val sig = s.read.schema(SigSchema).parquet(ensureSignatures(s, d, st))
       val newEdges = TextDedup.incrementalEstSimPairs(s, sig,
         pmod(col("doc_id"), lit(5)) === 0)
         .select("doc_a", "doc_b")

@@ -338,8 +338,16 @@ object Similarity {
   // encode + LUT + ADC exactly; kmeansRefine is the quality upgrade a
   // real deployment would run per subspace.
   val PQ_M = 8 // subspaces
-  val PQ_SUB = DIM / PQ_M // dims per subspace
+  val PQ_SUB = DIM / PQ_M // dims per subspace at DIM (the oracles' width)
   val PQ_K = 16 // codebook entries per subspace
+
+  /** Dims per subspace of a `width`-dim vector: PQ splits it into
+    * [[PQ_M]] equal subvectors, so any multiple of PQ_M encodes. */
+  private def pqSub(width: Int): Int = {
+    require(width >= PQ_M && width % PQ_M == 0,
+      s"PQ encodes vectors whose width is a multiple of $PQ_M, got width $width")
+    width / PQ_M
+  }
 
   private def round6(x: Double): Double =
     java.math.BigDecimal.valueOf(x)
@@ -360,6 +368,7 @@ object Similarity {
     val bcb = all.sparkSession.sparkContext.broadcast(cb)
     val f = udf { (v: Seq[Double]) =>
       val vv = v.toArray
+      val sub = pqSub(vv.length)
       val codebook = bcb.value
       val ds = new Array[Double](codebook.length)
       Array.tabulate(PQ_M) { m =>
@@ -372,8 +381,8 @@ object Similarity {
         while (k < codebook.length) {
           val cv = codebook(k)
           var d = 0.0; var i = 0
-          while (i < PQ_SUB) {
-            val t = vv(m * PQ_SUB + i) - cv(m * PQ_SUB + i); d += t * t; i += 1
+          while (i < sub) {
+            val t = vv(m * sub + i) - cv(m * sub + i); d += t * t; i += 1
           }
           ds(k) = d
           if (d < rawMin) rawMin = d
@@ -400,10 +409,11 @@ object Similarity {
     val bcb = all.sparkSession.sparkContext.broadcast(cb)
     val f = udf { (qv: Seq[Double]) =>
       val vv = qv.toArray
+      val sub = pqSub(vv.length)
       Seq.tabulate(PQ_M)(m => Seq.tabulate(bcb.value.length) { k =>
         val cv = bcb.value(k)
         var sdp = 0.0; var i = 0
-        while (i < PQ_SUB) { sdp += vv(m * PQ_SUB + i) * cv(m * PQ_SUB + i); i += 1 }
+        while (i < sub) { sdp += vv(m * sub + i) * cv(m * sub + i); i += 1 }
         round6(sdp)
       })
     }

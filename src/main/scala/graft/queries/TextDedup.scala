@@ -741,7 +741,7 @@ object TextDedup {
     // run on a fresh store pays the one-time ensure-build; every later
     // session scans.
     "d7_dedup_resolve" -> { (s, d) =>
-      val mh = s.read.parquet(AtRest.ensureSignatures(s, d))
+      val mh = AtRest.signatures(s, d)
       graft.operators.Dedup.connectedComponents(bandStarEdges(mh))
         .select(col("id").as("doc_id"), col("comp").as("canonical"))
     },
@@ -884,7 +884,7 @@ object TextDedup {
     // the table holds exactly signatureFrame(documents).
     "x17_incremental_dedup" -> { (s, d) =>
       incrementalEstSimPairs(s,
-        s.read.parquet(AtRest.ensureSignatures(s, d)),
+        AtRest.signatures(s, d),
         pmod(col("doc_id"), lit(5)) === 0)
         .select(col("doc_a"), col("doc_b"),
           roundSim(col("est_sim")).as("est_sim"))
@@ -906,7 +906,7 @@ object TextDedup {
     // production shape), but like d7/x17 it reads signatures from the
     // ensured at-rest table rather than re-deriving them.
     "x18_incremental_resolve" -> { (s, d) =>
-      val mh = s.read.parquet(AtRest.ensureSignatures(s, d))
+      val mh = AtRest.signatures(s, d)
       val isNew = pmod(col("doc_id"), lit(5)) === 0
       val oldLabels = graft.operators.Dedup.connectedComponents(
         bandStarEdges(mh.filter(!isNew)))

@@ -122,13 +122,15 @@ object DetailedVarReport {
     * jitter ties before calling. */
   def detailedVars(data: DataFrame, regions: Seq[(String, Column)]): DataFrame = {
     // the static aggregate and the optimized sweep are two independent
-    // consumers of the tagged rows; without a persist each re-runs the
+    // consumers of the tagged rows; without a checkpoint each re-runs the
     // full source scan + classification. The classified frame (pre-
     // explode, so row count = input count, narrow columns) is the cheap
-    // thing to cache — the tag explode re-runs from cache, map-only.
-    // Spark's LRU owns eviction; MEMORY_AND_DISK spills, not recomputes.
+    // thing to keep — the tag explode re-runs from it, map-only. An eager
+    // local checkpoint holds no CacheManager entry, and Spark's
+    // ContextCleaner frees its blocks once the result is unreachable;
+    // MEMORY_AND_DISK spills, not recomputes.
     val classified = classify(data)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint(eager = true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val regionTags = array(
       lit("All") +: regions.map { case (label, c) => when(c, lit(label)) }: _*)
     val varTags = array(VariantCategories.map(c =>

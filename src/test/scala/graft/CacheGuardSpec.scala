@@ -14,7 +14,7 @@ class CacheGuardSpec extends SparkSpec {
     "d3_lsh_pairs", "d4_jaccard_verify", "d6_cosine_dedup", "d8_ngram_hotspots",
     "x6_decontaminate", "x8_boiler_fraction", "x12_tfidf_topk",
     "x15_bloom_decontaminate", "x16_dup_spans", "e2_ivf_ann", "e3_pq_ann",
-    "e4_ivf_pq", "rg3_jc_stats")
+    "e4_ivf_pq", "rg1_detailed_grid", "rg3_jc_stats")
 
   test("queries leave the CacheManager as they found it") {
     spark.catalog.clearCache()

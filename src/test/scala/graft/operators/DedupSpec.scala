@@ -6,30 +6,42 @@ import org.apache.spark.sql.functions._
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Every case runs through both arms of the ConnectedComponents exec:
+    * union-find on the driver (the default cap) and the distributed
+    * rounds (cap 0, so any graph is over it). */
+  private val arms = Seq("union-find" -> Dedup, "rounds" -> new Dedup(0))
+  private val rounds = new Dedup(0)
+
+  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
   test("connected components: chains, rings and singletons resolve to min id") {
     val pairs = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L),    // chain -> comp 1
       (10L, 11L), (11L, 12L), (12L, 10L), // ring -> comp 10
       (20L, 21L)                        // pair -> comp 20
     ).toDF("doc_a", "doc_b")
-    val comps = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Seq(1L, 2L, 3L, 4L).forall(comps(_) == 1L))
-    assert(Seq(10L, 11L, 12L).forall(comps(_) == 10L))
-    assert(Seq(20L, 21L).forall(comps(_) == 20L))
+    for ((arm, dd) <- arms) withClue(s"$arm: ") {
+      val comps = labelMap(dd.connectedComponents(pairs))
+      assert(Seq(1L, 2L, 3L, 4L).forall(comps(_) == 1L))
+      assert(Seq(10L, 11L, 12L).forall(comps(_) == 10L))
+      assert(Seq(20L, 21L).forall(comps(_) == 20L))
+    }
   }
 
   test("canonicalAssignment: non-candidates stay their own canonical") {
     val docs = (1L to 6L).toDF("doc_id")
     val pairs = Seq((2L, 5L)).toDF("doc_a", "doc_b")
-    val out = Dedup.canonicalAssignment(docs, pairs).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-    assert(out(5L) == ((2L, true)))
-    assert(out(2L) == ((2L, false)))
-    assert(out(1L) == ((1L, false)) && out(6L) == ((6L, false)))
-    // dedup keeps exactly one representative per cluster
-    val kept = out.count(!_._2._2)
-    assert(kept == 5)
+    for ((arm, dd) <- arms) withClue(s"$arm: ") {
+      val out = dd.canonicalAssignment(docs, pairs).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+      assert(out(5L) == ((2L, true)))
+      assert(out(2L) == ((2L, false)))
+      assert(out(1L) == ((1L, false)) && out(6L) == ((6L, false)))
+      // dedup keeps exactly one representative per cluster
+      val kept = out.count(!_._2._2)
+      assert(kept == 5)
+    }
   }
 
   test("incrementalComponents(labels, new) == CC(old ∪ new): merge, new nodes, untouched") {
@@ -38,25 +50,25 @@ class DedupSpec extends SparkSpec {
       (10L, 11L),           // cluster {10,11}
       (20L, 21L), (21L, 22L) // cluster {20,21,22} — untouched by the batch
     ).toDF("doc_a", "doc_b")
-    val labels = Dedup.connectedComponents(old)
     val batch = Seq(
       (3L, 10L),  // merges {1,2,3} with {10,11} -> comp 1
       (30L, 31L), // brand-new cluster
       (11L, 32L)  // new node joining the merged cluster
     ).toDF("doc_a", "doc_b")
-    def m(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val inc = m(Dedup.incrementalComponents(labels, batch))
-    val scratch = m(Dedup.connectedComponents(old.unionByName(batch)))
-    assert(inc == scratch)
-    assert(Seq(1L, 2L, 3L, 10L, 11L, 32L).forall(inc(_) == 1L))
-    assert(Seq(20L, 21L, 22L).forall(inc(_) == 20L))
-    assert(inc(30L) == 30L && inc(31L) == 30L)
-    // an empty batch is the identity on the labeling (self-loops ride the
-    // symmetrized explode; singleton labels survive)
-    val idem = m(Dedup.incrementalComponents(labels,
-      Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")))
-    assert(idem == m(labels))
+    for ((arm, dd) <- arms) withClue(s"$arm: ") {
+      val labels = dd.connectedComponents(old)
+      val inc = labelMap(dd.incrementalComponents(labels, batch))
+      val scratch = labelMap(dd.connectedComponents(old.unionByName(batch)))
+      assert(inc == scratch)
+      assert(Seq(1L, 2L, 3L, 10L, 11L, 32L).forall(inc(_) == 1L))
+      assert(Seq(20L, 21L, 22L).forall(inc(_) == 20L))
+      assert(inc(30L) == 30L && inc(31L) == 30L)
+      // an empty batch is the identity on the labeling (self-loops ride the
+      // symmetrized explode; singleton labels survive)
+      val idem = labelMap(dd.incrementalComponents(labels,
+        Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")))
+      assert(idem == labelMap(labels))
+    }
   }
 
   test("incrementalComponents fuzz: random old graph + random batch == from-scratch CC") {
@@ -76,21 +88,24 @@ class DedupSpec extends SparkSpec {
       }.filter(p => p._1 != p._2).toDF("doc_a", "doc_b")
       def m(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val labels = Dedup.connectedComponents(old)
-      val inc = m(Dedup.incrementalComponents(labels, batch))
-      val scratch = m(Dedup.connectedComponents(old.unionByName(batch)))
-      assert(inc == scratch, s"round=$round: " +
-        s"only-inc=${inc.diff(scratch).take(3)}, " +
-        s"only-scratch=${scratch.diff(inc).take(3)}")
+      for ((arm, dd) <- arms) {
+        val labels = dd.connectedComponents(old)
+        val inc = m(dd.incrementalComponents(labels, batch))
+        val scratch = m(dd.connectedComponents(old.unionByName(batch)))
+        assert(inc == scratch, s"$arm round=$round: " +
+          s"only-inc=${inc.diff(scratch).take(3)}, " +
+          s"only-scratch=${scratch.diff(inc).take(3)}")
+      }
     }
   }
 
   test("long chain needs multiple propagation rounds") {
     val n = 40L
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val comps = Dedup.connectedComponents(pairs, maxIter = 50).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert((1L to n).forall(comps(_) == 1L))
+    for ((arm, dd) <- arms) withClue(s"$arm: ") {
+      val comps = labelMap(dd.connectedComponents(pairs, maxIter = 50))
+      assert((1L to n).forall(comps(_) == 1L))
+    }
   }
 
   test("randomized graphs match a driver-side union-find (fused round 1 gate)") {
@@ -113,25 +128,25 @@ class DedupSpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expected = parent.keys.map(k => k -> find(k)).toMap
-      val got = Dedup.connectedComponents(pairs.toDF("doc_a", "doc_b"), maxIter = 50)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"trial $trial: CC disagrees with union-find")
+      for ((arm, dd) <- arms) {
+        val got = labelMap(dd.connectedComponents(pairs.toDF("doc_a", "doc_b"), maxIter = 50))
+        assert(got == expected, s"$arm trial $trial: CC disagrees with union-find")
+      }
     }
   }
 
   test("CC under a RELIABLE checkpoint dir gives identical components") {
     // cluster posture: with a checkpoint dir configured, the per-round
     // lineage truncation goes through reliable storage instead of
-    // executor-local blocks (which die with their executor)
+    // executor-local blocks (which die with their executor). Only the
+    // rounds arm checkpoints, so every run here forces it.
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L),
       (22L, 20L)).toDF("doc_a", "doc_b")
-    val base = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val base = labelMap(rounds.connectedComponents(pairs))
     val dir = java.nio.file.Files.createTempDirectory("graft_ccckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val reliable = Dedup.connectedComponents(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val reliable = labelMap(rounds.connectedComponents(pairs))
       assert(reliable == base)
       // checkpoint storage is BOUNDED (ADVICE r11): each round's files are
       // deleted once the next round materializes, so a multi-round CC run
@@ -148,8 +163,7 @@ class DedupSpec extends SparkSpec {
       val dead = new java.io.File(ckptRoot, "graft-cc-deadbeef0000-3")
       assert(dead.mkdirs())
       val survivor = chains.head.getName
-      val again = Dedup.connectedComponents(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val again = labelMap(rounds.connectedComponents(pairs))
       assert(again == base)
       val after = ckptRoot.listFiles().filter(_.getName.startsWith("graft-cc-"))
         .map(_.getName).toSet
@@ -162,6 +176,65 @@ class DedupSpec extends SparkSpec {
     } finally {
       // do not leak the dir into later suites (localCheckpoint default)
       spark.sparkContext.setCheckpointDir(null)
+    }
+  }
+
+  test("Int-typed ids round-trip as Int on both arms") {
+    val pairs = Seq((1, 2), (2, 3), (7, 8)).toDF("doc_a", "doc_b")
+    for ((arm, dd) <- arms) withClue(s"$arm: ") {
+      val out = dd.connectedComponents(pairs)
+      assert(out.schema.map(_.dataType) ==
+        Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType))
+      assert(out.as[(Int, Int)].collect().toMap == Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 7))
+    }
+  }
+
+  test("a null endpoint is not a node: both arms keep the other end as a singleton") {
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(3L), None), (None, None), (None, Some(4L)),
+      (Some(2L), None)).toDF("doc_a", "doc_b")
+    for ((arm, dd) <- arms) withClue(s"$arm: ") {
+      val out = dd.connectedComponents(pairs).as[(Option[Long], Option[Long])].collect()
+      assert(out.toMap == Map(Some(1L) -> Some(1L), Some(2L) -> Some(1L),
+        Some(3L) -> Some(3L), Some(4L) -> Some(4L)))
+      assert(out.length == 4, "one row per node, none for the null ends")
+    }
+  }
+
+  test("union-find arm: a 40-node chain at the default maxIter is the exact fixpoint") {
+    val pairs = (1L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val comps = labelMap(Dedup.connectedComponents(pairs))
+    assert(comps.size == 40 && comps.values.forall(_ == 1L))
+  }
+
+  test("both arms give the same labels at 1 and 7 shuffle partitions and with AQE off") {
+    val rnd = new scala.util.Random(7)
+    val pairs = Seq.fill(150) {
+      val a = rnd.nextInt(120).toLong; val b = rnd.nextInt(120).toLong
+      (math.min(a, b), math.max(a, b))
+    }.toDF("doc_a", "doc_b")
+    val expected = labelMap(Dedup.connectedComponents(pairs, maxIter = 50))
+    val confs = Seq(
+      Map("spark.sql.shuffle.partitions" -> "1"),
+      Map("spark.sql.shuffle.partitions" -> "7"),
+      Map("spark.sql.adaptive.enabled" -> "false"))
+    for (conf <- confs; (arm, dd) <- arms) withClue(s"$arm $conf: ") {
+      val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try assert(labelMap(dd.connectedComponents(pairs, maxIter = 50)) == expected)
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("the frame is lazy and explain shows the ConnectedComponents step") {
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
+    for ((arm, dd) <- arms) withClue(s"$arm: ") {
+      val out = dd.connectedComponents(pairs)
+      assert(out.queryExecution.optimizedPlan.collect { case c: ConnectedComponents => c }.size == 1)
+      assert(out.queryExecution.executedPlan.toString.contains("ConnectedComponents"))
     }
   }
 }

@@ -35,4 +35,34 @@ class EmbedEdgeSpec extends SparkSpec {
       assert(out.nonEmpty, q)
     }
   }
+
+  test("e3/e4 build and search the PQ index over 8-dim vectors (sub-dimension from the width)") {
+    for (q <- Seq("e3_pq_ann", "e4_ivf_pq")) {
+      val out = Similarity.queries(q)(spark, dir).collect() // must not throw
+      assert(out.nonEmpty, q)
+    }
+    // against a direct reference: with 8 dims each of the PQ_M subspaces
+    // is one dim wide, and a code is the codebook entry (the first PQ_K
+    // vectors) nearest in that dim, distances at 6 dp, ties to lowest k
+    val all = spark.read.parquet(s"$dir/embeddings.parquet").filter(col("vec_id") < 40)
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val vs = all.as[(Long, Seq[Double])].collect().toMap
+    val cb = (0 until Similarity.PQ_K).map(k => vs(k.toLong))
+    def r6(x: Double) = java.math.BigDecimal.valueOf(x)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+    val codes = Similarity.pqEncode(all).as[(Long, Seq[Int])].collect().toMap
+    for ((id, v) <- vs) {
+      val expected = (0 until Similarity.PQ_M).map { m =>
+        cb.indices.minBy(k => (r6(math.pow(v(m) - cb(k)(m), 2)), k))
+      }
+      assert(codes(id) == expected, s"vec $id")
+    }
+  }
+
+  test("PQ fails loudly, naming the width, on vectors it cannot split") {
+    val odd = Seq((0L, Seq.fill(10)(1.0))).toDF("vec_id", "v")
+    val e = intercept[Exception](Similarity.pqEncode(odd).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("got width 10")), e.toString)
+  }
 }
