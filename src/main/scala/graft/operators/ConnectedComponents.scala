@@ -5,9 +5,13 @@ import org.apache.spark.sql.{DataFrame, GraftDatasets}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable.ArrayBuffer
 
 /** Connected components of the undirected graph whose edges are the
   * (`src`, `dst`) values of `child`, as ONE plan step with output
@@ -39,81 +43,76 @@ object ConnectedComponentsStrategy extends SparkStrategy {
   }
 }
 
-/** Reads the edges once, keeping at most `cap + 1` of them on the driver.
-  * Up to `cap` edges: union-find there, labels emitted as one partition.
-  * Over `cap`: the distributed rounds over the same edge RDD. */
+/** Caches the edges as flat (a, b) arrays and counts them in one job.
+  * Each task of that job also returns its edges when they fit its share
+  * of `cap` (cap / partitions), so the driver receives at most `cap`
+  * edges from it. Up to `cap` edges in all: the partitions over their
+  * share are fetched from the cache, union-find runs on the driver and
+  * the labels are emitted as one partition. Over `cap`: the distributed
+  * rounds over the cached edges. Either way the child runs once. */
 case class ConnectedComponentsExec(src: Expression, dst: Expression, output: Seq[Attribute],
                                    child: SparkPlan, cap: Int, maxIter: Int) extends UnaryExecNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
   override protected def withNewChildInternal(newChild: SparkPlan): ConnectedComponentsExec =
     copy(child = newChild)
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "driverEdges" -> SQLMetrics.createMetric(sparkContext, "edges sent to the driver"),
+    "rounds" -> SQLMetrics.createMetric(sparkContext, "distributed rounds"))
+
   override protected def doExecute(): RDD[InternalRow] = {
-    val idType = output.head.dataType
+    val isInt = output.head.dataType == IntegerType
     val (ends, in) = (Seq(src, dst), child.output)
     val edges = child.execute().mapPartitions { rows =>
       val proj = UnsafeProjection.create(ends, in)
-      rows.map(proj)
-    }
-    val limit = cap.toLong + 1
-    val isInt = idType == IntegerType
-    // each task keeps at most cap + 1 edges, as (a, b) pairs of a flat
-    // array; a null end becomes a self-loop on the other end
-    val firstEdges = edges.mapPartitions { rows =>
-      val buf = new scala.collection.mutable.ArrayBuilder.ofLong
-      var n = 0L
-      def id(r: InternalRow, i: Int) = if (isInt) r.getInt(i).toLong else r.getLong(i)
-      while (n < limit && rows.hasNext) {
-        val r = rows.next()
-        val (na, nb) = (r.isNullAt(0), r.isNullAt(1))
-        if (!na || !nb) {
-          val a = if (na) id(r, 1) else id(r, 0)
-          buf += a
-          buf += (if (nb) a else id(r, 1))
-          n += 1
-        }
-      }
-      Iterator.single(buf.result())
-    }
-    val kept = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-    var n = 0L
-    sparkContext.runJob(firstEdges, (it: Iterator[Array[Long]]) => it.next(),
-      (_: Int, pairs: Array[Long]) => {
-        n += pairs.length / 2
-        if (n <= cap) kept += pairs
+      ConnectedComponents.pairChunks(rows.map(proj), isInt)
+    }.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val share = cap / math.max(edges.getNumPartitions, 1)
+      val probe = sparkContext.runJob(edges, (chunks: Iterator[Array[Long]]) => {
+        val kept = ArrayBuffer.empty[Array[Long]]
+        var n = 0L
+        chunks.foreach { c => n += c.length / 2; if (n <= share) kept += c }
+        (n, if (n <= share) kept.toArray else null)
       })
-    if (n > cap) {
-      val schema = StructType(Seq(StructField("doc_a", idType), StructField("doc_b", idType)))
-      ConnectedComponents.rounds(GraftDatasets.ofInternalRows(session, edges, schema), maxIter)
-        .queryExecution.toRdd
-    } else {
-      val labels = ConnectedComponents.unionFind(kept.toSeq)
-      val types = output.map(_.dataType)
-      sparkContext.parallelize(Seq(labels), 1).mapPartitions { it =>
-        val proj = UnsafeProjection.create(types.toArray)
-        val row = new GenericInternalRow(2)
-        it.flatMap { case (ids, comps) =>
-          ids.indices.iterator.map { i =>
-            if (isInt) { row.setInt(0, ids(i).toInt); row.setInt(1, comps(i).toInt) }
-            else { row.setLong(0, ids(i)); row.setLong(1, comps(i)) }
-            proj(row)
-          }
-        }
+      val total = probe.map(_._1).sum
+      val labels = if (total <= cap) {
+        val over = probe.indices.filter(probe(_)._2 == null)
+        val fetched = if (over.isEmpty) Array.empty[Array[Array[Long]]]
+          else sparkContext.runJob(edges, (c: Iterator[Array[Long]]) => c.toArray, over)
+        metrics("driverEdges").add(total)
+        val pairs = (probe.flatMap(p => Option(p._2)) ++ fetched).flatten.toSeq
+        sparkContext.parallelize(Seq(ConnectedComponents.unionFind(pairs)), 1)
+          .mapPartitions(ConnectedComponents.pairRows(_, isInt))
+      } else {
+        metrics("driverEdges").add(probe.map(p => if (p._2 == null) 0L else p._1).sum)
+        val t = output.head.dataType
+        val schema = StructType(Seq(StructField("doc_a", t), StructField("doc_b", t)))
+        val (out, n) = ConnectedComponents.rounds(GraftDatasets.ofInternalRows(session,
+          edges.mapPartitions(ConnectedComponents.pairRows(_, isInt)), schema), maxIter,
+          () => edges.unpersist(blocking = false))
+        metrics("rounds").add(n)
+        out.queryExecution.toRdd
       }
-    }
+      SQLMetrics.postDriverMetricUpdates(sparkContext,
+        sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+      labels
+    } finally edges.unpersist(blocking = false)
   }
 }
 
 object ConnectedComponents {
 
-  /** Most edges the exec resolves by union-find on the driver. Measured
-    * on dedup-shaped graphs, 4 local cores (numbers in CHANGES.md):
+  /** Most edges the exec resolves by union-find on the driver. Sized on
+    * synthetic dedup-shaped graphs, 4 local cores (numbers in CHANGES.md):
     * union-find beat the rounds 10-20x at every size from 1k to 1M edges
     * (0.26 against 5.1 s at 2^18), so the cap bounds memory, not time. At
     * 2^18 edges the driver holds 4 MiB of edge ids and the one output
-    * task carries about 5 MiB of labels; at 2^20 that task was 18 MiB. A
-    * compile-time constant, not a conf key: DedupSpec passes 0 to the
-    * factory to force the rounds. */
+    * task carries about 5 MiB of labels; at 2^20 that task was 18 MiB.
+    * No benchmark workload comes near the cap, so neither the size nor
+    * the rounds side is measured end to end. A compile-time constant, not
+    * a conf key: specs pass a small cap to the factory to force the
+    * rounds. */
   val Cap: Int = 1 << 18
 
   /** The (id, comp) frame of `pairs`' (doc_a, doc_b) edges — lazy. */
@@ -131,11 +130,42 @@ object ConnectedComponents {
       Seq(attr("id", a.dataType), attr("comp", a.dataType)), edges, cap, maxIter))
   }
 
-  /** Sorted distinct endpoints of the flat (a, b) pair arrays, and each
-    * one's component minimum. Endpoints are indexed in id order and every
-    * union links the larger root under the smaller, so a root is always
-    * its set's minimum id. */
-  private[operators] def unionFind(pairs: Seq[Array[Long]]): (Array[Long], Array[Long]) = {
+  /** Edges per cached array: 1 MiB of ids. */
+  private val ChunkEdges = 1 << 16
+
+  /** The (a, b) ends of `rows` as flat arrays of at most [[ChunkEdges]]
+    * pairs. A null end becomes a self-loop on the other end, so it adds
+    * that end as a node and links nothing; an all-null edge is dropped. */
+  private[operators] def pairChunks(rows: Iterator[InternalRow], isInt: Boolean): Iterator[Array[Long]] = {
+    def id(r: InternalRow, i: Int) = if (isInt) r.getInt(i).toLong else r.getLong(i)
+    rows.flatMap { r =>
+      if (r.isNullAt(0) && r.isNullAt(1)) Iterator.empty
+      else {
+        val a = if (r.isNullAt(0)) id(r, 1) else id(r, 0)
+        Iterator(a, if (r.isNullAt(1)) a else id(r, 1))
+      }
+    }.grouped(2 * ChunkEdges).map(_.toArray)
+  }
+
+  /** The rows of flat (a, b) pair arrays, as int or bigint columns. */
+  private[operators] def pairRows(chunks: Iterator[Array[Long]], isInt: Boolean): Iterator[InternalRow] = {
+    val t = if (isInt) IntegerType else LongType
+    val proj = UnsafeProjection.create(Array[DataType](t, t))
+    val row = new GenericInternalRow(2)
+    chunks.flatMap { c =>
+      Iterator.range(0, c.length, 2).map { i =>
+        if (isInt) { row.setInt(0, c(i).toInt); row.setInt(1, c(i + 1).toInt) }
+        else { row.setLong(0, c(i)); row.setLong(1, c(i + 1)) }
+        proj(row)
+      }
+    }
+  }
+
+  /** (id, comp) pairs, flat, for the distinct endpoints of the flat
+    * (a, b) pair arrays in id order: comp is the component's minimum.
+    * Endpoints are indexed in id order and every union links the larger
+    * root under the smaller, so a root is always its set's minimum id. */
+  private[operators] def unionFind(pairs: Seq[Array[Long]]): Array[Long] = {
     val all = Array.concat(pairs: _*)
     val ids = all.clone()
     java.util.Arrays.sort(ids)
@@ -158,7 +188,7 @@ object ConnectedComponents {
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
       i += 2
     }
-    (java.util.Arrays.copyOf(ids, nIds), Array.tabulate(nIds)(k => ids(find(k))))
+    Array.tabulate(2 * nIds)(k => if (k % 2 == 0) ids(k / 2) else ids(find(k / 2)))
   }
 
   /** Lineage-truncating checkpoint per round: RELIABLE (checkpoint-dir
@@ -254,22 +284,23 @@ object ConnectedComponents {
     * edges: each round joins labels across edges and keeps the elementwise
     * min — O(diameter) rounds of hash joins, pointer jumping between
     * them, so it scales to billions of edges. Runs until fixpoint or
-    * `maxIter`. The exec's arm for graphs over the union-find cap. */
-  private[operators] def rounds(pairs: DataFrame, maxIter: Int): DataFrame = {
+    * `maxIter`. The exec's arm for graphs over the union-find cap: the
+    * labels and the rounds run. `pairs` has no null end; `released` is
+    * called once the rounds' own copy of the edges is materialized. */
+  private[operators] def rounds(pairs: DataFrame, maxIter: Int,
+                                released: () => Unit): (DataFrame, Int) = {
     val chain = new CkptChain(pairs.sparkSession)
     def cp(df: DataFrame): DataFrame = chain.cp(df)
     // symmetrize with ONE pass over `pairs`: a two-branch union evaluates
     // the whole upstream pipeline (LSH band join + distinct at 100x) twice;
-    // exploding both directions from each row reads it once. A null end
-    // becomes a self-loop on the other end (the exec's node contract).
+    // exploding both directions from each row reads it once.
     // Persisted PRE-PARTITIONED on the per-round join key: InMemoryRelation
     // keeps the hash partitioning, so the edge set is shuffled once here,
     // not once per iteration (only the small labels side moves each round)
     val edges = pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .filter(col("e.src").isNotNull)
-      .select(col("e.src").as("src"), coalesce(col("e.dst"), col("e.src")).as("dst"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(col("dst"))
       .persist()
     // FIRST propagation round, fused: with identity labels (comp == id)
@@ -280,6 +311,7 @@ object ConnectedComponents {
     var labels = cp(edges.groupBy(col("dst"))
       .agg(min(col("src")).as("_nmin"))
       .select(col("dst").as("id"), least(col("dst"), col("_nmin")).as("comp")))
+    released()
     var iter = 1 // round 1 already ran above
     var converged = false // round 1 always changes the larger end of some pair
     while (iter < maxIter && !converged) {
@@ -309,6 +341,6 @@ object ConnectedComponents {
       iter += 1
     }
     edges.unpersist()
-    labels
+    (labels, iter)
   }
 }

@@ -12,15 +12,14 @@ import org.apache.spark.sql.functions._
   * plan step. At run time it resolves a graph of at most `cap` edges by
   * union-find on the driver, in one pass over the edges, and a larger one
   * by distributed min-label propagation with pointer jumping, which scales
-  * to billions of edges. `cap` is [[ConnectedComponents.Cap]] for [[Dedup]]
-  * itself; specs build a `new Dedup(0)` to run the distributed rounds. */
-class Dedup private[graft] (cap: Int) {
+  * to billions of edges; `cap` is [[ConnectedComponents.Cap]]. */
+object Dedup {
 
   /** (id, component) for every id appearing in `pairs`; component = min id
     * reachable. Under the cap the result is the exact fixpoint; over it the
     * rounds stop at `maxIter`. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame =
-    ConnectedComponents.of(pairs, maxIter, cap)
+    ConnectedComponents.of(pairs, maxIter)
 
   /** Incremental duplicate-cluster maintenance — fold a NEW batch's
     * candidate edges (TextDedup.incrementalEstSimPairs' output, i.e. x17's
@@ -55,5 +54,3 @@ class Dedup private[graft] (cap: Int) {
       .withColumn("is_duplicate", col("canonical_id") =!= col("doc_id"))
   }
 }
-
-object Dedup extends Dedup(ConnectedComponents.Cap)

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Fingerprint-keyed parquet store of the derived artifacts consumers
@@ -109,15 +110,6 @@ object AtRest {
     def ann: String = s"$dir/ann-${Similarity.annRecipe}"
   }
 
-  /** The writers' schemas, declared on every read of a store table: a
-    * parquet read without one runs a footer-inference Spark job. */
-  private val SigSchema =
-    ("doc_id BIGINT" +: (1 to TextDedup.K).map(i => s"mh$i BIGINT")).mkString(", ")
-  private val TfSchema = "doc_id BIGINT, term STRING, tf BIGINT"
-  private val DfSchema = "term STRING, df BIGINT"
-  private val MetaSchema = "n_docs BIGINT"
-  private val LabelsSchema = "id BIGINT, comp BIGINT"
-
   /** (input-path id, content fingerprint) of `d`'s `table`: the id keys
     * "same input path" (so stale fingerprints of the same table can be
     * swept), the fingerprint keys "same bytes" (name+len+mtime of every
@@ -210,8 +202,14 @@ object AtRest {
   // by the write-then-rename publish below, not by this lock
   private val buildLock = new Object
 
-  private def publish(df: DataFrame, path: String, overwrite: Boolean): Unit =
+  /** Write `df` as the table at `path`. `schema` is the one every read of
+    * the table declares, so a writer whose columns drift from it fails
+    * here rather than being misread later. */
+  private def publish(df: DataFrame, schema: StructType, path: String, overwrite: Boolean): Unit = {
+    require(df.schema.map(f => f.name -> f.dataType) == schema.map(f => f.name -> f.dataType),
+      s"$path: writing ${df.schema.simpleString}, but its readers declare ${schema.simpleString}")
     publishWith(df.sparkSession, path, overwrite)(df.write.mode("overwrite").parquet(_))
+  }
 
   /** Write a table at `path` with `write` (given the temp path) via a temp
     * sibling + rename
@@ -362,18 +360,21 @@ object AtRest {
     * fingerprinted bytes. */
   private def buildSignatures(s: SparkSession, d: String, st: Store,
                               overwrite: Boolean): Unit =
-    publish(TextDedup.signatureFrame(Tables.documents(s, d)), st.sig, overwrite)
+    publish(TextDedup.signatureFrame(Tables.documents(s, d)), TextDedup.SignatureSchema,
+      st.sig, overwrite)
 
   private def buildTf(s: SparkSession, d: String, st: Store,
                       overwrite: Boolean): Unit =
-    publish(TextDedup.termFrequencies(Tables.documents(s, d)), st.tf, overwrite)
+    publish(TextDedup.termFrequencies(Tables.documents(s, d)), TextDedup.TfSchema,
+      st.tf, overwrite)
 
   /** Document frequency per term — vocabulary-sized, derived from the
     * WRITTEN tf table (one pruned scan of its `term` column) via the ONE
     * shared df definition, so the two tables can never disagree about
     * tokenization or the aggregate. */
   private def buildDf(s: SparkSession, st: Store, overwrite: Boolean): Unit =
-    publish(TextDedup.docFrequencies(s.read.schema(TfSchema).parquet(st.tf)), st.df, overwrite)
+    publish(TextDedup.docFrequencies(s.read.schema(TextDedup.TfSchema).parquet(st.tf)),
+      TextDedup.DfSchema, st.df, overwrite)
 
   /** n_docs recorded at ingest: the idf denominator counts EVERY corpus row
     * (null/too-short texts produce no tf rows but still count — the x12
@@ -381,8 +382,10 @@ object AtRest {
   private def buildMeta(s: SparkSession, d: String, st: Store,
                         overwrite: Boolean): Unit = {
     val n = Tables.documents(s, d).count()
-    publish(s.range(1).select(lit(n).as("n_docs")), st.meta, overwrite)
+    publish(s.range(1).select(lit(n).as("n_docs")), MetaSchema, st.meta, overwrite)
   }
+
+  private[queries] val MetaSchema: StructType = StructType.fromDDL("n_docs BIGINT")
 
   /** The old batch's labels over signature frame `mh`: one lazy
     * connected-components step over its star edges, so the CC runs inside
@@ -393,8 +396,11 @@ object AtRest {
 
   private def buildLabels(s: SparkSession, d: String, st: Store,
                           overwrite: Boolean): Unit =
-    publish(labelsPlan(s.read.schema(SigSchema).parquet(ensureSignatures(s, d, st))),
-      st.labels, overwrite)
+    publish(labelsPlan(s.read.schema(TextDedup.SignatureSchema).parquet(ensureSignatures(s, d, st))),
+      LabelsSchema, st.labels, overwrite)
+
+  /** The labels' (id, comp): connected components keep the doc_id type. */
+  private[queries] val LabelsSchema: StructType = StructType.fromDDL("id BIGINT, comp BIGINT")
 
   /** Build-if-absent. The stale-sibling sweep rides the BUILD branch only:
     * a session that found the table present is a pure reader and must not
@@ -424,7 +430,7 @@ object AtRest {
   private def pairScoresPlan(s: SparkSession, d: String, st: Store): DataFrame =
     TextDedup.pairScoresGrouped(s,
       Curation.shingleSetsFromParquet(s, ensureShingleSets(s, d, st)),
-      s.read.schema(SigSchema).parquet(ensureSignatures(s, d, st)))
+      s.read.schema(TextDedup.SignatureSchema).parquet(ensureSignatures(s, d, st)))
 
   /** Public ensure used by d7 and the bench pre-seed. */
   def ensureSignatures(s: SparkSession, d: String): String =
@@ -433,7 +439,7 @@ object AtRest {
   /** The at-rest signature table of `d`'s corpus (ensured), read with its
     * declared schema — the d7/x17/x18 input. */
   def signatures(s: SparkSession, d: String): DataFrame =
-    s.read.schema(SigSchema).parquet(ensureSignatures(s, d))
+    s.read.schema(TextDedup.SignatureSchema).parquet(ensureSignatures(s, d))
 
   /** The corpus shingle sets, built by their first consumer. */
   def ensureShingleSets(s: SparkSession, d: String): String =
@@ -443,7 +449,8 @@ object AtRest {
   def ensurePairScores(s: SparkSession, d: String): String = {
     val st = resolve(s, d)
     ensure(s, st, st.pairScores)(
-      publish(pairScoresPlan(s, d, st), st.pairScores, overwrite = false))
+      publish(pairScoresPlan(s, d, st), TextDedup.PairScoresSchema, st.pairScores,
+        overwrite = false))
   }
 
   /** The ANN index over `d`'s embeddings, in that table's own
@@ -507,13 +514,13 @@ object AtRest {
     * the frame that was handed to the writer. */
   private def storeSummary(s: SparkSession, st: Store): DataFrame = {
     val mhSum = (1 to TextDedup.K).map(i => col(s"mh$i")).reduce(_ + _)
-    val sig = s.read.schema(SigSchema).parquet(st.sig)
+    val sig = s.read.schema(TextDedup.SignatureSchema).parquet(st.sig)
       .agg(count(lit(1)).as("n_rows"), sum(mhSum).as("checksum"))
       .select(lit("signatures").as("tbl"), col("n_rows"), col("checksum"))
-    val tf = s.read.schema(TfSchema).parquet(st.tf)
+    val tf = s.read.schema(TextDedup.TfSchema).parquet(st.tf)
       .agg(count(lit(1)).as("n_rows"), sum(col("tf")).as("checksum"))
       .select(lit("tf").as("tbl"), col("n_rows"), col("checksum"))
-    val df = s.read.schema(DfSchema).parquet(st.df)
+    val df = s.read.schema(TextDedup.DfSchema).parquet(st.df)
       .agg(count(lit(1)).as("n_rows"), sum(col("df")).as("checksum"))
       .select(lit("df").as("tbl"), col("n_rows"), col("checksum"))
     val meta = s.read.schema(MetaSchema).parquet(st.meta)
@@ -595,8 +602,8 @@ object AtRest {
       val dfPath = ensure(s, st, st.df)(buildDf(s, st, overwrite = false))
       val metaPath = ensure(s, st, st.meta)(buildMeta(s, d, st, overwrite = false))
       val nDocs = s.read.schema(MetaSchema).parquet(metaPath).head().getLong(0)
-      TextDedup.tfidfTopKOverTfDf(s.read.schema(TfSchema).parquet(tfPath),
-        s.read.schema(DfSchema).parquet(dfPath),
+      TextDedup.tfidfTopKOverTfDf(s.read.schema(TextDedup.TfSchema).parquet(tfPath),
+        s.read.schema(TextDedup.DfSchema).parquet(dfPath),
         s.range(1).select(lit(nDocs).as("n_docs")))
     },
     // ----- X21: LSH candidate pairs + est-sim from the at-rest signature
@@ -606,7 +613,7 @@ object AtRest {
     "x21_atrest_pairs" -> { (s, d) =>
       val st = resolve(s, d)
       TextDedup.estSimPairsGrouped(s,
-          s.read.schema(SigSchema).parquet(ensureSignatures(s, d, st)))
+          s.read.schema(TextDedup.SignatureSchema).parquet(ensureSignatures(s, d, st)))
         .select(col("doc_a"), col("doc_b"), roundSim(col("est_sim")).as("est_sim"))
     },
     // ----- X22: the labels build step — "yesterday's" resolve (CC over
@@ -630,7 +637,7 @@ object AtRest {
     "x23_atrest_resolve" -> { (s, d) =>
       val st = resolve(s, d)
       val labels = s.read.schema(LabelsSchema).parquet(ensureLabels(s, d, st))
-      val sig = s.read.schema(SigSchema).parquet(ensureSignatures(s, d, st))
+      val sig = s.read.schema(TextDedup.SignatureSchema).parquet(ensureSignatures(s, d, st))
       val newEdges = TextDedup.incrementalEstSimPairs(s, sig,
         pmod(col("doc_id"), lit(5)) === 0)
         .select("doc_a", "doc_b")

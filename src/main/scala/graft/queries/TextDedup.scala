@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.functions.Text
 
@@ -48,6 +49,14 @@ object TextDedup {
   /** MinHash signature frame (doc_id + K signature columns). */
   def signatureFrame(docs: DataFrame): DataFrame =
     withMinhash(docs).select("doc_id", (1 to K).map(i => s"mh$i"): _*)
+
+  /** The columns of [[signatureFrame]], declared on every read of a
+    * written signature table (a parquet read without a schema runs a
+    * footer-inference Spark job) and checked by AtRest's publish against
+    * the frame it writes. Likewise [[TfSchema]], [[DfSchema]] and
+    * [[PairScoresSchema]]. */
+  private[queries] val SignatureSchema: StructType =
+    StructType.fromDDL(("doc_id BIGINT" +: (1 to K).map(i => s"mh$i BIGINT")).mkString(", "))
 
   // NOTE (round 10, tried and NOT adopted): persisting the LSH candidate
   // pairs in executor cache for d7 to resolve over could not be shown
@@ -457,11 +466,13 @@ object TextDedup {
       .dropDuplicates("doc_a", "doc_b")
   }
 
+  private[queries] val PairScoresSchema: StructType =
+    StructType.fromDDL("doc_a BIGINT, doc_b BIGINT, est_sim DOUBLE, jaccard DOUBLE")
+
   /** The at-rest [[pairScoresGrouped]] rows of `d`'s corpus, built by the
     * first of d3/d4 to run (schema declared: no footer-inference job). */
   private def atRestPairScores(s: SparkSession, d: String): DataFrame =
-    s.read.schema("doc_a BIGINT, doc_b BIGINT, est_sim DOUBLE, jaccard DOUBLE")
-      .parquet(AtRest.ensurePairScores(s, d))
+    s.read.schema(PairScoresSchema).parquet(AtRest.ensurePairScores(s, d))
 
   /** INCREMENTAL batch near-dup detection (x17) — the shape a continuous
     * ingestion pipeline runs per crawl batch: candidate pairs + estimated
@@ -574,7 +585,7 @@ object TextDedup {
 
   def lshPairsFromParquet(s: SparkSession, path: String,
                           cap: Int = HOT_BAND_CAP): DataFrame =
-    lshPairs(s.read.parquet(path), cap)
+    lshPairs(s.read.schema(SignatureSchema).parquet(path), cap)
 
   /** The (doc_id, term, tf) term-frequency frame — one explode + one
     * combiner-friendly groupBy over the raw corpus. The registered x12
@@ -583,6 +594,9 @@ object TextDedup {
   private[queries] def termFrequencies(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+
+  private[queries] val TfSchema: StructType =
+    StructType.fromDDL("doc_id BIGINT, term STRING, tf BIGINT")
 
   /** TF-IDF top-5 terms per doc over a prebuilt tf frame — the downstream
     * shared by the registered x12 (locally checkpointed tf) and
@@ -598,6 +612,8 @@ object TextDedup {
     * oracle reuse rests on is structural, not documented. */
   private[queries] def docFrequencies(tf: DataFrame): DataFrame =
     tf.groupBy("term").agg(count(lit(1)).as("df"))
+
+  private[queries] val DfSchema: StructType = StructType.fromDDL("term STRING, df BIGINT")
 
   /** [[tfidfTopKOverTf]] with the document-frequency table supplied — the
     * at-rest shape (x20): the 28M-row groupBy(term) branch disappears,
@@ -637,7 +653,7 @@ object TextDedup {
     * idf denominator exactly as x12's docs.count() does; TextDedupSpec
     * pins that caveat with a null-text doc in the fixture). */
   def tfidfTopKFromParquet(s: SparkSession, path: String, nDocs: Long): DataFrame =
-    tfidfTopKOverTf(s.read.parquet(path),
+    tfidfTopKOverTf(s.read.schema(TfSchema).parquet(path),
       s.range(1).select(lit(nDocs).as("n_docs")))
 
   /** Band-keyed rows for INCREMENTAL near-dup detection: every document

@@ -1,19 +1,28 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Every case runs through both arms of the ConnectedComponents exec:
-    * union-find on the driver (the default cap) and the distributed
-    * rounds (cap 0, so any graph is over it). */
-  private val arms = Seq("union-find" -> Dedup, "rounds" -> new Dedup(0))
-  private val rounds = new Dedup(0)
+  /** The components cases run through both arms of the
+    * ConnectedComponents exec: union-find on the driver (the default cap)
+    * and the distributed rounds (cap 0, so any graph is over it). */
+  private val arms = Seq("union-find" -> ConnectedComponents.Cap, "rounds" -> 0)
 
-  private def labelMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+  private def cc(pairs: DataFrame, cap: Int, maxIter: Int = 10): DataFrame =
+    ConnectedComponents.of(pairs, maxIter, cap)
+
+  private def labelMap(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The exec that ran `df` (collected first), for its metrics. */
+  private def execOf(df: DataFrame): ConnectedComponentsExec = {
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val Seq(e) = helper.collect(df.queryExecution.executedPlan) { case e: ConnectedComponentsExec => e }
+    e
+  }
 
   test("connected components: chains, rings and singletons resolve to min id") {
     val pairs = Seq(
@@ -21,8 +30,8 @@ class DedupSpec extends SparkSpec {
       (10L, 11L), (11L, 12L), (12L, 10L), // ring -> comp 10
       (20L, 21L)                        // pair -> comp 20
     ).toDF("doc_a", "doc_b")
-    for ((arm, dd) <- arms) withClue(s"$arm: ") {
-      val comps = labelMap(dd.connectedComponents(pairs))
+    for ((arm, cap) <- arms) withClue(s"$arm: ") {
+      val comps = labelMap(cc(pairs, cap))
       assert(Seq(1L, 2L, 3L, 4L).forall(comps(_) == 1L))
       assert(Seq(10L, 11L, 12L).forall(comps(_) == 10L))
       assert(Seq(20L, 21L).forall(comps(_) == 20L))
@@ -32,16 +41,14 @@ class DedupSpec extends SparkSpec {
   test("canonicalAssignment: non-candidates stay their own canonical") {
     val docs = (1L to 6L).toDF("doc_id")
     val pairs = Seq((2L, 5L)).toDF("doc_a", "doc_b")
-    for ((arm, dd) <- arms) withClue(s"$arm: ") {
-      val out = dd.canonicalAssignment(docs, pairs).collect()
-        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
-      assert(out(5L) == ((2L, true)))
-      assert(out(2L) == ((2L, false)))
-      assert(out(1L) == ((1L, false)) && out(6L) == ((6L, false)))
-      // dedup keeps exactly one representative per cluster
-      val kept = out.count(!_._2._2)
-      assert(kept == 5)
-    }
+    val out = Dedup.canonicalAssignment(docs, pairs).collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    assert(out(5L) == ((2L, true)))
+    assert(out(2L) == ((2L, false)))
+    assert(out(1L) == ((1L, false)) && out(6L) == ((6L, false)))
+    // dedup keeps exactly one representative per cluster
+    val kept = out.count(!_._2._2)
+    assert(kept == 5)
   }
 
   test("incrementalComponents(labels, new) == CC(old ∪ new): merge, new nodes, untouched") {
@@ -55,17 +62,17 @@ class DedupSpec extends SparkSpec {
       (30L, 31L), // brand-new cluster
       (11L, 32L)  // new node joining the merged cluster
     ).toDF("doc_a", "doc_b")
-    for ((arm, dd) <- arms) withClue(s"$arm: ") {
-      val labels = dd.connectedComponents(old)
-      val inc = labelMap(dd.incrementalComponents(labels, batch))
-      val scratch = labelMap(dd.connectedComponents(old.unionByName(batch)))
+    for ((arm, cap) <- arms) withClue(s"$arm: ") {
+      val labels = cc(old, cap)
+      val inc = labelMap(Dedup.incrementalComponents(labels, batch))
+      val scratch = labelMap(cc(old.unionByName(batch), cap))
       assert(inc == scratch)
       assert(Seq(1L, 2L, 3L, 10L, 11L, 32L).forall(inc(_) == 1L))
       assert(Seq(20L, 21L, 22L).forall(inc(_) == 20L))
       assert(inc(30L) == 30L && inc(31L) == 30L)
       // an empty batch is the identity on the labeling (self-loops ride the
       // symmetrized explode; singleton labels survive)
-      val idem = labelMap(dd.incrementalComponents(labels,
+      val idem = labelMap(Dedup.incrementalComponents(labels,
         Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")))
       assert(idem == labelMap(labels))
     }
@@ -86,12 +93,12 @@ class DedupSpec extends SparkSpec {
         val b = (nOld + rnd.nextInt(15)).toLong
         (math.min(a, b), math.max(a, b))
       }.filter(p => p._1 != p._2).toDF("doc_a", "doc_b")
-      def m(df: org.apache.spark.sql.DataFrame) = df.collect()
+      def m(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      for ((arm, dd) <- arms) {
-        val labels = dd.connectedComponents(old)
-        val inc = m(dd.incrementalComponents(labels, batch))
-        val scratch = m(dd.connectedComponents(old.unionByName(batch)))
+      for ((arm, cap) <- arms) {
+        val labels = cc(old, cap)
+        val inc = m(Dedup.incrementalComponents(labels, batch))
+        val scratch = m(cc(old.unionByName(batch), cap))
         assert(inc == scratch, s"$arm round=$round: " +
           s"only-inc=${inc.diff(scratch).take(3)}, " +
           s"only-scratch=${scratch.diff(inc).take(3)}")
@@ -102,8 +109,8 @@ class DedupSpec extends SparkSpec {
   test("long chain needs multiple propagation rounds") {
     val n = 40L
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    for ((arm, dd) <- arms) withClue(s"$arm: ") {
-      val comps = labelMap(dd.connectedComponents(pairs, maxIter = 50))
+    for ((arm, cap) <- arms) withClue(s"$arm: ") {
+      val comps = labelMap(cc(pairs, cap, maxIter = 50))
       assert((1L to n).forall(comps(_) == 1L))
     }
   }
@@ -128,8 +135,8 @@ class DedupSpec extends SparkSpec {
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
       }
       val expected = parent.keys.map(k => k -> find(k)).toMap
-      for ((arm, dd) <- arms) {
-        val got = labelMap(dd.connectedComponents(pairs.toDF("doc_a", "doc_b"), maxIter = 50))
+      for ((arm, cap) <- arms) {
+        val got = labelMap(cc(pairs.toDF("doc_a", "doc_b"), cap, maxIter = 50))
         assert(got == expected, s"$arm trial $trial: CC disagrees with union-find")
       }
     }
@@ -142,11 +149,11 @@ class DedupSpec extends SparkSpec {
     // rounds arm checkpoints, so every run here forces it.
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L),
       (22L, 20L)).toDF("doc_a", "doc_b")
-    val base = labelMap(rounds.connectedComponents(pairs))
+    val base = labelMap(cc(pairs, 0))
     val dir = java.nio.file.Files.createTempDirectory("graft_ccckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
-      val reliable = labelMap(rounds.connectedComponents(pairs))
+      val reliable = labelMap(cc(pairs, 0))
       assert(reliable == base)
       // checkpoint storage is BOUNDED (ADVICE r11): each round's files are
       // deleted once the next round materializes, so a multi-round CC run
@@ -163,7 +170,7 @@ class DedupSpec extends SparkSpec {
       val dead = new java.io.File(ckptRoot, "graft-cc-deadbeef0000-3")
       assert(dead.mkdirs())
       val survivor = chains.head.getName
-      val again = labelMap(rounds.connectedComponents(pairs))
+      val again = labelMap(cc(pairs, 0))
       assert(again == base)
       val after = ckptRoot.listFiles().filter(_.getName.startsWith("graft-cc-"))
         .map(_.getName).toSet
@@ -181,8 +188,8 @@ class DedupSpec extends SparkSpec {
 
   test("Int-typed ids round-trip as Int on both arms") {
     val pairs = Seq((1, 2), (2, 3), (7, 8)).toDF("doc_a", "doc_b")
-    for ((arm, dd) <- arms) withClue(s"$arm: ") {
-      val out = dd.connectedComponents(pairs)
+    for ((arm, cap) <- arms) withClue(s"$arm: ") {
+      val out = cc(pairs, cap)
       assert(out.schema.map(_.dataType) ==
         Seq(org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType))
       assert(out.as[(Int, Int)].collect().toMap == Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 7))
@@ -193,8 +200,8 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq[(Option[Long], Option[Long])](
       (Some(1L), Some(2L)), (Some(3L), None), (None, None), (None, Some(4L)),
       (Some(2L), None)).toDF("doc_a", "doc_b")
-    for ((arm, dd) <- arms) withClue(s"$arm: ") {
-      val out = dd.connectedComponents(pairs).as[(Option[Long], Option[Long])].collect()
+    for ((arm, cap) <- arms) withClue(s"$arm: ") {
+      val out = cc(pairs, cap).as[(Option[Long], Option[Long])].collect()
       assert(out.toMap == Map(Some(1L) -> Some(1L), Some(2L) -> Some(1L),
         Some(3L) -> Some(3L), Some(4L) -> Some(4L)))
       assert(out.length == 4, "one row per node, none for the null ends")
@@ -218,10 +225,10 @@ class DedupSpec extends SparkSpec {
       Map("spark.sql.shuffle.partitions" -> "1"),
       Map("spark.sql.shuffle.partitions" -> "7"),
       Map("spark.sql.adaptive.enabled" -> "false"))
-    for (conf <- confs; (arm, dd) <- arms) withClue(s"$arm $conf: ") {
+    for (conf <- confs; (arm, cap) <- arms) withClue(s"$arm $conf: ") {
       val saved = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
       conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try assert(labelMap(dd.connectedComponents(pairs, maxIter = 50)) == expected)
+      try assert(labelMap(cc(pairs, cap, maxIter = 50)) == expected)
       finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
@@ -231,10 +238,36 @@ class DedupSpec extends SparkSpec {
 
   test("the frame is lazy and explain shows the ConnectedComponents step") {
     val pairs = Seq((1L, 2L), (2L, 3L)).toDF("doc_a", "doc_b")
-    for ((arm, dd) <- arms) withClue(s"$arm: ") {
-      val out = dd.connectedComponents(pairs)
+    for ((arm, cap) <- arms) withClue(s"$arm: ") {
+      val out = cc(pairs, cap)
       assert(out.queryExecution.optimizedPlan.collect { case c: ConnectedComponents => c }.size == 1)
       assert(out.queryExecution.executedPlan.toString.contains("ConnectedComponents"))
     }
+  }
+
+  test("over the cap the rounds run, and no partition over its share sends an edge to the driver") {
+    // cap 2 over 12 partitions of 5 edges each: every task's share of the
+    // cap is 0, so the counting pass returns counts only
+    val pairs = spark.sparkContext.parallelize((0L until 60L).map(i => (i, i + 1)), 12)
+      .toDF("doc_a", "doc_b")
+    val out = cc(pairs, 2, maxIter = 50)
+    assert(labelMap(out) == (0L to 60L).map(_ -> 0L).toMap)
+    val m = execOf(out).metrics
+    assert(m("rounds").value >= 1, "the graph is over the cap")
+    assert(m("driverEdges").value == 0)
+  }
+
+  test("under the cap, a partition over its share is fetched in a second pass") {
+    // cap 100 over 10 partitions: the first holds a 50-edge chain, over its
+    // share of 10, the others one edge each
+    val pairs = spark.sparkContext.parallelize(0 until 10, 10).flatMap { p =>
+      if (p == 0) (0L until 50L).map(i => (i, i + 1)) else Seq((100L * p, 100L * p + 1))
+    }.toDF("doc_a", "doc_b")
+    val out = cc(pairs, 100)
+    assert(labelMap(out) == ((0L to 50L).map(_ -> 0L) ++
+      (1 until 10).flatMap(p => Seq(100L * p -> 100L * p, (100L * p + 1) -> 100L * p))).toMap)
+    val m = execOf(out).metrics
+    assert(m("rounds").value == 0, "59 edges are under the cap")
+    assert(m("driverEdges").value == 59)
   }
 }

@@ -227,4 +227,16 @@ class AtRestSpec extends SparkSpec {
     // and the fresh store serves the NEW corpus
     assert(spark.read.parquet(sig2).count() == corpus.length + 1L)
   }
+
+  test("every store table's written schema is the one its readers declare") {
+    val d = writeFixture()
+    AtRest.preSeed(spark, d)
+    AtRest.ensurePairScores(spark, d)
+    val st = AtRest.resolve(spark, d)
+    def cols(t: org.apache.spark.sql.types.StructType) = t.map(f => f.name -> f.dataType)
+    for ((path, declared) <- Seq(st.sig -> TextDedup.SignatureSchema, st.tf -> TextDedup.TfSchema,
+        st.df -> TextDedup.DfSchema, st.meta -> AtRest.MetaSchema, st.labels -> AtRest.LabelsSchema,
+        st.pairScores -> TextDedup.PairScoresSchema))
+      assert(cols(spark.read.parquet(path).schema) == cols(declared), path)
+  }
 }
