@@ -24,8 +24,8 @@ import scala.collection.mutable.ArrayBuffer
   * Nothing runs until the frame executes, so a query built on it returns
   * a lazy frame and `explain` shows the step. [[ConnectedComponentsExec]]
   * decides the algorithm at run time from the edge count: at most `cap`
-  * edges resolve by union-find on the driver in one pass (exact: no
-  * round limit applies), more run the distributed rounds of
+  * edges resolve by union-find on the driver (exact: no round limit
+  * applies), more run the distributed rounds of
   * [[ConnectedComponents.rounds]], which stop after `maxIter`. */
 case class ConnectedComponents(src: Expression, dst: Expression, output: Seq[Attribute],
                                child: LogicalPlan, cap: Int, maxIter: Int) extends UnaryNode {

@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * canonical representative every member collapses to.
   *
   * Every function returns a lazy frame over one [[ConnectedComponents]]
-  * plan step. At run time it resolves a graph of at most `cap` edges by
-  * union-find on the driver, in one pass over the edges, and a larger one
-  * by distributed min-label propagation with pointer jumping, which scales
-  * to billions of edges; `cap` is [[ConnectedComponents.Cap]]. */
+  * plan step. At run time it resolves a graph of at most
+  * [[ConnectedComponents.Cap]] edges by union-find on the driver, and a
+  * larger one by distributed min-label propagation with pointer jumping,
+  * which scales to billions of edges. */
 object Dedup {
 
   /** (id, component) for every id appearing in `pairs`; component = min id
