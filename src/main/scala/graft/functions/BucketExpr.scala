@@ -69,17 +69,7 @@ object BucketBinUtil {
     if (i >= 0) i + 1 else -(i + 1)
   }
 
-  /** Column builder: native expression when the session registered it
-    * (graft.Spark.session does), else an identical driver-side UDF
-    * fallback so vanilla sessions still work. */
-  def bucketCol(value: Column, bounds: Array[Double]): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_bucket"))
-      call_function("graft_bucket", value,
-        array(bounds.toIndexedSeq.map(lit(_)): _*))
-    else {
-      val f = udf { (v: Double) => find(bounds, v) }
-      f(value)
-    }
-  }
+  /** Column builder: the native expression, bounds as a literal array. */
+  def bucketCol(value: Column, bounds: Array[Double]): Column =
+    call_function("graft_bucket", value, array(bounds.toIndexedSeq.map(lit(_)): _*))
 }

@@ -51,9 +51,11 @@ object Hash32Util {
 }
 
 /** SparkSessionExtensions hook registering the engine's native expressions
-  * (`graft_hash32`, `graft_dot`) so plans can call them via
+  * (`graft_hash32`, `graft_dot`, …) so plans can call them via
   * `call_function` / SQL, and the planner strategy of the
-  * `ConnectedComponents` plan node. Wired in [[graft.Spark.session]]. */
+  * `ConnectedComponents` plan node. Wired in [[graft.Spark.session]]; the
+  * column helpers (`Text`, `BucketBinUtil.bucketCol`, …) call the native
+  * functions directly, so every session that runs them needs it. */
 object GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.operators.ConnectedComponentsStrategy)

@@ -7,24 +7,21 @@ import org.apache.spark.sql.functions._
   * tokenization, portable 32-bit hashing, shingling, MinHash, SimHash,
   * rolling-hash fingerprints, quality/language scores.
   *
-  * Everything is a composition of built-in Catalyst expressions (split /
-  * transform / aggregate / array_min …) — scalar per row, no UDFs, no
-  * shuffle — so the whole suite stays inside whole-stage codegen and scales
-  * embarrassingly parallel over document partitions. The hash is
+  * Everything is scalar per row, no UDFs, no shuffle: the hot forms call
+  * the native codegen expressions `GraftExtensions` registers (so a
+  * session must be built by `graft.Spark.session`, or carry the extension
+  * itself), and each has a composition of built-in Catalyst expressions
+  * (split / transform / aggregate / array_min …) beside it as the spec
+  * reference — so the whole suite stays inside whole-stage codegen and
+  * scales embarrassingly parallel over document partitions. The hash is
   * `int(md5_hex[0:8])`, chosen because it is bit-identical in any engine
   * (the DuckDB oracle replays it as `CAST('0x'||substr(md5(x),1,8) AS BIGINT)`).
   */
 object Text {
 
-  /** Portable 32-bit hash: first 8 hex digits of md5 as a long. Uses the
-    * native [[Hash32]] expression when the session registered it
-    * (graft.Spark.session does), falling back to the built-in composition
-    * on a vanilla session. Both are bit-identical. */
-  def hash32(c: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_hash32")) call_function("graft_hash32", c)
-    else hash32Builtin(c)
-  }
+  /** Portable 32-bit hash: first 8 hex digits of md5 as a long — the
+    * native [[Hash32]] expression, bit-identical to [[hash32Builtin]]. */
+  def hash32(c: Column): Column = call_function("graft_hash32", c)
 
   /** Built-in-only form (what the DuckDB oracle replays). */
   def hash32Builtin(c: Column): Column =
@@ -62,15 +59,11 @@ object Text {
   def tokenHashes(toks: Column): Column = transform(toks, t => hash32(t))
 
   /** Per-token hashes straight from the raw text: the fused native
-    * [[TokenHashes]] expression (one byte scan, no split array, no HOF)
-    * when the session registered it, else the composed
-    * `tokenHashes(tokens(text))`. Both are bit-identical (fuzz-gated). */
-  def tokenHashesFromText(text: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_token_hashes"))
-      call_function("graft_token_hashes", text)
-    else tokenHashes(tokens(text))
-  }
+    * [[TokenHashes]] expression (one byte scan, no split array, no HOF),
+    * bit-identical to the composed `tokenHashes(tokens(text))`
+    * (fuzz-gated). */
+  def tokenHashesFromText(text: Column): Column =
+    call_function("graft_token_hashes", text)
 
   /** 3-gram shingle hashes combined arithmetically from token hashes:
     * h = (h1*299 + h2*991 + h3) mod p. One md5 per TOKEN (not per 3-word
@@ -101,16 +94,11 @@ object Text {
   def simhash(toks: Column, bits: Int): Column =
     simhashFromHashes(transform(toks, t => hash32(t)), bits)
 
-  /** SimHash from an already-computed token-hash array column. Uses the
-    * native single-pass [[SimHash]] expression when the session registered
-    * it (graft.Spark.session does; the built-in form folds the array once
-    * PER BIT through interpreted aggregates — 16 passes at bits=16). */
-  def simhashFromHashes(hashes: Column, bits: Int): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_simhash"))
-      call_function("graft_simhash", hashes, lit(bits))
-    else simhashBuiltin(hashes, bits)
-  }
+  /** SimHash from an already-computed token-hash array column: the native
+    * single-pass [[SimHash]] expression (the built-in form folds the array
+    * once PER BIT through interpreted aggregates — 16 passes at bits=16). */
+  def simhashFromHashes(hashes: Column, bits: Int): Column =
+    call_function("graft_simhash", hashes, lit(bits))
 
   /** Built-in-only form (what the DuckDB oracle replays, bit-identical). */
   def simhashBuiltin(hashes: Column, bits: Int): Column =
@@ -126,16 +114,11 @@ object Text {
       (acc, h) => (acc * 31 + h) % p)
 
   /** [[fingerprint]] over PRE-HASHED tokens — the native
-    * [[RollingFingerprint]] fold when the session registered it (no
-    * per-element interpreted HOF step), else the composed aggregate.
+    * [[RollingFingerprint]] fold (no per-element interpreted HOF step).
     * Pair with [[tokenHashesFromText]] so a doc's tokens are hashed once
     * and every chunk slice fingerprints the hash slice (x9's shape). */
-  def fingerprintFromHashes(tokHashes: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_fp"))
-      call_function("graft_fp", tokHashes)
-    else aggregate(tokHashes, lit(0L), (acc, h) => (acc * 31 + h) % 1000000007L)
-  }
+  def fingerprintFromHashes(tokHashes: Column): Column =
+    call_function("graft_fp", tokHashes)
 
   /** Sliding 2-gram hashes from per-token hashes — the 2-wide sibling of
     * [[shingleHashes3]], same arithmetic combine, same short-doc guard. */
@@ -150,30 +133,18 @@ object Text {
 
   /** Per-document term frequencies — `array<struct<term, tf>>` over a
     * token array, term-sorted: the native [[TermCounts]] expression (one
-    * codegen hash-map pass per row). REQUIRES GraftExtensions
-    * (`graft.Spark.session`) and THROWS on a vanilla session — unlike the
-    * other wrappers here there is no composed fallback (an equivalent
-    * explode-free form needs an interpreted HOF and is O(tokens²));
-    * callers without the extension use explode+groupBy instead, see
-    * x12's scaladoc. */
-  def termCounts(toks: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    require(active.catalog.functionExists("graft_term_counts"),
-      "graft_term_counts requires GraftExtensions (Spark.session)")
+    * codegen hash-map pass per row). It has no composed twin (an
+    * equivalent explode-free form needs an interpreted HOF and is
+    * O(tokens²)); TextSpec checks it against explode+groupBy. */
+  def termCounts(toks: Column): Column =
     call_function("graft_term_counts", toks)
-  }
 
   /** Repetition counts for x14 — `struct(n_tokens, top_tok, top_big)` over
     * a token-hash array: the fused native [[RepetitionStats]] expression
-    * (one codegen call: sort + run-scan twice on primitive long[]) when
-    * the session registered it, else the composed sort + [[maxRunCount]] +
-    * [[shingleHashes2]] form. Bit-identical (spec-gated). */
-  def repetitionCounts(tokHashes: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_repstats"))
-      call_function("graft_repstats", tokHashes)
-    else repetitionCountsBuiltin(tokHashes)
-  }
+    * (one codegen call: sort + run-scan twice on primitive long[]),
+    * bit-identical to [[repetitionCountsBuiltin]] (spec-gated). */
+  def repetitionCounts(tokHashes: Column): Column =
+    call_function("graft_repstats", tokHashes)
 
   /** Built-in-only form of [[repetitionCounts]]. Callers must pass a
     * MATERIALIZED column (the HOF folds re-evaluate inlined defining
@@ -196,8 +167,8 @@ object Text {
     * gram shuffle. The array is referenced only as the fold's ARGUMENT
     * (evaluated once per row) — an index fold with `element_at(arr, i)`
     * inside the lambda re-evaluates an inlined defining expression per
-    * element. This is the interpreted fallback behind
-    * [[repetitionCounts]]'s native expression; empty arrays fold to 0. */
+    * element. This is the interpreted twin of [[repetitionCounts]]'s
+    * native expression; empty arrays fold to 0. */
   def maxRunCount(sortedArr: Column): Column =
     aggregate(sortedArr,
       struct(lit(null).cast("bigint").as("p"), lit(0L).as("r"), lit(0L).as("m")),
@@ -215,17 +186,12 @@ object Text {
   }
 
   /** [[vocabRatio]] straight from raw text: the fused native [[VocabCount]]
-    * byte-scan numerator when the session registered it (no token array,
-    * no interpreted filter HOF), else the composed form. Bit-identical
-    * (spec-gated); the denominator stays `size(split(text, " "))` in both
-    * paths. */
-  def vocabRatioFromText(text: Column, vocab: Seq[String]): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_vocab_count"))
-      call_function("graft_vocab_count", text, array(vocab.map(lit): _*))
-        .cast("double") / size(split(text, " "))
-    else vocabRatio(tokens(text), vocab)
-  }
+    * byte-scan numerator (no token array, no interpreted filter HOF) over
+    * `size(split(text, " "))`. Bit-identical to the composed form
+    * (spec-gated). */
+  def vocabRatioFromText(text: Column, vocab: Seq[String]): Column =
+    call_function("graft_vocab_count", text, array(vocab.map(lit): _*))
+      .cast("double") / size(split(text, " "))
 
   /** Jaccard similarity of two distinct-element arrays. */
   def jaccard(a: Column, b: Column): Column = {
@@ -234,57 +200,40 @@ object Text {
   }
 
   /** Jaccard over SORTED distinct arrays: the native two-pointer
-    * [[SortedIntersectCount]] merge when the session registered it (zero
-    * allocation per pair, stays in codegen), else the array_intersect
-    * form. Bit-identical on sorted-distinct inputs (spec-gated); build
-    * them with [[sortedShingleSet]]. */
+    * [[SortedIntersectCount]] merge (zero allocation per pair, stays in
+    * codegen). Bit-identical to [[jaccard]] on sorted-distinct inputs
+    * (spec-gated); build them with [[sortedShingleSet]]. */
   def jaccardSorted(a: Column, b: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    val inter =
-      if (active.catalog.functionExists("graft_isect"))
-        call_function("graft_isect", a, b).cast("double")
-      else size(array_intersect(a, b)).cast("double")
+    val inter = call_function("graft_isect", a, b).cast("double")
     inter / (size(a) + size(b) - inter)
   }
 
   /** Sorted distinct 3-shingle hash set — pay the per-doc sort once so
     * every pairwise [[jaccardSorted]] merge is linear. The native fused
-    * [[SortedShingleSet]] expression when the session registered it (one
-    * codegen call: primitive combine + sort + in-place dedup), else the
-    * composed three-pass form. Set-identical (spec-gated). */
-  def sortedShingleSet(tokHashes: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_shingle_set"))
-      call_function("graft_shingle_set", tokHashes)
-    else sortedShingleSetBuiltin(tokHashes)
-  }
+    * [[SortedShingleSet]] expression (one codegen call: primitive combine +
+    * sort + in-place dedup), set-identical to [[sortedShingleSetBuiltin]]
+    * (spec-gated). */
+  def sortedShingleSet(tokHashes: Column): Column =
+    call_function("graft_shingle_set", tokHashes)
 
   /** ORDERED shingle hashes (element i = shingle starting at token i) —
-    * the native [[graft.functions.Shingles3]] when registered, else the
-    * composed interpreted transform. Array-identical (spec-gated). For
-    * positional consumers (x16's duplicate spans); set-semantics
-    * consumers want [[sortedShingleSet]]. */
-  def orderedShingles(tokHashes: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_shingles"))
-      call_function("graft_shingles", tokHashes)
-    else shingleHashes3(tokHashes)
-  }
+    * the native [[graft.functions.Shingles3]], array-identical to the
+    * composed [[shingleHashes3]] (spec-gated). For positional consumers
+    * (x16's duplicate spans); set-semantics consumers want
+    * [[sortedShingleSet]]. */
+  def orderedShingles(tokHashes: Column): Column =
+    call_function("graft_shingles", tokHashes)
 
   /** Built-in-only form of [[sortedShingleSet]]. */
   def sortedShingleSetBuiltin(tokHashes: Column): Column =
     array_sort(array_distinct(shingleHashes3(tokHashes)))
 
   /** MinHash signature (array of K permutation minima, a=2i+1, b=97i) —
-    * the native one-pass [[MinHashSig]] when registered, else the
-    * composed K-sweep fold. Bit-identical (spec-gated); zero shingles →
-    * null array (= per-column null minima of the composed form). */
-  def minhashSig(tokHashes: Column, k: Int): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_minhash_sig"))
-      call_function("graft_minhash_sig", tokHashes, lit(k))
-    else minhashSigBuiltin(tokHashes, k)
-  }
+    * the native one-pass [[MinHashSig]], bit-identical to the composed
+    * K-sweep fold [[minhashSigBuiltin]] (spec-gated); zero shingles → null
+    * array (= per-column null minima of the composed form). */
+  def minhashSig(tokHashes: Column, k: Int): Column =
+    call_function("graft_minhash_sig", tokHashes, lit(k))
 
   /** Built-in-only form of [[minhashSig]]: K interpreted sweeps over the
     * shingle hashes (what the DuckDB oracle replays). */

@@ -64,12 +64,12 @@ import graft.Tables
   * seam.
   *
   * Consumers ENSURE (build-if-absent) so every registered query stays
-  * self-contained for the correctness gate; Bench/RunQuery pre-seed the
-  * x19-x23 tables before timing, so those consumers price exactly the
-  * scan-side cost — the steady state the at-rest design exists for —
-  * while x19/x22 keep the build cost visible in every run. The shingle,
-  * pair-score and ANN tables are not pre-seeded: their first consumer in
-  * a store's life pays the build.
+  * self-contained for the correctness gate; Bench and the perfbench
+  * harness pre-seed the x19-x23 tables before timing, so those consumers
+  * price exactly the scan-side cost — the steady state the at-rest design
+  * exists for — while x19/x22 keep the build cost visible in every run.
+  * The shingle, pair-score and ANN tables are not pre-seeded: their first
+  * consumer in a store's life pays the build.
   */
 object AtRest {
 
@@ -470,8 +470,8 @@ object AtRest {
     st.ann
   }
 
-  /** Pre-seed the tables d7/x20/x21/x23 scan — called by Bench/RunQuery
-    * BEFORE timing so they price the scan-side steady state on
+  /** Pre-seed the tables d7/x20/x21/x23 scan — called by Bench and the
+    * perfbench harness BEFORE timing so they price the scan-side steady state on
     * any box, fresh or not (x19/x22 still price the builds: they overwrite
     * unconditionally). Not part of any timed query. */
   def preSeed(s: SparkSession, d: String): Unit = {
@@ -547,46 +547,37 @@ object AtRest {
       // still runs strictly AFTER tf lands (it reads the WRITTEN tf
       // table — the consistency contract). Each build publishes its own
       // table through the unchanged temp+rename+marker protocol, so
-      // contents are byte-identical to the sequential form.
-      // A/B knob (spark.graft.atrest.parallelBuild=false restores the
-      // sequential form) so the overlap stays measurable per window.
-      if (s.conf.get("spark.graft.atrest.parallelBuild", "true").toBoolean) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val builds = Seq(
-            scala.concurrent.Future(buildSignatures(s, d, st, overwrite = true))(ec),
-            scala.concurrent.Future {
-              buildTf(s, d, st, overwrite = true)
-              buildDf(s, st, overwrite = true)
-            }(ec),
-            scala.concurrent.Future(buildMeta(s, d, st, overwrite = true))(ec))
-          // await EVERY future before propagating any failure (r17 review):
-          // a fail-fast Future.sequence rethrows while sibling builds are
-          // still overwrite-publishing — orphan threads would then race the
-          // caller's NEXT query (e.g. x20's tf ensure inside an orphan
-          // delete→rename window) and their Spark jobs would pollute every
-          // subsequently timed query. With all builds joined, failure
-          // leaves no in-flight work; first error wins.
-          val outcomes = builds.map(f =>
-            scala.util.Try(scala.concurrent.Await.result(
-              f, scala.concurrent.duration.Duration.Inf)))
-          // first error wins; sibling failures ride along as suppressed
-          // so a double-fault run keeps both diagnostics (ADVICE r17)
-          val failures = outcomes.collect { case scala.util.Failure(e) => e }
-          failures.headOption.foreach { first =>
-            failures.drop(1).foreach { e =>
-              if (e ne first) first.addSuppressed(e)
-            }
-            throw first
+      // contents do not depend on the order the builds finish in.
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      try {
+        val builds = Seq(
+          scala.concurrent.Future(buildSignatures(s, d, st, overwrite = true))(ec),
+          scala.concurrent.Future {
+            buildTf(s, d, st, overwrite = true)
+            buildDf(s, st, overwrite = true)
+          }(ec),
+          scala.concurrent.Future(buildMeta(s, d, st, overwrite = true))(ec))
+        // await EVERY future before propagating any failure (r17 review):
+        // a fail-fast Future.sequence rethrows while sibling builds are
+        // still overwrite-publishing — orphan threads would then race the
+        // caller's NEXT query (e.g. x20's tf ensure inside an orphan
+        // delete→rename window) and their Spark jobs would pollute every
+        // subsequently timed query. With all builds joined, failure
+        // leaves no in-flight work; first error wins.
+        val outcomes = builds.map(f =>
+          scala.util.Try(scala.concurrent.Await.result(
+            f, scala.concurrent.duration.Duration.Inf)))
+        // first error wins; sibling failures ride along as suppressed
+        // so a double-fault run keeps both diagnostics (ADVICE r17)
+        val failures = outcomes.collect { case scala.util.Failure(e) => e }
+        failures.headOption.foreach { first =>
+          failures.drop(1).foreach { e =>
+            if (e ne first) first.addSuppressed(e)
           }
-        } finally pool.shutdown()
-      } else {
-        buildSignatures(s, d, st, overwrite = true)
-        buildTf(s, d, st, overwrite = true)
-        buildDf(s, st, overwrite = true)
-        buildMeta(s, d, st, overwrite = true)
-      }
+          throw first
+        }
+      } finally pool.shutdown()
       storeSummary(s, st)
     },
     // ----- X20: TF-IDF top-k from the at-rest tf + df tables + recorded

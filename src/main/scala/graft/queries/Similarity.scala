@@ -83,24 +83,16 @@ object Similarity {
 
   /** Dot product via the native codegen'd [[graft.functions.DotProduct]]
     * expression (one fused loop, no per-element bounds checks or
-    * intermediate arrays), left-associated like the oracle's list_sum.
-    * Falls back to composed builtins when the extension isn't installed. */
-  private[queries] def dot(a: Column, b: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_dot")) call_function("graft_dot", a, b)
-    else when(size(a) === DIM && size(b) === DIM,
-      (1 to DIM).map(i => element_at(a, i) * element_at(b, i)).reduce(_ + _))
-      .otherwise(aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v))
-  }
+    * intermediate arrays), left-associated like the oracle's list_sum. */
+  private[queries] def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** sqrt(Σ a_i²) via the native fused [[graft.functions.DotProduct]] loop
     * (r17): the composed `aggregate(transform(...))` form is an
     * INTERPRETED two-sweep HOF per row (sharp edge #17's class) sitting on
     * the vecs() scan hot path of e1/e2/e3/e4/d6 — every vector pays it at
     * ingest of every query. dot(a,a) is the same ascending-index
-    * left-associated sum (x*x per element), so the value is bit-identical;
-    * the no-extension fallback inside [[dot]] composes the same builtins
-    * as before. */
+    * left-associated sum (x*x per element), so the value is
+    * bit-identical. */
   private def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** embeddings with double vector + precomputed norm. */
@@ -421,15 +413,10 @@ object Similarity {
   }
 
   /** ADC similarity via the native codegen'd [[graft.functions.AdcFold]]
-    * (one fused loop, no per-pair intermediate array — the N×Q hot path);
-    * composed-HOF fallback when the extension isn't installed. Both forms
-    * sum in ascending-m left-associated order, matching the oracle. */
-  private[queries] def adcSim(codes: Column, lut: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_adc")) call_function("graft_adc", codes, lut)
-    else aggregate(zip_with(codes, lut, (c, l) => element_at(l, c + 1)),
-      lit(0.0), (acc, x) => acc + x)
-  }
+    * (one fused loop, no per-pair intermediate array — the N×Q hot path),
+    * summing in ascending-m left-associated order, matching the oracle. */
+  private[queries] def adcSim(codes: Column, lut: Column): Column =
+    call_function("graft_adc", codes, lut)
 
   /** Library form of the ingest-time encode: (vec_id, codes) with `codes`
     * an array<int> of length [[PQ_M]]. A deployment persists this (plus

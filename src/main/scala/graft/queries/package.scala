@@ -16,15 +16,10 @@ package object queries {
     floor(c * 1000000.0 + 0.5) / 1000000.0
 
   /** `round(x, 6)` with Spark's exact BigDecimal-HALF_UP semantics, via
-    * the native [[graft.functions.Round6]] guard-band expression when
-    * registered (no BigDecimal per row off the near-half band) — for the
-    * similarity columns whose oracles replay DuckDB `round(x, 6)`. NOT
+    * the native [[graft.functions.Round6]] guard-band expression (no
+    * BigDecimal per row off the near-half band) — for the similarity
+    * columns whose oracles replay DuckDB `round(x, 6)`. NOT
     * interchangeable with [[r6]] (pure-double floor form): exact decimal
     * halves differ between the two. */
-  private[queries] def roundSim(c: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("graft_round6"))
-      call_function("graft_round6", c)
-    else round(c, 6)
-  }
+  private[queries] def roundSim(c: Column): Column = call_function("graft_round6", c)
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** VCF text reader/writer (SURVEY.md §2.1 S2/S3/S10).
+/** VCF text reader (SURVEY.md §2.1 S2/S3; the S10 writer is [[VcfWriteV2]]).
   *
   * The reference flattens VCF records into a frame via `get_vcf_df`
   * [absent; inferred — call sites ugvc/pipelines/run_no_gt_report.py:307-312,
@@ -358,32 +358,4 @@ object Vcf {
   /** One-call typed read: body parse + header-driven INFO projection. */
   def readTyped(spark: SparkSession, path: String, sampleIndex: Int = 0): DataFrame =
     withInfoFields(read(spark, path, sampleIndex), infoSchema(spark, path))
-
-  /** Write a variant frame back to VCF body text (single sample), sorted by
-    * (chrom, pos) within range partitions — S10 minus the tabix step, which
-    * is an external indexing concern. */
-  def write(df: DataFrame, path: String, header: Seq[String] = defaultHeader): Unit = {
-    val body = df
-      .repartitionByRange(col("chrom"), col("pos"))
-      .sortWithinPartitions("chrom", "pos")
-      .select(concat_ws("\t",
-        col("chrom"), col("pos"), coalesce(col("id"), lit(".")),
-        element_at(col("alleles"), 1),
-        array_join(slice(col("alleles"), 2, 100), ","),
-        coalesce(col("qual").cast("string"), lit(".")),
-        coalesce(col("filter"), lit(".")),
-        coalesce(aggregate(map_entries(col("info")),
-          lit(null).cast("string"),
-          (acc, e) => when(acc.isNull, concat(e.getField("key"), lit("="), e.getField("value")))
-            .otherwise(concat(acc, lit(";"), e.getField("key"), lit("="), e.getField("value")))),
-          lit("."))).as("value"))
-    val spark = df.sparkSession
-    import spark.implicits._
-    header.toDF("value").unionByName(body).coalesce(1)
-      .write.mode("overwrite").text(path)
-  }
-
-  val defaultHeader: Seq[String] = Seq(
-    "##fileformat=VCFv4.2",
-    "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO")
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * `.vcf.gz` when `compression=bgzf`), each starting with the VCF header —
   * exactly the multi-file layout the read side consumes as a directory
   * load, so write→read round-trips without a merge step and a 1000-task
-  * write never funnels through one writer (the legacy [[Vcf.write]]
-  * `coalesce(1)` stays for the single-file convenience case).
+  * write never funnels through one writer (a single file is
+  * `df.coalesce(1).write.format("vcf")`).
   *
   * Record formatting inverts [[VcfLineParser.parse]] field-for-field:
   * alleles(0) → REF, the rest → ALT, `.` for null id/qual/filter, INFO

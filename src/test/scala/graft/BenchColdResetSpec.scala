@@ -1,11 +1,11 @@
 package graft
 
 /** `Bench.coldReset` is one `spark.catalog.clearCache()`: that is enough to
-  * make a heal rerun COLD because no operator or registered query leaves a
-  * frame in Spark's CacheManager. The round-12 defect was `Bench.heal`
-  * re-running a flagged query in the same warm session and publishing
-  * `min(cold, warm)`: w3's `OverlapSuppress.suppressSegmented` persisted
-  * its input and never unpersisted it, so the rerun scanned memory instead
+  * make a standalone probe COLD because no operator or registered query
+  * leaves a frame in Spark's CacheManager. The round-12 defect was a warm
+  * rerun publishing a cache projection: w3's
+  * `OverlapSuppress.suppressSegmented` persisted its input and never
+  * unpersisted it, so a rerun in the same session scanned memory instead
   * of parquet (0.0067 s at the 100x replica for a 30 s query). It now
   * materializes through a local checkpoint, which holds no CacheManager
   * entry. CacheGuardSpec holds the registered queries to the same rule.

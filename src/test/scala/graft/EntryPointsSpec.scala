@@ -5,12 +5,12 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The program has a fixed set of runnable entry points; a one-off
-  * measurement goes through `graft.RunQuery` or the perfbench harness,
-  * not a new `main` in `src/main`. */
+  * measurement goes through the perfbench harness (`graftbench.Main
+  * --workload queries`), not a new `main` in `src/main`. */
 class EntryPointsSpec extends AnyFunSuite {
 
   private val Expected =
-    Set("graft.Bench", "graft.Verify", "graft.RunQuery", "graft.Plans", "ClusterSmoke")
+    Set("graft.Bench", "graft.Verify", "graft.Plans", "ClusterSmoke")
 
   private val Modifiers =
     """(?m)^[ \t]*(?:(?:private|protected|final|case|override)(?:\[\w+\])?\s+)*"""
@@ -38,7 +38,7 @@ class EntryPointsSpec extends AnyFunSuite {
     }.toSet
   }
 
-  test("src/main declares exactly the five entry points") {
+  test("src/main declares exactly the four entry points") {
     val found = entryPoints(Paths.get("src/main/scala"))
     assert(found == Expected,
       s"unexpected: ${found -- Expected}; missing: ${Expected -- found}")

@@ -9,11 +9,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   implicit def sparkImplicit: SparkSession = spark
 
-  // materialize the session before the first test: helpers like
-  // Text.hash32 resolve SparkSession.active at Column-BUILD time, so a
-  // suite whose first expression builds a column before touching `spark`
-  // would otherwise fail when run standalone (latent suite-order
-  // dependency — every suite must pass in isolation)
+  // materialize the session before the first test, so a suite that
+  // reaches SparkSession.active before touching `spark` still finds the
+  // shared session when run standalone (every suite must pass in
+  // isolation)
   override protected def beforeAll(): Unit = { spark; super.beforeAll() }
 }
 

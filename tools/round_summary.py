@@ -29,12 +29,9 @@ _i = _t.index('"queries":{') + len('"queries":')
 _bq, _ = json.JSONDecoder().raw_decode(_t, _i)
 base = {"queries": _bq}
 
-print(f"LOCAL        total {loc['value']:.1f} n {len(loc['queries'])} "
-      f"errors {loc.get('errors')} load_before {loc.get('load_before')}")
-print(f"UNIFORM100   total {uni['value']:.1f} n {len(uni['queries'])} "
-      f"errors {uni.get('errors')} heal {uni.get('heal_floor')}")
-print(f"SKEW100      total {skw['value']:.1f} n {len(skw['queries'])} "
-      f"errors {skw.get('errors')} heal {skw.get('heal_floor')}")
+for label, art in (("LOCAL", loc), ("UNIFORM100", uni), ("SKEW100", skw)):
+    print(f"{label:12s} total {art['value']:.1f} n {len(art['queries'])} "
+          f"errors {art.get('errors')}")
 print(f"skew/uniform = {skw['value']/uni['value']:.3f}")
 
 bq = base["queries"]
