@@ -11,9 +11,9 @@ import scala.collection.immutable.ListMap
   * `"errors"` map (control characters JSON-escaped) and nowhere else — not
   * in the timing map, not in the total, not in `n_queries`.
   *
-  * The stdout line obeys the driver's tail-capture budget
-  * ([[MaxStdoutLine]]); the complete per-query record goes to
-  * BENCH_LOCAL_<sf>_c<cores>.json (or SPARK_GRAFT_BENCH_OUT). Timing a few
+  * The stdout line fits a ~2,000-char tail capture ([[MaxStdoutLine]]);
+  * the complete per-query record goes to BENCH_LOCAL_<sf>_c<cores>.json
+  * (or SPARK_GRAFT_BENCH_OUT). Timing a few
   * queries, or splitting a query into construction, jobs and CPU, is
   * perfbench's `graftbench.Main --workload queries` (perfbench/BENCH.md).
   */
@@ -46,10 +46,9 @@ object Bench {
   /** Max stdout-line length. The driver keeps only a ~2,000-char tail of
     * stdout (an sbt "[success] ..." line eats ~80 of it); every BENCH_rNN
     * artifact from r10 to r17 had `parsed: null` because the full one-line
-    * JSON grew to ~6 KB and reached the driver front-truncated. 108
-    * per-query entries are >= ~2.5 KB even rounded and bare (sum of the
-    * query-name lengths alone is 1,666 chars), so the per-query map CANNOT
-    * fit: the stdout line carries the summary (metric/value/n_queries/
+    * JSON grew to ~6 KB and was kept front-truncated. 108 per-query
+    * entries are >= ~2.5 KB even rounded and bare (sum of the query-name
+    * lengths alone is 1,666 chars), so the per-query map CANNOT fit: the stdout line carries the summary (metric/value/n_queries/
     * n_errors/errors/cores/cpus_env/sf) plus an "artifact" path to the
     * complete per-query file, and inlines the queries map only when the
     * whole line still fits. BenchHealSpec pins the emitted length against

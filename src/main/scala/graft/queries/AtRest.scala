@@ -558,7 +558,7 @@ object AtRest {
             buildDf(s, st, overwrite = true)
           }(ec),
           scala.concurrent.Future(buildMeta(s, d, st, overwrite = true))(ec))
-        // await EVERY future before propagating any failure (r17 review):
+        // await EVERY future before propagating any failure:
         // a fail-fast Future.sequence rethrows while sibling builds are
         // still overwrite-publishing — orphan threads would then race the
         // caller's NEXT query (e.g. x20's tf ensure inside an orphan
@@ -569,7 +569,7 @@ object AtRest {
           scala.util.Try(scala.concurrent.Await.result(
             f, scala.concurrent.duration.Duration.Inf)))
         // first error wins; sibling failures ride along as suppressed
-        // so a double-fault run keeps both diagnostics (ADVICE r17)
+        // so a double-fault run keeps both diagnostics
         val failures = outcomes.collect { case scala.util.Failure(e) => e }
         failures.headOption.foreach { first =>
           failures.drop(1).foreach { e =>
