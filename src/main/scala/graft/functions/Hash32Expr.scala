@@ -154,14 +154,6 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
         VocabCount(exprs.head, scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
       }))
     e.injectFunction((
-      new FunctionIdentifier("graft_term_counts"),
-      new ExpressionInfo(classOf[TermCounts].getName, "graft_term_counts"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1,
-          s"graft_term_counts expects 1 argument, got ${exprs.length}")
-        TermCounts(exprs.head)
-      }))
-    e.injectFunction((
       new FunctionIdentifier("graft_shingle_set"),
       new ExpressionInfo(classOf[SortedShingleSet].getName, "graft_shingle_set"),
       (exprs: Seq[Expression]) => {

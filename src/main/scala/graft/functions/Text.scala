@@ -131,14 +131,6 @@ object Text {
                 element_at(tokHashes, i + 1)) % MinhashP))
         .otherwise(array().cast("array<bigint>")))
 
-  /** Per-document term frequencies — `array<struct<term, tf>>` over a
-    * token array, term-sorted: the native [[TermCounts]] expression (one
-    * codegen hash-map pass per row). It has no composed twin (an
-    * equivalent explode-free form needs an interpreted HOF and is
-    * O(tokens²)); TextSpec checks it against explode+groupBy. */
-  def termCounts(toks: Column): Column =
-    call_function("graft_term_counts", toks)
-
   /** Repetition counts for x14 — `struct(n_tokens, top_tok, top_big)` over
     * a token-hash array: the fused native [[RepetitionStats]] expression
     * (one codegen call: sort + run-scan twice on primitive long[]),

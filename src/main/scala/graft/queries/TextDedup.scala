@@ -820,10 +820,7 @@ object TextDedup {
       // [[termFrequenciesToParquet]] + [[tfidfTopKFromParquet]] are that
       // form; this query stays self-contained on the raw table.
       // Round-13 probe note (X12Probe): the dominant stage is the 28M-row
-      // CACHE BUILD (~12 s of ~17 at 100x), not the groupBy shuffle — the
-      // shuffle-free native graft_term_counts alternative measured
-      // equal-or-WORSE locally (boxing cost real, NVMe shuffle ~free) and
-      // stays a library expression for network-shuffle clusters; the
+      // CACHE BUILD (~12 s of ~17 at 100x), not the groupBy shuffle; the
       // no-persist recompute forms measured 25+ s. This shape stands on
       // evidence.
       val tf = termFrequencies(docs).localCheckpoint(

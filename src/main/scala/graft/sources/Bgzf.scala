@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.util.SerializableConfiguration
 import java.io.OutputStream
 import java.util.zip.{CRC32, Deflater, Inflater}
 
@@ -250,6 +251,115 @@ object Bgzf {
     }
   }
 
+  /** The lines of tabix chunks (disjoint virtual-offset ranges in file
+    * order, as [[Tabix.regionChunks]] gives them), read by the caller:
+    * per chunk one seek to its block, the in-block offset skipped, then
+    * every line whose first byte's virtual offset is below the chunk end.
+    * A chunk must start a line, the byte before it a '\n'; otherwise the
+    * index does not match the file, and the read fails naming the file
+    * and offset rather than parse a line fragment. */
+  private[sources] def chunkLines(conf: Configuration, path: String,
+                                  chunks: Seq[(Long, Long)]): Iterator[String] with AutoCloseable = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val fileLen = fs.getFileStatus(p).getLen
+    val in = fs.open(p)
+
+    new Iterator[String] with AutoCloseable {
+      private val todo = chunks.iterator
+      private var end = -1L // the current chunk's end; -1 between chunks
+      private var curBlockStart = -1L
+      private var nextBlockStart = 0L
+      private var buf: Array[Byte] = Array.emptyByteArray
+      private var bufPos = 0
+      private var pending: String = _
+      private var closed = false
+
+      private def load(at: Long): Unit = {
+        if (in.getPos != at) in.seek(at)
+        val raw = readMember(in, at, fileLen, path)
+        curBlockStart = at
+        nextBlockStart = at + raw.length
+        buf = inflate(raw, at, path)
+        bufPos = 0
+      }
+
+      /** Moves past consumed and empty blocks; false at EOF. */
+      private def haveData: Boolean = {
+        while (bufPos >= buf.length && nextBlockStart < fileLen) load(nextBlockStart)
+        bufPos < buf.length
+      }
+
+      /** The last inflated byte before block `blk` (-1 when only empty
+        * members precede it within MaxBlock): blocks are walked forward
+        * from the first one found in the MaxBlock before `blk`, which the
+        * previous block must start in. -2 when the walk misses `blk`. */
+      private def byteBefore(blk: Long): Int = {
+        var b = findBlockStart(in, math.max(0L, blk - MaxBlock), fileLen)
+        var last = -1
+        while (b < blk) {
+          in.seek(b)
+          val raw = readMember(in, b, fileLen, path)
+          val out = inflate(raw, b, path)
+          if (out.nonEmpty) last = out.last & 0xff
+          b += raw.length
+        }
+        if (b == blk) last else -2
+      }
+
+      private def startChunk(u: Long, v: Long): Unit = {
+        val blk = u >>> 16
+        val off = (u & 0xffff).toInt
+        val atLineStart = off > 0 || blk == 0L || {
+          val b = byteBefore(blk); b == '\n' || b == -1
+        }
+        if (blk != curBlockStart) load(blk)
+        require(atLineStart && off <= buf.length && (off == 0 || buf(off - 1) == '\n'),
+          s"tabix chunk at virtual offset $u of $path does not start a line: " +
+            "the index does not match the file")
+        bufPos = off
+        end = v
+      }
+
+      private def readLine(): String = {
+        val sb = new java.lang.StringBuilder(96)
+        var found = false
+        while (!found && haveData) {
+          var i = bufPos
+          while (i < buf.length && buf(i) != '\n') i += 1
+          sb.append(new String(buf, bufPos, i - bufPos, "UTF-8"))
+          found = i < buf.length
+          bufPos = if (found) i + 1 else buf.length
+        }
+        sb.toString
+      }
+
+      private def advance(): String = {
+        while (end >= 0 || todo.hasNext) {
+          if (end < 0) { val (u, v) = todo.next(); startChunk(u, v) }
+          if (haveData && ((curBlockStart << 16) | bufPos) < end) return readLine()
+          end = -1L
+        }
+        null
+      }
+
+      override def hasNext: Boolean = {
+        if (pending == null && !closed) {
+          pending = advance()
+          if (pending == null) close()
+        }
+        pending != null
+      }
+
+      override def next(): String = {
+        if (!hasNext) throw new NoSuchElementException
+        val r = pending; pending = null; r
+      }
+
+      override def close(): Unit = if (!closed) { closed = true; in.close() }
+    }
+  }
+
   /** Sequential (blockStart, inflated bytes) iterator over a whole BGZF
     * file — the builder-side walk for tabix indexing (one streaming pass,
     * no ownership rule needed). */
@@ -368,23 +478,12 @@ object Bgzf {
     val nSplits = math.max(1L, (fileLen + splitBytes - 1) / splitBytes).toInt
     val ranges = (0 until nSplits)
       .map(i => (i.toLong * splitBytes, math.min((i + 1).toLong * splitBytes, fileLen)))
-    // Configuration is not serializable: ship the entries and rebuild per
-    // task (fs.* settings — s3a credential providers etc. — must reach the
-    // executor-side FileSystem)
-    val confEntries = {
-      val it = conf.iterator()
-      val b = Seq.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
-    val bConf = spark.sparkContext.broadcast(confEntries)
+    // fs.* settings (s3a credential providers etc.) must reach the
+    // executor-side FileSystem: one broadcast conf for the whole read
+    val bConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     spark.sparkContext
       .parallelize(ranges, nSplits)
-      .mapPartitions { it =>
-        val c = new Configuration(false)
-        bConf.value.foreach { case (k, v) => c.set(k, v) }
-        it.flatMap { case (s, e) => splitLines(c, path, s, e) }
-      }
+      .mapPartitions(_.flatMap { case (s, e) => splitLines(bConf.value.value, path, s, e) })
       .toDS()
   }
 

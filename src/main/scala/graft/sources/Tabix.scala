@@ -15,9 +15,10 @@ import org.apache.spark.sql.sources._
   * a `.gidx` pre-pass is run. This module reads the public tabix binary
   * format (SAMtools/htslib spec: BGZF-framed, little-endian, R-tree bins
   * over 16 kb linear windows, chunks as BGZF virtual offsets) and maps a
-  * pushed (chrom,pos) predicate to the candidate compressed byte ranges,
-  * which [[VcfScan.planInputPartitions]] intersects with its splits —
-  * exactly the `.gidx` prune, driven by the interop artifact instead.
+  * pushed (chrom,pos) predicate to its merged chunks ([[regionChunks]]).
+  * Under [[VcfLocalScan.Cap]] the scan reads exactly those chunks on the
+  * driver ([[Bgzf.chunkLines]]); over it, [[VcfScan]] keeps only the
+  * splits they touch — the `.gidx` prune, driven by the interop artifact.
   *
   * It also BUILDS `.tbi` files (the write path's `option("index","tbi")`
   * and [[Tabix.buildForVcf]]) so graft-written bgzf VCFs carry the same
@@ -311,23 +312,20 @@ object Tabix {
     parsed
   }
 
-  /** Prune `splits` (compressed byte ranges of a bgzf VCF) using the
-    * `.tbi` beside `path`, honoring the pushed (chrom,pos) conjunction.
-    * None = no usable index or no usable constraint (caller keeps all
-    * splits); Some(kept) = sound subset.
+  /** The pushed (chrom,pos) conjunction's chunks in the fresh `.tbi` (or
+    * else `.csi`) beside the bgzf file `path`: [[chunksFor]]'s chunks,
+    * sorted and merged where they overlap or share a BGZF block, so the
+    * result is disjoint virtual-offset ranges in file order. None = no
+    * usable index or no usable constraint (the caller reads everything);
+    * Some(empty) = provably no line.
     *
-    * Ownership alignment: [[Bgzf.splitLines]] assigns a line to the split
-    * owning the block of the line's PRECEDING newline, which can sit one
-    * block before the line's own first byte — candidate ranges therefore
-    * extend one MaxBlock (64 KiB) backwards, over-keeping at most one
-    * split per chunk, never dropping an owner.
-    *
-    * Staleness: a `.tbi` older than the data file is ignored (the tabix
+    * Staleness: a sidecar older than the data file is ignored (the tabix
     * CLI's own "index is older than file" condition). A fresh sidecar is
     * parsed once per (path, length, mtime) and then served from memory. */
-  def pruneSplits(conf: Configuration, path: String, dataMtime: Long,
-                  pushed: Array[Filter],
-                  splits: Seq[VcfPartition]): Option[Seq[VcfPartition]] = {
+  def regionChunks(conf: Configuration, path: String, dataMtime: Long,
+                   pushed: Array[Filter]): Option[Seq[(Long, Long)]] = {
+    val (chroms, lo, hi) = regionOf(pushed)
+    if (chroms.isEmpty && lo <= 1L && hi == Long.MaxValue) return None // unbounded
     val fs = new Path(path).getFileSystem(conf)
     // .tbi first (what tabix/pysam write), then .csi (bcftools' default);
     // either must be at least as new as the data file
@@ -339,19 +337,41 @@ object Tabix {
       case Some(i) => i
       case None => return None
     }
-    val (chroms, lo, hi) = regionOf(pushed)
-    if (chroms.isEmpty && lo <= 1L && hi == Long.MaxValue) return None // unbounded
     if (hi < lo) return Some(Seq.empty) // contradictory conjunction
     // 1-based [lo, hi] → 0-based half-open [lo-1, hi); cap at the index's
     // addressable range (nothing beyond it can be indexed either)
     val beg0 = math.max(0L, lo - 1)
     val end0 = if (hi == Long.MaxValue) idx.maxPos else math.min(idx.maxPos, hi)
     val names = chroms.map(_.toSeq).getOrElse(idx.names)
-    val ranges = names.flatMap(chunksFor(idx, _, beg0, end0)).map { case (u, v) =>
-      (math.max(0L, (u >> 16) - 65536L), (v >> 16) + 1L)
-    }
-    Some(splits.filter(sp => ranges.exists(r => r._1 < sp.end && sp.start < r._2)))
+    val sorted = names.flatMap(chunksFor(idx, _, beg0, end0)).sortBy(_._1)
+    Some(sorted.foldLeft(List.empty[(Long, Long)]) {
+      case ((u, v) :: rest, (u2, v2)) if u2 <= v || (u2 >>> 16) == (v >>> 16) =>
+        (u, math.max(v, v2)) :: rest
+      case (acc, c) => c :: acc
+    }.reverse)
   }
+
+  /** The `splits` (compressed byte ranges of a bgzf VCF) that may own a
+    * line of `chunks`.
+    *
+    * Ownership alignment: [[Bgzf.splitLines]] assigns a line to the split
+    * owning the block of the line's PRECEDING newline, which can sit one
+    * block before the line's own first byte — candidate ranges therefore
+    * extend one MaxBlock (64 KiB) backwards, over-keeping at most one
+    * split per chunk, never dropping an owner. */
+  def splitsFor(chunks: Seq[(Long, Long)], splits: Seq[VcfPartition]): Seq[VcfPartition] = {
+    val ranges = chunks.map { case (u, v) =>
+      (math.max(0L, (u >>> 16) - 65536L), (v >>> 16) + 1L)
+    }
+    splits.filter(sp => ranges.exists(r => r._1 < sp.end && sp.start < r._2))
+  }
+
+  /** Prune `splits` through [[regionChunks]]: None = no usable index or
+    * constraint (caller keeps all splits); Some(kept) = sound subset. */
+  def pruneSplits(conf: Configuration, path: String, dataMtime: Long,
+                  pushed: Array[Filter],
+                  splits: Seq[VcfPartition]): Option[Seq[VcfPartition]] =
+    regionChunks(conf, path, dataMtime, pushed).map(splitsFor(_, splits))
 
   // ---------------------------------------------------------------------
   // Building

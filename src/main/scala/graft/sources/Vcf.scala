@@ -107,12 +107,27 @@ object Vcf {
   // entry at a time, never clearing wholesale (a hot directory must not
   // re-plan every header after crossing the bound)
   private val HeaderCacheMax = 100000
-  private val headerMetaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(String, Long, Long), HeaderMeta](1024, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long, Long), HeaderMeta]): Boolean =
-        size() > HeaderCacheMax
-    })
+  private def statusCache[V]: java.util.Map[(String, Long, Long), V] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[(String, Long, Long), V](1024, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(String, Long, Long), V]): Boolean =
+          size() > HeaderCacheMax
+      })
+  private val headerMetaCache = statusCache[HeaderMeta]
+  private val bgzfCache = statusCache[java.lang.Boolean]
+
+  /** [[Bgzf.isBgzf]] of `s`, cached by (path, len, mtime) like the header
+    * metadata, so planning does not reopen every file; a file that cannot
+    * be sniffed reads as not BGZF, and is sniffed again next time. */
+  def isBgzfCached(conf: org.apache.hadoop.conf.Configuration,
+                   s: org.apache.hadoop.fs.FileStatus): Boolean = {
+    val key = (s.getPath.toString, s.getLen, s.getModificationTime)
+    val hit = bgzfCache.get(key)
+    if (hit != null) hit
+    else try { val b = Bgzf.isBgzf(conf, key._1); bgzfCache.put(key, b); b }
+    catch { case _: Throwable => false }
+  }
 
   def headerMetaCached(conf: org.apache.hadoop.conf.Configuration,
                        s: org.apache.hadoop.fs.FileStatus): HeaderMeta = {

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources._
+import org.apache.spark.util.SerializableConfiguration
 
 /** Sidecar region index for the VCF DataSourceV2 — split pruning for
   * region queries, the engine's analog of the reference's tabix-indexed
@@ -65,17 +66,11 @@ object VcfIndex {
         (0 until n).map(i => (i.toLong * granularityBytes,
           math.min((i + 1).toLong * granularityBytes, len)))
       }
-    val entries = {
-      val it = conf.iterator()
-      val b = Seq.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
+    val bConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
     val stats = spark.sparkContext
       .parallelize(ranges, math.max(1, ranges.size))
       .map { case (s0, e0) =>
-        val c = new Configuration(false)
-        entries.foreach { case (k, v) => c.set(k, v) }
+        val c = bConf.value.value
         val lines = kind match {
           case VcfPartition.Bgzf => Bgzf.splitLines(c, path, s0, e0)
           case VcfPartition.Gzip => VcfLineParser.gzipLines(c, path)

@@ -2,9 +2,11 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSourceV2 write path: `df.write.format("vcf").mode("overwrite")
   * .save(dir)` — the sink symmetry for [[VcfDataSource]] (the reference
@@ -76,17 +78,13 @@ class VcfBatchWrite(path: String, schema: StructType,
   private def stagingDir = new Path(path, s"_staging-$queryId")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val conf = org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
+    val spark = org.apache.spark.sql.SparkSession.active
+    val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(path).getFileSystem(conf)
     fs.mkdirs(stagingDir)
-    val entries = {
-      val it = conf.iterator()
-      val b = Seq.newBuilder[(String, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue }
-      b.result()
-    }
-    VcfWriterFactory(entries, stagingDir.toString, schema, bgzf, blockBytes,
-      sampleNames, querySalt, indexKinds)
+    // one broadcast conf per write, not a copy inside every task
+    VcfWriterFactory(spark.sparkContext.broadcast(new SerializableConfiguration(conf)),
+      stagingDir.toString, schema, bgzf, blockBytes, sampleNames, querySalt, indexKinds)
   }
 
   // task IDs restart at 0 per application, so `part-<pid>-<taskId>` alone
@@ -146,7 +144,7 @@ class VcfBatchWrite(path: String, schema: StructType,
   }
 }
 
-case class VcfWriterFactory(confEntries: Seq[(String, String)],
+case class VcfWriterFactory(hadoopConf: Broadcast[SerializableConfiguration],
                             stagingDir: String, schema: StructType,
                             bgzf: Boolean, blockBytes: Int,
                             sampleNames: Option[Seq[String]],
@@ -154,8 +152,7 @@ case class VcfWriterFactory(confEntries: Seq[(String, String)],
                             indexKinds: Set[String] = Set.empty)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val conf = new Configuration(false)
-    confEntries.foreach { case (k, v) => conf.set(k, v) }
+    val conf = hadoopConf.value.value
     val ext = if (bgzf) ".vcf.gz" else ".vcf"
     val name = f"part-$partitionId%05d-$taskId-$salt$ext"
     new VcfDataWriter(conf, stagingDir, name, schema, bgzf, blockBytes,

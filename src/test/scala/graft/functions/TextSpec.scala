@@ -296,30 +296,4 @@ class TextSpec extends SparkSpec {
     val f2 = eval1(Text.fingerprint(Text.tokens(lit("c b a"))))
     assert(f1 != f2)
   }
-
-  test("native TermCounts == explode+groupBy term frequencies (fuzz incl. null/empty)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(0xc0de)
-    val docs = ((0L until 200L).map { i =>
-      val n = rnd.nextInt(40) // includes 0-token docs
-      (i, (0 until n).map(_ => s"t${rnd.nextInt(12)}").mkString(" "))
-    } :+ (500L, null.asInstanceOf[String]) // null text -> null counts
-    ).toDF("doc_id", "text")
-    val native = docs
-      .withColumn("_tc", Text.termCounts(Text.tokens(col("text"))))
-      .select(col("doc_id"), explode_outer(col("_tc")).as("e"))
-      .filter(col("e").isNotNull)
-      .select(col("doc_id"), col("e.term").as("term"), col("e.tf").as("tf"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val composed = docs
-      .select(col("doc_id"), explode(Text.tokens(col("text"))).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    assert(native == composed && composed.nonEmpty)
-    // output arrays are term-sorted (deterministic intra-array order)
-    val arr = docs.filter(col("doc_id") === 0L)
-      .select(Text.termCounts(Text.tokens(col("text")))).head().getSeq[org.apache.spark.sql.Row](0)
-    val terms = arr.map(_.getString(0))
-    assert(terms == terms.sorted)
-  }
 }

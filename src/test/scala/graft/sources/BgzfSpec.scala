@@ -117,6 +117,38 @@ class BgzfSpec extends SparkSpec {
     assert(!plan.contains("FileScan"), "bgzip file must take the BGZF reader")
   }
 
+  test("chunkLines reads exactly each chunk's lines at block boundaries") {
+    def read(path: String, cs: (Long, Long)*): Seq[String] = {
+      val it = Bgzf.chunkLines(conf, path, cs)
+      try it.toList finally it.close()
+    }
+    // 127 characters + '\n' per line: every 512-byte block starts a line
+    val aligned = (0 until 40).map(i => f"a$i%05d" + "y" * 121)
+    val ap = writeFile(aligned, blockBytes = 512)
+    val ao = Bgzf.splitLinesWithOffsets(conf, ap).toIndexedSeq
+    def achunk(a: Int, b: Int) = (ao(a)._2, ao(b)._3)
+    assert(ao(8)._2 == (ao(8)._2 >>> 16 << 16) && ao(8)._2 > 0, "line 8 starts block 2")
+    // in-block offset 0 of a later block
+    assert(read(ap, achunk(8, 9)) == aligned.slice(8, 10))
+    // a chunk ending at its block's end
+    assert(read(ap, achunk(5, 7)) == aligned.slice(5, 8))
+    // a block start is checked against the previous block's last byte
+    val bp = writeFile(lines, blockBytes = 512)
+    val bo = Bgzf.splitLinesWithOffsets(conf, bp).toIndexedSeq
+    val midLine = bo.indexWhere(o => (o._2 >>> 16) != (o._3 >>> 16) && (o._3 & 0xffff) > 0)
+    val blk = bo(midLine)._3 >>> 16 << 16
+    val e = intercept[IllegalArgumentException](read(bp, (blk, bo(midLine + 1)._3)))
+    assert(e.getMessage.contains("does not start a line") && e.getMessage.contains(bp))
+    // a chunk spanning blocks, with lines straddling them
+    def bchunk(a: Int, b: Int) = (bo(a)._2, bo(b)._3)
+    assert(bo.slice(10, 61).map(_._2 >>> 16).distinct.size > 3)
+    assert(read(bp, bchunk(10, 60)) == lines.slice(10, 61))
+    // two chunks in one block, and a third one later
+    val i = (0 until 100).find(k => (bo(k + 3)._2 >>> 16) == (bo(k)._2 >>> 16)).get
+    assert(read(bp, bchunk(i, i), bchunk(i + 2, i + 3), bchunk(900, 901)) ==
+      Seq(lines(i), lines(i + 2), lines(i + 3), lines(900), lines(901)))
+  }
+
   test("isBgzf sniffs bgzip files and rejects plain text") {
     val path = writeFile(lines.take(10), blockBytes = 512)
     assert(Bgzf.isBgzf(conf, path))

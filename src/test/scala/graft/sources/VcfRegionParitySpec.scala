@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 
 /** Region lookups through the vcf scan on a multi-part BGZF + `.tbi`
-  * output (region predicates decided by the scan, splits pruned through
-  * the cached tabix index) against the expression path, plus the two
+  * output (region predicates decided by the scan; with `split_bytes`
+  * 1024, splits pruned through the cached tabix index; by default, the
+  * chunks read on the driver) against the expression path, plus the two
   * planning caches' freshness: the index cache after an overwrite, the
   * header cache under a header mismatch. */
 class VcfRegionParitySpec extends SparkSpec {
@@ -94,13 +95,22 @@ class VcfRegionParitySpec extends SparkSpec {
       assert(expr.count() == 3600L && expr.filter(col("pos").isNull).count() == 3L * 29)
       val rnd = new scala.util.Random(17)
       var nonEmpty = 0
+      var onDriver = 0
       (1 to 200).foreach { i =>
         val c = randomRegion(rnd)
+        val want = rows(expr.filter(c))
         val got = rows(v2(out).filter(c))
-        assert(got == rows(expr.filter(c)), s"region $i: $c")
+        assert(got == want, s"region $i: $c")
         if (got.nonEmpty) nonEmpty += 1
+        // default split_bytes: under-cap regions take the driver-local arm
+        val local = spark.read.format("vcf").load(out).filter(c)
+        assert(rows(local) == want, s"region $i, default split_bytes: $c")
+        if (local.queryExecution.executedPlan.collect {
+          case l: org.apache.spark.sql.execution.LocalTableScanExec => l
+        }.nonEmpty) onDriver += 1
       }
       assert(nonEmpty > 50, s"only $nonEmpty of 200 regions matched rows")
+      assert(onDriver > 150, s"only $onDriver of 200 regions were read on the driver")
     } finally expr.unpersist()
   }
 
