@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.util.SerializableConfiguration
 import java.io.OutputStream
 import java.util.zip.{CRC32, Deflater, Inflater}
 
@@ -145,8 +143,8 @@ object Bgzf {
     out
   }
 
-  /** One split's lines under the single-owner rule above. Exposed for
-    * direct boundary testing; query code goes through [[readLines]]. */
+  /** One split's lines under the single-owner rule above: the VCF
+    * scan's BGZF partition reader. */
   private[sources] def splitLines(conf: Configuration, path: String,
                                   start: Long, end: Long): Iterator[String] with AutoCloseable = {
     val p = new Path(path)
@@ -463,28 +461,6 @@ object Bgzf {
       }
       override def close(): Unit = if (!closed) { closed = true; blk.close() }
     }
-  }
-
-  /** All lines of a BGZF text file as a Dataset with one task per
-    * `splitBytes` of compressed data (each task scans to its first block
-    * and owns the newlines in its blocks). Order across splits follows
-    * split order. */
-  def readLines(spark: SparkSession, path: String,
-                splitBytes: Long = 16L * 1024 * 1024): Dataset[String] = {
-    import spark.implicits._
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new Path(path)
-    val fileLen = p.getFileSystem(conf).getFileStatus(p).getLen
-    val nSplits = math.max(1L, (fileLen + splitBytes - 1) / splitBytes).toInt
-    val ranges = (0 until nSplits)
-      .map(i => (i.toLong * splitBytes, math.min((i + 1).toLong * splitBytes, fileLen)))
-    // fs.* settings (s3a credential providers etc.) must reach the
-    // executor-side FileSystem: one broadcast conf for the whole read
-    val bConf = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
-    spark.sparkContext
-      .parallelize(ranges, nSplits)
-      .mapPartitions(_.flatMap { case (s, e) => splitLines(bConf.value.value, path, s, e) })
-      .toDS()
   }
 
   /** Write lines as chained BGZF members of at most `blockBytes`

@@ -9,16 +9,16 @@ import org.apache.spark.sql.sources._
   * The reference tabix-indexes every VCF it writes (pysam.tabix_index at
   * ugvc/joint/compress_gvcf.py:214, ugvc/pipelines/vcfbed/
   * calibrate_bridging_snvs.py:130) and expects a `.tbi` beside every input
-  * it region-queries (ugvc/scripts/create_somatic_gt_file.py:103-106) — so
-  * on FOREIGN data a `.tbi` is what's actually sitting next to the file,
-  * and ignoring it means a one-locus query decompresses every split until
-  * a `.gidx` pre-pass is run. This module reads the public tabix binary
+  * it region-queries (ugvc/scripts/create_somatic_gt_file.py:103-106).
+  * A fresh `.tbi`/`.csi` is the VCF source's only region index: without
+  * one a region query decompresses every split, and only a bgzipped file
+  * can carry one, as in htslib. This module reads the public tabix binary
   * format (SAMtools/htslib spec: BGZF-framed, little-endian, R-tree bins
   * over 16 kb linear windows, chunks as BGZF virtual offsets) and maps a
   * pushed (chrom,pos) predicate to its merged chunks ([[regionChunks]]).
   * Under [[VcfLocalScan.Cap]] the scan reads exactly those chunks on the
   * driver ([[Bgzf.chunkLines]]); over it, [[VcfScan]] keeps only the
-  * splits they touch — the `.gidx` prune, driven by the interop artifact.
+  * splits they touch ([[splitsFor]]).
   *
   * It also BUILDS `.tbi` files (the write path's `option("index","tbi")`
   * and [[Tabix.buildForVcf]]) so graft-written bgzf VCFs carry the same
@@ -280,6 +280,13 @@ object Tabix {
     (chroms, lo, hi)
   }
 
+  /** Does [[regionOf]] bound anything — the precondition for a region
+    * lookup through the index? */
+  private[sources] def hasRegion(pushed: Array[Filter]): Boolean = {
+    val (chroms, lo, hi) = regionOf(pushed)
+    chroms.isDefined || lo > 1L || hi != Long.MaxValue
+  }
+
   // Every region lookup plans against the same sidecars: keep parsed
   // indexes by (sidecar path, length, mtime), so an overwritten sidecar
   // is a new key. LRU, bounded by the summed sidecar bytes (the parsed
@@ -324,8 +331,8 @@ object Tabix {
     * parsed once per (path, length, mtime) and then served from memory. */
   def regionChunks(conf: Configuration, path: String, dataMtime: Long,
                    pushed: Array[Filter]): Option[Seq[(Long, Long)]] = {
+    if (!hasRegion(pushed)) return None
     val (chroms, lo, hi) = regionOf(pushed)
-    if (chroms.isEmpty && lo <= 1L && hi == Long.MaxValue) return None // unbounded
     val fs = new Path(path).getFileSystem(conf)
     // .tbi first (what tabix/pysam write), then .csi (bcftools' default);
     // either must be at least as new as the data file
@@ -365,13 +372,6 @@ object Tabix {
     }
     splits.filter(sp => ranges.exists(r => r._1 < sp.end && sp.start < r._2))
   }
-
-  /** Prune `splits` through [[regionChunks]]: None = no usable index or
-    * constraint (caller keeps all splits); Some(kept) = sound subset. */
-  def pruneSplits(conf: Configuration, path: String, dataMtime: Long,
-                  pushed: Array[Filter],
-                  splits: Seq[VcfPartition]): Option[Seq[VcfPartition]] =
-    regionChunks(conf, path, dataMtime, pushed).map(splitsFor(_, splits))
 
   // ---------------------------------------------------------------------
   // Building
@@ -423,7 +423,7 @@ object Tabix {
         s"tabix build: ${f.ref}:${f.beg + 1}-${f.end} exceeds the " +
           s"2^${minShift + depth * 3} addressing limit of this " +
           (if (minShift == LinearShift && depth == 5) "5-level .tbi scheme — " +
-            "index with option(\"index\",\"csi\") or option(\"index\",\"gidx\") instead"
+            "index with option(\"index\",\"csi\") instead"
            else s"(min_shift=$minShift, depth=$depth) .csi scheme"))
       lastBeg = f.beg
       val bin = reg2bin(f.beg, f.end, minShift, depth)

@@ -1,7 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** VCF text reader (SURVEY.md §2.1 S2/S3; the S10 writer is [[VcfWriteV2]]).
   *
@@ -17,52 +20,64 @@ import org.apache.spark.sql.functions._
   * built-in expressions, so column pruning reaches the text scan and
   * unneeded per-sample parsing is dropped by Catalyst.
   *
-  * At scale: VCFs are line-delimited, so the text source splits files by
-  * range and parses in parallel; downstream genomic operators should
-  * `repartitionByRange($"chrom", $"pos")` once and reuse that partitioning.
+  * At scale: plain-text VCFs are line-delimited, so the text source
+  * splits files by range and parses in parallel; a `.gz`/`.bgz` file is
+  * one task through the gzip codec (the splittable BGZF read is the
+  * DataSourceV2 scan, [[VcfDataSource]]). Downstream genomic operators
+  * should `repartitionByRange($"chrom", $"pos")` once and reuse that
+  * partitioning.
   */
 object Vcf {
 
-  /** Index sidecars (.gidx/.tbi/.csi) that sit BESIDE data files in a
+  /** Index sidecars (.tbi/.csi) that sit BESIDE data files in a
     * directory written with `option("index",...)` or indexed by external
     * tools — never data, excluded from every data-file walk (a `.tbi`
-    * parsed as VCF text yields garbage rows on an unfiltered scan). */
+    * parsed as VCF text yields garbage rows on an unfiltered scan).
+    * `.gidx` is the JSON sidecar earlier builds of this engine wrote;
+    * directories holding one must still load. */
   def isIndexSidecar(name: String): Boolean =
-    name.endsWith(VcfIndex.Suffix) || name.endsWith(Tabix.Suffix) ||
+    name.endsWith(".gidx") || name.endsWith(Tabix.Suffix) ||
       name.endsWith(Tabix.CsiSuffix)
+
+  /** The data files `path` (a file, directory or glob) names, lazily and
+    * sorted by name at each level: directories are walked recursively
+    * (dir/chrom=1/part.vcf is read, not skipped), and hidden names (`_`/
+    * `.` prefixed) and index sidecars are skipped at every level. Fails
+    * naming `path` when nothing matches it; an existing directory with no
+    * data files yields nothing. */
+  def dataFiles(conf: Configuration, path: String): Iterator[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def walk(s: FileStatus): Iterator[FileStatus] = {
+      val n = s.getPath.getName
+      if (n.startsWith("_") || n.startsWith(".") || isIndexSidecar(n)) Iterator.empty
+      else if (s.isDirectory)
+        fs.listStatus(s.getPath).sortBy(_.getPath.getName).iterator.flatMap(walk)
+      else Iterator.single(s)
+    }
+    val matched = fs.globStatus(p)
+    if (matched == null || matched.isEmpty)
+      throw new java.io.FileNotFoundException(s"vcf: no file matches $path")
+    matched.sortBy(_.getPath.getName).iterator.flatMap(walk)
+  }
 
   /** The leading '#'-prefixed header block, read with a BOUNDED
     * driver-side stream that stops at the first data line — O(header),
     * not O(file): schema and sample inference on a 100 GB VCF must not
     * scan 100 GB (a distributed `read.text(...).filter(startsWith("#"))`
     * collect touches every line). Globs/directories resolve to their
-    * first visible file (the V2 scan's planning-time header-compatibility
-    * check guards the "headers agree across parts" assumption for foreign
-    * directories); gzip/BGZF decode through the codec, of which only the
-    * header's blocks are ever inflated. */
+    * first data file, the V2 scan's reference file for its planning-time
+    * header-compatibility gate; gzip/BGZF decode through the codec, of
+    * which only the header's blocks are ever inflated. */
   def headerLines(spark: SparkSession, path: String): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    def visible(n: String): Boolean =
-      !n.startsWith("_") && !n.startsWith(".") && !isIndexSidecar(n)
-    def firstFile(s: org.apache.hadoop.fs.FileStatus): Option[org.apache.hadoop.fs.Path] =
-      if (!visible(s.getPath.getName)) None
-      else if (s.isDirectory)
-        fs.listStatus(s.getPath).sortBy(_.getPath.getName).iterator
-          .flatMap(firstFile).nextOption()
-      else Some(s.getPath)
-    val target = (fs.globStatus(p) match {
-      case null => Array.empty[org.apache.hadoop.fs.FileStatus]
-      case st => st
-    }).sortBy(_.getPath.getName).iterator.flatMap(firstFile).nextOption()
-      .getOrElse(throw new java.io.FileNotFoundException(path))
-    headerLinesOf(conf, target)
+    val target = dataFiles(conf, path).nextOption().getOrElse(
+      throw new java.io.FileNotFoundException(s"vcf: no data file under $path"))
+    headerLinesOf(conf, target.getPath)
   }
 
   /** [[headerLines]] for one concrete file. */
-  def headerLinesOf(conf: org.apache.hadoop.conf.Configuration,
-                    target: org.apache.hadoop.fs.Path): Seq[String] = {
+  def headerLinesOf(conf: Configuration, target: Path): Seq[String] = {
     val raw = target.getFileSystem(conf).open(target)
     val in: java.io.InputStream =
       if (target.getName.endsWith(".gz") || target.getName.endsWith(".bgz"))
@@ -91,8 +106,7 @@ object Vcf {
   private val InfoDecl =
     """##INFO=<ID=([^,>]+),Number=([^,>]+),Type=([^,>]+)""".r.unanchored
 
-  def headerMetaOf(conf: org.apache.hadoop.conf.Configuration,
-                   target: org.apache.hadoop.fs.Path): HeaderMeta = {
+  def headerMetaOf(conf: Configuration, target: Path): HeaderMeta = {
     val lines = headerLinesOf(conf, target)
     val samples = lines.find(_.startsWith("#CHROM"))
       .map(_.split("\t").drop(9).toSeq).getOrElse(Seq.empty)
@@ -120,8 +134,7 @@ object Vcf {
   /** [[Bgzf.isBgzf]] of `s`, cached by (path, len, mtime) like the header
     * metadata, so planning does not reopen every file; a file that cannot
     * be sniffed reads as not BGZF, and is sniffed again next time. */
-  def isBgzfCached(conf: org.apache.hadoop.conf.Configuration,
-                   s: org.apache.hadoop.fs.FileStatus): Boolean = {
+  def isBgzfCached(conf: Configuration, s: FileStatus): Boolean = {
     val key = (s.getPath.toString, s.getLen, s.getModificationTime)
     val hit = bgzfCache.get(key)
     if (hit != null) hit
@@ -129,8 +142,7 @@ object Vcf {
     catch { case _: Throwable => false }
   }
 
-  def headerMetaCached(conf: org.apache.hadoop.conf.Configuration,
-                       s: org.apache.hadoop.fs.FileStatus): HeaderMeta = {
+  def headerMetaCached(conf: Configuration, s: FileStatus): HeaderMeta = {
     val key = (s.getPath.toString, s.getLen, s.getModificationTime)
     val hit = headerMetaCache.get(key)
     if (hit != null) hit
@@ -147,7 +159,7 @@ object Vcf {
 
   /** The cached fingerprint of `s` when this (path, len, mtime) has been
     * read before; None means [[headerMetaCached]] would read the header. */
-  def headerMetaIfCached(s: org.apache.hadoop.fs.FileStatus): Option[HeaderMeta] =
+  def headerMetaIfCached(s: FileStatus): Option[HeaderMeta] =
     Option(headerMetaCache.get((s.getPath.toString, s.getLen, s.getModificationTime)))
 
   /** Sample names from the #CHROM header line (columns 10+). */
@@ -163,54 +175,24 @@ object Vcf {
     * the same way). For whole-panel work use [[readAllSamples]] /
     * [[explodeSamples]] — one scan for every sample. */
   def read(spark: SparkSession, path: String, sampleIndex: Int = 0): DataFrame =
-    if (looksBgzf(spark, path)) readBgzf(spark, path, sampleIndex)
-    else fromLines(textLines(spark, path), sampleIndex)
+    fromLines(textLines(spark, path), sampleIndex)
 
-  /** `spark.read.text` with index sidecars excluded: a directory written
-    * with `option("index","tbi"/"csi"/"gidx")` keeps its sidecars next to
-    * the parts, and a naive directory text scan would parse them as data
-    * (binary garbage rows on an unfiltered read). Directories expand to
-    * their visible data files; single files and globs pass through. */
+  /** `spark.read.text` over [[dataFiles]], so index sidecars beside the
+    * parts are never parsed as data. `.gz` and `.bgz` inputs decode
+    * through Hadoop's gzip codec, which reads every member of a
+    * multi-member BGZF file; each such file is one task. */
   private[sources] def textLines(spark: SparkSession, path: String): DataFrame = {
-    val expanded: Seq[String] =
-      try {
-        val conf = spark.sessionState.newHadoopConf()
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(conf)
-        def visible(n: String): Boolean =
-          !n.startsWith("_") && !n.startsWith(".") && !isIndexSidecar(n)
-        def walk(s: org.apache.hadoop.fs.FileStatus): Seq[String] =
-          if (!visible(s.getPath.getName)) Seq.empty
-          else if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
-          else Seq(s.getPath.toString)
-        fs.globStatus(p) match {
-          case null => Seq(path)
-          case st if st.exists(s => s.isDirectory ||
-              isIndexSidecar(s.getPath.getName)) => st.toSeq.flatMap(walk)
-          case _ => Seq(path) // plain file(s): no expansion needed
-        }
-      } catch { case _: Throwable => Seq(path) }
-    if (expanded == Seq(path)) spark.read.text(path)
-    else if (expanded.isEmpty) // directory holding only sidecars
+    val files = dataFiles(spark.sessionState.newHadoopConf(), path)
+      .map(_.getPath.toString).toSeq
+    if (files.isEmpty) // a directory holding only sidecars or hidden files
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.StringType))))
-    else spark.read.text(expanded: _*)
+        StructType(Seq(StructField("value", StringType))))
+    else spark.read.option("io.compression.codecs", classOf[BgzCodec].getName)
+      .text(files: _*)
   }
 
-  /** True for a single `.gz`/`.bgz` file with a valid BGZF chain — those
-    * dispatch to the splittable reader; plain gzip (unsplittable, but
-    * rare outside bgzip in this domain) and globs/directories fall back
-    * to the codec text scan. */
-  private def looksBgzf(spark: SparkSession, path: String): Boolean =
-    (path.endsWith(".gz") || path.endsWith(".bgz")) &&
-      (try Bgzf.isBgzf(spark.sessionState.newHadoopConf(), path)
-       catch { case _: Throwable => false })
-
   /** Parse a raw line frame (column `value`) into the single-sample
-    * variant frame — shared by the plain-text scan and the splittable
-    * BGZF reader. */
+    * variant frame — shared by the batch and streaming text reads. */
   def fromLines(raw: DataFrame, sampleIndex: Int = 0): DataFrame = {
     val lines = raw.filter(!col("value").startsWith("#"))
     val f = split(col("value"), "\t")
@@ -222,14 +204,6 @@ object Vcf {
 
     withSampleFields(lines.select(coreCols(fld) :+ sample.as("sample"): _*))
   }
-
-  /** Splittable read of a bgzip-compressed VCF: [[Bgzf.readLines]] gives
-    * one task per `splitBytes` of COMPRESSED data (a plain `.gz` codec
-    * read is one task per file — a 100 TB single-file gVCF would
-    * serialize), then the same line parse as [[read]]. */
-  def readBgzf(spark: SparkSession, path: String, sampleIndex: Int = 0,
-               splitBytes: Long = 16L * 1024 * 1024): DataFrame =
-    fromLines(Bgzf.readLines(spark, path, splitBytes).toDF("value"), sampleIndex)
 
   /** Streaming VCF ingestion: new files landing under `glob` parse
     * incrementally through the SAME expression pipeline as [[read]]
@@ -373,4 +347,10 @@ object Vcf {
   /** One-call typed read: body parse + header-driven INFO projection. */
   def readTyped(spark: SparkSession, path: String, sampleIndex: Int = 0): DataFrame =
     withInfoFields(read(spark, path, sampleIndex), infoSchema(spark, path))
+}
+
+/** Hadoop's gzip codec under bgzip's other extension, `.bgz`, so the
+  * text source decodes those files too. */
+class BgzCodec extends org.apache.hadoop.io.compress.GzipCodec {
+  override def getDefaultExtension: String = ".bgz"
 }

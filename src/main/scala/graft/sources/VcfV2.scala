@@ -65,7 +65,9 @@ import scala.jdk.CollectionConverters._
   * `Vcf.read(...).filter(...)` (spec-gated in VcfBedSpec, VcfPushdownSpec,
   * VcfRegionParitySpec and VcfLocalScanSpec).
   *
-  * Options: `sample_index` (default 0), `split_bytes` (default 16 MiB).
+  * Read options: `sample_index` (default 0), `split_bytes` (default 16
+  * MiB), `samples` (`all` reads the wide panel shape) and `info_fields`
+  * (typed INFO columns, see [[VcfV2.parseInfoFields]]).
   */
 class VcfDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "vcf"
@@ -96,10 +98,7 @@ class VcfDataSource extends TableProvider with DataSourceRegister {
     // of the read shapes); reads pass inferSchema's result back unchanged
     new VcfTable(path, sampleIndex, splitBytes, allSamples(properties),
       Option(schema).filter(_.fields.nonEmpty),
-      VcfV2.parseInfoFields(Option(properties.get("info_fields"))),
-      !Option(properties.get("header_check")).exists(v =>
-        v.equalsIgnoreCase("off") || v.equalsIgnoreCase("false")),
-      localCap)
+      VcfV2.parseInfoFields(Option(properties.get("info_fields"))), localCap)
   }
 }
 
@@ -174,7 +173,6 @@ class VcfTable(path: String, sampleIndex: Int, splitBytes: Long,
                allSamples: Boolean = false,
                external: Option[StructType] = None,
                infoFields: Seq[(String, String, String)] = Nil,
-               headerCheck: Boolean = true,
                localCap: Long = VcfLocalScan.Cap)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
@@ -185,8 +183,7 @@ class VcfTable(path: String, sampleIndex: Int, splitBytes: Long,
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.TRUNCATE)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new VcfScanBuilder(path, sampleIndex, splitBytes, schema(), infoFields,
-      headerCheck, localCap)
+    new VcfScanBuilder(path, sampleIndex, splitBytes, schema(), infoFields, localCap)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -214,7 +211,6 @@ class VcfTable(path: String, sampleIndex: Int, splitBytes: Long,
 class VcfScanBuilder(path: String, sampleIndex: Int, splitBytes: Long,
                      full: StructType,
                      infoFields: Seq[(String, String, String)] = Nil,
-                     headerCheck: Boolean = true,
                      localCap: Long = VcfLocalScan.Cap)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
@@ -241,9 +237,8 @@ class VcfScanBuilder(path: String, sampleIndex: Int, splitBytes: Long,
     * [[VcfLocalScan]] when every file's tabix chunks span at most
     * `min(split_bytes, localCap)`, else the distributed [[VcfScan]]. */
   override def build(): Scan = {
-    val scan = new VcfScan(path, sampleIndex, splitBytes, pushed, required,
-      infoFields, headerCheck)
-    if (!VcfIndex.prunable(pushed)) scan
+    val scan = new VcfScan(path, sampleIndex, splitBytes, pushed, required, infoFields)
+    if (!Tabix.hasRegion(pushed)) scan
     else scan.localChunks(math.min(splitBytes, localCap))
       .map(new VcfLocalScan(scan, _)).getOrElse(scan)
   }
@@ -251,8 +246,7 @@ class VcfScanBuilder(path: String, sampleIndex: Int, splitBytes: Long,
 
 class VcfScan(path: String, sampleIndex: Int, splitBytes: Long,
               pushed: Array[Filter], required: StructType,
-              infoFields: Seq[(String, String, String)] = Nil,
-              headerCheck: Boolean = true)
+              infoFields: Seq[(String, String, String)] = Nil)
     extends Scan with Batch {
 
   override def readSchema(): StructType = required
@@ -267,25 +261,11 @@ class VcfScan(path: String, sampleIndex: Int, splitBytes: Long,
   private[sources] lazy val conf: Configuration =
     org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()
 
-  /** Each file's partitions after index pruning, with its merged tabix
+  /** Each file's partitions after tabix pruning, with its merged tabix
     * chunks when a fresh `.tbi`/`.csi` resolved the pushed region —
     * computed once, for both arms. */
   private lazy val plan: Seq[VcfFilePlan] = {
-    val base = new Path(path)
-    val fs = base.getFileSystem(conf)
-    // recursive walk: nested layouts (dir/chrom=1/part.vcf) are read, not
-    // silently skipped; hidden names and index sidecars (.gidx/.tbi/.csi —
-    // binary, not data) excluded at every level
-    def visible(n: String): Boolean =
-      !n.startsWith("_") && !n.startsWith(".") && !Vcf.isIndexSidecar(n)
-    def walk(s: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (!visible(s.getPath.getName)) Seq.empty
-      else if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
-      else Seq(s)
-    val files = fs.globStatus(base) match {
-      case null => Seq.empty[org.apache.hadoop.fs.FileStatus]
-      case st => st.toSeq.flatMap(walk)
-    }
+    val files = Vcf.dataFiles(conf, path).toIndexedSeq
     // Header-compatibility gate for multi-file scans: the read schema and
     // sample panel were inferred from the FIRST file (Vcf.headerLines);
     // the reference never mixes headers silently — pysam reads each
@@ -293,22 +273,21 @@ class VcfScan(path: String, sampleIndex: Int, splitBytes: Long,
     // per parent file). A foreign directory mixing panels or INFO
     // declarations must fail HERE with the offending file, not yield the
     // wrong sample or silent nulls. O(header) per file, driver-side at
-    // planning, cached by (path, len, mtime); `option("header_check",
-    // "off")` opts out for known-homogeneous huge directories.
-    if (headerCheck && files.length > 1) {
+    // planning, cached by (path, len, mtime).
+    if (files.length > 1) {
       val ref = Vcf.headerMetaCached(conf, files.head)
       def mismatch(s: org.apache.hadoop.fs.FileStatus, m: Vcf.HeaderMeta): Option[String] =
         if (m.samples != ref.samples)
           Some(s"vcf scan: sample columns of ${s.getPath} (${m.samples.mkString(",")}) " +
             s"differ from ${files.head.getPath} (${ref.samples.mkString(",")}); " +
             "a directory scan needs one header — split the load or reorder " +
-            "columns upstream (header_check=off overrides)")
+            "columns upstream")
         else infoFields.collectFirst {
           case (_, key, _) if m.infoTypes.get(key) != ref.infoTypes.get(key) =>
             s"vcf scan: INFO $key declared as " +
               s"${m.infoTypes.getOrElse(key, "<absent>")} in ${s.getPath} but " +
               s"${ref.infoTypes.getOrElse(key, "<absent>")} in ${files.head.getPath}; " +
-              "typed info_fields need one declaration (header_check=off overrides)"
+              "typed info_fields need one declaration"
         }
       val cached = files.tail.map(Vcf.headerMetaIfCached)
       if (cached.forall(_.isDefined))
@@ -350,10 +329,6 @@ class VcfScan(path: String, sampleIndex: Int, splitBytes: Long,
         } finally pool.shutdownNow()
       }
     }
-    // region-index split pruning: with (chrom,pos) predicates pushed and a
-    // fresh sidecar present, drop splits whose stats cannot match — the
-    // tabix-style "read only the region" access path
-    val usePrune = VcfIndex.prunable(pushed)
     files.map { s =>
       val p = s.getPath.toString
       val len = s.getLen
@@ -372,19 +347,11 @@ class VcfScan(path: String, sampleIndex: Int, splitBytes: Long,
               math.min((i + 1).toLong * splitBytes, len), kind)
           }
         }
-      val index = if (usePrune) VcfIndex.read(conf, p, len, s.getModificationTime) else None
-      // no (fresh) .gidx: a foreign bgzf file usually ships a tabix .tbi
-      // instead — same prune, driven by the interop sidecar
+      // with a (chrom,pos) region pushed, a fresh .tbi/.csi beside a bgzf
+      // file keeps only the splits its chunks touch
       val chunks =
-        if (usePrune && bgzf && index.isEmpty)
-          Tabix.regionChunks(conf, p, s.getModificationTime, pushed)
-        else None
-      val kept = index match {
-        case Some(stats) =>
-          splits.filter(sp => VcfIndex.mayMatch(stats, sp.start, sp.end, pushed))
-        case None => chunks.map(Tabix.splitsFor(_, splits)).getOrElse(splits)
-      }
-      VcfFilePlan(p, kept, chunks)
+        if (bgzf) Tabix.regionChunks(conf, p, s.getModificationTime, pushed) else None
+      VcfFilePlan(p, chunks.map(Tabix.splitsFor(_, splits)).getOrElse(splits), chunks)
     }
   }
 

@@ -45,12 +45,9 @@ class VcfWriteBuilder(path: String, info: LogicalWriteInfo)
 }
 
 /** `sidecars` are extra staged files renamed alongside the part file
-  * (the .tbi built in the task); `chromStats` are per-chrom (min,max) pos
-  * gathered DURING the write, from which the driver commit emits a .gidx
-  * with no second pass over the data. */
+  * (the .tbi/.csi built in the task). */
 case class VcfCommitMessage(stagedPath: String, finalName: String,
-                            sidecars: Seq[(String, String)] = Nil,
-                            chromStats: Map[String, (Long, Long)] = Map.empty)
+                            sidecars: Seq[(String, String)] = Nil)
     extends WriterCommitMessage
 
 class VcfBatchWrite(path: String, schema: StructType,
@@ -62,17 +59,17 @@ class VcfBatchWrite(path: String, schema: StructType,
   private val bgzf = opt("compression").exists(_.equalsIgnoreCase("bgzf"))
   private val blockBytes = opt("bgzf_block_bytes").map(_.toInt).getOrElse(60000)
   private val sampleNames = opt("sample_names").map(_.split(",").toSeq)
-  // option("index","gidx"), "tbi", "csi", or a comma list — build sidecar
-  // indexes at write time, mirroring the reference's
-  // tabix_index-after-every-write (csi for contigs past .tbi's 2^29 limit,
-  // the same fallback bcftools applies)
+  // option("index","tbi"), "csi", or "tbi,csi" — build sidecar indexes
+  // at write time, mirroring the reference's tabix_index-after-every-write
+  // (csi for contigs past .tbi's 2^29 limit, the same fallback bcftools
+  // applies)
   private val indexKinds: Set[String] =
     opt("index").map(_.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty)
-  require(indexKinds.subsetOf(Set("gidx", "tbi", "csi")),
-    s"vcf write: unknown index kind(s) ${indexKinds -- Set("gidx", "tbi", "csi")} " +
-      "(supported: gidx, tbi, csi)")
-  require(indexKinds.intersect(Set("tbi", "csi")).isEmpty || bgzf,
+  require(indexKinds.subsetOf(Set("tbi", "csi")),
+    s"vcf write: unknown index kind(s) ${indexKinds -- Set("tbi", "csi")} " +
+      "(supported: tbi, csi)")
+  require(indexKinds.isEmpty || bgzf,
     "vcf write: index=tbi/csi requires compression=bgzf (tabix indexes BGZF files)")
 
   private def stagingDir = new Path(path, s"_staging-$queryId")
@@ -107,7 +104,7 @@ class VcfBatchWrite(path: String, schema: StructType,
         if (!n.startsWith("_staging-")) fs.delete(s.getPath, true)
       }
     }
-    def move(staged: String, finalName: String): Path = {
+    def move(staged: String, finalName: String): Unit = {
       // rename returns false (rather than throwing) on HDFS/local when the
       // destination exists or a parent vanished; swallowing it and then
       // deleting the staging dir would silently drop the partition — fail
@@ -118,20 +115,11 @@ class VcfBatchWrite(path: String, schema: StructType,
         throw new java.io.IOException(
           s"vcf write commit: rename $staged -> $dst failed " +
             "(destination exists or filesystem refused the move)")
-      dst
     }
     messages.foreach {
-      case VcfCommitMessage(staged, finalName, sidecars, chromStats) =>
-        val dst = move(staged, finalName)
+      case VcfCommitMessage(staged, finalName, sidecars) =>
+        move(staged, finalName)
         sidecars.foreach { case (s, n) => move(s, n) }
-        if (indexKinds.contains("gidx")) {
-          // whole-file .gidx from the stats the task gathered while
-          // writing — no second pass; stamped with the FINAL file's
-          // (len, mtime) so it is born fresh
-          val st = fs.getFileStatus(dst)
-          VcfIndex.write(fs, dst.toString, st.getLen, st.getModificationTime,
-            Seq(VcfIndex.SplitStat(0L, st.getLen, chromStats)))
-        }
       case _ => ()
     }
     fs.delete(stagingDir, true)
@@ -186,17 +174,14 @@ class VcfDataWriter(conf: Configuration, stagingDir: String, fileName: String,
   private var buffered: scala.collection.mutable.ArrayBuffer[(String, Int, (String, java.lang.Long, Long))] =
     if (declared < 0) scala.collection.mutable.ArrayBuffer.empty else null
 
-  // write-time index state: per-chrom (min,max) pos for the .gidx the
-  // driver commit emits, and the tabix builders fed line-by-line with the
+  // write-time index state: the tabix builders fed line-by-line with the
   // sink's virtual offsets (bgzf only — enforced at option parse); "csi"
   // uses the deeper scheme so >2^29 contigs index instead of failing
-  private val wantGidx = indexKinds.contains("gidx")
   private val tbiBuilder: Tabix.Builder =
     if (indexKinds.contains("tbi")) new Tabix.Builder else null
   private val csiBuilder: Tabix.Builder =
     if (indexKinds.contains("csi"))
       new Tabix.Builder(depth = Tabix.CsiDepth) else null
-  private val chromStats = scala.collection.mutable.Map.empty[String, (Long, Long)]
 
   private def emit(line: String): Unit =
     if (sink != null) sink.writeLine(line)
@@ -227,32 +212,23 @@ class VcfDataWriter(conf: Configuration, stagingDir: String, fileName: String,
     else if (n == 0) line + "\t." + ("\t." * declared)
     else line + ("\t." * (declared - n))
 
+  /** `ext` is the row's [[VcfRowFormatter.extent]] when a tabix builder
+    * exists, else null. */
   private def emitRow(line: String, n: Int,
                       ext: (String, java.lang.Long, Long)): Unit = {
     ensureOpen()
-    if (ext != null && ext._1 != null) {
-      if (wantGidx) {
-        // a chrom whose rows all lack pos still gets an (empty-range)
-        // entry — feasible for chrom-only predicates, like VcfIndex.build
-        val (lo, hi) = chromStats.getOrElse(ext._1, (Long.MaxValue, Long.MinValue))
-        chromStats(ext._1) =
-          if (ext._2 == null) (lo, hi)
-          else (math.min(lo, ext._2.longValue()), math.max(hi, ext._2.longValue()))
+    if (ext == null) emit(pad(line, n))
+    else {
+      val vBeg = sink.virtualOffset
+      emit(pad(line, n))
+      val vEnd = sink.virtualOffset
+      def index(b: Tabix.Builder): Unit = if (b != null) {
+        if (ext._2 == null) b.addUnplaced(ext._1, vBeg, vEnd)
+        else b.add(Tabix.Feature(ext._1, ext._2.longValue() - 1, ext._3, vBeg, vEnd))
       }
-      if ((tbiBuilder != null || csiBuilder != null) && sink != null) {
-        val vBeg = sink.virtualOffset
-        emit(pad(line, n))
-        val vEnd = sink.virtualOffset
-        def index(b: Tabix.Builder): Unit = if (b != null) {
-          if (ext._2 == null) b.addUnplaced(ext._1, vBeg, vEnd)
-          else b.add(Tabix.Feature(ext._1, ext._2.longValue() - 1, ext._3, vBeg, vEnd))
-        }
-        index(tbiBuilder)
-        index(csiBuilder)
-        return
-      }
+      index(tbiBuilder)
+      index(csiBuilder)
     }
-    emit(pad(line, n))
   }
 
   private def flushBuffered(): Unit = {
@@ -262,9 +238,7 @@ class VcfDataWriter(conf: Configuration, stagingDir: String, fileName: String,
 
   override def write(row: InternalRow): Unit = {
     val (line, nSamples) = fmt.format(row)
-    val ext =
-      if (wantGidx || tbiBuilder != null || csiBuilder != null) fmt.extent(row)
-      else null
+    val ext = if (tbiBuilder != null || csiBuilder != null) fmt.extent(row) else null
     if (declared >= 0) emitRow(line, nSamples, ext)
     else if (nSamples > 0) { declared = nSamples; flushBuffered(); emitRow(line, nSamples, ext) }
     else {
@@ -294,7 +268,7 @@ class VcfDataWriter(conf: Configuration, stagingDir: String, fileName: String,
          Tabix.writeCsi(conf, staged.toString, csiBuilder)
          Seq((staged.toString + Tabix.CsiSuffix, fileName + Tabix.CsiSuffix))
        })
-    VcfCommitMessage(staged.toString, fileName, sidecars, chromStats.toMap)
+    VcfCommitMessage(staged.toString, fileName, sidecars)
   }
 
   override def abort(): Unit = {

@@ -7,7 +7,7 @@ import java.nio.file.Files
 
 /** Tabix `.tbi` production + consumption: binary round trip, bin math,
   * END-aware extents, split pruning through the DataSourceV2 scan, and
-  * the write path's `option("index","tbi"/"gidx")` sidecars. */
+  * the write path's `option("index","tbi"/"csi")` sidecars. */
 class TabixSpec extends SparkSpec {
 
   private def header = Seq("##fileformat=VCFv4.2",
@@ -83,7 +83,7 @@ class TabixSpec extends SparkSpec {
     Tabix.buildForVcf(conf, p.toString)
     assert(Files.exists(p.resolveSibling("t.vcf.gz.tbi")))
 
-    // only the .tbi exists (no .gidx): the scan must prune through it
+    // the scan must prune through the .tbi
     def v2 = spark.read.format("vcf").option("split_bytes", "1024").load(p.toString)
     val total = v2.rdd.getNumPartitions
     assert(total > 4, s"need multiple splits for a meaningful prune (got $total)")
@@ -114,10 +114,10 @@ class TabixSpec extends SparkSpec {
     // the engine-side filter pos=150000 matches no ROW (pos is the start),
     // so e2e semantics stay row-identical — this gate is about the index
     // never hiding the block's bytes from a region scan
-    val kept = Tabix.pruneSplits(conf, p.toString,
+    val kept = Tabix.regionChunks(conf, p.toString,
       Files.getLastModifiedTime(p).toMillis,
-      Array(EqualTo("chrom", "chr1"), GreaterThan("pos", 999L), LessThanOrEqual("pos", 1000L)),
-      Seq(VcfPartition(p.toString, 0, Files.size(p), VcfPartition.Bgzf)))
+      Array(EqualTo("chrom", "chr1"), GreaterThan("pos", 999L), LessThanOrEqual("pos", 1000L)))
+      .map(Tabix.splitsFor(_, Seq(VcfPartition(p.toString, 0, Files.size(p), VcfPartition.Bgzf))))
     assert(kept.exists(_.nonEmpty))
   }
 
@@ -129,9 +129,9 @@ class TabixSpec extends SparkSpec {
     Files.setLastModifiedTime(p,
       java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + 60000))
     val splits = Seq(VcfPartition(p.toString, 0, Files.size(p), VcfPartition.Bgzf))
-    val r = Tabix.pruneSplits(conf, p.toString,
+    val r = Tabix.regionChunks(conf, p.toString,
       Files.getLastModifiedTime(p).toMillis,
-      Array(EqualTo("chrom", "chr1")), splits)
+      Array(EqualTo("chrom", "chr1"))).map(Tabix.splitsFor(_, splits))
     assert(r.isEmpty, "stale .tbi must not prune")
   }
 
@@ -329,11 +329,13 @@ class TabixSpec extends SparkSpec {
         EqualTo("chrom", "chr1"), EqualTo("pos", 7007L)),
       Array[org.apache.spark.sql.sources.Filter](EqualTo("chrom", "chr9")))
     Tabix.buildForVcf(conf, p.toString, "tbi")
-    val viaTbi = filters.map(f => Tabix.pruneSplits(conf, p.toString, mtime, f, splits))
+    val viaTbi = filters.map(f =>
+      Tabix.regionChunks(conf, p.toString, mtime, f).map(Tabix.splitsFor(_, splits)))
     assert(viaTbi.forall(_.isDefined))
     Files.delete(p.resolveSibling(p.getFileName.toString + ".tbi"))
     Tabix.buildForVcf(conf, p.toString, "csi")
-    val viaCsi = filters.map(f => Tabix.pruneSplits(conf, p.toString, mtime, f, splits))
+    val viaCsi = filters.map(f =>
+      Tabix.regionChunks(conf, p.toString, mtime, f).map(Tabix.splitsFor(_, splits)))
     assert(viaCsi.forall(_.isDefined))
     // the graft .csi (min_shift 14, depth 7) keeps 16 kb leaf windows and
     // per-bin loffsets standing in for the linear index — the kept split
@@ -504,27 +506,14 @@ class TabixSpec extends SparkSpec {
     assert(prunedOnce, "the random csi never pruned anything — gate is vacuous")
   }
 
-  test("df.write option(index=gidx) builds a fresh sidecar; write→read round trip prunes") {
-    val src = writeBgzf(header ++ body("chr1", 2000) ++ body("chr2", 2000))
-    val df = spark.read.format("vcf").load(src.toString)
+  test("df.write option(index=gidx) fails, naming the supported kinds") {
+    val src = writeBgzf(header ++ body("chr1", 20))
     val out = Files.createTempDirectory("graftgidxw").resolve("out").toString
-    // one file per chrom (overwrite then append) so file-level stats give
-    // the prune something to drop deterministically
-    df.filter(col("chrom") === "chr1").coalesce(1).write.format("vcf")
-      .mode("overwrite").option("index", "gidx").save(out)
-    df.filter(col("chrom") === "chr2").coalesce(1).write.format("vcf")
-      .mode("append").option("index", "gidx").save(out)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(out).getFileSystem(conf)
-    val names = fs.listStatus(new org.apache.hadoop.fs.Path(out)).map(_.getPath.getName)
-    val parts = names.filter(_.endsWith(".vcf"))
-    assert(parts.nonEmpty && parts.forall(p => names.contains(p + VcfIndex.Suffix)),
-      s"every part must carry a .gidx sidecar: ${names.mkString(",")}")
-    def back = spark.read.format("vcf").load(out)
-    val total = back.rdd.getNumPartitions
-    val q = back.filter(col("chrom") === "chr2")
-    assert(q.rdd.getNumPartitions < total,
-      "a chrom-restricted read of a chrom-partitioned write must drop whole files")
-    assert(q.count() == 2000L)
+    val e = intercept[Throwable] {
+      spark.read.format("vcf").load(src.toString).write.format("vcf")
+        .mode("overwrite").option("compression", "bgzf").option("index", "gidx").save(out)
+    }
+    val msg = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString
+    assert(msg.contains("gidx") && msg.contains("supported: tbi, csi"), msg)
   }
 }

@@ -55,7 +55,6 @@ class VcfHeaderGateSpec extends SparkSpec {
     assert(msg.contains("sample columns"), s"wrong failure: $msg")
     assert(msg.contains("a.vcf") && msg.contains("b.vcf"),
       s"gate must name both the reference and the offending file: $msg")
-    assert(msg.contains("header_check=off"), s"must name the escape hatch: $msg")
   }
 
   test("a directory mixing INFO declarations fails only when that key is typed") {
@@ -77,18 +76,11 @@ class VcfHeaderGateSpec extends SparkSpec {
       .load(d.toString).count() === 100L)
   }
 
-  test("a homogeneous directory passes the gate; header_check=off bypasses a mismatch") {
+  test("a homogeneous directory passes the gate") {
     val ok = writeDir(
       "a.vcf" -> vcfLines(Seq("S1", "S2"), "Integer", "chr1", 50),
       "b.vcf" -> vcfLines(Seq("S1", "S2"), "Integer", "chr2", 50))
     assert(spark.read.format("vcf").load(ok.toString).count() === 100L)
-    val bad = writeDir(
-      "a.vcf" -> vcfLines(Seq("S1", "S2"), "Integer", "chr1", 50),
-      "b.vcf" -> vcfLines(Seq("S1", "SX"), "Integer", "chr2", 50))
-    // explicit opt-out for known-homogeneous-enough lakes: reads, first
-    // file's panel wins (documented caveat, not silent — the user asked)
-    assert(spark.read.format("vcf").option("header_check", "off")
-      .load(bad.toString).count() === 100L)
   }
 
   test("the gate reads BGZF-compressed headers too (mixed plain/bgzf directory)") {

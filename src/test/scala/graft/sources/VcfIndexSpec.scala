@@ -1,11 +1,10 @@
 package graft.sources
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Region-index split pruning + recursive directory handling for the VCF
-  * DataSourceV2 (the tabix-style `-r chrN:a-b` access path). */
+/** Which files a VCF load reads: recursive directories, sidecars skipped,
+  * and a path that matches nothing. */
 class VcfIndexSpec extends SparkSpec {
 
   private def header = Seq("##fileformat=VCFv4.2",
@@ -28,95 +27,27 @@ class VcfIndexSpec extends SparkSpec {
       Set("chr1", "chr2"))
   }
 
-  test("index build/read round-trips per-chrom min/max stats and staleness") {
-    val d = Files.createTempDirectory("graftvcfidx")
-    val p = d.resolve("t.vcf")
-    Files.writeString(p, (header ++ body("chr1", 200) ++ body("chr2", 100)).mkString("\n"))
-    val built = VcfIndex.build(spark, p.toString, granularityBytes = 2048)
-    assert(built.size > 1, "granularity below file size must yield multiple entries")
-    val conf = spark.sessionState.newHadoopConf()
-    val len = java.nio.file.Files.size(p)
-    val mtime = new org.apache.hadoop.fs.Path(p.toString)
-      .getFileSystem(conf).getFileStatus(new org.apache.hadoop.fs.Path(p.toString))
-      .getModificationTime
-    val Some(stats) = VcfIndex.read(conf, p.toString, len, mtime)
-    assert(stats == built)
-    // stats are consistent: entries tile [0, len), per-chrom min <= max
-    assert(stats.head.start == 0 && stats.last.end == len)
-    stats.sliding(2).foreach { case Seq(a, b) => assert(a.end == b.start); case _ => () }
-    val merged = stats.flatMap(_.chroms.keys).toSet
-    assert(merged == Set("chr1", "chr2"))
-    val chr1Max = stats.flatMap(_.chroms.get("chr1")).map(_._2).max
-    assert(chr1Max == 200L)
-    // stale: a different file length means the index is ignored
-    assert(VcfIndex.read(conf, p.toString, len + 1, mtime).isEmpty)
-    // stale: a same-length rewrite (different mtime) is ignored too — a
-    // length-only stamp would trust an index over regenerated content
-    assert(VcfIndex.read(conf, p.toString, len, mtime + 1).isEmpty)
-  }
-
-  test("pushed region predicate prunes splits; results stay row-identical") {
-    val d = Files.createTempDirectory("graftvcfprune")
-    val p = d.resolve("f.vcf").toString
-    Files.writeString(d.resolve("f.vcf"),
-      (header ++ body("chr1", 400) ++ body("chr2", 400)).mkString("\n"))
-    VcfIndex.build(spark, p, granularityBytes = 2048)
-    def v2 = spark.read.format("vcf").option("split_bytes", "2048").load(p)
-    val total = v2.rdd.getNumPartitions
-    assert(total > 4, s"need multiple splits for a meaningful prune (got $total)")
-
-    val q = v2.filter(col("chrom") === "chr2" && col("pos") <= 100)
-    assert(q.rdd.getNumPartitions < total,
-      "a one-region query must not scan every split")
-    val expect = Vcf.read(spark, p)
-      .filter(col("chrom") === "chr2" && col("pos") <= 100)
-    assert(q.count() == expect.count() && q.count() == 100L)
-    // boundary exactness: rows on split edges survive pruning everywhere
-    val full = v2.filter(col("chrom") === "chr1").agg(sum("pos")).head.getLong(0)
-    assert(full == (1 to 400).map(_.toLong).sum)
-    // a no-hit region prunes every split
-    val none = v2.filter(col("chrom") === "chr9")
-    assert(none.rdd.getNumPartitions == 0 || none.count() == 0L)
-    assert(none.count() == 0L)
-  }
-
-  test("a stale index never prunes (file grew after build)") {
-    val d = Files.createTempDirectory("graftvcfstale")
-    val pp = d.resolve("s.vcf")
-    Files.writeString(pp, (header ++ body("chr1", 300)).mkString("\n"))
-    VcfIndex.build(spark, pp.toString, granularityBytes = 1024)
-    // append chr5 rows AFTER indexing: the index no longer speaks for the file
-    Files.writeString(pp,
-      (header ++ body("chr1", 300) ++ body("chr5", 50)).mkString("\n"))
-    val q = spark.read.format("vcf").option("split_bytes", "1024")
-      .load(pp.toString).filter(col("chrom") === "chr5")
-    assert(q.count() == 50L, "stale index must be ignored, not trusted")
-  }
-
   test(".gidx sidecars are not read as data in directory loads") {
     val d = Files.createTempDirectory("graftvcfgidx")
-    val p = d.resolve("t.vcf").toString
     Files.writeString(d.resolve("t.vcf"), (header ++ body("chr1", 60)).mkString("\n"))
-    VcfIndex.build(spark, p, granularityBytes = 1024)
-    assert(Files.exists(d.resolve("t.vcf.gidx")))
-    val df = spark.read.format("vcf").load(d.toString)
-    assert(df.count() == 60L)
+    // the JSON sidecar earlier builds wrote beside each part
+    Files.writeString(d.resolve("t.vcf.gidx"),
+      """{"file_len":1,"file_mtime":1,"splits":[{"start":0,"end":1,"chroms":{"chr1":[1,60]}}]}""")
+    assert(spark.read.format("vcf").load(d.toString).count() == 60L)
+    assert(Vcf.read(spark, d.toString).count() == 60L)
   }
 
-  test("BGZF files prune by compressed-offset index") {
-    val d = Files.createTempDirectory("graftvcfbgzfidx")
-    val bg = d.resolve("b.vcf.gz")
-    val os = Files.newOutputStream(bg)
-    Bgzf.write((header ++ body("chr1", 400) ++ body("chr2", 400)).iterator, os,
-      blockBytes = 512)
-    os.close()
-    VcfIndex.build(spark, bg.toString, granularityBytes = 1024)
-    def v2 = spark.read.format("vcf").option("split_bytes", "1024").load(bg.toString)
-    val total = v2.rdd.getNumPartitions
-    assert(total > 2)
-    val q = v2.filter(col("chrom") === "chr1" && col("pos") > 350)
-    assert(q.rdd.getNumPartitions < total)
-    assert(q.count() == 50L)
-    assert(q.agg(sum("pos")).head.getLong(0) == (351 to 400).map(_.toLong).sum)
+  test("a path that matches nothing fails, naming the path; an empty directory reads empty") {
+    val d = Files.createTempDirectory("graftvcfmissing")
+    Files.writeString(d.resolve("t.vcf"), (header ++ body("chr1", 10)).mkString("\n"))
+    for (missing <- Seq(d.resolve("absent.vcf").toString, d.resolve("*.vcf.gz").toString)) {
+      val e = intercept[Throwable](spark.read.format("vcf").load(missing).count())
+      val msg = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString
+      assert(msg.contains(missing), msg)
+      assert(intercept[java.io.FileNotFoundException](Vcf.read(spark, missing))
+        .getMessage.contains(missing))
+    }
+    val empty = Files.createTempDirectory("graftvcfempty")
+    assert(spark.read.format("vcf").load(empty.toString).count() == 0L)
   }
 }

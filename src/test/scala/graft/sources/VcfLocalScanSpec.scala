@@ -39,10 +39,7 @@ class VcfLocalScanSpec extends SparkSpec {
     val p = d.resolve("t.vcf.gz")
     val os = Files.newOutputStream(p)
     try Bgzf.write(lines.iterator, os, 4096) finally os.close()
-    index.foreach {
-      case "gidx" => VcfIndex.build(spark, p.toString)
-      case kind => Tabix.buildForVcf(spark.sessionState.newHadoopConf(), p.toString, kind)
-    }
+    index.foreach(Tabix.buildForVcf(spark.sessionState.newHadoopConf(), p.toString, _))
     p.toString
   }
 
@@ -102,6 +99,12 @@ class VcfLocalScanSpec extends SparkSpec {
       assert(rows(q) == rows(Vcf.read(spark, p)
         .filter(col("chrom") === "chr1" && col("pos") <= 300L && col("gq") > 10).select("pos", "gt")))
     }
+    // a stray .gidx beside the .tbi (an earlier build's sidecar) is ignored
+    val d = dir()
+    val p = bgzf(d, header ++ body, "tbi")
+    Files.writeString(d.resolve("t.vcf.gz.gidx"),
+      """{"file_len":1,"file_mtime":1,"splits":[]}""")
+    assertLocal(p, col("chrom") === "chr1" && col("pos").between(100L, 400L))
   }
 
   test("an END-widened gVCF block reached mid-block, and a chrom-only region over unparseable POS") {
@@ -146,7 +149,6 @@ class VcfLocalScanSpec extends SparkSpec {
     try gz.write((header ++ body).mkString("\n").getBytes("UTF-8")) finally gz.close()
     for ((what, path) <- Seq("no sidecar" -> bgzf(dir(), header ++ body),
                              "stale sidecar" -> stale,
-                             ".gidx" -> bgzf(dir(), header ++ body, "gidx", "tbi"),
                              "plain text" -> plainDir.resolve("t.vcf").toString,
                              "plain gzip" -> gzDir.resolve("t.vcf.gz").toString)) {
       val q = spark.read.format("vcf").load(path).filter(region)
