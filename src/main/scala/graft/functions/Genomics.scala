@@ -37,10 +37,6 @@ object Genomics {
     val f = udf((probs: Seq[Double]) => if (probs == null) null else phredStr(probs))
     c => f(c)
   }
-  val unphredStrUdf: Column => Column = {
-    val f = udf((s: String) => if (s == null) null else unphredStr(s))
-    c => f(c)
-  }
 
   /** n / d, or `default` when d == 0. */
   def safeDivide(n: Column, d: Column, default: Column): Column =

@@ -71,15 +71,6 @@ object Stats {
     (a, b) => f(a, b)
   }
 
-  /** Reference-shaped bindings over (actual, expected_counts) pairs. */
-  val multinomialLikelihoodUdf: (Column, Column) => Column = {
-    val f = udf((a: Seq[Long], e: Seq[Long]) => multinomialLikelihood(a, e))
-    (a, e) => f(a, e)
-  }
-  val multinomialLikelihoodRatioUdf: (Column, Column) => Column = {
-    val f = udf((a: Seq[Long], e: Seq[Long]) => multinomialLikelihoodRatio(a, e))
-    (a, e) => f(a, e)
-  }
   /** Log forms for the oracle gate: the raw likelihood of small count
     * vectors is a RATIONAL number and can land exactly on a round-6
     * boundary (35·0.3^7 = 0.0076545), where cross-engine float noise flips

@@ -1003,10 +1003,6 @@ object TextDedup {
           PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rk FROM sc)
         SELECT doc_id, term, tf, df, tfidf FROM rk WHERE rk <= 5"""
 
-  /** The DuckDB-side md5 token hash — exposed so at-rest oracles can build
-    * corpus-variant CTEs without duplicating the hash recipe. */
-  private[queries] def hxSql(e: String): String = hx(e)
-
   val oracles: Map[String, String] = Map(
     "x1_token_stats" ->
       """SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
 import java.io.OutputStream
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.zip.{CRC32, Deflater, Inflater}
 
 /** Splittable BGZF (bgzip) text reader/writer.
@@ -30,6 +31,14 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   *     owned newline;
   *   - a reader whose owned blocks contain no newline (a range fully
   *     inside one giant line) emits nothing.
+  *
+  * Every read goes through one line cursor ([[Cursor]]), as every htslib
+  * read goes through `bgzf_getline`: the scan's split reader
+  * ([[splitLines]]), the driver-local tabix lookup ([[chunkLines]]) and
+  * the tabix builder's walk ([[splitLinesWithOffsets]]) are short loops
+  * over it, so they cut lines and compute virtual offsets alike. A line
+  * is decoded as UTF-8 once, whatever blocks it crosses, and loses one
+  * '\r' before its end, so a CRLF file reads like its LF form.
   */
 object Bgzf {
 
@@ -111,141 +120,188 @@ object Bgzf {
     } finally in.close()
   }
 
-  /** The raw bytes of the member at `at` (where `in` is positioned),
-    * leaving `in` at the next member. Sequential reads
-    * only: a positional read on a checksummed FS opens a fresh checker
-    * (the data file and its .crc) per call. */
-  private def readMember(in: FSDataInputStream, at: Long, fileLen: Long,
-                         path: String): Array[Byte] = {
-    val hdr = new Array[Byte](18)
-    in.readFully(hdr, 0, math.min(18L, fileLen - at).toInt)
-    val sz = memberSize(hdr, 0)
-    require(sz >= 26, s"not a BGZF block at offset $at of $path")
-    val raw = java.util.Arrays.copyOf(hdr, sz)
-    in.readFully(raw, 18, sz - 18)
-    raw
+  /** The one BGZF line reader, htslib's `bgzf_getline` as a class: it
+    * reads members sequentially from one stream (a positional read on a
+    * checksummed FS opens a fresh checker, the data file and its .crc, per
+    * call), inflates them, and cuts lines at '\n'. A line inside one block
+    * is decoded straight from the inflated block; a line that crosses
+    * blocks is gathered as bytes and decoded once, so a UTF-8 character
+    * split by a block edge survives. One '\r' ending a line is dropped
+    * (htslib's rule), so a CRLF file reads like its LF form. [[offset]] is
+    * the virtual offset (coffset<<16 | uoffset) of the next byte within
+    * the current block, which a line ending its block leaves at that
+    * block's end: the chunk coordinates a tabix index records. */
+  private final class Cursor(conf: Configuration, path: String) extends AutoCloseable {
+    private val (in, fileLen) = {
+      val p = new Path(path)
+      val fs = p.getFileSystem(conf)
+      val n = fs.getFileStatus(p).getLen
+      (fs.open(p), n)
+    }
+    private val inflater = new Inflater(true) // raw deflate: no member header/trailer
+    private val hdr = new Array[Byte](18)
+    private val raw = new Array[Byte](MaxBlock)
+    private val data = new Array[Byte](MaxBlock) // the current block, inflated
+    private var len = 0 // inflated bytes in `data`
+    private var pos = 0 // the next unread byte of `data`
+    private var next = 0L // compressed offset of the member after `block`
+    private var acc = new Array[Byte](256) // a line that crosses blocks
+    /** Compressed offset of the current block (-1 before the first). */
+    var block = -1L
+    /** Whether the last [[readLine]] ended at a '\n' rather than at EOF. */
+    var newline = false
+
+    def offset: Long = (block << 16) | pos
+
+    /** Reads and inflates the member at `at` (an empty one, such as the
+      * EOF marker, leaves no data). */
+    private def load(at: Long): Unit = {
+      if (in.getPos != at) in.seek(at)
+      val sz = if (fileLen - at < 18) -1 else { in.readFully(hdr); memberSize(hdr, 0) }
+      require(sz >= 26, s"not a BGZF block at offset $at of $path")
+      System.arraycopy(hdr, 0, raw, 0, 18)
+      in.readFully(raw, 18, sz - 18)
+      def le(i: Int) = raw(i) & 0xff
+      val xlen = le(10) | (le(11) << 8)
+      val isize = le(sz - 4) | (le(sz - 3) << 8) | (le(sz - 2) << 16) | (le(sz - 1) << 24)
+      var n = 0
+      if (isize != 0) {
+        inflater.reset()
+        inflater.setInput(raw, 12 + xlen, sz - 12 - xlen - 8)
+        while (n < isize && n < MaxBlock && !inflater.finished() && !inflater.needsInput())
+          n += inflater.inflate(data, n, MaxBlock - n)
+        require(n == isize, s"short inflate at offset $at of $path")
+      }
+      block = at
+      next = at + sz
+      len = n
+      pos = 0
+    }
+
+    /** Positions before the first block that starts at or after
+      * compressed offset `from`. */
+    def seekBlock(from: Long): Unit = {
+      next = if (from == 0L) 0L else findBlockStart(in, from, fileLen)
+      len = 0
+      pos = 0
+    }
+
+    /** Positions at virtual offset `v`; true when a line starts there: the
+      * byte before it is a '\n' or the file's start. */
+    def seek(v: Long): Boolean = {
+      val blk = v >>> 16
+      val off = (v & 0xffff).toInt
+      val startsLine = off > 0 || blk == 0L || { val b = byteBefore(blk); b == '\n' || b == -1 }
+      if (blk != block) load(blk)
+      pos = off
+      startsLine && off <= len && (off == 0 || data(off - 1) == '\n')
+    }
+
+    /** The last inflated byte before block `blk` (-1 when only empty
+      * members precede it within MaxBlock): blocks are walked forward from
+      * the first one found in the MaxBlock before `blk`, which the previous
+      * block must start in. -2 when the walk misses `blk`. */
+    private def byteBefore(blk: Long): Int = {
+      var b = findBlockStart(in, math.max(0L, blk - MaxBlock), fileLen)
+      var last = -1
+      while (b < blk) {
+        load(b)
+        if (len > 0) last = data(len - 1) & 0xff
+        b = next
+      }
+      if (b == blk) last else -2
+    }
+
+    /** Moves past consumed and empty blocks; false at EOF. */
+    def haveData: Boolean = {
+      while (pos >= len && next < fileLen) load(next)
+      pos < len
+    }
+
+    private def eol(): Int = {
+      var i = pos
+      while (i < len && data(i) != '\n') i += 1
+      i
+    }
+
+    /** Skips through the next '\n' that lies in a block starting before
+      * `limit`; false when there is none. */
+    def skipLine(limit: Long): Boolean = {
+      while (haveData && block < limit) {
+        val i = eol()
+        if (i < len) { pos = i + 1; return true }
+        pos = len
+      }
+      false
+    }
+
+    /** The next line, without its '\n' and one '\r' before it ("" at EOF). */
+    def readLine(): String = {
+      val i = eol()
+      newline = i < len
+      if (newline) { val s = pos; pos = i + 1; return decode(data, s, i - s) }
+      var n = 0
+      while (!newline && haveData) {
+        val j = eol()
+        newline = j < len
+        if (n + j - pos > acc.length)
+          acc = java.util.Arrays.copyOf(acc, math.max(2 * acc.length, n + j - pos))
+        System.arraycopy(data, pos, acc, n, j - pos)
+        n += j - pos
+        pos = if (newline) j + 1 else len
+      }
+      decode(acc, 0, n)
+    }
+
+    private def decode(b: Array[Byte], from: Int, n: Int): String =
+      new String(b, from, if (n > 0 && b(from + n - 1) == '\r') n - 1 else n, UTF_8)
+
+    override def close(): Unit = try in.close() finally inflater.end()
   }
 
-  /** Inflated payload of one raw member (empty for the EOF marker). */
-  private def inflate(raw: Array[Byte], at: Long, path: String): Array[Byte] = {
-    val sz = raw.length
-    val xlen = (raw(10) & 0xff) | ((raw(11) & 0xff) << 8)
-    val isize = (raw(sz - 4) & 0xff) | ((raw(sz - 3) & 0xff) << 8) |
-      ((raw(sz - 2) & 0xff) << 16) | ((raw(sz - 1) & 0xff) << 24)
-    if (isize == 0) return Array.emptyByteArray
-    val out = new Array[Byte](isize)
-    val inf = new Inflater(true) // raw deflate: no member header/trailer
-    inf.setInput(raw, 12 + xlen, sz - 12 - xlen - 8)
-    var n = 0
-    while (n < isize && !inf.finished()) n += inf.inflate(out, n, isize - n)
-    inf.end()
-    require(n == isize, s"short inflate at offset $at of $path")
-    out
-  }
+  /** What `step` yields until it returns null, closing `res` then or at an
+    * early `close()` (e.g. a LIMIT query's PartitionReader). */
+  private[sources] def closingIterator[A <: AnyRef](res: AutoCloseable)(step: => A)
+      : Iterator[A] with AutoCloseable =
+    new Iterator[A] with AutoCloseable {
+      private var pending: A = _
+      private var closed = false
+      override def hasNext: Boolean = {
+        if (pending == null && !closed) {
+          pending = step
+          if (pending == null) close()
+        }
+        pending != null
+      }
+      override def next(): A = {
+        if (!hasNext) throw new NoSuchElementException
+        val r = pending; pending = null.asInstanceOf[A]; r
+      }
+      override def close(): Unit = if (!closed) { closed = true; res.close() }
+    }
 
   /** One split's lines under the single-owner rule above: the VCF
     * scan's BGZF partition reader. */
   private[sources] def splitLines(conf: Configuration, path: String,
                                   start: Long, end: Long): Iterator[String] with AutoCloseable = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val fileLen = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-
-    new Iterator[String] with AutoCloseable {
-      private var nextBlockStart = if (start == 0L) 0L else findBlockStart(in, start, fileLen)
-      // one seek, then members are read sequentially from this stream
-      if (nextBlockStart > 0L && nextBlockStart < fileLen) in.seek(nextBlockStart)
-      private var curBlockStart = -1L
-      private var buf: Array[Byte] = Array.emptyByteArray
-      private var bufPos = 0
-      private var closed = false
-      private var done = false
-      // start == 0: the file start acts as an owned preceding newline
-      private var skipped = start == 0L
-      private var pending: String = _
-
-      /** Inflate the next non-empty block into `buf`; false at EOF. */
-      private def pullBlock(): Boolean = {
-        while (nextBlockStart < fileLen) {
-          val blockStart = nextBlockStart
-          val raw = readMember(in, blockStart, fileLen, path)
-          nextBlockStart += raw.length
-          val out = inflate(raw, blockStart, path)
-          if (out.nonEmpty) {
-            curBlockStart = blockStart
-            buf = out
-            bufPos = 0
-            return true
-          }
-          // zero-length member (the 28-byte EOF marker): skip
-        }
-        false
+    val cur = new Cursor(conf, path)
+    var started = false
+    var done = false
+    closingIterator(cur) {
+      if (!started) {
+        started = true
+        cur.seekBlock(start)
+        // start == 0: the file start acts as an owned preceding newline
+        done = start > 0L && !cur.skipLine(end)
       }
-
-      private def haveData: Boolean = bufPos < buf.length || pullBlock()
-
-      /** Skip through the first newline in an OWNED block. False when the
-        * owned range holds no newline (nothing to emit for this split). */
-      private def skipToFirstOwnedNewline(): Boolean = {
-        while (haveData) {
-          if (curBlockStart >= end) return false // first newline is not ours
-          var i = bufPos
-          while (i < buf.length && buf(i) != '\n') i += 1
-          if (i < buf.length) { bufPos = i + 1; return true }
-          bufPos = buf.length
-        }
-        false
-      }
-
-      /** Next line begun by an owned newline; null when exhausted. Reads
-        * past `end` to finish a straddling line; stops after the line whose
-        * PRECEDING newline was the last owned one. */
-      private def advance(): String = {
-        if (done) return null
-        if (!skipped) {
-          skipped = true
-          if (!skipToFirstOwnedNewline()) { done = true; return null }
-        }
-        if (!haveData) { done = true; return null }
-        val sb = new java.lang.StringBuilder(96)
-        var terminatorBlock = -1L
-        var found = false
-        while (!found && haveData) {
-          var i = bufPos
-          while (i < buf.length && buf(i) != '\n') i += 1
-          sb.append(new String(buf, bufPos, i - bufPos, "UTF-8"))
-          if (i < buf.length) {
-            bufPos = i + 1
-            terminatorBlock = curBlockStart
-            found = true
-          } else bufPos = buf.length
-        }
+      if (done || !cur.haveData) null
+      else {
+        val l = cur.readLine()
         // EOF without newline, or the terminating newline is past our
-        // range: the NEXT line (if any) belongs to a later reader
-        if (!found || terminatorBlock >= end) done = true
-        sb.toString
+        // range: the next line (if any) belongs to a later reader
+        done = !cur.newline || cur.block >= end
+        l
       }
-
-      override def hasNext: Boolean = {
-        if (pending == null && !closed) {
-          pending = advance()
-          if (pending == null) { closed = true; in.close() }
-        }
-        pending != null
-      }
-
-      override def next(): String = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = pending
-        pending = null
-        r
-      }
-
-      /** Early-termination hook (e.g. a LIMIT query's PartitionReader):
-        * releases the FS stream before exhaustion. */
-      override def close(): Unit =
-        if (!closed) { closed = true; in.close() }
     }
   }
 
@@ -258,140 +314,21 @@ object Bgzf {
     * and offset rather than parse a line fragment. */
   private[sources] def chunkLines(conf: Configuration, path: String,
                                   chunks: Seq[(Long, Long)]): Iterator[String] with AutoCloseable = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val fileLen = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-
-    new Iterator[String] with AutoCloseable {
-      private val todo = chunks.iterator
-      private var end = -1L // the current chunk's end; -1 between chunks
-      private var curBlockStart = -1L
-      private var nextBlockStart = 0L
-      private var buf: Array[Byte] = Array.emptyByteArray
-      private var bufPos = 0
-      private var pending: String = _
-      private var closed = false
-
-      private def load(at: Long): Unit = {
-        if (in.getPos != at) in.seek(at)
-        val raw = readMember(in, at, fileLen, path)
-        curBlockStart = at
-        nextBlockStart = at + raw.length
-        buf = inflate(raw, at, path)
-        bufPos = 0
-      }
-
-      /** Moves past consumed and empty blocks; false at EOF. */
-      private def haveData: Boolean = {
-        while (bufPos >= buf.length && nextBlockStart < fileLen) load(nextBlockStart)
-        bufPos < buf.length
-      }
-
-      /** The last inflated byte before block `blk` (-1 when only empty
-        * members precede it within MaxBlock): blocks are walked forward
-        * from the first one found in the MaxBlock before `blk`, which the
-        * previous block must start in. -2 when the walk misses `blk`. */
-      private def byteBefore(blk: Long): Int = {
-        var b = findBlockStart(in, math.max(0L, blk - MaxBlock), fileLen)
-        var last = -1
-        while (b < blk) {
-          in.seek(b)
-          val raw = readMember(in, b, fileLen, path)
-          val out = inflate(raw, b, path)
-          if (out.nonEmpty) last = out.last & 0xff
-          b += raw.length
-        }
-        if (b == blk) last else -2
-      }
-
-      private def startChunk(u: Long, v: Long): Unit = {
-        val blk = u >>> 16
-        val off = (u & 0xffff).toInt
-        val atLineStart = off > 0 || blk == 0L || {
-          val b = byteBefore(blk); b == '\n' || b == -1
-        }
-        if (blk != curBlockStart) load(blk)
-        require(atLineStart && off <= buf.length && (off == 0 || buf(off - 1) == '\n'),
-          s"tabix chunk at virtual offset $u of $path does not start a line: " +
+    val cur = new Cursor(conf, path)
+    val todo = chunks.iterator
+    var end = -1L // the current chunk's end; -1 between chunks
+    closingIterator(cur) {
+      var l: String = null
+      while (l == null && (end >= 0 || todo.hasNext)) {
+        if (end < 0) {
+          val (u, v) = todo.next()
+          require(cur.seek(u), s"tabix chunk at virtual offset $u of $path does not start a line: " +
             "the index does not match the file")
-        bufPos = off
-        end = v
-      }
-
-      private def readLine(): String = {
-        val sb = new java.lang.StringBuilder(96)
-        var found = false
-        while (!found && haveData) {
-          var i = bufPos
-          while (i < buf.length && buf(i) != '\n') i += 1
-          sb.append(new String(buf, bufPos, i - bufPos, "UTF-8"))
-          found = i < buf.length
-          bufPos = if (found) i + 1 else buf.length
+          end = v
         }
-        sb.toString
+        if (cur.haveData && cur.offset < end) l = cur.readLine() else end = -1L
       }
-
-      private def advance(): String = {
-        while (end >= 0 || todo.hasNext) {
-          if (end < 0) { val (u, v) = todo.next(); startChunk(u, v) }
-          if (haveData && ((curBlockStart << 16) | bufPos) < end) return readLine()
-          end = -1L
-        }
-        null
-      }
-
-      override def hasNext: Boolean = {
-        if (pending == null && !closed) {
-          pending = advance()
-          if (pending == null) close()
-        }
-        pending != null
-      }
-
-      override def next(): String = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = pending; pending = null; r
-      }
-
-      override def close(): Unit = if (!closed) { closed = true; in.close() }
-    }
-  }
-
-  /** Sequential (blockStart, inflated bytes) iterator over a whole BGZF
-    * file — the builder-side walk for tabix indexing (one streaming pass,
-    * no ownership rule needed). */
-  private[sources] def blocks(conf: Configuration, path: String)
-      : Iterator[(Long, Array[Byte])] with AutoCloseable = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val fileLen = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    new Iterator[(Long, Array[Byte])] with AutoCloseable {
-      private var nextBlockStart = 0L
-      private var pending: (Long, Array[Byte]) = _
-      private var closed = false
-
-      private def pull(): Unit = {
-        while (pending == null && nextBlockStart < fileLen) {
-          val blockStart = nextBlockStart
-          val raw = readMember(in, blockStart, fileLen, path)
-          nextBlockStart += raw.length
-          val out = inflate(raw, blockStart, path)
-          if (out.nonEmpty) pending = (blockStart, out)
-        }
-        if (pending == null) close()
-      }
-
-      override def hasNext: Boolean = {
-        if (pending == null && !closed) pull()
-        pending != null
-      }
-      override def next(): (Long, Array[Byte]) = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = pending; pending = null; r
-      }
-      override def close(): Unit = if (!closed) { closed = true; in.close() }
+      l
     }
   }
 
@@ -400,66 +337,10 @@ object Bgzf {
     * the chunk coordinates a tabix index records. */
   private[sources] def splitLinesWithOffsets(conf: Configuration, path: String)
       : Iterator[(String, Long, Long)] with AutoCloseable = {
-    val blk = blocks(conf, path)
-    new Iterator[(String, Long, Long)] with AutoCloseable {
-      private var cur: (Long, Array[Byte]) = _
-      private var pos = 0
-      private var pending: (String, Long, Long) = _
-      private var lineStart = -1L
-      private var endV = 0L
-      private val acc = new java.io.ByteArrayOutputStream(128)
-      private var closed = false
-
-      private def ensureBlock(): Boolean = {
-        while ((cur == null || pos >= cur._2.length) && blk.hasNext) {
-          cur = blk.next(); pos = 0
-        }
-        cur != null && pos < cur._2.length
-      }
-
-      private def advance(): (String, Long, Long) = {
-        if (!ensureBlock())
-          return if (lineStart >= 0 && acc.size() > 0) {
-            val r = (acc.toString("UTF-8"), lineStart, endV) // no trailing \n
-            acc.reset(); lineStart = -1L
-            r
-          } else null
-        if (lineStart < 0) lineStart = (cur._1 << 16) | pos
-        var result: (String, Long, Long) = null
-        while (result == null) {
-          val data = cur._2
-          var i = pos
-          while (i < data.length && data(i) != '\n') i += 1
-          acc.write(data, pos, i - pos)
-          if (i < data.length) {
-            pos = i + 1
-            endV = (cur._1 << 16) | pos
-            result = (acc.toString("UTF-8"), lineStart, endV)
-            acc.reset(); lineStart = -1L
-          } else {
-            pos = data.length
-            endV = (cur._1 << 16) | pos
-            if (!ensureBlock()) {
-              result = (acc.toString("UTF-8"), lineStart, endV)
-              acc.reset(); lineStart = -1L
-            }
-          }
-        }
-        result
-      }
-
-      override def hasNext: Boolean = {
-        if (pending == null && !closed) {
-          pending = advance()
-          if (pending == null) close()
-        }
-        pending != null
-      }
-      override def next(): (String, Long, Long) = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = pending; pending = null; r
-      }
-      override def close(): Unit = if (!closed) { closed = true; blk.close() }
+    val cur = new Cursor(conf, path)
+    closingIterator(cur) {
+      if (!cur.haveData) null
+      else { val b = cur.offset; val l = cur.readLine(); (l, b, cur.offset) }
     }
   }
 

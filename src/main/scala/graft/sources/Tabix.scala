@@ -39,7 +39,6 @@ object Tabix {
 
   val Suffix = ".tbi"
   private val LinearShift = 14 // 16 kb linear windows
-  private val MaxPos = 1L << 29 // the 5-level bin scheme addresses 512 Mb
 
   /** One reference sequence's index: bin → chunks (virtual offsets),
     * linear 16 kb window → min virtual offset. `loffsets` is CSI's

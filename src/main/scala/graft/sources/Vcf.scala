@@ -303,8 +303,6 @@ object Vcf {
     * whole scan on one malformed or '.'-marked value (the reference's
     * frame building tolerates them as missing). */
   def infoLong(name: String): Column = element_at(col("info"), name).try_cast("long")
-  def infoDouble(name: String): Column = element_at(col("info"), name).try_cast("double")
-  def infoFlag(name: String): Column = map_contains_key(col("info"), name)
 
   /** get_vcf_df's `custom_info_fields` (sv_stats_collect.py:34-36): project
     * INFO keys to typed, LOWER-CASED columns in one pass. Supported types:

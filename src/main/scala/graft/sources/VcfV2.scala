@@ -430,8 +430,7 @@ case class VcfReaderFactory(hadoopConf: Broadcast[SerializableConfiguration],
     val conf = hadoopConf.value.value
     val lines = p.kind match {
       case VcfPartition.Bgzf => Bgzf.splitLines(conf, p.path, p.start, p.end)
-      case VcfPartition.Gzip => VcfLineParser.gzipLines(conf, p.path)
-      case _ => VcfLineParser.textSplitLines(conf, p.path, p.start, p.end)
+      case _ => VcfLineParser.textLines(conf, p)
     }
     new VcfPartitionReader(lines, sampleIndex, pushed, fields, infoFields)
   }
@@ -1049,68 +1048,26 @@ object VcfLineParser {
     if (s == null) null
     else new GenericArrayData(s.split(",", -1).map(x => toIntOrNull(x)).toArray[Any])
 
-  /** Whole-file gzip line iterator (plain gzip only; BGZF takes the
-    * splittable path). */
-  def gzipLines(conf: Configuration, path: String): Iterator[String] with AutoCloseable = {
-    val p = new Path(path)
-    val in = new java.util.zip.GZIPInputStream(p.getFileSystem(conf).open(p))
-    val br = new java.io.BufferedReader(
-      new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-    new Iterator[String] with AutoCloseable {
-      private var pending: String = _
-      private var closed = false
-      override def hasNext: Boolean = {
-        if (pending == null && !closed) {
-          pending = br.readLine()
-          if (pending == null) close()
-        }
-        pending != null
-      }
-      override def next(): String = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = pending; pending = null; r
-      }
-      override def close(): Unit = if (!closed) { closed = true; br.close() }
-    }
-  }
-
-  /** Plain-text byte-range line iterator: split `[start, end)` owns the
-    * lines whose first byte lies in `(start, end]` (from byte 0 when
-    * `start == 0`) — the standard Hadoop LineRecordReader convention, so
-    * ranges tile a file exactly once. */
-  def textSplitLines(conf: Configuration, path: String,
-                     start: Long, end: Long): Iterator[String] with AutoCloseable = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    in.seek(start)
-    val lr = new LineReader(in)
+  /** Lines of a plain-text split or of a whole plain-gzip file, cut by
+    * Hadoop's `LineReader` (a line ends at '\n', '\r' or "\r\n", and keeps
+    * none of them). A text split [start, end) owns the lines whose first
+    * byte lies in (start, end], from byte 0 when start == 0: the
+    * LineRecordReader convention, so splits tile a file exactly once. A
+    * gzip partition reads its whole file through a `GZIPInputStream`. */
+  def textLines(conf: Configuration, part: VcfPartition): Iterator[String] with AutoCloseable = {
+    val p = new Path(part.path)
+    val raw = p.getFileSystem(conf).open(p)
+    val gzip = part.kind == VcfPartition.Gzip
+    val lr = new LineReader(
+      if (gzip) new java.util.zip.GZIPInputStream(raw, 1 << 16) else { raw.seek(part.start); raw })
+    val end = if (gzip) Long.MaxValue else part.end
     val text = new Text()
-    var pos = start
-    if (start != 0) pos += lr.readLine(text) // discard the straddler's tail
-
-    new Iterator[String] with AutoCloseable {
-      private var pending: String = _
-      private var closed = false
-
-      override def hasNext: Boolean = {
-        if (pending == null && !closed) {
-          if (pos > end) close()
-          else {
-            val n = lr.readLine(text)
-            if (n == 0) close()
-            else { pending = text.toString; pos += n }
-          }
-        }
-        pending != null
-      }
-
-      override def next(): String = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = pending; pending = null; r
-      }
-
-      override def close(): Unit = if (!closed) { closed = true; in.close() }
+    var pos = part.start
+    if (pos != 0) pos += lr.readLine(text) // discard the straddler's tail
+    Bgzf.closingIterator(lr) {
+      val n = if (pos > end) 0 else lr.readLine(text)
+      pos += n
+      if (n == 0) null else text.toString
     }
   }
 }

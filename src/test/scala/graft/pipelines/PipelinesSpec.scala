@@ -28,6 +28,24 @@ class PipelinesSpec extends SparkSpec {
     assert(out(50) == 2 && out(5) == 1 && out(95) == 4)
   }
 
+  test("CoverageAnalysis: histogramIn counts the depth rows inside the regions") {
+    // coverage = position % 7 on two contigs; regions overlap each other,
+    // cross 50 bp bins and miss a contig
+    val depth = (for (c <- Seq("A", "B"); p <- 0L until 300L)
+      yield (c, p, p + 1, (p % 7).toDouble)).toDF("chrom", "start", "end", "coverage")
+    val regions = Seq(("A", 10L, 60L), ("A", 40L, 140L), ("A", 290L, 400L), ("C", 0L, 50L))
+    val hist = CoverageAnalysis.histogramIn(depth, regions.toDF("chrom", "bstart", "bend"), binSize = 50L)
+    val inside = regions.map { case (c, b, e) =>
+      col("chrom") === c && col("start") < e && col("end") > b
+    }.reduce(_ || _)
+    val want = depth.filter(inside).groupBy(col("coverage").cast("int").as("coverage"))
+      .agg(count(lit(1)).as("count"))
+    def counts(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    assert(counts(hist) == counts(want))
+    assert(counts(hist).values.sum == 140L)
+  }
+
   test("Concordance: stratified accuracy metrics in one shuffle") {
     val df = Seq(
       // (indel, hmer_len, tp, fp, fn)

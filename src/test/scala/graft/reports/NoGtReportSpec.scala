@@ -32,6 +32,28 @@ class NoGtReportSpec extends SparkSpec {
     assert(ih(("ins", "het", 2L)) == 1L && ih(("del", "hom", 3L)) == 1L)
   }
 
+  test("ingestVariantEval registers each VariantEval table as an eval_<table> view") {
+    val report = java.nio.file.Files.createTempDirectory("graftnogt").resolve("eval.txt")
+    java.nio.file.Files.writeString(report, Seq(
+      "#:GATKReport.v1.1:2",
+      "#:GATKTable:CompOverlap:The overlap between eval and comp sites",
+      "CompOverlap  CompFeatureInput  nEvalVariants",
+      "CompOverlap  dbsnp             1000",
+      "CompOverlap  none              1200",
+      "",
+      "#:GATKTable:CountVariants:Counts different classes of variants",
+      "CountVariants  nSNPs  nIndels",
+      "CountVariants  800    200").mkString("\n"))
+    val tables = NoGtReport.ingestVariantEval(spark, report.toString)
+    assert(tables.keySet == Set("CompOverlap", "CountVariants"))
+    val snps = spark.sql("SELECT CAST(nSNPs AS INT) + CAST(nIndels AS INT) FROM eval_CountVariants")
+    assert(snps.collect().map(_.getInt(0)).toSeq == Seq(1000))
+    val overlap = spark.sql(
+      "SELECT CompFeatureInput, nEvalVariants FROM eval_CompOverlap ORDER BY CompFeatureInput")
+    assert(overlap.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("dbsnp", "1000"), ("none", "1200")))
+  }
+
   test("allele_freq_hist golden (test_run_no_gt_report.py:15-30)") {
     val df = Seq(
       (0.1, "snp"), (0.2, "snp"), (0.3, "h-indel"),

@@ -5,7 +5,7 @@ import java.nio.file.Files
 
 /** Which files a VCF load reads: recursive directories, sidecars skipped,
   * and a path that matches nothing. */
-class VcfIndexSpec extends SparkSpec {
+class VcfDataFilesSpec extends SparkSpec {
 
   private def header = Seq("##fileformat=VCFv4.2",
     "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1")
