@@ -13,7 +13,8 @@ import scala.collection.immutable.ListMap
   *
   * The stdout line fits a ~2,000-char tail capture ([[MaxStdoutLine]]);
   * the complete per-query record goes to BENCH_LOCAL_<sf>_c<cores>.json
-  * (or SPARK_GRAFT_BENCH_OUT). Timing a few
+  * (or SPARK_GRAFT_BENCH_OUT). Both carry the run's memory: `peak_rss_mb`
+  * and the session's `page_bytes` and `broadcast_block_bytes`. Timing a few
   * queries, or splitting a query into construction, jobs and CPU, is
   * perfbench's `graftbench.Main --workload queries` (perfbench/BENCH.md).
   */
@@ -43,16 +44,11 @@ object Bench {
   def coldReset(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.catalog.clearCache()
 
-  /** Max stdout-line length. The driver keeps only a ~2,000-char tail of
-    * stdout (an sbt "[success] ..." line eats ~80 of it); every BENCH_rNN
-    * artifact from r10 to r17 had `parsed: null` because the full one-line
-    * JSON grew to ~6 KB and was kept front-truncated. 108 per-query
-    * entries are >= ~2.5 KB even rounded and bare (sum of the query-name
-    * lengths alone is 1,666 chars), so the per-query map CANNOT fit: the stdout line carries the summary (metric/value/n_queries/
-    * n_errors/errors/cores/cpus_env/sf) plus an "artifact" path to the
-    * complete per-query file, and inlines the queries map only when the
-    * whole line still fits. BenchHealSpec pins the emitted length against
-    * this cap with the real query inventory. */
+  /** Max stdout-line length, within a ~2,000-char tail capture. The 108
+    * per-query entries alone are over 2.5 KB, so the stdout line inlines
+    * the queries map only when it fits and otherwise carries the summary
+    * and an "artifact" path to the complete file. BenchStdoutSpec pins the
+    * length with the real query inventory. */
   val MaxStdoutLine: Int = 1900
 
   private def jmap(m: Iterable[(String, String)]): String =
@@ -87,18 +83,21 @@ object Bench {
     * file line when it fits [[MaxStdoutLine]] and otherwise the summary
     * form with the `artifact` pointer, its error messages trimmed and then
     * dropped (`n_errors` stays) if they alone overflow. Pure so
-    * BenchHealSpec can prove the length contract offline. */
+    * BenchStdoutSpec can prove the length contract offline. `memory`
+    * fields render as integers, or null where unknown. */
   def renderBench(
       results: scala.collection.Map[String, Double],
       errors: scala.collection.Map[String, String],
       cores: Int, cpusEnv: String, jvmProcs: Int,
-      sf: String, artifact: String): (String, String) = {
+      sf: String, artifact: String,
+      memory: Seq[(String, Option[Long])] = Nil): (String, String) = {
     def errJson(cap: Int) =
       jmap(errors.map { case (k, v) => k -> ("\"" + escapeJson(v.take(cap)) + "\"") })
     val head = s"""{"metric":"total","value":${r3(results.values.sum)},"unit":"sec",""" +
       s""""n_queries":${results.size},"n_errors":${errors.size}"""
     val rest =
       s""""cores":$cores,"cpus_env":"${escapeJson(cpusEnv)}","jvm_procs":$jvmProcs,""" +
+      memory.map { case (k, v) => s""""$k":${v.getOrElse("null")},""" }.mkString +
       s""""artifact":"${escapeJson(artifact)}","sf":"${escapeJson(sf)}"}"""
     val qs = jmap(results.map { case (k, v) => k -> r3(v) })
     val full = s"""$head,"queries":$qs,"errors":${errJson(Int.MaxValue)},$rest"""
@@ -111,6 +110,15 @@ object Bench {
       .find(_.length <= MaxStdoutLine).getOrElse(s"""$head,$rest""")
     (full, stdout)
   }
+
+  /** This process's peak resident set (VmHWM) in MiB; None where
+    * /proc/self/status is absent. */
+  def peakRssMb(): Option[Long] = scala.util.Try {
+    val src = scala.io.Source.fromFile("/proc/self/status")
+    try src.getLines().collectFirst {
+      case l if l.startsWith("VmHWM:") => l.split("\\s+")(1).toLong / 1024
+    } finally src.close()
+  }.toOption.flatten
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -135,17 +143,16 @@ object Bench {
       case (n, f) => n -> (() => f(spark, sfDir).write.format("noop").mode("overwrite").save())
     })
 
-    // out path carries the run config (sf + cores) by default so a driver
-    // rerun at another core count can never clobber a committed same-name
-    // artifact (VERDICT r17 #2); SPARK_GRAFT_BENCH_OUT still overrides
+    // the run config (sf + cores) in the name: a rerun elsewhere cannot clobber it
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"/root/repo/BENCH_LOCAL_${new java.io.File(sfDir).getName}_c$cores.json")
+    val conf = spark.sparkContext.getConf
+    def bytes(k: String) = if (conf.contains(k)) Some(conf.getSizeAsBytes(k)) else None
     val (fullJson, stdoutLine) = renderBench(results, errors, cores, cpusEnv,
-      Runtime.getRuntime.availableProcessors(), sfDir, out)
-    // stdout is the driver contract and the driver keeps only a ~2,000-char
-    // tail — renderBench emits the summary form (with the "artifact"
-    // pointer) whenever the full per-query line cannot fit; the file below
-    // is the complete record the pointer names
+      Runtime.getRuntime.availableProcessors(), sfDir, out, Seq("peak_rss_mb" -> peakRssMb(),
+        "page_bytes" -> bytes("spark.buffer.pageSize"),
+        "broadcast_block_bytes" -> bytes("spark.broadcast.blockSize")))
+    // the stdout contract line, then the complete record it points to
     println(stdoutLine)
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), fullJson + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] write $out: ${e.getMessage}") }

@@ -26,7 +26,8 @@ import scala.collection.mutable.ArrayBuffer
   * decides the algorithm at run time from the edge count: at most `cap`
   * edges resolve by union-find on the driver (exact: no round limit
   * applies), more run the distributed rounds of
-  * [[ConnectedComponents.rounds]], which stop after `maxIter`. */
+  * [[ConnectedComponents.rounds]], which fail if `maxIter` rounds do not
+  * reach the fixpoint. */
 case class ConnectedComponents(src: Expression, dst: Expression, output: Seq[Attribute],
                                child: LogicalPlan, cap: Int, maxIter: Int) extends UnaryNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
@@ -283,9 +284,10 @@ object ConnectedComponents {
   /** Distributed min-label propagation over `pairs`' (doc_a, doc_b)
     * edges: each round joins labels across edges and keeps the elementwise
     * min — O(diameter) rounds of hash joins, pointer jumping between
-    * them, so it scales to billions of edges. Runs until fixpoint or
-    * `maxIter`. The exec's arm for graphs over the union-find cap: the
-    * labels and the rounds run. `pairs` has no null end; `released` is
+    * them, so it scales to billions of edges. Runs until fixpoint, and
+    * fails, naming `maxIter`, if `maxIter` rounds do not reach it. The
+    * exec's arm for graphs over the union-find cap: the labels and the
+    * rounds run. `pairs` has no null end; `released` is
     * called once the rounds' own copy of the edges is materialized. */
   private[operators] def rounds(pairs: DataFrame, maxIter: Int,
                                 released: () => Unit): (DataFrame, Int) = {
@@ -341,6 +343,8 @@ object ConnectedComponents {
       iter += 1
     }
     edges.unpersist()
+    if (!converged) throw new IllegalStateException(
+      s"connected components did not converge within maxIter = $maxIter ($iter rounds run)")
     (labels, iter)
   }
 }

@@ -17,7 +17,7 @@ object Dedup {
 
   /** (id, component) for every id appearing in `pairs`; component = min id
     * reachable. Under the cap the result is the exact fixpoint; over it the
-    * rounds stop at `maxIter`. */
+    * rounds fail if `maxIter` of them do not reach it. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 10): DataFrame =
     ConnectedComponents.of(pairs, maxIter)
 

@@ -198,8 +198,9 @@ object Vcf {
     val f = split(col("value"), "\t")
     def fld(i: Int): Column = element_at(f, i)
 
-    val fmtKeys = split(element_at(f, 9), ":")
-    val fmtVals = split(element_at(f, 10 + sampleIndex), ":")
+    // a sites-only line has no FORMAT or sample column: null sample
+    val fmtKeys = split(try_element_at(f, lit(9)), ":")
+    val fmtVals = split(try_element_at(f, lit(10 + sampleIndex)), ":")
     val sample = sampleMap(fmtKeys, fmtVals)
 
     withSampleFields(lines.select(coreCols(fld) :+ sample.as("sample"): _*))

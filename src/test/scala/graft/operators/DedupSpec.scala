@@ -214,6 +214,13 @@ class DedupSpec extends SparkSpec {
     assert(comps.size == 40 && comps.values.forall(_ == 1L))
   }
 
+  test("rounds arm: a 40-node chain fails loudly when maxIter rounds do not converge") {
+    val chain40 = (1L until 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val e = intercept[Exception](ConnectedComponents.of(chain40, maxIter = 2, cap = 0).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(msgs.exists(m => m != null && m.contains("did not converge within maxIter = 2")), msgs)
+  }
+
   test("both arms give the same labels at 1 and 7 shuffle partitions and with AQE off") {
     val rnd = new scala.util.Random(7)
     val pairs = Seq.fill(150) {

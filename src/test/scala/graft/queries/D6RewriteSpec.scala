@@ -5,7 +5,7 @@ import graft.SparkSpec
 /** d6 checkpoints its cell assignments per call, so an in-place rewrite of
   * the embeddings table — whatever the sf dir's URI scheme — can never
   * serve assignments of the old vectors, and no frame outlives the call. */
-class D6FreshnessSpec extends SparkSpec {
+class D6RewriteSpec extends SparkSpec {
   import spark.implicits._
 
   private def writeEmbeddings(dir: java.nio.file.Path, seed: Int): Unit = {
@@ -21,7 +21,7 @@ class D6FreshnessSpec extends SparkSpec {
       .map(_.toSeq.mkString("|")).sorted.toSeq
 
   test("d6 recomputes after the embeddings are rewritten in place under a file: URI") {
-    val a = java.nio.file.Files.createTempDirectory("graft_d6fresh")
+    val a = java.nio.file.Files.createTempDirectory("graft_d6rewrite")
     writeEmbeddings(a, seed = 1)
     val uri = a.toUri.toString.stripSuffix("/")
     assert(uri.startsWith("file:"), uri)
@@ -32,7 +32,7 @@ class D6FreshnessSpec extends SparkSpec {
 
     writeEmbeddings(a, seed = 2)
     // the same vectors under a directory no earlier call has read
-    val b = java.nio.file.Files.createTempDirectory("graft_d6fresh")
+    val b = java.nio.file.Files.createTempDirectory("graft_d6rewrite")
     writeEmbeddings(b, seed = 2)
     val fresh = d6(b.toUri.toString.stripSuffix("/"))
     assert(fresh != before, "the two vector sets must give different pairs")

@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * frame population: the shingle sets are now at-rest tables, one store
   * per dataset, so nothing is persisted at all — and every dataset keeps
   * answering correctly when revisited. */
-class MemoLruSpec extends SparkSpec {
+class ManyDatasetsSpec extends SparkSpec {
   import spark.implicits._
 
   private def mkDataset(i: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_memo_$i")
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_many_$i")
     (1L to 30L).map(j => (j, s"dataset $i doc $j " +
         (1 to 10).map(k => s"w${(j + k) % 7}").mkString(" ")))
       .toDF("doc_id", "text")
@@ -21,7 +21,7 @@ class MemoLruSpec extends SparkSpec {
     dir.toString
   }
 
-  test("signature/shingle memos stay bounded across >cap datasets, one-at-a-time eviction") {
+  test("d2 and d8 over 11 datasets persist no frame, and a revisited dataset answers the same") {
     val dirs = (0 until 11).map(mkDataset)
     val before = spark.sparkContext.getPersistentRDDs.size
     def d2(d: String) =

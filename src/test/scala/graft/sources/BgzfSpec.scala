@@ -251,11 +251,25 @@ class BgzfSpec extends SparkSpec {
       val text = spark.read.format("vcf").option("split_bytes", "512").load(plain.toString)
       assert(text.rdd.getNumPartitions > 1)
       assertBothArms(gz.getAbsolutePath, text)
-      // Vcf.read needs a sample column
-      if (cols == 10) {
-        assert(rows(text) == rows(Vcf.read(spark, plain.toString)))
-        assertBothArms(gz.getAbsolutePath, Vcf.read(spark, gz.getAbsolutePath))
-      }
+      assert(rows(text) == rows(Vcf.read(spark, plain.toString)))
+      assertBothArms(gz.getAbsolutePath, Vcf.read(spark, gz.getAbsolutePath))
+    }
+  }
+
+  test("Vcf.read of a sites-only VCF, plain and bgzip, equals the vcf source") {
+    val lines = (vcfHeader.init :+ vcfHeader.last.split("\t").take(8).mkString("\t")) ++
+      (1 to 300).map(i => s"chr1\t${i * 10}\t.\tA\tT,G\t50\tPASS\tDP=$i;AF=0.5")
+    val dir = Files.createTempDirectory("graft_sites_only")
+    val plain = dir.resolve("t.vcf")
+    Files.writeString(plain, lines.mkString("", "\n", "\n"))
+    val gz = dir.resolve("t.vcf.gz").toFile
+    val out = new FileOutputStream(gz)
+    try Bgzf.write(lines.iterator, out, blockBytes = 512) finally out.close()
+    for (path <- Seq(plain.toString, gz.getAbsolutePath)) withClue(s"$path: ") {
+      val got = Vcf.read(spark, path)
+      assert(got.filter(col("sample").isNotNull).isEmpty)
+      assert(rows(got) == rows(spark.read.format("vcf").load(path)))
+      assert(got.count() == 300)
     }
   }
 
