@@ -600,14 +600,16 @@ object Tabix {
     val builder =
       if (kind == "csi") new Builder(LinearShift, CsiDepth) else new Builder
     val lines = Bgzf.splitLinesWithOffsets(conf, path)
+    val rec = new VcfRecord()
     try lines.foreach { case (line, vBeg, vEnd) =>
       if (!line.startsWith("#")) {
-        val f = VcfLineParser.headFields(line, 9)
-        val chrom = if (f.length > 0) f(0) else null
-        val pos = VcfLineParser.toLongOrNull(if (f.length > 1) f(1) else null)
+        rec.reset(line)
+        val chrom = rec.field(1)
+        val pos = VcfLineParser.toLongOrNull(rec.field(2))
         if (pos != null) {
-          val infoEnd = infoEndOf(if (f.length > 7) f(7) else null)
-          val (b, e) = vcfExtent(pos, if (f.length > 3) f(3) else null, infoEnd)
+          // END alone, not the record's INFO parse: an index build must
+          // not fail on a foreign file whose INFO repeats some other key
+          val (b, e) = vcfExtent(pos, rec.field(4), infoEndOf(rec.field(8)))
           builder.add(Feature(chrom, b, e, vBeg, vEnd))
         } else builder.addUnplaced(chrom, vBeg, vEnd)
       }

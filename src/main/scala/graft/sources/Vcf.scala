@@ -194,13 +194,14 @@ object Vcf {
   /** Parse a raw line frame (column `value`) into the single-sample
     * variant frame — shared by the batch and streaming text reads. */
   def fromLines(raw: DataFrame, sampleIndex: Int = 0): DataFrame = {
+    require(sampleIndex >= 0, s"vcf sampleIndex must be >= 0, got $sampleIndex")
     val lines = raw.filter(!col("value").startsWith("#"))
     val f = split(col("value"), "\t")
-    def fld(i: Int): Column = element_at(f, i)
+    def fld(i: Int): Column = try_element_at(f, lit(i))
 
     // a sites-only line has no FORMAT or sample column: null sample
-    val fmtKeys = split(try_element_at(f, lit(9)), ":")
-    val fmtVals = split(try_element_at(f, lit(10 + sampleIndex)), ":")
+    val fmtKeys = split(fld(9), ":")
+    val fmtVals = split(fld(10 + sampleIndex), ":")
     val sample = sampleMap(fmtKeys, fmtVals)
 
     withSampleFields(lines.select(coreCols(fld) :+ sample.as("sample"): _*))
@@ -233,15 +234,16 @@ object Vcf {
     // once per sample — O(width²) per record (a 1000-sample panel parsed
     // ~0.2 s/LINE; materialized it is ~milliseconds). The multi-reference
     // `_f` column keeps CollapseProject from re-inlining it.
+    def fld(i: Int): Column = try_element_at(col("_f"), lit(i))
     val wide = lines
       .withColumn("_f", split(col("value"), "\t"))
-      .withColumn("_keys", split(element_at(col("_f"), 9), ":"))
-    def fld(i: Int): Column = element_at(col("_f"), i)
+      .withColumn("_keys", split(fld(9), ":"))
     // greatest(..., 0): the slice must stay total — header lines can reach
-    // this projection before the '#' filter in the same codegen stage
-    val samples = transform(
+    // this projection before the '#' filter in the same codegen stage. A
+    // line with no sample column has null samples, as on the scan
+    val samples = when(size(col("_f")) >= 10, transform(
       slice(col("_f"), lit(10), greatest(size(col("_f")) - 9, lit(0))),
-      v => sampleMap(col("_keys"), split(v, ":")))
+      v => sampleMap(col("_keys"), split(v, ":"))))
     wide.select(coreCols(fld) :+ samples.as("samples"): _*)
   }
 
@@ -275,8 +277,7 @@ object Vcf {
     * try_cast, not cast: `.` is the VCF missing-value marker inside
     * FORMAT values (same convention QUAL handles explicitly), and under
     * ANSI mode a plain cast would throw on it — a missing/malformed
-    * sample value reads as null, identical to the v2 parser's
-    * toIntOrNull. */
+    * sample value reads as null, identical to the scan's [[VcfRecord]]. */
   private def withSampleFields(df: DataFrame): DataFrame =
     df.withColumn("gt",
         transform(split(regexp_replace(element_at(col("sample"), "GT"), "\\|", "/"), "/"),

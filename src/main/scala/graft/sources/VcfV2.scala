@@ -6,6 +6,7 @@ import org.apache.hadoop.io.Text
 import org.apache.hadoop.util.LineReader
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -17,24 +18,23 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import java.util
+import scala.annotation.switch
 import scala.jdk.CollectionConverters._
 
 /** VCF DataSourceV2: `spark.read.format("vcf").load(path)` with real
-  * scan-time (chrom, pos) predicate pushdown and column pruning — the
-  * reference's manual `bcftools view -r/-i` region restriction BEFORE
-  * parsing (correct_genotypes_by_imputation.py:141-148,
+  * scan-time predicate pushdown and column pruning — the reference's
+  * manual `bcftools view -r/-i` restriction BEFORE parsing
+  * (correct_genotypes_by_imputation.py:141-148,
   * train_lib_prep_recalibration_model.py:57), expressed as a Spark
   * `TableProvider` so Catalyst routes the filters down automatically.
   *
-  * Why it matters at scale: the expression path ([[Vcf.read]]) always
-  * splits all 10+N tab fields and builds the INFO map and FORMAT sample
-  * map for EVERY line before the region filter runs. Here a pushed region
-  * predicate is evaluated on a cheap two-field partial parse (chrom, pos)
-  * and non-matching lines skip the full parse entirely; pruned columns
-  * (`SupportsPushDownRequiredColumns`) skip whole parse stages (no INFO
-  * map for a (chrom,pos) projection, no FORMAT parse unless a sample
-  * field is required). On a whole-genome scan restricted to one locus
-  * that is ~100% of parse work avoided.
+  * Why it matters at scale: the expression path ([[Vcf.read]]) splits
+  * all 10+N tab fields and builds the INFO and FORMAT maps of EVERY line
+  * before the filter runs. Here each line is a [[VcfRecord]], cut and
+  * parsed only as far as asked: the pushed predicates run first, those
+  * on the fewest leading fields first, and a line they drop is cut no
+  * further; pruned columns (`SupportsPushDownRequiredColumns`) are never
+  * parsed.
   *
   * Splits: BGZF files get one task per `split_bytes` of compressed data
   * via [[Bgzf.splitLines]]'s single-owner rule; plain text files get byte
@@ -58,16 +58,14 @@ import scala.jdk.CollectionConverters._
   * hits Spark's codegen cache. Every other pushed predicate (`qual`,
   * `filter`, `info_*`, `gq`/`dp`, and `Or` trees mixing them in) only
   * prunes: the scan drops lines that cannot match and Spark re-applies
-  * the predicate. Doubles stay re-applied: Spark SQL orders them with NaN
-  * = NaN, NaN above every other value and -0.0 = 0.0, unlike Java's `==`
-  * and `<`; the scan prunes under that ordering but leaves the decision
-  * to Spark. Either way results are row-identical to
+  * the predicate. Either way results are row-identical to
   * `Vcf.read(...).filter(...)` (spec-gated in VcfBedSpec, VcfPushdownSpec,
   * VcfRegionParitySpec and VcfLocalScanSpec).
   *
   * Read options: `sample_index` (default 0), `split_bytes` (default 16
   * MiB), `samples` (`all` reads the wide panel shape) and `info_fields`
-  * (typed INFO columns, see [[VcfV2.parseInfoFields]]).
+  * (typed INFO columns, see [[VcfV2.parseInfoFields]]). A `sample_index`
+  * below 0 or a `split_bytes` below 1 fails naming the option.
   */
 class VcfDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "vcf"
@@ -91,9 +89,14 @@ class VcfDataSource extends TableProvider with DataSourceRegister {
                         properties: util.Map[String, String]): Table = {
     val path = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException("vcf source requires a path"))
-    val sampleIndex = Option(properties.get("sample_index")).map(_.toInt).getOrElse(0)
-    val splitBytes = Option(properties.get("split_bytes")).map(_.toLong)
-      .getOrElse(16L * 1024 * 1024)
+    def whole(name: String, default: Long, min: Long, max: Long): Long =
+      Option(properties.get(name)).fold(default) { v =>
+        v.toLongOption.filter(n => n >= min && n <= max).getOrElse(
+          throw new IllegalArgumentException(
+            s"vcf option $name must be a whole number in [$min, $max], got '$v'"))
+      }
+    val sampleIndex = whole("sample_index", 0, 0, Int.MaxValue).toInt
+    val splitBytes = whole("split_bytes", 16L * 1024 * 1024, 1, Long.MaxValue)
     // the write path supplies the incoming frame's schema (any projection
     // of the read shapes); reads pass inferSchema's result back unchanged
     new VcfTable(path, sampleIndex, splitBytes, allSamples(properties),
@@ -135,8 +138,8 @@ object VcfV2 {
     * sv_stats_collect.py:34-36). Making them COLUMNS is what lets
     * Catalyst push `INFO/AN>4`-style predicates (run_somatic_comparison_
     * and_graphs.py:164, run_no_gt_report.py:348) into the scan, where
-    * they are evaluated on a bounded 8-field prefix parse BEFORE sample
-    * parse and row assembly. Types: long, double, string (default), flag
+    * they are evaluated on the line's first 8 fields BEFORE any sample
+    * parse or row assembly. Types: long, double, string (default), flag
     * (key presence). Values are lenient (try_cast semantics: '.' or
     * malformed → null) — pushdown only ever prunes, Spark re-applies the
     * predicate. */
@@ -219,7 +222,7 @@ class VcfScanBuilder(path: String, sampleIndex: Int, splitBytes: Long,
   private var required: StructType = full
   private val infoCols = infoFields.map(_._1).toSet
 
-  /** Accept every predicate the partial parse can evaluate; return as
+  /** Accept every predicate [[VcfFilterEval]] can evaluate; return as
     * post-scan filters only those the scan does not decide exactly (see
     * [[VcfFilterEval.exact]]): region predicates on (chrom, pos) are
     * decided here, the rest (and anything unsupported) Spark re-applies,
@@ -436,58 +439,27 @@ case class VcfReaderFactory(hadoopConf: Broadcast[SerializableConfiguration],
   }
 }
 
-/** Iterates lines, applies the pushed predicates in staged order — prefix
-  * predicates (chrom/pos/qual/filter, and typed INFO fields on field 8)
-  * on a bounded partial parse, then sample-field predicates (gq/dp) right
-  * after the FORMAT split — and only then parses the required columns
-  * (sample maps and row assembly are skipped for every non-matching
-  * line). */
+/** Iterates lines; each data line is reset into the reader's one
+  * [[VcfRecord]], the pushed predicates (bound to it once) are evaluated
+  * on it cheapest first, by the last tab field each reads, and only a
+  * line they all keep becomes a row of the required columns. */
 class VcfPartitionReader(lines: Iterator[String], sampleIndex: Int,
                          pushed: Array[Filter], fields: Array[String],
                          infoFields: Seq[(String, String, String)] = Nil)
     extends PartitionReader[InternalRow] {
   private var row: InternalRow = _
-
-  private val infoByCol: Map[String, (String, String)] =
-    infoFields.map { case (c, k, t) => c -> (k, t) }.toMap
-
-  // stage split: a predicate referencing any FORMAT-derived column is
-  // evaluated after the FORMAT parse; everything else (chrom/pos/qual/
-  // filter/info_*) on the line prefix
-  private val (sampleFilters, prefixFilters) =
-    pushed.partition(VcfFilterEval.referencesSample)
-
-  // which leading fields the prefix predicates need: 2 = (chrom,pos),
-  // 7 = through FILTER, 8 = through INFO — no further than required
-  private val needFields = VcfFilterEval.fieldsNeeded(prefixFilters, infoByCol.keySet)
-  private val anyInfoFilter = pushed.exists(_.references.exists(infoByCol.contains))
-
-  private def ictxOf(f: Array[String]): VcfFilterEval.InfoCtx =
-    if (!anyInfoFilter) null
-    else new VcfFilterEval.InfoCtx(if (f.length > 7) f(7) else null, infoByCol)
+  private val rec = new VcfRecord(sampleIndex, infoFields)
+  private val filters = pushed.sortBy(VcfFilterEval.lastField).map(VcfFilterEval.bind(_, rec))
+  private val columns = fields.map(rec.column)
 
   override def next(): Boolean = {
     row = null
     while (row == null && lines.hasNext) {
       val line = lines.next()
       if (!line.startsWith("#")) {
-        val head = VcfLineParser.headFields(line, needFields)
-        val chrom = if (head.length > 0) head(0) else null
-        val pos = VcfLineParser.toLongOrNull(if (head.length > 1) head(1) else null)
-        val ictx = ictxOf(head)
-        if (prefixFilters.forall(VcfFilterEval.eval(_, chrom, pos, head, null, ictx))) {
-          if (sampleFilters.isEmpty)
-            row = VcfLineParser.parse(line, chrom, pos, sampleIndex, fields, infoByCol)
-          else {
-            // FORMAT stage: full tab split (needed by the parse anyway),
-            // sample predicates on the typed GQ/DP extraction — row
-            // assembly only happens for matching lines
-            val f = line.split("\t", -1)
-            val ctx = new VcfFilterEval.SampleCtx(f, sampleIndex)
-            if (sampleFilters.forall(VcfFilterEval.eval(_, chrom, pos, f, ctx, ictxOf(f))))
-              row = VcfLineParser.parseFields(f, chrom, pos, sampleIndex, fields, infoByCol)
-          }
-        }
+        rec.reset(line)
+        if (filters.forall(VcfFilterEval.eval(_, rec)))
+          row = new GenericInternalRow(columns.map(rec.value))
       }
     }
     row != null
@@ -503,31 +475,20 @@ class VcfPartitionReader(lines: Iterator[String], sampleIndex: Int,
   }
 }
 
-/** Scan-side evaluation of the pushable filter shapes: region predicates
-  * on (chrom, pos) — `bcftools view -r` — plus `filter` equality/inclusion
-  * (`-f PASS`) and `qual` comparisons (`-i 'QUAL>x'`), all evaluable on a
-  * bounded prefix parse of the line; and the sample-field predicates
-  * (`gq`/`dp` — the reference's `FORMAT/GQ[0]>20` pre-filter,
-  * correct_genotypes_by_imputation.py:141-148) evaluated right after the
-  * FORMAT split, before INFO parse / row assembly. */
+/** Scan-side evaluation of the pushable filter shapes over a
+  * [[VcfRecord]]'s column values: region predicates on (chrom, pos) —
+  * `bcftools view -r` — plus `filter` equality/inclusion (`-f PASS`),
+  * `qual` comparisons (`-i 'QUAL>x'`), typed INFO columns (`-i 'INFO/AN>4'`)
+  * and the sample fields `gq`/`dp` (the reference's `FORMAT/GQ[0]>20`
+  * pre-filter, correct_genotypes_by_imputation.py:141-148). */
 object VcfFilterEval {
-  private val strCols = Set("chrom", "filter")
-  private val numCmp = Set("pos", "qual")
-  // typed int columns derived from the FORMAT sample map (schema names →
-  // FORMAT keys); evaluable only after the full tab split
-  private val sampleCols = Map("gq" -> "GQ", "dp" -> "DP")
-
   def supported(f: Filter, infoCols: Set[String] = Set.empty): Boolean = {
-    def col(a: String) = strCols(a) || numCmp(a) || sampleCols.contains(a) ||
-      infoCols(a)
+    def ordered(a: String) = Set("pos", "qual", "gq", "dp")(a) || infoCols(a)
     f match {
-      case EqualTo(a, _) => col(a)
-      case In(a, _) => col(a)
-      case IsNotNull(a) => col(a)
-      case GreaterThan(a, _) => numCmp(a) || sampleCols.contains(a) || infoCols(a)
-      case GreaterThanOrEqual(a, _) => numCmp(a) || sampleCols.contains(a) || infoCols(a)
-      case LessThan(a, _) => numCmp(a) || sampleCols.contains(a) || infoCols(a)
-      case LessThanOrEqual(a, _) => numCmp(a) || sampleCols.contains(a) || infoCols(a)
+      case _: EqualTo | _: In | _: IsNotNull =>
+        Set("chrom", "filter")(f.references.head) || ordered(f.references.head)
+      case _: GreaterThan | _: GreaterThanOrEqual | _: LessThan | _: LessThanOrEqual =>
+        ordered(f.references.head)
       case And(l, r) => supported(l, infoCols) && supported(r, infoCols)
       case Or(l, r) => supported(l, infoCols) && supported(r, infoCols)
       case _ => false
@@ -539,321 +500,327 @@ object VcfFilterEval {
     * and pos equality/inclusion/range/non-null with `Long` comparands
     * (`In` lists may hold nulls, which never match — SQL's `x IN (a,
     * null)` is null, not true, unless x = a), and `And`/`Or` trees of
-    * those. [[eval]] compares them on the same `chrom` string and
-    * `pos` long the row carries, so "kept by the scan" and "true in
-    * SQL" coincide. Not exact: `qual` (double ordering, see [[dblCmp]]),
-    * `filter`, typed INFO and FORMAT fields, which the scan only uses to
-    * prune. */
+    * those. [[eval]] compares them on the same `chrom` string and `pos`
+    * long the row carries, so "kept by the scan" and "true in SQL"
+    * coincide. Not exact: `qual`, `filter`, typed INFO and FORMAT fields,
+    * which the scan only uses to prune. */
   def exact(f: Filter): Boolean = f match {
     case EqualTo("chrom", _: String) => true
     case In("chrom", vs) => vs.forall(v => v == null || v.isInstanceOf[String])
     case IsNotNull("chrom") | IsNotNull("pos") => true
     case EqualTo("pos", _: java.lang.Long) => true
     case In("pos", vs) => vs.forall(v => v == null || v.isInstanceOf[java.lang.Long])
-    case GreaterThan("pos", _: java.lang.Long) => true
-    case GreaterThanOrEqual("pos", _: java.lang.Long) => true
-    case LessThan("pos", _: java.lang.Long) => true
-    case LessThanOrEqual("pos", _: java.lang.Long) => true
+    case GreaterThan("pos", _: java.lang.Long) | GreaterThanOrEqual("pos", _: java.lang.Long) |
+         LessThan("pos", _: java.lang.Long) | LessThanOrEqual("pos", _: java.lang.Long) => true
     case And(l, r) => exact(l) && exact(r)
     case Or(l, r) => exact(l) && exact(r)
     case _ => false
   }
 
-  /** Does this filter reference any FORMAT-derived column? Such filters
-    * are staged after the FORMAT split (they may also reference prefix
-    * columns — the full split covers those too). */
-  def referencesSample(f: Filter): Boolean =
-    f.references.exists(sampleCols.contains)
+  /** The last tab field `f` reads (typed INFO is 8, `gq`/`dp` the sample):
+    * the reader evaluates lower first, so a dropped line is cut no further. */
+  def lastField(f: Filter): Int = f.references.map(fieldOf.getOrElse(_, 8)).max
+  private val fieldOf = Map("chrom" -> 1, "pos" -> 2, "qual" -> 6, "filter" -> 7,
+    "gq" -> 10, "dp" -> 10)
 
-  /** Lazily-split FORMAT key/value context for one line: the keys are
-    * dup-checked exactly like the full parse (so a malformed line throws
-    * here, not silently mismatching the expression path), and GQ/DP
-    * extract with the same toIntOrNull semantics as the `gq`/`dp`
-    * columns. */
-  final class SampleCtx(f: Array[String], sampleIndex: Int) {
-    private var computed = false
-    private var keys: Array[String] = _
-    private var vals: Array[String] = _
-    private def ensure(): Unit = if (!computed) {
-      computed = true
-      val k = if (f.length >= 9) f(8) else null
-      val v = if (f.length >= 10 + sampleIndex) f(9 + sampleIndex) else null
-      if (k != null && v != null) {
-        val ks = k.split(":", -1)
-        val vs = v.split(":", -1)
-        val m = math.min(ks.length, vs.length)
-        val kk = ks.take(m)
-        VcfLineParser.requireDistinct(kk, "FORMAT")
-        keys = kk
-        vals = vs
-      }
-    }
-    /** Typed int FORMAT field by schema column name; null when the key is
-      * absent, the sample column is missing, or the value unparseable. */
-    def int(col: String): java.lang.Integer = {
-      ensure()
-      if (keys == null) return null
-      val key = sampleCols(col)
-      var i = 0
-      while (i < keys.length) {
-        if (keys(i) == key) return VcfLineParser.toIntOrNull(vals(i))
-        i += 1
-      }
-      null
+  /** A pushed filter bound to one reader's [[VcfRecord]]: columns as
+    * [[VcfRecord.column]] ids and string comparands as the `UTF8String`s
+    * the column values are, so a line costs no column-name match and no
+    * string conversion. */
+  sealed trait Bound
+  private final case class Junction(l: Bound, r: Bound, and: Boolean) extends Bound
+  private final case class NotNull(column: Int) extends Bound
+  /** Keeps a line whose value compares to `v` with a sign in [lo, hi]. */
+  private final case class Cmp(column: Int, v: Any, lo: Int, hi: Int) extends Bound
+  private final case class AnyOf(column: Int, vs: Array[Any]) extends Bound
+  private case object Always extends Bound
+
+  def bind(f: Filter, rec: VcfRecord): Bound = {
+    def u(v: Any): Any = v match { case s: String => UTF8String.fromString(s); case o => o }
+    f match {
+      case And(l, r) => Junction(bind(l, rec), bind(r, rec), and = true)
+      case Or(l, r) => Junction(bind(l, rec), bind(r, rec), and = false)
+      case IsNotNull(c) => NotNull(rec.column(c))
+      case EqualTo(c, v) => Cmp(rec.column(c), u(v), 0, 0)
+      case In(c, vs) => AnyOf(rec.column(c), vs.map(u))
+      case GreaterThan(c, v) => Cmp(rec.column(c), u(v), 1, 1)
+      case GreaterThanOrEqual(c, v) => Cmp(rec.column(c), u(v), 0, 1)
+      case LessThan(c, v) => Cmp(rec.column(c), u(v), -1, -1)
+      case LessThanOrEqual(c, v) => Cmp(rec.column(c), u(v), -1, 0)
+      case _ => Always
     }
   }
 
-  /** Lazily-parsed INFO key/value context for one line: duplicate keys
-    * throw exactly like the full parse (str_to_map under mapKeyDedupPolicy
-    * =EXCEPTION — path parity on the malformed files where it matters),
-    * and typed access follows try_cast semantics ('.'/malformed → null).
-    * `byCol` maps schema column name → (INFO key, declared type). */
-  final class InfoCtx(raw: String, byCol: Map[String, (String, String)]) {
-    private var computed = false
-    private var m: java.util.HashMap[String, String] = _
-    private def ensure(): Unit = if (!computed) {
-      computed = true
-      if (raw != null) {
-        val parts = raw.split(";", -1)
-        m = new java.util.HashMap[String, String](parts.length * 2)
-        parts.foreach { part =>
-          val e = part.indexOf('=')
-          val (k, v) =
-            if (e < 0) (part, null)
-            else (part.substring(0, e), part.substring(e + 1))
-          if (m.containsKey(k))
-            throw new IllegalStateException(
-              s"Duplicate map key $k was found in INFO; the vcf v2 parse " +
-                "matches str_to_map under spark.sql.mapKeyDedupPolicy=EXCEPTION")
-          m.put(k, v)
+  /** SQL three-valued logic collapsed to "keep?": a comparison with a null
+    * value or comparand is not a keep, as in the engine-side filter the row
+    * would hit anyway. An unsupported shape keeps the line (Spark re-applies it). */
+  def eval(f: Bound, rec: VcfRecord): Boolean = f match {
+    case Cmp(c, v, lo, hi) => val x = compare(rec.value(c), v); x >= lo && x <= hi
+    case NotNull(c) => rec.value(c) != null
+    case Junction(l, r, true) => eval(l, rec) && eval(r, rec)
+    case Junction(l, r, false) => eval(l, rec) || eval(r, rec)
+    case AnyOf(c, vs) => val x = rec.value(c); vs.exists(compare(x, _) == 0)
+    case Always => true
+  }
+
+  private final val Undecided = Int.MinValue
+
+  /** The sign (-1, 0 or 1) of comparing a column value with a comparand as
+    * Spark SQL orders them, or [[Undecided]] when they do not compare (a null on
+    * either side). Two integral numbers compare as longs: through
+    * doubles, values past 2^53 would tie and a strict comparison would
+    * drop a kept line. Other numbers compare in SQL's double order
+    * (`SQLOrderingUtil.compareDoubles`: NaN = NaN and above every other
+    * value, -0.0 = 0.0), where Java's `==` and `<` would drop lines Spark
+    * keeps. Strings compare as UTF-8 bytes, as Spark does, not as UTF-16
+    * units: [[bind]] has made every string comparand a `UTF8String`, and
+    * `binaryCompare` is the default collation's order without the
+    * per-call environment lookup `UTF8String.compareTo` makes. */
+  private def compare(a: Any, b: Any): Int = a match {
+    case x: UTF8String => b match {
+      case y: UTF8String => Integer.signum(x.binaryCompare(y))
+      case _ => Undecided
+    }
+    case x: java.lang.Boolean => b match {
+      case y: java.lang.Boolean => Integer.signum(java.lang.Boolean.compare(x, y))
+      case _ => Undecided
+    }
+    case x: Number => b match {
+      case y: Number if integral(x) && integral(y) =>
+        java.lang.Long.compare(x.longValue(), y.longValue())
+      case y: Number =>
+        val p = x.doubleValue(); val q = y.doubleValue()
+        if (p == q) 0 else java.lang.Double.compare(p, q)
+      case _ => Undecided
+    }
+    case _ => Undecided
+  }
+
+  // the comparands Spark pushes for the long (pos, info_*) and int (gq, dp) columns
+  private def integral(n: Number): Boolean =
+    n.isInstanceOf[java.lang.Long] || n.isInstanceOf[java.lang.Integer]
+}
+
+/** One VCF data line, cut lazily, giving the value of any read-schema
+  * column with [[Vcf.fromLines]]' expression semantics (split with -1
+  * limit, out-of-range element → null, "."/"" handling, FORMAT raggedness
+  * slice), so the two paths are row-identical (VcfBedSpec). A reader keeps
+  * one record and [[reset]]s it per line. Tab fields are cut only as far as
+  * a caller asks; INFO is parsed at most once, and FORMAT with the chosen
+  * sample at most once, sliced to their common length. Each parse checks
+  * its keys once: a repeated key throws, as `str_to_map`/`map_from_arrays`
+  * do under spark.sql.mapKeyDedupPolicy=EXCEPTION. `infoFields` are the
+  * typed `info_*` columns of [[VcfV2.parseInfoFields]]. A caller resolves
+  * each column name to an id once ([[column]]) and reads [[value]] by id. */
+final class VcfRecord(sampleIndex: Int = 0,
+                      infoFields: Seq[(String, String, String)] = Nil) {
+  import VcfRecord._
+
+  private val typed = infoFields.toArray
+  private var line: String = _
+  private val fields = new Cuts
+  private var next = 0 // start of the first uncut field, -1 past the last
+  private var infoParsed, formatParsed, formatKeysCut, posParsed = false
+  private var pos: java.lang.Long = _ // once posParsed: a filter tree may read it often
+  private val infoKeys, infoVals, formatKeys, sampleVals = new Cuts
+  private var formatDup = 0 // index of the first repeated FORMAT key
+  private var sampleWidth = -1 // FORMAT keys the sample has values for
+  private var chromText: String = _ // the last chrom converted, and its value
+  private var chromUtf8: UTF8String = _
+
+  def reset(l: String): this.type = {
+    line = l; fields.n = 0; next = 0
+    infoParsed = false; formatParsed = false; formatKeysCut = false; posParsed = false
+    this
+  }
+
+  /** Tab field `i`, 1-based; null past the end of the line. */
+  def field(i: Int): String = {
+    while (fields.n < i && next >= 0) {
+      val tab = line.indexOf('\t', next)
+      fields += (if (tab < 0) line.substring(next) else line.substring(next, tab))
+      next = if (tab < 0) -1 else tab + 1
+    }
+    if (i >= 1 && i <= fields.n) fields(i - 1) else null
+  }
+
+  /** Parses INFO once; false when the line has no INFO field. */
+  private def info(): Boolean = {
+    if (!infoParsed) {
+      infoParsed = true; infoKeys.n = 0; infoVals.n = 0
+      val s = field(8)
+      if (s != null) {
+        // str_to_map: ";" parts, empties kept; a part's key ends at its
+        // first '=' and a part without one has a null value
+        var from = 0
+        while (from <= s.length) {
+          val semi = s.indexOf(';', from)
+          val end = if (semi < 0) s.length else semi
+          var eq = from
+          while (eq < end && s.charAt(eq) != '=') eq += 1
+          infoKeys += s.substring(from, eq)
+          infoVals += (if (eq < end) s.substring(eq + 1, end) else null)
+          from = end + 1
+        }
+        val d = infoKeys.firstRepeat()
+        if (d < infoKeys.n) duplicateKey(infoKeys(d), "INFO")
+      }
+    }
+    infoKeys.n > 0
+  }
+
+  /** Cuts the FORMAT keys once; false when the line has no FORMAT field. */
+  private def cutFormatKeys(): Boolean = {
+    if (!formatKeysCut) {
+      formatKeysCut = true; formatKeys.n = 0
+      val k = field(9)
+      if (k != null) { formatKeys.cut(k, ':'); formatDup = formatKeys.firstRepeat() }
+    }
+    formatKeys.n > 0
+  }
+
+  /** The first `m` FORMAT keys, as a map key set: throws when they repeat. */
+  private def checkFormat(m: Int): Unit =
+    if (m > formatDup) duplicateKey(formatKeys(formatDup), "FORMAT")
+
+  /** Parses FORMAT and the chosen sample once; the sample's width, -1
+    * when the line has no FORMAT or no such sample column. */
+  private def sample(): Int = {
+    if (!formatParsed) {
+      formatParsed = true; sampleWidth = -1
+      val v = field(10 + sampleIndex)
+      if (v != null && cutFormatKeys()) {
+        sampleVals.n = 0
+        sampleVals.cut(v, ':')
+        sampleWidth = math.min(formatKeys.n, sampleVals.n)
+        checkFormat(sampleWidth)
+      }
+    }
+    sampleWidth
+  }
+
+  private def sampleValue(key: String): String = {
+    val m = sample(); val i = formatKeys.indexOf(key)
+    if (i >= 0 && i < m) sampleVals(i) else null
+  }
+
+  /** The id [[value]] takes for read-schema column `name`: its place in
+    * [[VcfRecord.Columns]], then the typed INFO columns in order. */
+  def column(name: String): Int = {
+    val i = (Columns ++ infoFields.map(_._1)).indexOf(name)
+    require(i >= 0, s"unknown vcf column $name")
+    i
+  }
+
+  /** The Catalyst value on this line of the column with id `column`. */
+  def value(column: Int): Any = (column: @switch) match {
+    case Chrom =>
+      // a sorted VCF repeats its chrom for millions of lines: convert it
+      // once per run of lines, not once per line
+      val c = field(1)
+      if (c != chromText) { chromText = c; chromUtf8 = utf8(c) }
+      chromUtf8
+    case Pos =>
+      if (!posParsed) { posParsed = true; pos = VcfLineParser.toLongOrNull(field(2)) }
+      pos
+    case Id => utf8(field(3))
+    case Ref => utf8(field(4))
+    case Alleles =>
+      val alt = field(5)
+      if (alt == null) null
+      else new GenericArrayData((field(4) +: alt.split(",", -1)).map[Any](utf8))
+    case Qual => val q = field(6); if (q == ".") null else toDoubleOrNull(q)
+    case FilterCol => utf8(field(7))
+    case Info => if (info()) mapData(infoKeys.a, infoVals.a, infoKeys.n) else null
+    case Sample => val m = sample(); if (m < 0) null else mapData(formatKeys.a, sampleVals.a, m)
+    case Gt =>
+      val gt = sampleValue("GT")
+      if (gt == null) null
+      else new GenericArrayData(gt.replace('|', '/').split("/", -1)
+        .map[Any](g => if (g == "." || g == "") null else toIntOrNull(g)))
+    case Ad => intArrayData(sampleValue("AD"))
+    case Pl => intArrayData(sampleValue("PL"))
+    case Dp => toIntOrNull(sampleValue("DP"))
+    case Gq => toIntOrNull(sampleValue("GQ"))
+    case Samples =>
+      // wide panel shape (readAllSamples parity): one FORMAT map per
+      // sample column 10.., each sliced to the common key/value length
+      if (field(10) == null || !cutFormatKeys()) null
+      else {
+        field(Int.MaxValue)
+        new GenericArrayData(Array.tabulate[Any](fields.n - 9) { i =>
+          val vs = fields(9 + i).split(":", -1)
+          val m = math.min(formatKeys.n, vs.length)
+          checkFormat(m)
+          mapData(formatKeys.a, vs, m)
+        })
+      }
+    case _ =>
+      // typed INFO column: lenient try_cast semantics ('.'/malformed →
+      // null), flag = key presence (null when the line has no INFO)
+      if (!info()) null
+      else {
+        val t = typed(column - Columns.length)
+        val i = infoKeys.indexOf(t._2)
+        val v = if (i < 0) null else infoVals(i)
+        t._3 match {
+          case "flag" => java.lang.Boolean.valueOf(i >= 0)
+          case "long" => VcfLineParser.toLongOrNull(v)
+          case "double" => toDoubleOrNull(v)
+          case _ => utf8(v)
         }
       }
-    }
-    def handles(col: String): Boolean = byCol.contains(col)
-    def kind(col: String): String = byCol(col)._2
-
-    /** Present at all (null when the line has no INFO field — matching
-      * map_contains_key over a null map). */
-    def has(col: String): java.lang.Boolean = {
-      ensure()
-      if (m == null) null else java.lang.Boolean.valueOf(m.containsKey(byCol(col)._1))
-    }
-    /** Typed value for the column, null when absent/malformed/flag. */
-    def value(col: String): Any = {
-      ensure()
-      if (m == null) return null
-      val (key, tpe) = byCol(col)
-      val v = m.get(key)
-      if (v == null) null
-      else tpe match {
-        case "long" => VcfLineParser.toLongOrNull(v)
-        case "double" =>
-          if (v == null) null
-          else try java.lang.Double.valueOf(v.trim)
-          catch { case _: NumberFormatException => null }
-        case "flag" => null // flag columns compare via has()
-        case _ => v
-      }
-    }
-  }
-
-  /** How many leading tab fields the scan must split for these filters:
-    * 2 covers (chrom,pos); qual is field 6, filter field 7, INFO field 8. */
-  def fieldsNeeded(fs: Array[Filter], infoCols: Set[String] = Set.empty): Int = {
-    def refs(f: Filter): Set[String] = f match {
-      case And(l, r) => refs(l) ++ refs(r)
-      case Or(l, r) => refs(l) ++ refs(r)
-      case other => other.references.toSet
-    }
-    val all = fs.iterator.flatMap(refs).toSet
-    if (all.exists(infoCols)) 8
-    else if (all("filter")) 7 else if (all("qual")) 6 else 2
-  }
-
-  // Null-safe extraction: Spark can push an In/EqualTo whose value array
-  // contains null (e.g. `col("pos").isin(100L, null)`); a null comparand
-  // never matches under SQL three-valued logic, so it must read as
-  // "non-match", not NPE in the executor.
-  private def num(v: Any): java.lang.Long = v match {
-    case n: Number => n.longValue()
-    case _ => null
-  }
-  private def dbl(v: Any): java.lang.Double = v match {
-    case n: Number => n.doubleValue()
-    case _ => null
-  }
-
-  /** Spark SQL's double ordering (`SQLOrderingUtil.compareDoubles`):
-    * NaN equals NaN and sorts above every other value, -0.0 equals 0.0.
-    * Java's `==`/`<` disagree on NaN, so a pruning predicate written with
-    * them would drop lines Spark keeps (`qual = NaN`, `qual > 5` on a NaN
-    * qual). */
-  private def dblCmp(a: Double, b: Double): Int =
-    if (a == b) 0 else java.lang.Double.compare(a, b)
-
-  /** `qual` against a comparand; null = no decision (null value or
-    * comparand — a non-match). */
-  private def qualCmp(head: Array[String], v: Any): java.lang.Integer = {
-    val q = qualOf(head); val d = dbl(v)
-    if (q == null || d == null) null
-    else java.lang.Integer.valueOf(dblCmp(q.doubleValue(), d.doubleValue()))
-  }
-
-  private def qualOf(head: Array[String]): java.lang.Double =
-    if (head.length < 6 || head(5) == "." || head(5) == null) null
-    else try java.lang.Double.valueOf(head(5).trim)
-    catch { case _: NumberFormatException => null }
-  private def filterOf(head: Array[String]): String =
-    if (head.length < 7) null else head(6)
-
-  /** Three-way comparison of a typed INFO value against a predicate
-    * comparand; null = no decision (absent/malformed value — exact
-    * non-match under SQL three-valued logic, since the re-applied engine
-    * filter sees the same leniently-parsed null). */
-  private def infoCmp(ictx: InfoCtx, c: String, v: Any): java.lang.Integer = {
-    val g = ictx.value(c)
-    (g, v) match {
-      // long against long stays integral: through doubles, values past
-      // 2^53 would tie and a strict comparison would drop a kept line
-      case (a: java.lang.Long, b: java.lang.Long) =>
-        java.lang.Integer.valueOf(java.lang.Long.compare(a.longValue(), b.longValue()))
-      case (a: Number, b: Number) =>
-        java.lang.Integer.valueOf(dblCmp(a.doubleValue(), b.doubleValue()))
-      // Spark compares strings as UTF-8 bytes, not UTF-16 units
-      case (a: String, b: String) => java.lang.Integer.valueOf(
-        UTF8String.fromString(a).compareTo(UTF8String.fromString(b)))
-      case _ => null
-    }
-  }
-
-  /** SQL three-valued logic collapsed to "keep?": null comparisons are
-    * not-keep, matching the engine-side filter the row would hit anyway.
-    * `ctx` supplies FORMAT-derived fields; sample-column predicates with
-    * no ctx (prefix stage) read as non-match, but staging guarantees they
-    * are only evaluated with one. `ictx` supplies typed INFO fields the
-    * same way. */
-  def eval(f: Filter, chrom: String, pos: java.lang.Long,
-           head: Array[String], ctx: SampleCtx = null,
-           ictx: InfoCtx = null): Boolean = f match {
-    case EqualTo(c, v) if ictx != null && ictx.handles(c) =>
-      v match {
-        case b: java.lang.Boolean =>
-          val h = ictx.has(c); h != null && h.booleanValue() == b.booleanValue()
-        case _ =>
-          val r = infoCmp(ictx, c, v); r != null && r.intValue() == 0
-      }
-    case In(c, vs) if ictx != null && ictx.handles(c) =>
-      vs.exists {
-        case b: java.lang.Boolean =>
-          val h = ictx.has(c); h != null && h.booleanValue() == b.booleanValue()
-        case v =>
-          val r = infoCmp(ictx, c, v); r != null && r.intValue() == 0
-      }
-    case IsNotNull(c) if ictx != null && ictx.handles(c) =>
-      if (ictx.kind(c) == "flag") ictx.has(c) != null else ictx.value(c) != null
-    case GreaterThan(c, v) if ictx != null && ictx.handles(c) =>
-      val r = infoCmp(ictx, c, v); r != null && r.intValue() > 0
-    case GreaterThanOrEqual(c, v) if ictx != null && ictx.handles(c) =>
-      val r = infoCmp(ictx, c, v); r != null && r.intValue() >= 0
-    case LessThan(c, v) if ictx != null && ictx.handles(c) =>
-      val r = infoCmp(ictx, c, v); r != null && r.intValue() < 0
-    case LessThanOrEqual(c, v) if ictx != null && ictx.handles(c) =>
-      val r = infoCmp(ictx, c, v); r != null && r.intValue() <= 0
-    case EqualTo("chrom", v) => chrom != null && chrom == v
-    case EqualTo("pos", v) =>
-      val n = num(v); pos != null && n != null && pos.longValue() == n.longValue()
-    case EqualTo("filter", v) => filterOf(head) == v && v != null
-    case EqualTo("qual", v) =>
-      val r = qualCmp(head, v); r != null && r.intValue() == 0
-    case In("chrom", vs) => chrom != null && vs.contains(chrom)
-    case In("pos", vs) =>
-      pos != null && vs.exists { v =>
-        val n = num(v); n != null && n.longValue() == pos.longValue()
-      }
-    case In("filter", vs) =>
-      val fl = filterOf(head); fl != null && vs.contains(fl)
-    case In("qual", vs) =>
-      vs.exists { v => val r = qualCmp(head, v); r != null && r.intValue() == 0 }
-    case IsNotNull("chrom") => chrom != null
-    case IsNotNull("pos") => pos != null
-    case IsNotNull("filter") => filterOf(head) != null
-    case IsNotNull("qual") => qualOf(head) != null
-    case GreaterThan("pos", v) =>
-      val n = num(v); pos != null && n != null && pos.longValue() > n.longValue()
-    case GreaterThanOrEqual("pos", v) =>
-      val n = num(v); pos != null && n != null && pos.longValue() >= n.longValue()
-    case LessThan("pos", v) =>
-      val n = num(v); pos != null && n != null && pos.longValue() < n.longValue()
-    case LessThanOrEqual("pos", v) =>
-      val n = num(v); pos != null && n != null && pos.longValue() <= n.longValue()
-    case GreaterThan("qual", v) =>
-      val r = qualCmp(head, v); r != null && r.intValue() > 0
-    case GreaterThanOrEqual("qual", v) =>
-      val r = qualCmp(head, v); r != null && r.intValue() >= 0
-    case LessThan("qual", v) =>
-      val r = qualCmp(head, v); r != null && r.intValue() < 0
-    case LessThanOrEqual("qual", v) =>
-      val r = qualCmp(head, v); r != null && r.intValue() <= 0
-    case EqualTo(c, v) if sampleCols.contains(c) =>
-      val g = if (ctx == null) null else ctx.int(c); val n = num(v)
-      g != null && n != null && g.longValue() == n.longValue()
-    case In(c, vs) if sampleCols.contains(c) =>
-      val g = if (ctx == null) null else ctx.int(c)
-      g != null && vs.exists { v =>
-        val n = num(v); n != null && n.longValue() == g.longValue()
-      }
-    case IsNotNull(c) if sampleCols.contains(c) =>
-      ctx != null && ctx.int(c) != null
-    case GreaterThan(c, v) if sampleCols.contains(c) =>
-      val g = if (ctx == null) null else ctx.int(c); val n = num(v)
-      g != null && n != null && g.longValue() > n.longValue()
-    case GreaterThanOrEqual(c, v) if sampleCols.contains(c) =>
-      val g = if (ctx == null) null else ctx.int(c); val n = num(v)
-      g != null && n != null && g.longValue() >= n.longValue()
-    case LessThan(c, v) if sampleCols.contains(c) =>
-      val g = if (ctx == null) null else ctx.int(c); val n = num(v)
-      g != null && n != null && g.longValue() < n.longValue()
-    case LessThanOrEqual(c, v) if sampleCols.contains(c) =>
-      val g = if (ctx == null) null else ctx.int(c); val n = num(v)
-      g != null && n != null && g.longValue() <= n.longValue()
-    case And(l, r) =>
-      eval(l, chrom, pos, head, ctx, ictx) && eval(r, chrom, pos, head, ctx, ictx)
-    case Or(l, r) =>
-      eval(l, chrom, pos, head, ctx, ictx) || eval(r, chrom, pos, head, ctx, ictx)
-    case _ => true
   }
 }
 
-/** Line → InternalRow parse, replaying [[Vcf.fromLines]]'s expression
-  * semantics field-for-field (split with -1 limit, out-of-range
-  * element_at → null, "."/"" handling, FORMAT raggedness slice) so the
-  * two paths are row-identical — gated by VcfBedSpec on every fixture. */
-object VcfLineParser {
+object VcfRecord {
+  /** The read-schema columns other than typed INFO, in column-id order. */
+  private val Columns = Array("chrom", "pos", "id", "ref", "alleles", "qual", "filter",
+    "info", "sample", "gt", "ad", "pl", "dp", "gq", "samples")
+  private final val Chrom = 0; private final val Pos = 1; private final val Id = 2
+  private final val Ref = 3; private final val Alleles = 4; private final val Qual = 5
+  private final val FilterCol = 6; private final val Info = 7; private final val Sample = 8
+  private final val Gt = 9; private final val Ad = 10; private final val Pl = 11
+  private final val Dp = 12; private final val Gq = 13; private final val Samples = 14
 
-  /** First `n` tab-separated fields without splitting the whole line —
-    * the bounded prefix parse the pushed filters evaluate on. */
-  def headFields(line: String, n: Int): Array[String] = {
-    val out = new Array[String](n)
-    var i = 0
-    var from = 0
-    while (i < n) {
-      val tab = line.indexOf('\t', from)
-      if (tab < 0) {
-        out(i) = line.substring(from)
-        return java.util.Arrays.copyOf(out, i + 1)
-      }
-      out(i) = line.substring(from, tab)
-      from = tab + 1
-      i += 1
+  /** A reusable list of cut strings: reset by setting `n` to 0. */
+  private final class Cuts {
+    var a = new Array[String](16)
+    var n = 0
+    def apply(i: Int): String = a(i)
+    def +=(s: String): Unit = {
+      if (n == a.length) a = java.util.Arrays.copyOf(a, n * 2)
+      a(n) = s; n += 1
     }
-    out
+    /** Appends the `sep`-separated parts of `s`, keeping empty ones. */
+    def cut(s: String, sep: Char): Unit = {
+      var from = 0
+      while (from >= 0) {
+        val i = s.indexOf(sep, from)
+        this += (if (i < 0) s.substring(from) else s.substring(from, i))
+        from = if (i < 0) -1 else i + 1
+      }
+    }
+    def indexOf(s: String): Int = {
+      var i = 0
+      while (i < n && a(i) != s) i += 1
+      if (i < n) i else -1
+    }
+    /** Index of the first entry that repeats an earlier one, or `n`. */
+    def firstRepeat(): Int = {
+      val seen = new java.util.HashSet[String](n * 2)
+      var i = 0
+      while (i < n && seen.add(a(i))) i += 1
+      i
+    }
   }
 
-  def toLongOrNull(s: String): java.lang.Long =
-    if (s == null) null
-    else try java.lang.Long.valueOf(s.trim) catch { case _: NumberFormatException => null }
+  private def duplicateKey(k: String, ctx: String): Nothing =
+    throw new IllegalStateException(
+      s"Duplicate map key $k was found in $ctx; the vcf v2 parse matches " +
+        "map_from_arrays/str_to_map under spark.sql.mapKeyDedupPolicy=EXCEPTION")
 
-  private[sources] def toIntOrNull(s: String): java.lang.Integer =
+  private def toIntOrNull(s: String): java.lang.Integer =
     if (s == null) null
     else try java.lang.Integer.valueOf(s.trim) catch { case _: NumberFormatException => null }
 
@@ -864,189 +831,19 @@ object VcfLineParser {
   private def utf8(s: String): UTF8String =
     if (s == null) null else UTF8String.fromString(s)
 
-  /** element_at semantics: 1-based, out of range → null. */
-  private def at(f: Array[String], i: Int): String =
-    if (i >= 1 && i <= f.length) f(i - 1) else null
-
-  /** Mirrors the expression path's DUPLICATE_MAP_KEY behavior: under the
-    * default spark.sql.mapKeyDedupPolicy=EXCEPTION, map_from_arrays (FORMAT
-    * sample map, Vcf.scala:136) and str_to_map (INFO, Vcf.scala:157) throw
-    * on a repeated key — a silent last-wins here would make the two parse
-    * paths diverge on exactly the malformed files where it matters. */
-  private def duplicateKey(k: String, ctx: String): Nothing =
-    throw new IllegalStateException(
-      s"Duplicate map key $k was found in $ctx; the vcf v2 parse matches " +
-        "map_from_arrays/str_to_map under spark.sql.mapKeyDedupPolicy=EXCEPTION")
-
-  private[sources] def requireDistinct(keys: Array[String], ctx: String): Unit = {
-    val seen = new java.util.HashSet[String](keys.length * 2)
-    var i = 0
-    while (i < keys.length) {
-      if (!seen.add(keys(i))) duplicateKey(keys(i), ctx)
-      i += 1
-    }
-  }
-
-  def parse(line: String, chrom: String, pos: java.lang.Long,
-            sampleIndex: Int, fields: Array[String],
-            infoFields: Map[String, (String, String)] = Map.empty): InternalRow =
-    parseFields(line.split("\t", -1), chrom, pos, sampleIndex, fields, infoFields)
-
-  /** Parse from a pre-split field array (the FORMAT-predicate stage has
-    * already paid for the tab split on lines it lets through).
-    * `infoFields` maps typed-INFO column names (`info_an`) to their
-    * (INFO key, type) for the `info_fields` option's columns. */
-  def parseFields(f: Array[String], chrom: String, pos: java.lang.Long,
-                  sampleIndex: Int, fields: Array[String],
-                  infoFields: Map[String, (String, String)] = Map.empty): InternalRow = {
-
-    // typed INFO lookups share one lazily-parsed raw map; duplicate keys
-    // throw like str_to_map (parity with the `info` column + filter stage)
-    var infoMapComputed = false
-    var infoMapCache: java.util.HashMap[String, String] = null
-    def infoRawMap: java.util.HashMap[String, String] = {
-      if (!infoMapComputed) {
-        infoMapComputed = true
-        val info = at(f, 8)
-        if (info != null) {
-          val parts = info.split(";", -1)
-          infoMapCache = new java.util.HashMap[String, String](parts.length * 2)
-          parts.foreach { part =>
-            val e = part.indexOf('=')
-            val (k, v) =
-              if (e < 0) (part, null)
-              else (part.substring(0, e), part.substring(e + 1))
-            if (infoMapCache.containsKey(k)) duplicateKey(k, "INFO")
-            infoMapCache.put(k, v)
-          }
-        }
-      }
-      infoMapCache
-    }
-
-    // FORMAT sample map, built lazily once for the gt/ad/pl/dp/gq family
-    var sampleComputed = false
-    var sampleMap: Map[String, String] = null
-    def sample: Map[String, String] = {
-      if (!sampleComputed) {
-        sampleComputed = true
-        val keys = at(f, 9)
-        val vals = at(f, 10 + sampleIndex)
-        if (keys != null && vals != null) {
-          val ks = keys.split(":", -1)
-          val vs = vals.split(":", -1)
-          val m = math.min(ks.length, vs.length)
-          sampleMap = ks.take(m).zip(vs.take(m)).toMap
-        }
-      }
-      sampleMap
-    }
-    def sampleField(k: String): String =
-      if (sample == null) null else sample.getOrElse(k, null)
-
-    def strMapData(m: Map[String, String], order: Seq[String]): ArrayBasedMapData =
-      new ArrayBasedMapData(
-        new GenericArrayData(order.map(utf8).toArray[Any]),
-        new GenericArrayData(order.map(k => utf8(m(k))).toArray[Any]))
-
-    val values = fields.map {
-      case "chrom" => utf8(chrom)
-      case "pos" => pos
-      case "id" => utf8(at(f, 3))
-      case "ref" => utf8(at(f, 4))
-      case "alleles" =>
-        val alt = at(f, 5)
-        if (alt == null) null
-        else new GenericArrayData(
-          (at(f, 4) +: alt.split(",", -1).toSeq).map(utf8).toArray[Any])
-      case "qual" =>
-        val q = at(f, 6)
-        if (q == ".") null else toDoubleOrNull(q)
-      case "filter" => utf8(at(f, 7))
-      case "info" =>
-        val info = at(f, 8)
-        if (info == null) null
-        else {
-          // str_to_map semantics: ";"-split keeps empties, "="-split limit
-          // 2 (value = rest after first '='), entry without '=' → null value;
-          // duplicate keys throw like str_to_map under the default
-          // spark.sql.mapKeyDedupPolicy=EXCEPTION (path parity, spec-gated)
-          val parts = info.split(";", -1)
-          val order = scala.collection.mutable.LinkedHashSet.empty[String]
-          val m = scala.collection.mutable.Map.empty[String, String]
-          parts.foreach { part =>
-            val e = part.indexOf('=')
-            val (k, v) =
-              if (e < 0) (part, null) else (part.substring(0, e), part.substring(e + 1))
-            if (!order.add(k)) duplicateKey(k, "INFO")
-            m(k) = v
-          }
-          strMapData(m.toMap, order.toSeq)
-        }
-      case "sample" =>
-        val s = sample
-        if (s == null) null
-        else {
-          // FORMAT order; duplicate FORMAT keys throw like map_from_arrays
-          val keys = at(f, 9).split(":", -1)
-          val m = math.min(keys.length, at(f, 10 + sampleIndex).split(":", -1).length)
-          val kk = keys.take(m)
-          requireDistinct(kk, "FORMAT")
-          strMapData(s, scala.collection.immutable.ArraySeq.unsafeWrapArray(kk))
-        }
-      case "gt" =>
-        val gt = sampleField("GT")
-        if (gt == null) null
-        else new GenericArrayData(
-          gt.replace('|', '/').split("/", -1)
-            .map(g => if (g == "." || g == "") null else toIntOrNull(g))
-            .toArray[Any])
-      case "ad" => intArrayData(sampleField("AD"))
-      case "pl" => intArrayData(sampleField("PL"))
-      case "dp" => toIntOrNull(sampleField("DP"))
-      case "gq" => toIntOrNull(sampleField("GQ"))
-      case "samples" =>
-        // wide panel shape (readAllSamples parity): one FORMAT map per
-        // sample column 10.., each sliced to the common key/value length
-        val keys = at(f, 9)
-        if (keys == null || f.length < 10) null
-        else {
-          val ks = keys.split(":", -1)
-          val maps = (9 until f.length).map { i =>
-            val vs = f(i).split(":", -1)
-            val m = math.min(ks.length, vs.length)
-            val kk = ks.take(m)
-            requireDistinct(kk, "FORMAT")
-            new ArrayBasedMapData(
-              new GenericArrayData(kk.map(utf8).toArray[Any]),
-              new GenericArrayData(vs.take(m).map(utf8).toArray[Any]))
-          }
-          new GenericArrayData(maps.toArray[Any])
-        }
-      case name if infoFields.contains(name) =>
-        // typed INFO column: lenient try_cast semantics ('.'/malformed →
-        // null), flag = key presence (null when the line has no INFO)
-        val (key, tpe) = infoFields(name)
-        val m = infoRawMap
-        if (tpe == "flag") {
-          if (m == null) null else java.lang.Boolean.valueOf(m.containsKey(key))
-        } else {
-          val v = if (m == null) null else m.get(key)
-          if (v == null) null
-          else tpe match {
-            case "long" => toLongOrNull(v)
-            case "double" => toDoubleOrNull(v)
-            case _ => utf8(v)
-          }
-        }
-      case other => throw new IllegalArgumentException(s"unknown vcf column $other")
-    }
-    InternalRow.fromSeq(values.toSeq)
-  }
+  private def mapData(keys: Array[String], vals: Array[String], m: Int): ArrayBasedMapData =
+    new ArrayBasedMapData(
+      new GenericArrayData(Array.tabulate[Any](m)(i => utf8(keys(i)))),
+      new GenericArrayData(Array.tabulate[Any](m)(i => utf8(vals(i)))))
 
   private def intArrayData(s: String): GenericArrayData =
+    if (s == null) null else new GenericArrayData(s.split(",", -1).map[Any](toIntOrNull))
+}
+
+object VcfLineParser {
+  def toLongOrNull(s: String): java.lang.Long =
     if (s == null) null
-    else new GenericArrayData(s.split(",", -1).map(x => toIntOrNull(x)).toArray[Any])
+    else try java.lang.Long.valueOf(s.trim) catch { case _: NumberFormatException => null }
 
   /** Lines of a plain-text split or of a whole plain-gzip file, cut by
     * Hadoop's `LineReader` (a line ends at '\n', '\r' or "\r\n", and keeps

@@ -20,7 +20,7 @@ import org.apache.spark.util.SerializableConfiguration
   * write never funnels through one writer (a single file is
   * `df.coalesce(1).write.format("vcf")`).
   *
-  * Record formatting inverts [[VcfLineParser.parse]] field-for-field:
+  * Record formatting inverts [[VcfRecord.value]] field-for-field:
   * alleles(0) → REF, the rest → ALT, `.` for null id/qual/filter, INFO
   * map entries as `k=v` (bare `k` for null values), and the `sample` map
   * (or the wide `samples` array) as FORMAT + per-sample columns. Columns
@@ -281,7 +281,7 @@ class VcfDataWriter(conf: Configuration, stagingDir: String, fileName: String,
   override def close(): Unit = ()
 }
 
-/** InternalRow → VCF line, the inverse of [[VcfLineParser.parse]]. Null
+/** InternalRow → VCF line, the inverse of [[VcfRecord.value]]. Null
   * and absent columns degrade to `.`; the `sample` map column (single) or
   * `samples` array column (wide panel) becomes FORMAT + sample columns.
   * FORMAT keys are the first-seen-order union across the line's non-null

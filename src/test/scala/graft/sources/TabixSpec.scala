@@ -477,12 +477,13 @@ class TabixSpec extends SparkSpec {
     val depth = 5 + rnd.nextInt(2)
     val b = new Tabix.Builder(minShift, depth)
     val it = Bgzf.splitLinesWithOffsets(conf, p.toString)
+    val f = new VcfRecord()
     try it.foreach { case (line, vBeg, vEnd) =>
       if (!line.startsWith("#")) {
-        val f = VcfLineParser.headFields(line, 9)
-        val pos = VcfLineParser.toLongOrNull(f(1))
-        val (bg, en) = Tabix.vcfExtent(pos, f(3), Tabix.infoEndOf(f(7)))
-        b.add(Tabix.Feature(f(0), bg, en, vBeg, vEnd))
+        f.reset(line)
+        val pos = VcfLineParser.toLongOrNull(f.field(2))
+        val (bg, en) = Tabix.vcfExtent(pos, f.field(4), Tabix.infoEndOf(f.field(8)))
+        b.add(Tabix.Feature(f.field(1), bg, en, vBeg, vEnd))
       }
     } finally it.close()
     Tabix.writeCsi(conf, p.toString, b)

@@ -310,56 +310,160 @@ class VcfBedSpec extends SparkSpec {
     assert(spark.read.format("vcf").load(p).filter(col("dp").isin(30, 2)).count() == 2)
   }
 
-  test("vcf DataSourceV2: randomized line-shape equivalence with the expression path") {
-    // the V2 parser hand-replays Vcf.fromLines' expression semantics; this
-    // property hunts divergence on the shapes that bite: ragged FORMAT
-    // columns, missing trailing fields, '.' markers, '=' inside INFO
-    // values, flag-only INFO entries, phased/haploid/no-call genotypes
-    val rnd = new scala.util.Random(1234)
-    def maybe(s: => String): String = if (rnd.nextBoolean()) s else "."
-    val infos = Seq("DP=30;AF=0.5", "X=a=b;FLAG;DP=7", "FLAG", ".", "K=;DP=1", "AF=0.1,0.2")
+  /** The line-shape fuzz: ragged FORMAT columns, missing trailing fields,
+    * '.' markers, '=' inside INFO values, flag-only INFO entries,
+    * phased/haploid/no-call genotypes. `single` is the 400-line
+    * single-sample body, drawn first from `rnd`; each of `fmts` is a
+    * FORMAT and a generator of its sample values, drawing from `rnd`. */
+  private final class Fuzz(val rnd: scala.util.Random) {
+    private def maybe(s: => String): String = if (rnd.nextBoolean()) s else "."
+    private val infos = Seq("DP=30;AF=0.5", "X=a=b;FLAG;DP=7", "FLAG", ".", "K=;DP=1", "AF=0.1,0.2")
     val fmts = Seq(
       ("GT:AD:DP:GQ:PL", () => s"${Seq("0/1","1|1","0","./.", "1")(rnd.nextInt(5))}:${rnd.nextInt(30)},${rnd.nextInt(30)}:${rnd.nextInt(90)}:${rnd.nextInt(99)}:50,0,${rnd.nextInt(90)}"),
       ("GT:DP", () => s"${Seq("0/0","1/2","."," 1/1".trim)(rnd.nextInt(4))}:${rnd.nextInt(50)}"),
       ("GT:AD:DP", () => Seq("0/1", "1/1:3,4", "0/1:5,6:9")(rnd.nextInt(3))), // ragged
       ("DP:GQ", () => s"${rnd.nextInt(60)}:${rnd.nextInt(99)}"))              // no GT
-    val lines = Seq(
-      "##fileformat=VCFv4.2",
-      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1") ++
-      (1 to 400).map { i =>
-        val (fmt, gen) = fmts(rnd.nextInt(fmts.length))
-        Seq(s"chr${1 + i % 4}", s"${i * 13}", maybe(s"rs$i"), Seq("A","CT","G")(rnd.nextInt(3)),
-          Seq("T", "C,G", "<DEL>", ".")(rnd.nextInt(4)), maybe(s"${rnd.nextInt(99)}.5"),
-          maybe("PASS"), infos(rnd.nextInt(infos.length)), fmt, gen()).mkString("\t")
-      }
+    val single: Seq[String] = (1 to 400).map { i =>
+      val (fmt, gen) = fmts(rnd.nextInt(fmts.length))
+      Seq(s"chr${1 + i % 4}", s"${i * 13}", maybe(s"rs$i"), Seq("A","CT","G")(rnd.nextInt(3)),
+        Seq("T", "C,G", "<DEL>", ".")(rnd.nextInt(4)), maybe(s"${rnd.nextInt(99)}.5"),
+        maybe("PASS"), infos(rnd.nextInt(infos.length)), fmt, gen()).mkString("\t")
+    }
+  }
+
+  /** `n` lines cut short of a sample column, each the first 1-9 fields of
+    * one of `full` under its own chrom: truncated (a line of fewer than 8
+    * fields), sites-only (8) and FORMAT-only (9). */
+  private def shortLines(full: Seq[String], n: Int, seed: Int): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map { i =>
+      val f = full(rnd.nextInt(full.length)).split("\t")
+      (s"chrS$i" +: f.slice(1, 1 + rnd.nextInt(9))).mkString("\t")
+    }
+  }
+
+  private val fuzzHeader = Seq("##fileformat=VCFv4.2",
+    "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1")
+
+  /** The single-sample fuzz file: [[Fuzz.single]] and 60 short lines. */
+  private lazy val fuzzFile: String = {
+    val f = new Fuzz(new scala.util.Random(1234))
     val d = Files.createTempDirectory("graftvcffuzz")
-    Files.writeString(d.resolve("f.vcf"), lines.mkString("\n"))
-    val p = d.resolve("f.vcf").toString
+    Files.writeString(d.resolve("f.vcf"),
+      (fuzzHeader ++ f.single ++ shortLines(f.single, 60, 4321)).mkString("\n"))
+    d.resolve("f.vcf").toString
+  }
+
+  test("vcf DataSourceV2: randomized line-shape equivalence with the expression path") {
+    // the V2 record hand-replays Vcf.fromLines' expression semantics; this
+    // property hunts divergence on the fuzz shapes, whole and cut short
+    val p = fuzzFile
     val a = Vcf.read(spark, p).orderBy("chrom", "pos").collect().map(_.toSeq)
     val b = spark.read.format("vcf").option("split_bytes", "4096").load(p)
       .orderBy("chrom", "pos").collect().map(_.toSeq)
-    assert(a.length == 400 && b.length == 400)
+    assert(a.length == 460 && b.length == 460)
     a.zip(b).zipWithIndex.foreach { case ((x, y), i) =>
       assert(x == y, s"row $i diverged:\n  expr: $x\n  v2:   $y")
     }
 
     // same hunt for the wide panel shape: random per-sample raggedness
+    val fuzz = new Fuzz(new scala.util.Random(1234))
+    val full = (1 to 200).map { i =>
+      val (fmt, gen) = fuzz.fmts(fuzz.rnd.nextInt(2)) // GT-bearing formats
+      Seq(s"chr${1 + i % 3}", s"${i * 7}", ".", "A", "T", "50", "PASS",
+        "DP=5", fmt, gen(), gen(), gen()).mkString("\t")
+    }
     val panel = Seq(
       "##fileformat=VCFv4.2",
       "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\tFORMAT\tS1\tS2\tS3") ++
-      (1 to 200).map { i =>
-        val (fmt, gen) = fmts(rnd.nextInt(2)) // GT-bearing formats
-        Seq(s"chr${1 + i % 3}", s"${i * 7}", ".", "A", "T", "50", "PASS",
-          "DP=5", fmt, gen(), gen(), gen()).mkString("\t")
-      }
-    Files.writeString(d.resolve("panel.vcf"), panel.mkString("\n"))
-    val pp = d.resolve("panel.vcf").toString
-    val wa = Vcf.readAllSamples(spark, pp).orderBy("chrom", "pos")
+      full ++ shortLines(full, 30, 8765)
+    val pp = Files.createTempDirectory("graftvcffuzz").resolve("panel.vcf")
+    Files.writeString(pp, panel.mkString("\n"))
+    val wa = Vcf.readAllSamples(spark, pp.toString).orderBy("chrom", "pos")
       .collect().map(_.toSeq)
     val wb = spark.read.format("vcf").option("samples", "all")
-      .option("split_bytes", "2048").load(pp).orderBy("chrom", "pos")
+      .option("split_bytes", "2048").load(pp.toString).orderBy("chrom", "pos")
       .collect().map(_.toSeq)
-    assert(wa.length == 200 && wa.toSeq == wb.toSeq)
+    assert(wa.length == 230 && wa.toSeq == wb.toSeq)
+  }
+
+  test("vcf DataSourceV2: randomized pushed filter trees keep the expression path's rows") {
+    // random And/Or trees over every pushable column, typed INFO included,
+    // with null, NaN, -0.0, Int and Long comparands: whatever the scan
+    // keeps or decides, the rows are those of Vcf.read(...).filter(p)
+    val infoFields = Map("DP" -> "long", "AF" -> "double", "FLAG" -> "flag")
+    val v2 = spark.read.format("vcf").option("info_fields", "DP:long,AF:double,FLAG:flag")
+      .load(fuzzFile)
+    val expr = Vcf.withInfoFields(Vcf.read(spark, fuzzFile).withColumnRenamed("dp", "fmt_dp"),
+      infoFields).withColumnRenamed("dp", "info_dp").withColumnRenamed("af", "info_af")
+      .withColumnRenamed("flag", "info_flag").withColumnRenamed("fmt_dp", "dp").cache()
+    assert(expr.columns.toSeq == v2.columns.toSeq)
+    val rnd = new scala.util.Random(20261020)
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+    def leaf(): org.apache.spark.sql.Column = {
+      val (c, vs) = pick[(String, Seq[Any])](
+        "chrom" -> Seq("chr1", "chr2", "chr4", "chrS7", ""),
+        "pos" -> Seq(0L, 13L, 2600L, 2601L, Long.MaxValue, 13, 2600),
+        "qual" -> Seq(Double.NaN, -0.0, 0.0, 12.5, 50.5, Double.PositiveInfinity),
+        "filter" -> Seq("PASS", ".", ""),
+        "gq" -> Seq(0, 20, 50, 98, 20L),
+        "dp" -> Seq(0, 10, 30, 49, 10L),
+        "info_dp" -> Seq(1L, 7L, 30L, 7, 30),
+        "info_af" -> Seq(Double.NaN, -0.0, 0.1, 0.5),
+        "info_flag" -> Seq(true, false))
+      val x = col(c)
+      def v: Any = pick(vs: _*)
+      rnd.nextInt(9) match {
+        case 0 => x === v
+        case 1 => x > v
+        case 2 => x >= v
+        case 3 => x < v
+        case 4 => x <= v
+        case 5 => x.isin(v, v)
+        case 6 => x.isin(v, null)
+        case 7 => x.isNotNull
+        case _ => x === lit(null)
+      }
+    }
+    def tree(depth: Int): org.apache.spark.sql.Column =
+      if (depth == 0 || rnd.nextInt(3) == 0) leaf()
+      else if (rnd.nextBoolean()) tree(depth - 1) && tree(depth - 1)
+      else tree(depth - 1) || tree(depth - 1)
+    // rows as text, sorted: NaN must equal itself
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def pushed(df: org.apache.spark.sql.DataFrame): String =
+      "PushedFilters: \\[(.*?)\\], ReadSchema".r
+        .findFirstMatchIn(df.queryExecution.executedPlan.toString).map(_.group(1)).getOrElse("")
+    // the first 20 trees' PushedFilters, as the scan planned them before
+    // its evaluator was rewritten over VcfRecord
+    val recorded = Seq(
+      "IsNotNull(info_dp), EqualTo(info_dp,1)",
+      "Or(Or(Or(EqualTo(chrom,chr1),GreaterThan(info_dp,7)),IsNotNull(info_dp)),EqualTo(info_af,0.5))",
+      "IsNotNull(info_af), IsNotNull(chrom), In(filter, [,PASS]), IsNotNull(pos), GreaterThanOrEqual(info_af,-0.0), LessThanOrEqual(pos,0), GreaterThan(info_af,0.1)",
+      "",
+      "",
+      "IsNotNull(info_dp), LessThanOrEqual(info_dp,30)",
+      "Or(Or(Or(LessThanOrEqual(info_flag,false),GreaterThanOrEqual(gq,98)),In(info_dp, [30,7])),Or(IsNotNull(chrom),LessThan(pos,13)))",
+      "IsNotNull(pos), GreaterThan(pos,9223372036854775807)",
+      "Or(LessThanOrEqual(pos,0),And(Or(EqualTo(filter,PASS),EqualTo(qual,12.5)),Or(GreaterThanOrEqual(info_dp,7),EqualTo(pos,9223372036854775807))))",
+      "Or(EqualTo(info_dp,30),Or(LessThan(pos,2600),In(chrom, [,chr1])))",
+      "",
+      "",
+      "Or(And(And(LessThanOrEqual(qual,-0.0),GreaterThan(pos,13)),And(IsNotNull(info_flag),EqualTo(gq,20))),GreaterThan(gq,50))",
+      "IsNotNull(info_flag), IsNotNull(chrom), GreaterThan(qual,Infinity), IsNotNull(pos), IsNotNull(qual)",
+      "IsNotNull(info_dp), GreaterThan(info_dp,7)",
+      "",
+      "IsNotNull(filter)",
+      "In(gq, [20,null])",
+      "Or(GreaterThan(gq,20),Or(And(LessThanOrEqual(info_flag,true),In(gq, [20,98])),Or(GreaterThan(info_flag,true),LessThanOrEqual(dp,49))))",
+      "Or(LessThan(gq,0),And(And(LessThanOrEqual(info_dp,30),EqualTo(info_flag,true)),GreaterThan(info_af,NaN)))")
+    try (0 until 200).foreach { i =>
+      val p = tree(3)
+      val q = v2.filter(p)
+      assert(rows(q) == rows(expr.filter(p)), s"tree $i: $p")
+      if (i < recorded.length) assert(pushed(q) == recorded(i), s"tree $i: $p")
+    } finally expr.unpersist()
   }
 
   test("vcf DataSourceV2: LIMIT stops readers early (stream closed) and count() scans an empty projection") {
@@ -417,15 +521,20 @@ class VcfBedSpec extends SparkSpec {
 
   test("vcf DataSourceV2: null comparand in a pushed In/EqualTo is a non-match, not an NPE") {
     import org.apache.spark.sql.sources.{EqualTo, GreaterThan, In}
-    val head = Array("chr1", "100", ".", "A", "T", "50")
+    val head = new VcfRecord().reset("chr1\t100\t.\tA\tT\t50")
+    def keeps(f: org.apache.spark.sql.sources.Filter) =
+      VcfFilterEval.eval(VcfFilterEval.bind(f, head), head)
     // Spark translates col("pos").isin(100L, null) into a sources.In whose
     // values array contains null — SQL three-valued logic says a null
     // comparand never matches, so the scan must drop, not NPE.
-    assert(VcfFilterEval.eval(In("pos", Array[Any](100L, null)), "chr1", 100L, head))
-    assert(!VcfFilterEval.eval(In("pos", Array[Any](null)), "chr1", 100L, head))
-    assert(!VcfFilterEval.eval(In("qual", Array[Any](null, 49.0)), "chr1", 100L, head))
-    assert(!VcfFilterEval.eval(EqualTo("pos", null), "chr1", 100L, head))
-    assert(!VcfFilterEval.eval(GreaterThan("qual", null), "chr1", 100L, head))
+    assert(keeps(In("pos", Array[Any](100L, null))))
+    assert(!keeps(In("pos", Array[Any](null))))
+    assert(!keeps(In("qual", Array[Any](null, 49.0))))
+    assert(!keeps(EqualTo("pos", null)))
+    assert(!keeps(GreaterThan("qual", null)))
+    // a string comparand is bound to the UTF8String the chrom column is
+    assert(keeps(EqualTo("chrom", "chr1")))
+    assert(!keeps(EqualTo("chrom", "chr10")))
     // end-to-end through the pushdown machinery
     val v2 = spark.read.format("vcf").load(vcfDir)
     assert(v2.filter(col("pos").isin(lit(100L), lit(null))).count() == 1L)
@@ -444,19 +553,37 @@ class VcfBedSpec extends SparkSpec {
         .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
     val dupInfo = write("i.vcf", "chr1\t100\t.\tA\tT\t50\tPASS\tDP=1;DP=2\tGT\t0/1")
     val dupFmt = write("f.vcf", "chr1\t100\t.\tA\tT\t50\tPASS\tDP=1\tGT:DP:DP\t0/1:3:4")
-    for (path <- Seq(dupInfo, dupFmt)) {
+    def bothThrow(path: String, q: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
       // expression path: str_to_map / map_from_arrays under the default
       // spark.sql.mapKeyDedupPolicy=EXCEPTION
       val eExpr = intercept[Throwable] {
-        Vcf.read(spark, path).select("info", "sample").collect()
+        q(Vcf.read(spark, path)).collect()
       }
       assert(messages(eExpr).toLowerCase.contains("duplicate map key"), messages(eExpr))
       // v2 path must not silently last-wins where the expression path throws
       val eV2 = intercept[Throwable] {
-        spark.read.format("vcf").load(path).select("info", "sample").collect()
+        q(spark.read.format("vcf").load(path)).collect()
       }
       assert(messages(eV2).toLowerCase.contains("duplicate map key"), messages(eV2))
     }
+    for (path <- Seq(dupInfo, dupFmt)) bothThrow(path, _.select("info", "sample"))
+    // whatever the projection or pushed filter reads of FORMAT
+    for (c <- Seq("gt", "ad", "pl", "dp", "gq")) bothThrow(dupFmt, _.select(c))
+    bothThrow(dupFmt, _.filter(col("gq") > 0).select("chrom"))
+  }
+
+  test("vcf read options out of range fail naming the option and its value") {
+    def message(body: => Any): String = intercept[IllegalArgumentException](body).getMessage
+    for ((o, v) <- Seq("split_bytes" -> "-1", "split_bytes" -> "0",
+                       "sample_index" -> "-1", "sample_index" -> "x")) {
+      val m = message(spark.read.format("vcf").option(o, v).load(vcfDir).collect())
+      assert(m.contains(o) && m.contains(v), m)
+    }
+    for (m <- Seq(message(Vcf.read(spark, vcfDir, -1)),
+                  message(Vcf.readStream(spark, new java.io.File(vcfDir).getParent, -1))))
+      assert(m.contains("sampleIndex") && m.contains("-1"), m)
+    assert(spark.read.format("vcf").option("split_bytes", "64").option("sample_index", "0")
+      .load(vcfDir).count() == 3L)
   }
 
   test("BED read/write round-trip with half-open intervals") {
