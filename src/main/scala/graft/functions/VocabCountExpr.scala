@@ -37,9 +37,11 @@ case class VocabCount(child: Expression, vocab: Seq[String]) extends UnaryExpres
   }
 
   // sorted UTF8String array shared by eval and codegen (referenced via
-  // the expression instance captured in the generated class)
+  // the expression instance captured in the generated class). Ordered by
+  // binaryCompare, the byte order compareTo gives: Spark 4.1's compareTo
+  // consults SparkEnvUtils.isTesting() per call and throws under testing.
   @transient private lazy val sorted: Array[UTF8String] =
-    vocab.map(UTF8String.fromString).sortWith(_.compareTo(_) < 0).toArray
+    vocab.map(UTF8String.fromString).sortWith(_.binaryCompare(_) < 0).toArray
 
   def count(s: UTF8String): Long = VocabCountUtil.count(s, sorted)
 
@@ -72,7 +74,7 @@ object VocabCountUtil {
           var lo = 0; var hi = sorted.length - 1
           while (lo <= hi) {
             val mid = (lo + hi) >>> 1
-            val cmp = sorted(mid).compareTo(t)
+            val cmp = sorted(mid).binaryCompare(t)
             if (cmp == 0) { c += 1; lo = hi + 2 } // found; exit
             else if (cmp < 0) lo = mid + 1
             else hi = mid - 1

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
@@ -74,8 +74,8 @@ object TextDedup {
   val HOT_BAND_CAP = 128
 
   /** The ONE definition of the banding scheme: an array of (bid, k1, k2)
-    * structs over a signature frame's mh columns — every band consumer
-    * (bandRows, the d3/d4 automata) explodes THIS, so band width and key
+    * structs over a signature frame's mh columns — exploded only by
+    * bandRows, which every band consumer calls, so band width and key
     * format can never silently diverge between the shared pass and the
     * spec-reference forms. The band key is the two source mh LONGS
     * verbatim (VERDICT r14 #3) rather than their concat_ws string: the
@@ -90,33 +90,28 @@ object TextDedup {
         col(s"mh${2 * b - 1}").as("k1"), col(s"mh${2 * b}").as("k2"))
     }: _*)
 
-  /** Every band consumer's input guard: ALL signature columns non-null
-    * (advisor r15). minhashSig is all-or-nothing today, so this equals the
-    * old `mh1.isNotNull` row-for-row — but the band automatons groupBy
-    * (null-safe) while lshPairs/pairScoresGrouped also JOIN back on the
-    * band keys (null-rejecting), and a future partial-null signature would
-    * make those two disagree silently. One shared guard closes the class
-    * at every site at once. */
-  private def sigComplete: Column =
-    (1 to K).map(i => col(s"mh$i").isNotNull).reduce(_ && _)
-
-  /** doc_id + exploded (band_id, k1, k2) rows. */
-  private def bandRows(mh: DataFrame): DataFrame = {
+  /** doc_id + exploded (bid, k1, k2) rows, then the `payload` columns
+    * (named by their aliases), evaluated once per doc before the explode —
+    * the banded-row builder every band consumer calls. */
+  private def bandRows(mh: DataFrame, payload: Column*): DataFrame = {
     // zero-shingle docs (< 3 tokens) minhash to all-null signatures —
     // without the filter every such doc would share the all-null band key
     // and they would all pair with each other (then d4 divides by an
     // empty union). Too-short docs are exact-dedup territory (d1), not
     // MinHash candidates. (Null-key grouping would also differ between
     // Spark's null-safe groupBy and a join's null-rejecting equality.)
-    // sigComplete, not mh1-only (advisor r15): the packed band key groups
-    // null-safely but joins back null-rejectingly, so a partially-null
-    // signature — impossible under today's all-or-nothing minhashSig, but
-    // one refactor away — would silently drop its banded doc from the
+    // ALL signature columns non-null, not mh1-only (advisor r15):
+    // minhashSig is all-or-nothing today, so the two agree row-for-row —
+    // but the packed band key groups null-safely while lshPairs and
+    // pairScoresGrouped also JOIN back on it null-rejectingly, so a
+    // partially-null signature would silently drop its banded doc from the
     // join-back instead of degrading like the old concat_ws string key did.
-    mh.filter(sigComplete)
-      .select(col("doc_id"), explode(bandStructs).as("band"))
-      .select(col("doc_id"), col("band.bid").as("bid"),
-        col("band.k1").as("k1"), col("band.k2").as("k2"))
+    val sigComplete = (1 to K).map(i => col(s"mh$i").isNotNull).reduce(_ && _)
+    val exploded = mh.filter(sigComplete)
+      .select((col("doc_id") +: payload) :+ explode(bandStructs).as("band"): _*)
+    exploded.select(Seq(col("doc_id"), col("band.bid").as("bid"),
+        col("band.k1").as("k1"), col("band.k2").as("k2")) ++
+      exploded.columns.drop(1).dropRight(1).map(col): _*)
   }
 
   /** Distinct candidate near-dup pairs (a < b) sharing >= 1 LSH band.
@@ -157,11 +152,11 @@ object TextDedup {
     * connectivity, not the pairs themselves. Public: custom CC consumers
     * (and D7Probe's stage split) want the edge set without the pair
     * list. */
-  def bandStarEdges(mh: DataFrame, pinMerge: Boolean = false): DataFrame = {
+  def bandStarEdges(mh: DataFrame): DataFrame = {
     val bands = bandRows(mh)
     // join-back lands on the keys the aggregate shuffled on — no second
     // exchange (same layout trick as lshPairs). Deliberately NOT
-    // merge-hinted by default, unlike pairScoresGrouped's join-backs
+    // merge-hinted, unlike pairScoresGrouped's join-backs
     // (r17): the build side here is the bc>=2-filtered AGGREGATE sitting
     // above its own materialized shuffle stage, so AQE sizes the
     // broadcast decision from RUNTIME stats, not the parquet static
@@ -169,13 +164,11 @@ object TextDedup {
     // stream with no shuffle below it — nothing measured). Small multi
     // set (the real-corpus low-dup case) → broadcast that skips
     // re-shuffling the giant exploded band stream; huge multi set → AQE's
-    // re-optimization keeps the merge join. D7EdgesProbe measures the
-    // anti-lever (pinMerge=true) against this adaptive default at the
-    // 100x replica.
+    // re-optimization keeps the merge join. A merge-pinned join-back
+    // measured a tie at the 100x replica (NOTES, round 17).
     val stats = bands.groupBy("bid", "k1", "k2")
       .agg(count(lit(1)).as("bc"), min("doc_id").as("mindoc"))
-    bands.join(if (pinMerge) stats.hint("merge") else stats,
-        Seq("bid", "k1", "k2"))
+    bands.join(stats, Seq("bid", "k1", "k2"))
       .filter(col("bc") >= 2 && col("doc_id") =!= col("mindoc"))
       .select(col("mindoc").as("doc_a"), col("doc_id").as("doc_b"))
       .distinct()
@@ -199,25 +192,16 @@ object TextDedup {
     bands.join(multi, Seq("bid", "k1", "k2")).select("doc_id").distinct()
   }
 
-  /** One banded row for the per-band pair automaton (`sh` is whichever
-    * payload the score consumes: sorted shingle set for d4, the K-long
-    * signature vector for d3). */
-  private[queries] case class BandedDoc(bid: Int, k1: Long, k2: Long,
-    docId: Long, sh: Array[Long])
-
-  /** Banded row carrying BOTH payloads for the shared d3+d4 pass: the
-    * K-long signature vector (est-sim) and the sorted shingle set
-    * (Jaccard). */
-  private[queries] case class BandedDoc2(bid: Int, k1: Long, k2: Long,
-    docId: Long, sig: Array[Long], sh: Array[Long])
-
-  /** Banded row with a per-doc batch-membership flag for the INCREMENTAL
-    * pass ([[incrementalEstSimPairs]]): `isNew` rides the automaton
-    * payload so the emitted pair knows whether either side belongs to the
-    * new batch without re-evaluating an arbitrary predicate on pair rows
-    * (the predicate may reference any doc column, not just doc_id). */
-  private[queries] case class BandedDocN(bid: Int, k1: Long, k2: Long,
-    docId: Long, sh: Array[Long], isNew: Boolean)
+  /** One banded row for the per-band pair automaton ([[bandPairs]]). A
+    * pass fills the payload its score reads — the K-long signature vector
+    * `sig` (est-sim), the sorted shingle set `sh` (Jaccard), the
+    * batch-membership flag `isNew` (the incremental pass) — and
+    * [[bandPairs]] leaves the rest null / false. `isNew` rides the payload
+    * so an emitted pair knows whether either side is new without
+    * re-evaluating an arbitrary predicate on pair rows (the predicate may
+    * reference any doc column, not just doc_id). */
+  private[queries] case class BandRow(bid: Int, k1: Long, k2: Long,
+    docId: Long, sig: Array[Long], sh: Array[Long], isNew: Boolean)
 
   /** Jaccard over sorted-distinct long arrays — alloc-free two-pointer
     * merge, the exact-integer-double arithmetic of [[Text.jaccardSorted]]. */
@@ -246,43 +230,24 @@ object TextDedup {
 
   /** Streaming per-band pair generator with the pair score computed IN
     * the band group — the d3/d4 scale path. ONE instance per band group:
-    * the input iterator is a single group's (docId, payload) rows in
-    * docId order, exactly what `flatMapSortedGroups` hands its function.
-    *
-    * GROUP-INTEGRITY CONTRACT (round 14 — a real 100x miscount): every
-    * consumer feeds this through `groupByKey(...).flatMapSortedGroups`,
-    * NEVER through a manual `repartition + sortWithinPartitions +
-    * mapPartitions`. The manual form carries no physical-plan
-    * requirement: Catalyst reused the user repartition as the adjacent
-    * semi-join's own exchange, and AQE's runtime join rewrites then
-    * voided the (bid, key) co-location entirely — fragmented bands
-    * re-ran the cap/all-pairs decision per FRAGMENT, and the incremental
-    * pair pass emitted 2,959,098 pairs where the band-complete answer is
-    * 4,474,250 (DuckDB replay over the same signatures; only
-    * reproducible at the 100x replica — small-scale plans broadcast
-    * statically and keep the exchange, which is why every sf0.01/sf0.1
-    * oracle stayed green). MapGroups DECLARES ClusteredDistribution +
-    * ordering, so the engine must preserve them through every rewrite —
-    * and because each instance IS one declared group, this class carries
-    * no group-boundary detection of its own (the r15 key packing removed
-    * the per-row string compare it used to cost).
+    * the input iterator is a single group's rows in docId order, exactly
+    * what [[bandPairs]]' `flatMapSortedGroups` hands its function, so this
+    * class carries no group-boundary detection of its own (the r15 key
+    * packing removed the per-row string compare it used to cost).
     *
     * Cold bands (<= cap members) emit all pairs (a < b); a band crossing
     * the cap degrades to a star over its min doc (= the first in sorted
     * order) exactly like [[lshPairs]] — the buffer never holds more than
-    * cap+1 payload arrays, so one pathological band key cannot blow the
-    * task heap. `score` is evaluated per emitted pair: Jaccard over
-    * sorted-distinct shingle sets for d4 (the same exact-integer-double
-    * arithmetic as [[Text.jaccardSorted]]), matching-component fraction
-    * over signature vectors for d3. */
-  private final class BandPairIterator[P, R](
-      iter: Iterator[(Long, P)], cap: Int,
-      score: (P, P) => R)
-      extends Iterator[(Long, Long, R)] {
-    private val pending = scala.collection.mutable.Queue.empty[(Long, Long, R)]
-    private val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, P)]
+    * cap+1 rows, so one pathological band key cannot blow the task heap.
+    * `score(a, b)` (a.docId < b.docId) builds each emitted row. */
+  private final class BandPairIterator[R](
+      iter: Iterator[BandRow], cap: Int,
+      score: (BandRow, BandRow) => R)
+      extends Iterator[R] {
+    private val pending = scala.collection.mutable.Queue.empty[R]
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[BandRow]
     private var hot = false
-    private var center: (Long, P) = null
+    private var center: BandRow = null
 
     private def flushGroup(): Unit = {
       // cold group at end-of-group: all pairs (hot groups emitted on the fly)
@@ -291,7 +256,7 @@ object TextDedup {
         while (i < buf.length) {
           var j = i + 1
           while (j < buf.length) {
-            pending.enqueue((buf(i)._1, buf(j)._1, score(buf(i)._2, buf(j)._2)))
+            pending.enqueue(score(buf(i), buf(j)))
             j += 1
           }
           i += 1
@@ -300,9 +265,9 @@ object TextDedup {
       buf.clear(); hot = false
     }
 
-    private def accept(d: (Long, P)): Unit = {
+    private def accept(d: BandRow): Unit = {
       if (hot) {
-        pending.enqueue((center._1, d._1, score(center._2, d._2)))
+        pending.enqueue(score(center, d))
       } else {
         buf.append(d)
         if (buf.length > cap) {
@@ -312,7 +277,7 @@ object TextDedup {
           center = buf.head
           var i = 1
           while (i < buf.length) {
-            pending.enqueue((center._1, buf(i)._1, score(center._2, buf(i)._2)))
+            pending.enqueue(score(center, buf(i)))
             i += 1
           }
           buf.clear()
@@ -325,108 +290,96 @@ object TextDedup {
       if (pending.isEmpty) flushGroup()
       pending.nonEmpty
     }
-    override def next(): (Long, Long, R) = pending.dequeue()
+    override def next(): R = pending.dequeue()
   }
 
-  /** d4's verified near-dup pairs with the Jaccard computed PER BAND GROUP
-    * instead of per joined pair row.
+  /** The signature vector payload of [[BandRow]]. */
+  private def sigArray: Column = array((1 to K).map(i => col(s"mh$i")): _*).as("sig")
+
+  /** THE band automaton, shared by every pair pass: `rows` (doc_id, bid,
+    * k1, k2 and whichever [[BandRow]] payloads the pass carries; the
+    * others are left null / false) grouped by band key, each group
+    * streamed in doc_id order through one [[BandPairIterator]].
     *
-    * The double-join form (pairs ⋈ docs ⋈ docs) ships one shingle ARRAY
-    * per candidate pair through the second join's shuffle — at the 100×
-    * replica that is 22.5 M rows × ~28 longs ≈ 5 GB riding one exchange,
-    * the single largest cost in the whole bench (r10 verdict). Here each
-    * doc's set ships at most once per BAND it belongs to (≤ BANDS copies,
-    * and only for docs in ≥2-member bands): band rows join the shingle
-    * sets by doc_id, shuffle once by (bid, key), and a sorted streaming
-    * automaton emits (doc_a, doc_b, jaccard) directly — the pair-count ×
-    * set-size term disappears from every shuffle. Dedup across bands
-    * happens on the tiny (a, b, jac) rows. Same pair set as [[lshPairs]]
-    * (cold all-pairs + hot-band stars, spec-pinned), same Jaccard
-    * arithmetic as [[Text.jaccardSorted]].
-    *
-    * `docsSh` is the (doc_id, sorted-distinct shingle set) frame (the
-    * at-rest shingle table in the registered d4, shared with d8/x6/x8;
-    * the banded inner join below restricts to pair-capable docs). */
-  private[queries] def jaccardPairsGrouped(s: SparkSession, docsSh: DataFrame,
-      mh: DataFrame, cap: Int = HOT_BAND_CAP): DataFrame = {
-    import s.implicits._
-    val bands = bandRows(mh)
-    val multi = bands.groupBy("bid", "k1", "k2").agg(count(lit(1)).as("bc"))
-      .filter(col("bc") >= 2)
-    // join-back lands on the aggregate's own key layout — no extra exchange
-    val banded = bands.join(multi, Seq("bid", "k1", "k2"))
-      .select(col("doc_id"), col("bid"), col("k1"), col("k2"))
-    // the inner join restricts to banded docs — no separate candidate
-    // semi-join needed.
-    // flatMapSortedGroups, NOT repartition+mapPartitions — see the
-    // BandPairIterator group-integrity contract.
-    banded.join(docsSh.filter(col("sh").isNotNull), Seq("doc_id"))
-      .select(col("bid"), col("k1"), col("k2"), col("doc_id").as("docId"),
-        col("sh"))
-      .as[BandedDoc]
-      .groupBy(col("bid"), col("k1"), col("k2")).as[(Int, Long, Long), BandedDoc]
+    * GROUP-INTEGRITY CONTRACT (round 14 — a real 100x miscount): the
+    * automaton runs under `flatMapSortedGroups`, NEVER a manual
+    * `repartition + sortWithinPartitions + mapPartitions`. The manual form
+    * carries no physical-plan requirement: Catalyst reused the user
+    * repartition as the adjacent semi-join's own exchange, and AQE's
+    * runtime join rewrites then voided the (bid, key) co-location
+    * entirely — fragmented bands re-ran the cap/all-pairs decision per
+    * FRAGMENT, and the incremental pair pass emitted 2,959,098 pairs where
+    * the band-complete answer is 4,474,250 (DuckDB replay over the same
+    * signatures; only reproducible at the 100x replica — small-scale plans
+    * broadcast statically and keep the exchange, which is why every
+    * sf0.01/sf0.1 oracle stayed green). MapGroups DECLARES
+    * ClusteredDistribution + ordering, so the engine must preserve them
+    * through every rewrite. groupBy(cols).as[K,T], not
+    * groupByKey(closure): the column form derives the key from the
+    * existing columns (no AppendColumns row deserialization just to
+    * compute it). */
+  private def bandPairs[R: Encoder](rows: DataFrame, cap: Int)(
+      score: (BandRow, BandRow) => R): Dataset[R] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val absent = Map("sig" -> lit(null).cast("array<bigint>"),
+      "sh" -> lit(null).cast("array<bigint>"), "isNew" -> lit(false))
+    val payload = Seq("sig", "sh", "isNew").map(c =>
+      if (rows.columns.contains(c)) col(c) else absent(c).as(c))
+    rows.select(Seq(col("bid"), col("k1"), col("k2"), col("doc_id").as("docId")) ++
+        payload: _*)
+      .as[BandRow]
+      .groupBy(col("bid"), col("k1"), col("k2")).as[(Int, Long, Long), BandRow]
       .flatMapSortedGroups(col("docId")) { case (_, it) =>
-        new BandPairIterator(it.map(d => (d.docId, d.sh)), cap,
-          TextDedup.jaccardScore)
+        new BandPairIterator(it, cap, score)
       }
-      .toDF("doc_a", "doc_b", "jaccard")
-      .dropDuplicates("doc_a", "doc_b")
   }
 
-  /** d3's candidate pairs + estimated similarity via the SAME band
-    * automaton as [[jaccardPairsGrouped]] — band rows AND the signature
-    * vector come out of one scan of the (at-rest) signature frame, so
-    * the two 22.5 M-pair-row joins of the double-join form disappear
-    * entirely: one band shuffle of ~BANDS×N tiny rows, pairs scored
-    * in-group, dedup on the output rows. No multi-band prefilter: the
-    * payload is K longs, cheaper to ship than to semi-join away.
-    * TextDedupSpec pins it pair-for-pair equal to the join form. */
+  /** d3's candidate pairs + estimated similarity, x21's pass over the
+    * at-rest signature table: band rows AND the signature vector come out
+    * of one scan of the signature frame, so the two 22.5 M-pair-row joins
+    * of the double-join form disappear entirely — one band shuffle of
+    * ~BANDS×N tiny rows, pairs scored in-group, dedup on the output rows.
+    * No multi-band prefilter: the payload is K longs, cheaper to ship than
+    * to semi-join away. TextDedupSpec pins it pair-for-pair equal to the
+    * join form. */
   private[queries] def estSimPairsGrouped(s: SparkSession, mh: DataFrame,
       cap: Int = HOT_BAND_CAP): DataFrame = {
     import s.implicits._
-    val sig = array((1 to K).map(i => col(s"mh$i")): _*)
-    val rows = mh.filter(sigComplete)
-      .select(col("doc_id"), sig.as("sig"), explode(bandStructs).as("band"))
-      .select(col("band.bid").as("bid"), col("band.k1").as("k1"),
-        col("band.k2").as("k2"), col("doc_id").as("docId"),
-        col("sig").as("sh"))
-    // flatMapSortedGroups — see the BandPairIterator group-integrity
-    // contract. groupBy(cols).as[K,T], not groupByKey(closure): the
-    // column form derives the key from the existing columns (no
-    // AppendColumns row deserialization just to compute it).
-    rows.as[BandedDoc]
-      .groupBy(col("bid"), col("k1"), col("k2")).as[(Int, Long, Long), BandedDoc]
-      .flatMapSortedGroups(col("docId")) { case (_, it) =>
-        new BandPairIterator(it.map(d => (d.docId, d.sh)), cap,
-          TextDedup.estSimScore)
-      }
+    bandPairs(bandRows(mh, sigArray), cap)((a, b) =>
+        (a.docId, b.docId, estSimScore(a.sig, b.sig)))
       .toDF("doc_a", "doc_b", "est_sim")
       .dropDuplicates("doc_a", "doc_b")
   }
 
   /** ONE band pass scoring BOTH d3's estimated similarity and d4's
-    * Jaccard — the shared form of [[estSimPairsGrouped]] and
-    * [[jaccardPairsGrouped]]. Those two build the IDENTICAL
-    * (bid, key)-shuffled band-row stream and run the same automaton over
-    * it, differing only in the payload the score consumes; running them
-    * separately pays the band shuffle (the largest single cost left in
-    * the d-family at the 100x replica) twice per session. Here each
-    * banded row carries the signature vector AND the sorted shingle set,
-    * the automaton emits (doc_a, doc_b, est_sim, jaccard) in one sweep,
-    * and AtRest publishes the tiny result (4 scalars per pair — no payload
-    * arrays) so whichever of d3/d4 runs second scans a written table.
-    * Keeps d4's >= 2-member band
-    * prefilter (the shingle payload is heavy; singleton bands emit
-    * nothing anyway). Pair set and per-pair arithmetic are pinned
-    * pair-for-pair equal to both single-score forms by TextDedupSpec. */
+    * Jaccard: each banded row carries the signature vector AND the sorted
+    * shingle set, the automaton emits (doc_a, doc_b, est_sim, jaccard) in
+    * one sweep, and AtRest publishes the tiny result (4 scalars per pair —
+    * no payload arrays) so whichever of d3/d4 runs second scans a written
+    * table.
+    *
+    * The Jaccard is computed PER BAND GROUP instead of per joined pair
+    * row. The double-join form ([[jaccardPairsJoined]]) ships one shingle
+    * ARRAY per candidate pair through the second join's shuffle — at the
+    * 100× replica that is 22.5 M rows × ~28 longs ≈ 5 GB riding one
+    * exchange, the single largest cost in the whole bench (r10 verdict).
+    * Here each doc's set ships at most once per BAND it belongs to
+    * (≤ BANDS copies, and only for docs in ≥2-member bands — the shingle
+    * payload is heavy and singleton bands emit nothing anyway): band rows
+    * join the shingle sets by doc_id, shuffle once by (bid, key), and the
+    * pair-count × set-size term disappears from every shuffle. Same pair
+    * set as [[lshPairs]], same Jaccard arithmetic as [[Text.jaccardSorted]];
+    * TextDedupSpec pins both scores pair-for-pair against
+    * [[estSimPairsGrouped]] and [[jaccardPairsJoined]].
+    *
+    * `docsSh` is the (doc_id, sorted-distinct shingle set) frame (the
+    * at-rest shingle table, shared with d8/x6/x8; the banded inner join
+    * restricts it to pair-capable docs). */
   private[queries] def pairScoresGrouped(s: SparkSession, docsSh: DataFrame,
       mh: DataFrame, cap: Int = HOT_BAND_CAP): DataFrame = {
     import s.implicits._
-    val sigArr = array((1 to K).map(i => col(s"mh$i")): _*)
-    val bands = mh.filter(sigComplete)
-      .select(col("doc_id"), sigArr.as("sig"), explode(bandStructs).as("band"))
-      .select(col("doc_id"), col("band.bid").as("bid"),
-        col("band.k1").as("k1"), col("band.k2").as("k2"), col("sig"))
+    val bands = bandRows(mh, sigArray)
     val multi = bands.groupBy("bid", "k1", "k2").agg(count(lit(1)).as("bc"))
       .filter(col("bc") >= 2)
     // join-back lands on the aggregate's own key layout — no extra
@@ -447,21 +400,10 @@ object TextDedup {
     // identical every rep (22,574,543 pairs). PlanSpec positively pins
     // both SMJ join-backs so the hint cannot silently revert.
     val banded = bands.join(multi.hint("merge"), Seq("bid", "k1", "k2"))
-      .select(col("doc_id"), col("bid"), col("k1"), col("k2"), col("sig"))
-    // flatMapSortedGroups — see the BandPairIterator group-integrity
-    // contract. Same merge pin: the shingle-set side is corpus-sized too.
-    banded.join(docsSh.filter(col("sh").isNotNull).hint("merge"), Seq("doc_id"))
-      .select(col("bid"), col("k1"), col("k2"), col("doc_id").as("docId"),
-        col("sig"), col("sh"))
-      .as[BandedDoc2]
-      .groupBy(col("bid"), col("k1"), col("k2")).as[(Int, Long, Long), BandedDoc2]
-      .flatMapSortedGroups(col("docId")) { case (_, it) =>
-        new BandPairIterator[(Array[Long], Array[Long]), (Double, Double)](
-          it.map(d => (d.docId, (d.sig, d.sh))), cap,
-          (x, y) => (TextDedup.estSimScore(x._1, y._1),
-            TextDedup.jaccardScore(x._2, y._2)))
-          .map { case (a, b, (e, j)) => (a, b, e, j) }
-      }
+    // same merge pin: the shingle-set side is corpus-sized too
+    bandPairs(banded.join(docsSh.filter(col("sh").isNotNull).hint("merge"),
+        Seq("doc_id")), cap)((a, b) =>
+        (a.docId, b.docId, estSimScore(a.sig, b.sig), jaccardScore(a.sh, b.sh)))
       .toDF("doc_a", "doc_b", "est_sim", "jaccard")
       .dropDuplicates("doc_a", "doc_b")
   }
@@ -505,35 +447,16 @@ object TextDedup {
   def incrementalEstSimPairs(s: SparkSession, mh: DataFrame, isNew: Column,
       cap: Int = HOT_BAND_CAP): DataFrame = {
     import s.implicits._
-    val sigArr = array((1 to K).map(i => col(s"mh$i")): _*)
     // null-valued predicates (e.g. batch_id === "b7" over rows with null
     // batch_id) mean NOT-new — exactly what filter(full-pairs, new) would
     // do with them; without the coalesce such a doc in a touched band
-    // would NPE the primitive-Boolean decode of BandedDocN
-    val rows = mh.filter(sigComplete)
-      .select(col("doc_id"), sigArr.as("sig"),
-        coalesce(isNew, lit(false)).as("is_new"),
-        explode(bandStructs).as("band"))
-      .select(col("band.bid").as("bid"), col("band.k1").as("k1"),
-        col("band.k2").as("k2"), col("doc_id").as("docId"),
-        col("sig").as("sh"), col("is_new").as("isNew"))
+    // would NPE the primitive-Boolean decode of BandRow
+    val rows = bandRows(mh, sigArray, coalesce(isNew, lit(false)).as("isNew"))
     // distinct band keys of the new batch: proportional to batch size;
     // unhinted — AQE broadcasts it when it is small (the production case)
     val newKeys = rows.filter(col("isNew")).select("bid", "k1", "k2").distinct()
-    val touched = rows.join(newKeys, Seq("bid", "k1", "k2"), "left_semi")
-    // flatMapSortedGroups — see the BandPairIterator group-integrity
-    // contract. THIS is the site where the manual repartition form
-    // miscounted at 100x: the user exchange doubled as the semi-join's
-    // left input, and AQE's runtime join rewrite voided band co-location
-    // (2,959,098 pairs vs the correct 4,474,250).
-    touched.as[BandedDocN]
-      .groupBy(col("bid"), col("k1"), col("k2")).as[(Int, Long, Long), BandedDocN]
-      .flatMapSortedGroups(col("docId")) { case (_, it) =>
-        new BandPairIterator[(Array[Long], Boolean), (Double, Boolean)](
-          it.map(d => (d.docId, (d.sh, d.isNew))), cap,
-          (x, y) => (TextDedup.estSimScore(x._1, y._1), x._2 || y._2))
-          .map { case (a, b, (e, keep)) => (a, b, e, keep) }
-      }
+    bandPairs(rows.join(newKeys, Seq("bid", "k1", "k2"), "left_semi"), cap)((a, b) =>
+        (a.docId, b.docId, estSimScore(a.sig, b.sig), a.isNew || b.isNew))
       .toDF("doc_a", "doc_b", "est_sim", "keep")
       // old-old pairs surface inside touched bands (the band was touched
       // by a DIFFERENT new doc) — drop them BEFORE the cross-band dedup
@@ -549,7 +472,7 @@ object TextDedup {
     * Adaptive candidate restriction: shingle sets are built only for docs
     * that can appear in a pair unless most docs are candidates (the
     * synthetic replica), where the semi-join is measured-neutral.
-    * Kept as the spec oracle for [[jaccardPairsGrouped]] — and as the
+    * Kept as the spec oracle for [[pairScoresGrouped]]' Jaccard — and as the
     * better plan when the pair list is externally provided rather than
     * band-derived. */
   private[queries] def jaccardPairsJoined(s: SparkSession, base: DataFrame,

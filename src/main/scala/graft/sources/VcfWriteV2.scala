@@ -56,8 +56,13 @@ class VcfBatchWrite(path: String, schema: StructType,
     extends BatchWrite {
 
   private def opt(k: String): Option[String] = Option(options.get(k))
-  private val bgzf = opt("compression").exists(_.equalsIgnoreCase("bgzf"))
-  private val blockBytes = opt("bgzf_block_bytes").map(_.toInt).getOrElse(60000)
+  private def bad(k: String, v: String, want: String): Nothing =
+    throw new IllegalArgumentException(s"vcf write option $k must be $want, got '$v'")
+  private val bgzf = opt("compression").exists(v =>
+    v.equalsIgnoreCase("bgzf") || bad("compression", v, "absent or bgzf"))
+  private val blockBytes = opt("bgzf_block_bytes").fold(60000)(v =>
+    v.toIntOption.filter(n => n >= 16 && n <= 64512)
+      .getOrElse(bad("bgzf_block_bytes", v, "a whole number in [16, 64512]")))
   private val sampleNames = opt("sample_names").map(_.split(",").toSeq)
   // option("index","tbi"), "csi", or "tbi,csi" — build sidecar indexes
   // at write time, mirroring the reference's tabix_index-after-every-write

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 class EntryPointsSpec extends AnyFunSuite {
 
   private val Expected =
-    Set("graft.Bench", "graft.Verify", "graft.Plans", "ClusterSmoke")
+    Set("graft.Bench", "graft.Verify", "ClusterSmoke")
 
   private val Modifiers =
     """(?m)^[ \t]*(?:(?:private|protected|final|case|override)(?:\[\w+\])?\s+)*"""
@@ -38,7 +38,7 @@ class EntryPointsSpec extends AnyFunSuite {
     }.toSet
   }
 
-  test("src/main declares exactly the four entry points") {
+  test("src/main declares exactly the pinned entry points") {
     val found = entryPoints(Paths.get("src/main/scala"))
     assert(found == Expected,
       s"unexpected: ${found -- Expected}; missing: ${Expected -- found}")

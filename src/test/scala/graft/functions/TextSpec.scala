@@ -244,6 +244,20 @@ class TextSpec extends SparkSpec {
       lit(null).cast("string"), vocab)).head.isNullAt(0))
   }
 
+  test("VocabCount counts with spark.testing set (its token path avoids UTF8String.compareTo)") {
+    // Spark 4.1's UTF8String.compareTo throws when SparkEnvUtils.isTesting()
+    // holds; the vocab sort and the per-token binary search must not call it
+    val vc = VocabCount(org.apache.spark.sql.catalyst.expressions.Literal("x"),
+      Seq("the", "a", "of", "and", "to"))
+    val prev = System.setProperty("spark.testing", "true")
+    try assert(vc.count(org.apache.spark.unsafe.types.UTF8String.fromString(
+      "the cat of the hat to  a")) == 5L)
+    finally {
+      if (prev == null) System.clearProperty("spark.testing")
+      else System.setProperty("spark.testing", prev)
+    }
+  }
+
   test("shingle builders propagate null (null in => null out), short docs => empty") {
     // the short-doc guards must NOT turn a null array into an empty one
     // (ADVICE r10): null input means "no document", not "empty document"

@@ -215,7 +215,7 @@ class TextDedupSpec extends SparkSpec {
     assert(pairs.nonEmpty && cand.size < 46, "restriction should prune the unique docs")
   }
 
-  test("jaccardPairsGrouped == jaccardPairsJoined pair-for-pair (mixed, near-dup, hot-band)") {
+  test("pairScores jaccard == jaccardPairsJoined (mixed, near-dup, hot-band)") {
     val rnd = new scala.util.Random(0x44d)
     // near-dup family: shared 20-word base with per-doc tail edits, plus
     // exact-dup groups (some larger than the test cap => hot bands), plus
@@ -229,14 +229,17 @@ class TextDedupSpec extends SparkSpec {
       (61L to 64L).map(i => (i, base))                    // 4 exact dups
     ).toDF("doc_id", "text")
     val mh = TextDedup.signatureFrame(docs)
-    for (cap <- Seq(8, 128)) { // 8 => the 20-dup group degrades to a star
+    // 8 => the 20-dup group degrades to a star; 19/20 put its bands just
+    // over / exactly at the cap (the automaton's cold/hot edge)
+    for (cap <- Seq(8, 19, 20, 128)) {
       def norm(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
           r.getAs[Double]("jaccard"))).toSet
       val docsSh = docs
         .withColumn("_th", graft.functions.Text.tokenHashesFromText(col("text")))
         .select(col("doc_id"), graft.functions.Text.sortedShingleSet(col("_th")).as("sh"))
-      val grouped = norm(TextDedup.jaccardPairsGrouped(spark, docsSh, mh, cap))
+      val grouped = norm(TextDedup.pairScoresGrouped(spark, docsSh, mh, cap)
+        .select("doc_a", "doc_b", "jaccard"))
       val joined = norm(TextDedup.jaccardPairsJoined(spark, docs, mh, cap))
       assert(grouped == joined, s"cap=$cap: grouped/joined diverge " +
         s"(only-grouped=${grouped.diff(joined).take(3)}, " +
@@ -257,7 +260,7 @@ class TextDedupSpec extends SparkSpec {
       (34L to 48L).map(i => (i, text))
     ).toDF("doc_id", "text")
     val mh = TextDedup.signatureFrame(docs)
-    for (cap <- Seq(6, 128)) {
+    for (cap <- Seq(6, 14, 15, 128)) { // 14/15: the 15-dup group's bands just over / at the cap
       val grouped = TextDedup.estSimPairsGrouped(spark, mh, cap)
         .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
           r.getAs[Double]("est_sim"))).toSet
@@ -276,7 +279,7 @@ class TextDedupSpec extends SparkSpec {
     }
   }
 
-  test("pairScoresGrouped == {estSim, jaccard}PairsGrouped pair-for-pair (the shared d3+d4 pass)") {
+  test("pairScoresGrouped == estSim grouped + jaccard joined (d3+d4 pass)") {
     val rnd = new scala.util.Random(0xbb2)
     val base = (1 to 20).map(i => s"s$i").mkString(" ")
     val docs = (
@@ -289,20 +292,22 @@ class TextDedupSpec extends SparkSpec {
     val docsSh = docs
       .withColumn("_th", graft.functions.Text.tokenHashesFromText(col("text")))
       .select(col("doc_id"), graft.functions.Text.sortedShingleSet(col("_th")).as("sh"))
-    for (cap <- Seq(7, 128)) { // 7 => the 18-dup group degrades to a star
+    // 7 => the 18-dup group degrades to a star; 17/18 put its bands just
+    // over / exactly at the cap (the automaton's cold/hot edge)
+    for (cap <- Seq(7, 17, 18, 128)) {
       val combined = TextDedup.pairScoresGrouped(spark, docsSh, mh, cap).collect()
         .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
           r.getAs[Double]("est_sim"), r.getAs[Double]("jaccard"))).toSet
       val est = TextDedup.estSimPairsGrouped(spark, mh, cap).collect()
         .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
           r.getAs[Double]("est_sim"))).toSet
-      val jac = TextDedup.jaccardPairsGrouped(spark, docsSh, mh, cap).collect()
+      val jac = TextDedup.jaccardPairsJoined(spark, docs, mh, cap).collect()
         .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
           r.getAs[Double]("jaccard"))).toSet
       assert(combined.map(t => (t._1, t._2, t._3)) == est,
         s"cap=$cap: est_sim side diverges from estSimPairsGrouped")
       assert(combined.map(t => (t._1, t._2, t._4)) == jac,
-        s"cap=$cap: jaccard side diverges from jaccardPairsGrouped")
+        s"cap=$cap: jaccard side diverges from jaccardPairsJoined")
       assert(combined.nonEmpty)
     }
   }
@@ -357,7 +362,9 @@ class TextDedupSpec extends SparkSpec {
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Double]("est_sim"))).toSet
-    for (cap <- Seq(6, 128)) { // 6 => the 15-dup group degrades to a star
+    // 6 => the 15-dup group degrades to a star; 14/15 put its bands just
+    // over / exactly at the cap (the automaton's cold/hot edge)
+    for (cap <- Seq(6, 14, 15, 128)) {
       val inc = norm(TextDedup.incrementalEstSimPairs(spark, mh, isNew, cap))
       val full = norm(TextDedup.estSimPairsGrouped(spark, mh, cap)
         .filter(col("doc_a") % 5 === 0 || col("doc_b") % 5 === 0))

@@ -51,6 +51,26 @@ class VcfWriteV2Spec extends SparkSpec {
     assert(sortedRows(back) == sortedRows(spark.read.format("vcf").load(srcPath("graftvcfw2b"))))
   }
 
+  test("bad compression / bgzf_block_bytes fail naming the option and its value") {
+    val src = spark.read.format("vcf").load(srcPath("graftvcfw9"))
+    def write(k: String, v: String): Unit = {
+      val out = Files.createTempDirectory("graftvcfw9o").resolve("out").toString
+      src.write.format("vcf").mode("overwrite")
+        .option("compression", "bgzf").option(k, v).save(out)
+    }
+    for ((k, v) <- Seq("compression" -> "gzip", "compression" -> "bgzf2",
+        "bgzf_block_bytes" -> "abc", "bgzf_block_bytes" -> "15",
+        "bgzf_block_bytes" -> "64513")) {
+      val e = intercept[Exception](write(k, v))
+      val msg = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i.getMessage }
+      assert(msg.exists(m => m.contains(k) && m.contains(s"'$v'")), s"$k=$v: $e")
+    }
+    // the bounds themselves are accepted
+    write("bgzf_block_bytes", "16")
+    write("bgzf_block_bytes", "64512")
+  }
+
   test("wide panel (samples=all) round trips sample columns") {
     val d = Files.createTempDirectory("graftvcfw3")
     val wide = Seq(
